@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
 
 /** Continuous tier — the HOP/Quatrain capabilities (SURVEY.md §2.9) on
   * Structured Streaming.
@@ -20,10 +20,11 @@ import org.apache.spark.sql.types.StructType
   *  - [[onlineAggregate]]: online aggregation (C4) — progressive snapshots
   *    of a bounded input at increasing progress fractions, final frame
   *    exact. Chunked file streaming (`maxFilesPerTrigger`) stands in for
-  *    HOP's snapshot progress thresholds; `foreachBatch` + complete mode
-  *    re-emits the cumulative aggregate per chunk — the SNAPSHOT stream of
-  *    OutputFile.Type (progress<1) with the same final answer as batch.
-  */
+  *    HOP's snapshot progress thresholds; a stateless `foreachBatch`
+  *    aggregates each chunk and the driver adds it into the running
+  *    snapshot ([[foldReplay]], the combiner contract — no state store)
+  *    — the SNAPSHOT stream of OutputFile.Type (progress<1) with the same
+  *    final answer as batch. */
 object Continuous {
 
   /** Unbounded clock-tick source: (timestamp, value=seq). */
@@ -134,23 +135,15 @@ object Continuous {
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** Run `f` with `spark.sql.shuffle.partitions` temporarily lowered to
-    * `n` — streaming aggregations pin their STATE STORE partition count to
-    * the shuffle-partition setting at first batch, and every micro-batch
-    * commits every state partition. The driver-facing bounded runs here
-    * aggregate tiny key spaces (window × event-type), so batch-sized
-    * shuffle parallelism (32) just multiplies per-trigger state-commit
-    * overhead ~4×. Sizing state partitions to the aggregate cardinality is
-    * the standard Structured Streaming deployment tuning; at 100 TB the
-    * stream's KEY cardinality (not its volume) still governs this knob.
-    * Safe per-query because each invocation starts a fresh checkpoint.
-    *
-    * ASSUMES single-threaded use of the session: the conf set/restore is
-    * session-global, so a CONCURRENT query on the same SparkSession could
-    * plan with the lowered value or restore out of order. The sequential
-    * driver/bench/test harness satisfies this; a multi-tenant session
-    * should instead run bounded streams on `spark.newSession()` with the
-    * setting applied there (kept out of this helper because the memory
-    * sink's temp view and the stage memo are session-scoped). */
+    * `n`: q53's stateful stage 2 pins its STATE STORE partition count to
+    * the setting at first batch (every micro-batch commits every state
+    * partition), and the foreachBatch appenders (q88/q99/q117) chain
+    * small per-commit shuffles that 32-way tasks only slow. Safe per
+    * query because each invocation starts a fresh checkpoint. ASSUMES
+    * single-threaded use of the session: the set/restore is
+    * session-global, so a concurrent query could plan with the lowered
+    * value; a multi-tenant session should run bounded streams on
+    * `spark.newSession()` instead. */
   private def withStreamShuffle[T](spark: SparkSession, n: Int)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val old = spark.conf.get(key)
@@ -166,12 +159,13 @@ object Continuous {
     * the Hadoop FS API (like [[DeltaState]] always has) so a state root
     * on HDFS/S3 behaves exactly like the local `target/` harness default
     * — java.io.File probes silently answered "missing" for any
-    * non-local URI. Uses a plain Configuration (scheme-resolved), so no
-    * SparkSession is needed at call sites that don't have one. */
+    * non-local URI. Resolves through the active session's Hadoop conf,
+    * so `spark.hadoop.*` settings (credentials, endpoints) reach every
+    * probe and delete, as they reach Spark's own reads and writes. */
   private def hfs(path: String): (org.apache.hadoop.fs.FileSystem,
       org.apache.hadoop.fs.Path) = {
     val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(new org.apache.hadoop.conf.Configuration()), p)
+    (p.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), p)
   }
 
   /** mtime of `path`, or -1 when it does not exist — the freshness
@@ -454,98 +448,155 @@ object Continuous {
     if (fs.exists(p)) { fs.delete(p, /*recursive=*/ true); () }
   }
 
-  /** Shared driver-facing bounded-run shape: start `streaming` into a
-    * fresh complete-mode memory sink, run to completion (`AvailableNow`),
-    * snapshot the sink into a local frame (capped loudly — memory sinks
-    * are aggregates bounded by key cardinality, never stream volume), and
-    * ALWAYS drop the temp view + checkpoint so a long session of retries
-    * accumulates nothing. State partitions sized to the aggregate via
-    * [[withStreamShuffle]]. */
-  private def runBoundedToFrame(spark: SparkSession, streaming: DataFrame,
-      name: String, ckpt: String, maxRows: Int = 1000000): DataFrame =
-    withStreamShuffle(spark, 8) {
-      val q = streaming.writeStream
-        .outputMode("complete")
+  /** The bounded aggregates' one run shape (q51, q52, q54,
+    * [[onlineAggregate]]): replay `inputDir` `filesPerTrigger` files per
+    * `AvailableNow` commit through a STATELESS `foreachBatch` running
+    * `partial` (a plain `groupBy(keys).agg(...)`) over the batch alone,
+    * and add its rows into a driver-side keyed snapshot — the combiner
+    * contract ([[DeltaState]]'s fold rule), HOP's snapshots over
+    * combiner-reduced partial returns. No state store, memory sink or
+    * temp view: a commit is the batch's own aggregate plus the offset and
+    * commit log writes. Measures must be LongType or DecimalType (widened
+    * to precision 38: the running sum outgrows the partial's); others
+    * are refused before the stream starts — a double sum would depend on
+    * chunk order. `maxRows` caps the partial and the snapshot. Returns
+    * the snapshot after every commit, in the returned (widened) schema. */
+  private def foldReplay(spark: SparkSession, inputDir: String,
+      schema: StructType, name: String, partial: DataFrame => DataFrame,
+      keys: Seq[String], filesPerTrigger: Int,
+      maxRows: Int): (Seq[Snapshot], StructType) = {
+    val out = partial(spark.createDataFrame(
+      java.util.Collections.emptyList[Row](), schema)).schema
+    val keyIdx = keys.map(out.fieldIndex)
+    val add = out.fields.indices.filterNot(keyIdx.contains).map(i =>
+      i -> (out(i).dataType match {
+        case LongType => (a: Any, b: Any) =>
+          Math.addExact(a.asInstanceOf[Long], b.asInstanceOf[Long]): Any
+        case _: DecimalType => (a: Any, b: Any) =>
+          a.asInstanceOf[java.math.BigDecimal]
+            .add(b.asInstanceOf[java.math.BigDecimal]): Any
+        case dt => throw new IllegalArgumentException(s"$name: measure " +
+          s"'${out(i).name}' is ${dt.simpleString}; the fold adds only " +
+          "LongType counts/sums and DecimalType sums exactly")
+      }))
+    val foldSchema = StructType(out.zipWithIndex.map {
+      case (f, i) => f.dataType match {
+        case d: DecimalType if !keyIdx.contains(i) =>
+          f.copy(dataType = DecimalType(DecimalType.MAX_PRECISION, d.scale))
+        case _ => f
+      } })
+    val acc = scala.collection.mutable.HashMap.empty[Seq[Any], Array[Any]]
+    val snapshots = scala.collection.mutable.ArrayBuffer.empty[Snapshot]
+    val (fs, dirP) = hfs(inputDir)
+    val totalChunks = math.ceil(fs.listStatus(dirP)
+      .count(_.getPath.getName.endsWith(".parquet")) / filesPerTrigger.toDouble)
+    val ckpt = s"target/streamstage/ckpt/$name"
+    deleteRecursively(ckpt) // a stale checkpoint would skip every file
+    try {
+      spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", filesPerTrigger.toString)
+        .parquet(inputDir)
+        .writeStream.queryName(name)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
-        .format("memory").queryName(name)
-        .start()
-      try {
-        q.awaitTermination()
-        val rows = spark.table(name).limit(maxRows + 1).collect()
-        require(rows.length <= maxRows,
-          s"$name aggregate exceeds $maxRows rows — widen the window")
-        val schemaOut = spark.table(name).schema
-        localFrame(spark, rows.toSeq, schemaOut)
-      } finally {
-        spark.catalog.dropTempView(name)
-        deleteRecursively(ckpt) // each invocation is a fresh bounded run
-      }
-    }
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          val rows = labeled(spark, s"$name: partial aggregate") {
+            partial(batch).limit(maxRows + 1).collect() }
+          require(rows.length <= maxRows,
+            s"$name commit $id partial exceeds maxRows=$maxRows")
+          snapshots.synchronized {
+            rows.foreach { r =>
+              val k = keyIdx.map(r.get)
+              acc.get(k) match {
+                case None => acc(k) = r.toSeq.toArray
+                case Some(a) => add.foreach { case (i, f) =>
+                  if (a(i) == null) a(i) = r.get(i)
+                  else if (!r.isNullAt(i)) a(i) = f(a(i), r.get(i)) }
+              }
+            }
+            require(acc.size <= maxRows,
+              s"$name snapshot $id exceeds maxRows=$maxRows")
+            snapshots += Snapshot(math.min((id + 1) / totalChunks, 1.0),
+              acc.valuesIterator.map(a => Row.fromSeq(a.toVector)).toVector)
+          }
+          ()
+        }
+        .start().awaitTermination()
+      (snapshots.toSeq, foldSchema)
+    } finally deleteRecursively(ckpt) // each invocation is a fresh run
+  }
+
+  /** `finish` over driver-held fold rows: a projection of a local
+    * relation, which Catalyst folds into the relation — no Spark job. */
+  private def finished(spark: SparkSession, rows: Seq[Row],
+      foldSchema: StructType, finish: DataFrame => DataFrame): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    finish(spark.createDataFrame(rows.asJava, foldSchema))
+  }
+
+  /** [[foldReplay]]'s final snapshot, finished, as a [[localFrame]] —
+    * empty, in the finished schema, when the input has no data files. */
+  private[graft] def foldedFrame(spark: SparkSession, inputDir: String,
+      schema: StructType, name: String, partial: DataFrame => DataFrame,
+      keys: Seq[String], finish: DataFrame => DataFrame): DataFrame = {
+    val (snaps, foldSchema) = foldReplay(spark, inputDir, schema, name,
+      partial, keys, filesPerTrigger = 2, maxRows = 1000000)
+    require(snaps.isEmpty || snaps.last.progress >= 1.0,
+      s"$name did not reach progress 1.0 (got ${snaps.map(_.progress)})")
+    val out = finished(spark, snaps.lastOption.fold(Seq.empty[Row])(_.rows),
+      foldSchema, finish)
+    localFrame(spark, out.collect().toSeq, out.schema)
+  }
 
   /** Windowed streaming reduce surfaced to the driver harness (C2, the HOP
     * `mapred.reduce.window` loop, ReduceTask.java:595-629): the events table
-    * streamed incrementally (`maxFilesPerTrigger=2` over 8 staged files = 4
-    * genuine stateful micro-batches; trigger overhead is fixed per commit,
-    * so halving commits halves the scale-independent cost) through an
-    * event-time tumbling-window count/sum, run to completion with
-    * `AvailableNow`. The
-    * final frame is deterministic — event-time windows are
-    * chunking-independent — so the same tumbling-window SQL oracle-checks
-    * the streaming tier end-to-end (q51).
-    *
-    * The memory sink in complete mode is the snapshot contract (driver-side
-    * frame, like [[onlineAggregate]]): its size is bounded by window-count ×
-    * event-type cardinality (time-range/5min × ~5), NOT by the stream
-    * volume — at 100 TB the same plan with a parquet sink + append mode +
-    * watermark is the production shape ([[windowedCounts]] carries the
-    * watermark already; StreamingSpec proves append-mode parity). Sum runs
-    * over DECIMAL so the result is shuffle- and chunk-order-independent. */
+    * replayed through [[foldedFrame]] (`maxFilesPerTrigger=2` over 8
+    * staged files = 4 genuine micro-batches; trigger overhead is fixed per
+    * commit, so halving commits halves the scale-independent cost). Each
+    * commit's partial is the event-time tumbling-window count + DECIMAL
+    * sum of its own files; the driver adds partials per (window, type), so
+    * the final frame is chunking-independent and the same tumbling-window
+    * SQL oracle-checks the streaming tier end-to-end (q51). The snapshot
+    * is bounded by window-count × event-type cardinality, NOT by stream
+    * volume; at 100 TB an append-mode parquet sink behind
+    * [[windowedCounts]]' watermark is the production shape. */
   def streamedWindowedCounts(spark: SparkSession, dir: String): DataFrame = {
     val staged = stageChunks(spark, dir, "events")
-    val schema = stagedSchema(spark, staged)
-    val name = s"q51_stream_${runSeq.incrementAndGet()}"
-    val ckpt = s"target/streamstage/ckpt/$name"
-    val agg = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "2").parquet(staged)
-      .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_v"))
-      .select(col("window.start").as("w_start"), col("event_type"),
-        col("n"), col("sum_v"))
-    runBoundedToFrame(spark, agg, name, ckpt)
+    foldedFrame(spark, staged, stagedSchema(spark, staged),
+      s"q51_stream_${runSeq.incrementAndGet()}",
+      _.groupBy(window(col("ts"), "5 minutes"), col("event_type"))
+        .agg(count(lit(1)).as("n"),
+          sum(col("value").cast("decimal(18,2)")).as("sum_v"))
+        .select(col("window.start").as("w_start"), col("event_type"),
+          col("n"), col("sum_v")),
+      keys = Seq("w_start", "event_type"),
+      finish = _.withColumn("sum_v", col("sum_v").cast("double")))
       .orderBy(col("w_start"), col("event_type"))
   }
 
   /** Online aggregation surfaced to the driver harness (C4,
     * ReduceTask.java:631-669 / OutputFile.Type SNAPSHOT): the lineitem table
-    * streamed 2 files per trigger through the q01 pricing-summary aggregate
-    * via [[onlineAggregate]] — progressive cumulative snapshots, final frame
-    * exact. Returns the final (progress = 1.0) snapshot as a DataFrame, so
-    * the q01 SQL oracle-checks that online aggregation converges to the
-    * batch answer (q52). */
+    * replayed 2 files per commit through the q01 pricing-summary partial
+    * (decimal sums + count) via [[foldedFrame]] — cumulative snapshots,
+    * final frame exact, doubles cast once at the end. Returns the final
+    * (progress = 1.0) snapshot, so the q01 SQL oracle-checks that online
+    * aggregation converges to the batch answer (q52). */
   def streamedOnlineSummary(spark: SparkSession, dir: String): DataFrame = {
     val staged = stageChunks(spark, dir, "lineitem")
-    val schema = stagedSchema(spark, staged)
-    val agg = (df: DataFrame) => df
-      .filter(col("l_shipdate") <= to_timestamp(lit("1998-09-02 00:00:00")))
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        sum(col("l_quantity").cast("decimal(18,2)"))
-          .cast("double").as("sum_qty"),
-        sum(col("l_extendedprice").cast("decimal(18,2)"))
-          .cast("double").as("sum_base_price"),
-        sum(col("l_extendedprice").cast("decimal(18,2)") *
-            (lit(1).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
-          .cast("double").as("sum_disc_price"),
-        count(lit(1)).as("count_order"))
-    val snaps = withStreamShuffle(spark, 8) {
-      onlineAggregate(spark, staged, schema, agg, filesPerTrigger = 2)
-    }
-    require(snaps.nonEmpty && snaps.last.progress >= 1.0,
-      s"online aggregation did not reach progress 1.0 (got ${snaps.map(_.progress)})")
-    val outSchema = agg(spark.read.parquet(staged)).schema
-    localFrame(spark, snaps.last.rows, outSchema)
+    def dec(c: String) = col(c).cast("decimal(18,2)")
+    val sums = Seq("sum_qty", "sum_base_price", "sum_disc_price")
+    foldedFrame(spark, staged, stagedSchema(spark, staged),
+      s"q52_online_${runSeq.incrementAndGet()}",
+      _.filter(col("l_shipdate") <= to_timestamp(lit("1998-09-02 00:00:00")))
+        .groupBy(col("l_returnflag"), col("l_linestatus"))
+        .agg(sum(dec("l_quantity")).as("sum_qty"),
+          sum(dec("l_extendedprice")).as("sum_base_price"),
+          sum(dec("l_extendedprice") *
+            (lit(1).cast("decimal(18,2)") - dec("l_discount")))
+            .as("sum_disc_price"),
+          count(lit(1)).as("count_order")),
+      keys = Seq("l_returnflag", "l_linestatus"),
+      finish = _.withColumns(sums.map(c => c -> col(c).cast("double")).toMap))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
   }
 
@@ -565,39 +616,40 @@ object Continuous {
     * AVG/STDDEV over a shuffle cannot promise. The per-window list is
     * bounded by event-type cardinality, not stream volume. */
   def cqMonitor(spark: SparkSession, dir: String): DataFrame =
-    cqStats(perKeyWindowAverages(graft.Tables.events(spark, dir)))
+    cqStats(windowAverages(windowSums(graft.Tables.events(spark, dir))))
 
   /** [[cqMonitor]] run as a REAL streaming query (q54): the events table
-    * streamed incrementally (4 micro-batches, like
-    * [[streamedWindowedCounts]]) through the per-(window, key) average — a genuine
-    * stateful streaming aggregation in complete mode, run to completion with
-    * `AvailableNow` — then the cross-key mean+2σ flagging applied to the
-    * emitted window frame, exactly where the reference computes it (the CQ
+    * replayed through [[foldedFrame]] (4 micro-batches, like
+    * [[streamedWindowedCounts]]) — each commit's partial is the per-(window,
+    * key) decimal sum + count of its own files, the driver adds them, and
+    * the average (ONE double division) is taken once over the folded
+    * frame — then the cross-key mean+2σ flagging applied to the emitted
+    * window frame, exactly where the reference computes it (the CQ
     * reducer flags over the window's emitted aggregates, CQ.java:482-499).
-    * The per-key average is a decimal sum + one double division, so the
-    * final streamed frame equals the batch frame and the same SQL oracle
-    * gates both. */
+    * Same partial and finish as the batch twin, so the final streamed
+    * frame equals the batch frame and the same SQL oracle gates both. */
   def streamedCqMonitor(spark: SparkSession, dir: String): DataFrame = {
     val staged = stageChunks(spark, dir, "events")
-    val schema = stagedSchema(spark, staged)
-    val name = s"q54_cq_${runSeq.incrementAndGet()}"
-    val ckpt = s"target/streamstage/ckpt/$name"
-    cqStats(runBoundedToFrame(spark,
-      perKeyWindowAverages(
-        spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "2").parquet(staged)),
-      name, ckpt))
+    cqStats(foldedFrame(spark, staged, stagedSchema(spark, staged),
+      s"q54_cq_${runSeq.incrementAndGet()}", windowSums,
+      keys = Seq("w_start", "key"), finish = windowAverages))
   }
 
-  /** Per-(5-minute window, event type) value averages — the windowed
-    * reducer emission the CQ statistics run over. Decimal sum + ONE double
-    * division, so batch and streamed-complete-mode frames are bit-equal. */
-  private def perKeyWindowAverages(events: DataFrame): DataFrame =
-    events
-      .groupBy(window(col("ts"), "5 minutes"), col("event_type").as("key"))
-      .agg((sum(col("value").cast("decimal(18,2)")).cast("double") /
-        count(lit(1))).as("avg_v"))
-      .select(col("window.start").as("w_start"), col("key"), col("avg_v"))
+  /** Per-(5-minute window, event type) DECIMAL value sums and counts — the
+    * windowed reducer's combinable partial. */
+  private val windowSums: DataFrame => DataFrame =
+    _.groupBy(window(col("ts"), "5 minutes"), col("event_type").as("key"))
+      .agg(sum(col("value").cast("decimal(18,2)")).as("sum_v"),
+        count(lit(1)).as("n"))
+      .select(col("window.start").as("w_start"), col("key"), col("sum_v"),
+        col("n"))
+
+  /** The per-key window average the CQ statistics run over: ONE double
+    * division of the folded sums, so batch and streamed frames are
+    * bit-equal. */
+  private val windowAverages: DataFrame => DataFrame =
+    _.select(col("w_start"), col("key"),
+      (col("sum_v").cast("double") / col("n")).as("avg_v"))
 
   /** Cross-key mean+2σ alert flags over the emitted per-key window frame
     * (deterministic fold-over-sorted-list statistics — see [[cqMonitor]]). */
@@ -718,12 +770,9 @@ object Continuous {
       val g = currentGen
       // fold width sized from the generation's on-disk bytes (the fold's
       // input bounds its output, and the deltas are the same rows the
-      // fold emits): one output file per `targetFoldBytes`, floor 1.
-      // The r17 hard coalesce(1) serialized the whole folded state
-      // through ONE task — fine at fixture/30× megabytes, a single-task
-      // bottleneck at a corpus-sized df store (ADVICE r17); the byte
-      // estimate keeps the fixture's one-file fan-in bound while letting
-      // a corpus-scale fold fan out.
+      // fold emits): one output file per `targetFoldBytes`, floor 1 — the
+      // fixture keeps its one-file fan-in, a corpus-sized store fans out
+      // instead of funnelling through one task.
       val bytes = fs.getContentSummary(
         new org.apache.hadoop.fs.Path(dir)).getLength
       val width = math.max(1L,
@@ -782,38 +831,25 @@ object Continuous {
       compactEvery: Int = 8, keepState: Boolean = false,
       gate: String = "auto",
       gateStateBudgetBytes: Long = 32L << 20): FunnelRun = {
-    // THE GATE IS SIZE-ADAPTIVE (r17, from the whole-op A/B the r16
-    // verdict asked for): the maintained delta-state gate trades a
-    // full-index re-aggregation per commit for two delta appends + two
-    // delta-sum reads — a trade that WINS when the gate input is
-    // data-bound (−12% at the 30× binding cap, SCALE_r17 session A;
-    // unboundedly more at 100 TB, where re-aggregating the posting
-    // index per commit is absurd) and LOSES when it is job-bound
-    // (+17% whole-op at sf0.1, session E: ~12 extra fixture-scale jobs
-    // per run against a megabytes-sized aggregation). "auto" picks per
-    // commit: while the accumulated index sits under
-    // `gateStateBudgetBytes` (~16 B/posting row; default 32 MiB — the
-    // measured sf0.1-vs-30× crossover splits at ~4 MB vs ~125 MB) the
-    // gate re-aggregates and the delta stores stay EMPTY; the first
-    // commit over budget BOOTSTRAPS them by folding the whole
-    // accumulated index once (the same aggregation a recomputed commit
-    // pays anyway), and every later commit appends increment-sized
-    // deltas. "maintained"/"recomputed" pin either shape for
-    // attribution (StageProbe `funnelop`); all three are spec-pinned
-    // snapshot-identical.
+    // THE GATE IS SIZE-ADAPTIVE: the maintained delta-state gate trades a
+    // full-index re-aggregation per commit for two delta appends and two
+    // delta-sum reads — a win when the gate input is data-bound (−12% at
+    // the 30× binding cap), a loss when it is job-bound (+17% whole-op at
+    // sf0.1, ~12 extra small jobs per run). "auto" re-aggregates while
+    // the accumulated index is under `gateStateBudgetBytes` (~16 B per
+    // posting row; the measured crossover lies between ~4 and ~125 MB),
+    // then BOOTSTRAPS the delta stores by folding the whole index once and
+    // appends increment-sized deltas after. "maintained"/"recomputed" pin
+    // either shape; all three are spec-pinned snapshot-identical.
     require(gate == "auto" || gate == "maintained" || gate == "recomputed",
       s"gate must be 'auto', 'maintained' or 'recomputed', got '$gate'")
     require(gateStateBudgetBytes > 0,
       s"gateStateBudgetBytes must be positive: $gateStateBudgetBytes")
-    // per-trigger increment width — a PARAMETER since r17 (VERDICT r16
-    // #5: the literal 2 drove three state-append widths and the commit
-    // count; a deployment widening its triggers had to edit source). It
-    // sizes the micro-batches AND the loser/df/len state-append widths
-    // below, which must track the increment size, not the shuffle
-    // setting. compactEvery ≥ 1 folds the df/len/loser delta stores
-    // every N commits ([[DeltaState]] — VERDICT r16 #1); the fixture
-    // replay (4 commits at the default width) stays below the default
-    // threshold, so q88's per-commit plans are unchanged.
+    // `filesPerTrigger` sizes the micro-batches AND the loser/df/len
+    // state-append widths below, which must track the increment, not the
+    // shuffle setting. compactEvery ≥ 1 folds the delta stores every N
+    // commits ([[DeltaState]]); the 4-commit fixture replay stays below
+    // the default threshold.
     require(filesPerTrigger >= 1,
       s"filesPerTrigger must be >= 1: $filesPerTrigger")
     require(compactEvery >= 0,
@@ -824,26 +860,18 @@ object Continuous {
     val stateRoot = s"target/streamstage/funnel/run$run"
     val ckpt = s"target/streamstage/ckpt/funnel$run"
     // ONE kind-partitioned state dir for the two plain append families
-    // (the q117/q99 idiom): the flag rows and the shingle index were two
-    // separate write jobs + commit protocols per commit; the union write
-    // keeps each family's rows identical and readers directory-pruned.
-    // The three DeltaState stores below keep their own generation dirs —
-    // that protocol owns its layout.
+    // (the q117/q99 idiom: one union write per commit, readers pruned to
+    // their kind= dir); the DeltaState stores own their generation dirs.
     val stateDir = s"$stateRoot/state"
     val flagsDir = s"$stateDir/kind=flags"
     val indexDir = s"$stateDir/kind=index"
-    // MAINTAINED df/docLen state (r16, VERDICT r15 #3): the r15 anatomy
-    // measured the per-commit full-index df aggregation at 52% of q88's
-    // commit body — yet df counts and per-doc shingle lengths are
-    // ADDITIVE under the append-only protocol, so each commit appends
-    // the increment's per-shingle delta (s, dc) and per-doc lengths
-    // (doc_id, c) and the gate reads a sum over deltas (state rows ~
-    // distinct shingles per increment) instead of re-shuffling the full
-    // (doc, shingle) posting index. Spec-pinned equal to the recomputed
-    // gate (DedupSimilaritySpec's convergence differential). Since r17
-    // the three delta stores are [[DeltaState]] generations, compacted
-    // every `compactEvery` commits so the gate's file fan-in stays
-    // bounded under long-lived streams.
+    // MAINTAINED df/docLen state: df counts and per-doc shingle lengths
+    // are ADDITIVE under the append-only protocol, so each commit appends
+    // the increment's per-shingle (s, dc) and per-doc (doc_id, c) deltas
+    // and the gate reads their sums instead of re-shuffling the full
+    // posting index (spec-pinned equal to the recomputed gate). The stores
+    // are [[DeltaState]] generations, compacted every `compactEvery`
+    // commits so the gate's file fan-in stays bounded.
     val losersState = new DeltaState(spark, s"$stateRoot/losers",
       _.distinct())
     val dfState = new DeltaState(spark, s"$stateRoot/df",
@@ -855,22 +883,14 @@ object Continuous {
     val totalChunks = math.ceil(files.toDouble / filesPerTrigger)
     val snapshots = scala.collection.mutable.ArrayBuffer.empty[Snapshot]
     @volatile var outSchema: StructType = null
-    // withStreamShuffle serves a DIFFERENT purpose here than in the
-    // stateful queries: there is no streaming state (append mode +
-    // foreachBatch), but the per-commit batch jobs chain ~10 small
-    // shuffles and append parquet state — at fixture scale, 32-way tasks
-    // and 32-file state appends cost MORE than they parallelize (measured
-    // at sf0.1: 36 s at 32 partitions vs 27 s at 8). At production scale
-    // the commit's joins are corpus-sized and the session's own shuffle
-    // setting should win: the helper only ever LOWERS, so deployments
-    // size it by raising this floor, not fighting a hardcode.
+    // ~10 small shuffles per commit (measured at sf0.1: 36 s at 32
+    // partitions vs 27 s at 8); the helper only ever LOWERS, so a
+    // corpus-scale deployment keeps its own wider setting
     try withStreamShuffle(spark, 8) {
       val lastBatchId = new java.util.concurrent.atomic.AtomicLong(-1L)
       val commitsSinceCompact = new java.util.concurrent.atomic.AtomicInteger(0)
-      // auto-gate accounting, driver-side (the funnel is a bounded run:
-      // state root and counters are per-run; requireFreshBatch refuses
-      // replays within it): accumulated index posting rows, and whether
-      // the delta stores were bootstrapped yet
+      // per-run auto-gate accounting: accumulated index posting rows,
+      // and whether the delta stores were bootstrapped yet
       val idxRowsSeen = new java.util.concurrent.atomic.AtomicLong(0L)
       val bootstrapped = new java.util.concurrent.atomic.AtomicBoolean(
         gate == "maintained")
@@ -903,13 +923,9 @@ object Continuous {
               .shinglesOf(docs.select(col("doc_id"), col("text")))
               .persist()
             try {
-              // the loser frame leaves incrementalPairsOf at shuffle
-              // width (8 mostly-empty files per commit that every later
-              // emit re-lists); state-append width should track the
-              // INCREMENT size — the trigger's input file count — not
-              // the shuffle setting. Measured (r15 q88 anatomy, same-
-              // session interleaved A/B at sf0.1): ~6% off the whole op.
-              // The df/len deltas are increment-sized too.
+              // state appends are INCREMENT-wide (the trigger's input
+              // file count), not shuffle-wide: shuffle-width appends left
+              // mostly-empty files every later emit re-lists (~6% of q88)
               val losersCoalesce = filesPerTrigger
               labeled(spark, "q88: flags + index append") {
                 flagFrame.withColumn("kind", lit("flags"))
@@ -919,11 +935,11 @@ object Continuous {
                   .write.mode("append").partitionBy("kind")
                   .parquet(stateDir)
               }
-              // explicit schemas on the per-commit state reads: the
-              // index/flag dirs grow one file set per commit, and
-              // schema-less reads re-infer footers across all of them
-              // every commit
-              val index = spark.read.schema(incSh.schema).parquet(indexDir)
+              // explicit schemas on the per-commit state reads (schema-
+              // less reads re-infer every commit's footers), and a kind=
+              // dir no commit has written yet reads as an empty frame
+              // instead of failing path-not-found
+              val index = stateOrEmpty(spark, indexDir, incSh.schema)
               // the auto gate's pick (scaladoc above): one cheap count
               // over the persisted increment keeps the accumulated-rows
               // estimate; maintained wins once the index is data-bound
@@ -986,7 +1002,7 @@ object Continuous {
               }
             } finally { incSh.unpersist(); () }
             // emit the cumulative funnel over the flag store
-            val flags = spark.read.schema(flagFrame.schema).parquet(flagsDir)
+            val flags = stateOrEmpty(spark, flagsDir, flagFrame.schema)
             val keepers = flags.groupBy(col("h"))
               .agg(min(col("doc_id")).as("doc_id"))
               .select(col("doc_id"), lit(1).as("f_ex"))
@@ -1507,41 +1523,23 @@ object Continuous {
   case class Snapshot(progress: Double, rows: Seq[Row])
 
   /** Online aggregation over a bounded multi-file input: stream the files
-    * `filesPerTrigger` at a time, re-emit the cumulative aggregate after
-    * each chunk. Returns all snapshots; the last has progress 1.0 and is
-    * bit-equal to the batch answer. */
+    * `filesPerTrigger` at a time, fold each chunk's `partial` (grouped by
+    * `keys`) into the running aggregate ([[foldReplay]]'s contract) and
+    * emit it through `finish` after each chunk. Returns all snapshots; the
+    * last has progress 1.0 and is bit-equal to the batch answer. */
   def onlineAggregate(
       spark: SparkSession,
       inputDir: String,
       schema: StructType,
-      aggregate: DataFrame => DataFrame,
+      partial: DataFrame => DataFrame,
+      keys: Seq[String],
+      finish: DataFrame => DataFrame = identity,
       filesPerTrigger: Int = 1,
       maxSnapshotRows: Int = 100000): Seq[Snapshot] = {
-    val files = hfs(inputDir) match { case (fs, p) =>
-      fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")) }
-    val totalChunks = math.ceil(files.toDouble / filesPerTrigger)
-    val snapshots = scala.collection.mutable.ArrayBuffer.empty[Snapshot]
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", filesPerTrigger.toString)
-      .parquet(inputDir)
-    val query = aggregate(stream).writeStream
-      .outputMode("complete")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // snapshot frames are aggregates (bounded by group-key cardinality);
-        // cap the driver-side materialization so a mistakenly ungrouped
-        // plan fails loudly instead of OOMing the driver
-        val rows = batch.limit(maxSnapshotRows + 1).collect()
-        require(rows.length <= maxSnapshotRows,
-          s"snapshot $id exceeds maxSnapshotRows=$maxSnapshotRows")
-        snapshots.synchronized {
-          snapshots += Snapshot(
-            math.min((id + 1) / totalChunks, 1.0), rows.toSeq)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    snapshots.toSeq
+    val (snaps, foldSchema) = foldReplay(spark, inputDir, schema,
+      s"online_${runSeq.incrementAndGet()}", partial, keys, filesPerTrigger,
+      maxSnapshotRows)
+    snaps.map(s => s.copy(rows =
+      finished(spark, s.rows, foldSchema, finish).collect().toSeq))
   }
 }

@@ -163,11 +163,15 @@ class StreamingSpec extends SparkSpec {
         java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
       rmrf(new java.io.File(tmp))
     }
-    val agg = (df: org.apache.spark.sql.DataFrame) => df
+    val partial = (df: org.apache.spark.sql.DataFrame) => df
       .groupBy($"event_type")
       .agg(count(lit(1)).as("n"),
-        sum($"value".cast("decimal(18,2)")).cast("double").as("sum_v"))
-    val snaps = Continuous.onlineAggregate(spark, dir, src.schema, agg)
+        sum($"value".cast("decimal(18,2)")).as("sum_v"))
+    val finish = (df: org.apache.spark.sql.DataFrame) =>
+      df.withColumn("sum_v", $"sum_v".cast("double"))
+    val agg = partial.andThen(finish)
+    val snaps = Continuous.onlineAggregate(spark, dir, src.schema, partial,
+      Seq("event_type"), finish)
     assert(snaps.size === 4)
     def asSet(rows: Seq[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
@@ -342,7 +346,8 @@ class StreamingSpec extends SparkSpec {
       df => df.select(explode(split($"text", "\\s+")).as("word"))
         .filter($"word" =!= "")
         .groupBy($"word").agg(count(lit(1)).as("cnt"))
-    val snaps = Continuous.onlineAggregate(spark, dir, docs.schema, topk)
+    val snaps = Continuous.onlineAggregate(spark, dir, docs.schema, topk,
+      Seq("word"))
     def top3(rows: Seq[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getString(0), r.getLong(1)))
         .sortBy { case (w, c) => (-c, w) }.take(3)
@@ -559,7 +564,8 @@ class StreamingSpec extends SparkSpec {
     src.repartition(4).write.mode("overwrite").parquet(dir)
     val snaps = Continuous.onlineAggregate(
       spark, dir, src.schema,
-      df => df.groupBy($"event_type").agg(count(lit(1)).as("n")))
+      df => df.groupBy($"event_type").agg(count(lit(1)).as("n")),
+      Seq("event_type"))
     assert(snaps.nonEmpty)
     assert(snaps.last.progress === 1.0)
     // monotone progress and monotone cumulative counts
@@ -841,5 +847,118 @@ class StreamingSpec extends SparkSpec {
       assert(runC.snapshots.last.rows.map(_.toSeq).toSeq
         .sortBy(_.head.toString) === batch)
     } finally rmrf(runC.stateRoot)
+  }
+
+  test("q51/q52/q54 fold their commits on the driver: 4 data commits, " +
+      "no state operator") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.streaming.StreamingQueryProgress]()
+    val prefixes = Seq("q51_stream_", "q52_online_", "q54_cq_")
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.name != null &&
+            prefixes.exists(e.progress.name.startsWith)) progress.add(e.progress)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    // jobs by job group: the replay's commits run on the stream thread
+    // under the query's own group, so any job in the CALLER's group came
+    // from the driver side of the fold (staging aside, which q51/q52 pay
+    // first) — `finish` over the local relation must launch none
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    spark.streams.addListener(listener)
+    spark.sparkContext.addSparkListener(jobs)
+    try {
+      assert(Continuous.streamedWindowedCounts(spark, sfDir).count() > 0)
+      assert(Continuous.streamedOnlineSummary(spark, sfDir).count() > 0)
+      spark.sparkContext.setJobGroup("fold-caller", "q54 fold")
+      val q54 = try Continuous.streamedCqMonitor(spark, sfDir)
+        finally spark.sparkContext.clearJobGroup()
+      spark.sparkContext.setJobGroup("fold-sentinel", "drain")
+      try spark.range(1).count() finally spark.sparkContext.clearJobGroup()
+      // listener events arrive in order: once the sentinel is seen, every
+      // job the fold started has been reported
+      val drain = System.nanoTime() + 20L * 1000 * 1000 * 1000
+      while (!groups.contains("fold-sentinel") && System.nanoTime() < drain)
+        Thread.sleep(100)
+      assert(groups.contains("fold-sentinel"))
+      assert(!groups.contains("fold-caller"),
+        "the fold's driver side (finish, final frame) launched a Spark job")
+      assert(q54.count() > 0)
+      import scala.jdk.CollectionConverters._
+      def data(prefix: String) = progress.asScala.toSeq
+        .filter(p => p.name.startsWith(prefix) && p.numInputRows > 0)
+      // the listener bus is async — wait for every commit event to drain
+      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+      while (prefixes.exists(data(_).size < 4) && System.nanoTime() < deadline)
+        Thread.sleep(100)
+      prefixes.foreach { prefix =>
+        val commits = data(prefix)
+        assert(commits.size === 4,
+          s"$prefix: expected 4 data commits (8 staged files, 2 per trigger)")
+        commits.foreach(p => assert(p.stateOperators.isEmpty,
+          s"$prefix commit ${p.batchId} carries a state operator"))
+      }
+    } finally {
+      spark.streams.removeListener(listener)
+      spark.sparkContext.removeSparkListener(jobs)
+    }
+  }
+
+  test("the driver fold refuses a measure it cannot add exactly, naming it") {
+    import spark.implicits._
+    val dir = "target/tmp/fold_refuse_in"
+    val src = Tables.events(spark, sfDir)
+    src.limit(10).write.mode("overwrite").parquet(dir)
+    val err = intercept[IllegalArgumentException] {
+      Continuous.onlineAggregate(spark, dir, src.schema,
+        _.groupBy($"event_type").agg(count(lit(1)).as("n"),
+          sum($"value").as("sum_v")), Seq("event_type"))
+    }
+    assert(err.getMessage.contains("'sum_v'") &&
+      err.getMessage.contains("double"), err.getMessage)
+  }
+
+  test("a fold over a replay dir with no data files is an empty frame " +
+      "in the finished schema (q51- and q52-shaped)") {
+    import spark.implicits._
+    val dir = "target/tmp/fold_empty_in"
+    rmrf(new java.io.File(dir))
+    new java.io.File(dir).mkdirs()
+    new java.io.File(dir, "_SUCCESS").createNewFile()
+    def dec(c: String) = col(c).cast("decimal(18,2)")
+    val q51 = Continuous.foldedFrame(spark, dir, Tables.events(spark, sfDir).schema,
+      "fold_empty_q51",
+      _.groupBy(window($"ts", "5 minutes"), $"event_type")
+        .agg(count(lit(1)).as("n"), sum(dec("value")).as("sum_v"))
+        .select($"window.start".as("w_start"), $"event_type", $"n", $"sum_v"),
+      Seq("w_start", "event_type"),
+      _.withColumn("sum_v", $"sum_v".cast("double")))
+    assert(q51.collect().isEmpty)
+    assert(q51.schema.map(f => f.name -> f.dataType.simpleString) === Seq(
+      "w_start" -> "timestamp", "event_type" -> "string", "n" -> "bigint",
+      "sum_v" -> "double"))
+    val q52 = Continuous.foldedFrame(spark, dir,
+      Tables.lineitem(spark, sfDir).schema, "fold_empty_q52",
+      _.groupBy($"l_returnflag", $"l_linestatus")
+        .agg(sum(dec("l_quantity")).as("sum_qty"),
+          sum(dec("l_extendedprice") * (lit(1) - dec("l_discount")))
+            .as("sum_disc_price"),
+          count(lit(1)).as("count_order")),
+      Seq("l_returnflag", "l_linestatus"),
+      _.withColumns(Seq("sum_qty", "sum_disc_price")
+        .map(c => c -> col(c).cast("double")).toMap))
+    assert(q52.collect().isEmpty)
+    assert(q52.schema.map(f => f.name -> f.dataType.simpleString) === Seq(
+      "l_returnflag" -> "string", "l_linestatus" -> "string",
+      "sum_qty" -> "double", "sum_disc_price" -> "double",
+      "count_order" -> "bigint"))
   }
 }
