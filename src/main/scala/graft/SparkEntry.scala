@@ -365,14 +365,17 @@ object SparkEntry {
       import org.apache.spark.sql.functions.{col, concat, lit, lpad}
       // framesKey: this fixture view is deterministic per dir, so the
       // checkpointed sketch frames cache for the session like q126's.
-      // The gate params ride the key (thresholdPpm:maxDf — this call's
-      // defaults), matching the sketch/jprefix/cprefix key schema so a
+      // The gate params ride the key, built from the values the call
+      // passes, matching the sketch/jprefix/cprefix key schema so a
       // param change can never serve stale frames (ADVICE r18 low).
+      val thresholdPpm = 500000L
+      val maxDf = 100
       Dedup.containmentSketchOf(
         Tables.documents(s, d).select(
           concat(lit("doc-"), lpad(col("doc_id").cast("string"), 9, "0"))
             .as("doc_id"), col("text")),
-        framesKey = Some(s"sketchfp:$d:500000:100"))
+        thresholdPpm = thresholdPpm, maxDf = maxDf,
+        framesKey = Some(s"sketchfp:$d:$thresholdPpm:$maxDf"))
     }),
     // Sketch-width calibration (q128, r17): the MeasuredK sizing rule as
     // an oracle-checkable frame — the sampled recall ladder (true pairs

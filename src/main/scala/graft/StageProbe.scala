@@ -23,9 +23,6 @@ import org.apache.spark.sql.functions._
   *    shuffle). The r12 currency/emitter variants were retired with the
   *    differential twins themselves.
   *  - `prefixcand` — candidate-volume anatomy of the prefix pair path.
-  *  - `spangram` — the q77 sliding-window gram stage, hex-string vs
-  *    native-long fingerprint currency A/B'd in one session (the r13
-  *    currency lever; the hex form lives only here, as the probe twin).
   *  - `funnelgate` — commit-body A/B of the q88 funnel's df gate
   *    (recomputed full-index aggregation vs the r16 maintained delta
   *    state): times incrementalPairsOf at the replay's FINAL commit in
@@ -47,9 +44,6 @@ import org.apache.spark.sql.functions._
   *    rows with read legs / file fan-in.
   *  - `sketchcal` — the MeasuredK recall ladder at decade scale plus an
   *    end-to-end self-sized sketch run.
-  *  - `sketchfp` — the sketch over bigint vs string-keyed views of the
-  *    same corpus (the fingerprint-dictionary premium), same k, one
-  *    session.
   *  - `opjobs` — per-JOB anatomy of one declared query (argv position 4
   *    names it): duration, idle gaps and call site of every Spark job a
   *    lap runs — the streaming operators are chains of many small jobs,
@@ -66,10 +60,10 @@ object StageProbe {
     val maxDf = args.lift(2).map(_.toInt).getOrElse(3000)
     val laps = args.lift(3).map(_.toInt).getOrElse(3)
     require(stage == "ngraminter" || stage == "prefixcand" ||
-      stage == "spangram" || stage == "containcand" ||
+      stage == "containcand" ||
       stage == "sweepcompare" || stage == "plancompare" ||
       stage == "funnelgate" || stage == "commitgrowth" ||
-      stage == "deltastate" || stage == "sketchfp" ||
+      stage == "deltastate" ||
       stage == "funnelop" || stage == "sketchcal" ||
       stage == "opjobs",
       s"unknown stage: $stage")
@@ -483,51 +477,6 @@ object StageProbe {
       spark.stop()
       return
     }
-    if (stage == "sketchfp") {
-      // string-keyed decade lap for the sketch's fingerprint-dictionary
-      // route (VERDICT r16 stretch): containmentSketchOf over the
-      // bigint corpus vs the SAME corpus under q127's string-keyed view
-      // ('doc-' || zero-padded id), interleaved in one session at the
-      // same k — the measured dictionary premium (fingerprint map + two
-      // corpus-sized shuffled join-backs) next to the bigint anchor.
-      // Row counts must agree exactly (the dictionary changes nothing
-      // observable — q127's oracle proof, re-checked here at decade
-      // scale). argv: [dir] [maxDf] [laps] [k] [thresholdPpm].
-      val k = args.lift(4).map(_.toInt).getOrElse(2)
-      val tppm = args.lift(5).map(_.toLong).getOrElse(500000L)
-      val docs = Tables.documents(spark, dir)
-        .select(col("doc_id"), col("text"))
-      val stringView = docs.select(
-        concat(lit("doc-"), lpad(col("doc_id").cast("string"), 12, "0"))
-          .as("doc_id"), col("text"))
-      // the dictionary-changes-nothing-observable contract is REQUIRED,
-      // not just printed (ADVICE r18): the probe's timing comparison is
-      // meaningless if the two currencies disagree on output volume
-      var rowsSeen = Map.empty[String, Any]
-      for (lap <- 1 to laps;
-           (label, frame) <- Seq("bigint" -> docs, "string" -> stringView)) {
-        StageMemo.clear()
-        val obs = org.apache.spark.sql.Observation()
-        val t0 = System.nanoTime()
-        operators.Dedup.containmentSketchOf(frame, tppm, maxDf, k = k)
-          .observe(obs, count(lit(1)).as("rows"))
-          .write.mode("overwrite").format("noop").save()
-        val s = (System.nanoTime() - t0) / 1e9
-        val rows = obs.get("rows")
-        rowsSeen.foreach { case (seenLabel, seenRows) =>
-          require(seenRows == rows,
-            s"sketchfp currency twins disagree: $seenLabel=$seenRows vs " +
-              s"$label=$rows at $dir k=$k tppm=$tppm") }
-        rowsSeen += label -> rows
-        println(f"""{"op":"sketchfp_$label","dir":"$dir","maxDf":$maxDf,""" +
-          f""""thresholdPpm":$tppm,"k":$k,"lap":$lap,"sec":$s%.1f,""" +
-          s""""rows_out":$rows,"rows_match":true,""" +
-          s""""load_1m":${Bench.loadavg1}}""")
-        System.gc()
-      }
-      spark.stop()
-      return
-    }
     if (stage == "funnelgate") {
       // commit-body A/B of the q88 funnel's df gate (VERDICT r15 #3 →
       // r16): the r15 anatomy measured the per-commit FULL-INDEX df
@@ -713,54 +662,6 @@ object StageProbe {
         f""""audit_full_sec":$fullAudS%.2f,""" +
         f""""audit_sampled_sec":$sampAudS%.2f,""" +
         s""""load_1m":${Bench.loadavg1}}""")
-      spark.stop()
-      return
-    }
-    if (stage == "spangram") {
-      // q77 gram-currency A/B: the full span-audit pipeline
-      // (duplicatedSpansFrom) cold-lapped over (a) the operator's native
-      // 8-byte long fingerprints and (b) the retired 16-hex STRING form,
-      // reproduced here inline as the probe twin — the SAME within-session
-      // protocol the r12 shingle-currency probe used. The two gram frames
-      // are a bijection (parse the hex as unsigned 64-bit), so rows must
-      // agree exactly; the delta prices the narrower df-gate groupBy and
-      // hit semi-join shuffles.
-      val docs = Tables.documents(spark, dir)
-      val n = 8
-      def hexGrams = docs
-        .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-        .select(col("doc_id"), operators.TextAnalysis.tokens(col("text"))
-          .as("t"))
-        .select(col("doc_id"), explode(expr(
-          s"""transform(
-             |  slice(sequence(1, greatest(size(t) - ${n - 1}, 1)),
-             |        1, greatest(coalesce(size(t) - ${n - 1}, 0), 0)),
-             |  i -> struct(i AS pos,
-             |    substring(md5(concat_ws(' ', slice(t, i, $n))), 1, 16) AS g))"""
-            .stripMargin)).as("w"))
-        .select(col("doc_id"), col("w.pos"), col("w.g"))
-      def longGrams = operators.Dedup.spanGramsOf(docs, n)
-      for ((label, grams) <- Seq("long" -> (() => longGrams),
-          "hex" -> (() => hexGrams))) {
-        var rows = -1L
-        val times = (1 to laps).map { _ =>
-          StageMemo.clear()
-          val obs = org.apache.spark.sql.Observation()
-          val t0 = System.nanoTime()
-          operators.Dedup.duplicatedSpansFrom(grams(), docs, n, minDocs = 2)
-            .observe(obs, count(lit(1)).as("rows"))
-            .write.mode("overwrite").format("noop").save()
-          val s = (System.nanoTime() - t0) / 1e9
-          rows = obs.get("rows") match { case l: Long => l; case _ => -1L }
-          s
-        }
-        val lapsJson = times.map(t =>
-          String.format(java.util.Locale.ROOT, "%.1f", Double.box(t)))
-          .mkString("[", ",", "]")
-        println(s"""{"op":"spangram_probe","dir":"$dir","n":$n,""" +
-          s""""currency":"$label","rows_out":$rows,""" +
-          s""""cold_laps_sec":$lapsJson,"load_1m":${Bench.loadavg1}}""")
-      }
       spark.stop()
       return
     }

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types._
   * This is the generator form of the pair-emission step inside the
   * df-gated shingle-intersection stage (`Dedup.interCountsOfShingles`) —
   * the engine's measured dominant top-decade cost. The SQL form it
-  * replaces (`explode(flatten(transform(ds, (x, i) -> transform(slice(ds,
-  * i + 2, ...), y -> struct(least, greatest)))))`) runs on Catalyst's
+  * replaced (an exploded, flattened nested `transform` over `slice`s of
+  * the list, one `struct(least, greatest)` per pair) runs on Catalyst's
   * higher-order functions, which are CodegenFallback: for a posting list
   * of df docs it interprets ~df² lambda calls and materializes df sliced
   * arrays, df nested arrays, one flattened array and df²/2 boxed structs

@@ -50,18 +50,13 @@ object Dedup {
     * arbitrary frames pass None and keep per-call builds — a caller's
     * ad-hoc frame has no stable identity to cache under. Before this,
     * each half of the paired fixture entries (q119/q120, q121/q122,
-    * q126/q128) re-built identical checkpointed frames per invocation.
-    * `SPARK_GRAFT_FRAMES_STASH=0` disables the stash entirely — the
-    * cache-pressure A/B knob (OPTIMIZATION_r19), not a tuning setting. */
+    * q126/q128) re-built identical checkpointed frames per invocation. */
   private def cachedFrames[T](spark: SparkSession, key: Option[String])(
       build: => T): T = key match {
-    case Some(k) if framesStashEnabled =>
+    case Some(k) =>
       graft.StageMemo.frames(spark, s"frames:$k")(build)(releaseFrames)
-    case _ => build
+    case None => build
   }
-
-  private val framesStashEnabled =
-    sys.env.get("SPARK_GRAFT_FRAMES_STASH").forall(_ != "0")
 
   /** Release walker for stashed frame tuples: unpersist every
     * checkpointed DataFrame reachable through the tuple (non-checkpoint
@@ -72,13 +67,6 @@ object Dedup {
     case p: Product => p.productIterator.foreach(releaseFrames)
     case _ => ()
   }
-
-  /** Drop and unpersist every memoized stage (all operators' — dedup,
-    * similarity). The memo assumes input directories are immutable for the
-    * session (the fixture contract); call this after rewriting an input dir
-    * in place, or to release the pinned storage of stages no longer
-    * needed. */
-  def clearStageCache(): Unit = graft.StageMemo.clear()
 
   /** Distinct word 3-shingles of a `(doc_id, text)` frame: (doc_id, s)
     * with `s` the engine's shingle-key currency — the first 8 md5 digest
@@ -209,87 +197,53 @@ object Dedup {
     * distinct-shingle counts (c1, c2). Jaccard (q21) and containment
     * (q78) are both one projection away, so memoizing THIS frame (rather
     * than each thresholded view) runs the expensive posting-list
-    * explode+count once per session for every consumer. */
+    * explode+count once per session for every consumer. One emission
+    * shape for every doc-id type: bigint ids run it directly, others
+    * through the fingerprint dictionary ([[docIdRoute]]). */
   private[graft] def interCountsOfShingles(sh: DataFrame,
       maxDf: Int): DataFrame = {
-    val docLen = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
+    // non-bigint ids (library callers with string/int keys) map onto the
+    // engine's currency at the one boundary, so every caller takes the
+    // generator path below; c1/c2 swap with their docs on the way back
+    val route = docIdRoute(sh, "ngramJaccardOf/containmentOf")
+    val fp = route.frame
+    val docLen = fp.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
     // the keep-list is O(distinct shingles) — at corpus scale broadcasting
     // it kills the driver (observed at a 10x staged smoke), so pin the
     // semi-join to a shuffled hash join: both sides are already hashed on
     // `s` and the per-partition build side stays bounded
-    val keep = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
+    val keep = fp.groupBy(col("s")).agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, maxDf))
       .select(col("s"))
       .hint("shuffle_hash")
-    val idx = sh.join(keep, Seq("s"), "left_semi")
-    val docIdIsLong = sh.schema("doc_id").dataType ==
-      org.apache.spark.sql.types.LongType
-    if (docIdIsLong) {
-      // r19 shape (§2.3/§2.4): each doc's FULL length rides the posting
-      // entry, and the [[graft.functions.DocIdLenPairs]] generator emits
-      // it with the pair — Jaccard's denominator then falls out of the
-      // count aggregation itself. The r18 shape joined the PAIR frame
-      // back to docLen twice (exchange by d1, again by d2 — the stage's
-      // two largest exchanges: 34.5 + 43.1 MiB vs 117 KiB of docLen at
-      // sf0.1, both pinned shuffled because docLen is O(corpus docs) and
-      // a broadcast dies at scale); attaching c on the GATED index costs
-      // one idx-sized exchange (6 MiB) plus two longs on the count agg's
-      // partial rows. The imbalance grows with scale: at the df cap,
-      // pair volume runs up to maxDf/2 × posting volume. docLen stays a
-      // shuffled join — its agg output is already hashed by doc_id.
-      idx
-        .join(docLen.hint("shuffle_hash"), Seq("doc_id"))
-        .groupBy(col("s"))
-        .agg(collect_list(struct(col("doc_id"), col("c"))).as("ds"))
-        .select(graft.functions.TextFunctions.docIdLenPairs(col("ds"))
-          .as(Seq("d1", "d2", "c1", "c2")))
-        .groupBy(col("d1"), col("d2"))
-        .agg(count(lit(1)).as("i"),
-          // c1/c2 are functions of d1/d2 — min is just the agg that rides
-          // the same partial aggregation as the count
-          min(col("c1")).as("c1"), min(col("c2")).as("c2"))
-        .select(col("d1"), col("d2"), col("i"), col("c1"), col("c2"))
-    } else {
-      // portable library branch (string/int doc ids): the interpreted HOF
-      // pair chain plus the two docLen joins — multiset-identical to the
-      // generator shape, spec-pinned as its golden twin
-      val inter = emitPostingPairs(idx)
-        .groupBy(col("d1"), col("d2"))
-        .agg(count(lit(1)).as("i"))
-      inter
-        .join(docLen.as("ca").hint("shuffle_hash"),
-          col("d1") === col("ca.doc_id"))
-        .join(docLen.as("cb").hint("shuffle_hash"),
-          col("d2") === col("cb.doc_id"))
-        .select(col("d1"), col("d2"), col("i"),
-          col("ca.c").as("c1"), col("cb.c").as("c2"))
-    }
+    // r19 shape (§2.3/§2.4): each doc's FULL length rides the posting
+    // entry, and the [[graft.functions.DocIdLenPairs]] generator emits
+    // it with the pair — lazily, O(df) peak per posting list — so
+    // Jaccard's denominator falls out of the count aggregation itself.
+    // The r18 shape joined the PAIR frame back to docLen twice (exchange
+    // by d1, again by d2 — the stage's two largest exchanges: 34.5 +
+    // 43.1 MiB vs 117 KiB of docLen at sf0.1, both pinned shuffled
+    // because docLen is O(corpus docs) and a broadcast dies at scale);
+    // attaching c on the GATED index costs one idx-sized exchange
+    // (6 MiB) plus two longs on the count agg's partial rows. The
+    // imbalance grows with scale: at the df cap, pair volume runs up to
+    // maxDf/2 × posting volume. docLen stays a shuffled join — its agg
+    // output is already hashed by doc_id. A pair sharing k shingles is
+    // emitted k times, so the groupBy count IS the intersection count.
+    route.unordered(fp.join(keep, Seq("s"), "left_semi")
+      .join(docLen.hint("shuffle_hash"), Seq("doc_id"))
+      .groupBy(col("s"))
+      .agg(collect_list(struct(col("doc_id"), col("c"))).as("ds"))
+      .select(graft.functions.TextFunctions.docIdLenPairs(col("ds"))
+        .as(Seq("d1", "d2", "c1", "c2")))
+      .groupBy(col("d1"), col("d2"))
+      .agg(count(lit(1)).as("i"),
+        // c1/c2 are functions of d1/d2 — min is just the agg that rides
+        // the same partial aggregation as the count
+        min(col("c1")).as("c1"), min(col("c2")).as("c2"))
+      .select(col("d1"), col("d2"), col("i"), col("c1"), col("c2")),
+      "c1" -> "c2")
   }
-
-  /** Unordered `(d1 < d2)` co-occurrence pairs of a `(doc_id, s)` frame:
-    * per-shingle posting lists, then one pair row per doc pair per shared
-    * shingle (a pair sharing k shingles appears k times — the groupBy
-    * count downstream IS the intersection count).
-    *
-    * Pair emission (LONG doc ids — the engine currency): the streaming
-    * [[graft.functions.DocIdLenPairs]] generator hands each of the
-    * ≤ C(maxDf, 2) pairs of a posting list to GenerateExec lazily —
-    * O(df) peak per posting list — with both docs' lengths carried as
-    * payload. A non-long doc_id frame (library callers with string/int
-    * keys) takes [[emitPostingPairs]]' portable HOF form instead, which
-    * interprets ~df² CodegenFallback lambda calls and materializes the
-    * whole pair array per row (multiset-identical, spec-pinned as the
-    * generator's golden twin; the conf-selected HOF path for LONG ids
-    * was retired in r13 after the r12 differential round). */
-  private def emitPostingPairs(idx: DataFrame): DataFrame =
-    idx.groupBy(col("s"))
-      .agg(collect_list(col("doc_id")).as("ds"))
-      .select(explode(expr(
-        """flatten(transform(ds, (x, i) ->
-          |  transform(slice(ds, i + 2, size(ds)),
-          |    y -> struct(least(x, y) as d1, greatest(x, y) as d2))))"""
-          .stripMargin)).as("p"))
-      .select(col("p.d1").as("d1"), col("p.d2").as("d2"))
 
   /** Memoized intersection stage over the fixture corpus. */
   private[graft] def interCounts(spark: SparkSession, dir: String,
@@ -490,34 +444,16 @@ object Dedup {
       maxDf: Int = 100, verify: String = "auto",
       maxBroadcastBytes: Long = 256L << 20,
       verifyChunks: Int = 0, suffixBound: Boolean = false,
-      diskBudgetBytes: Long = defaultDiskBudgetBytes): DataFrame =
-    if (docs.schema("doc_id").dataType ==
-        org.apache.spark.sql.types.LongType)
-      ngramJaccardPrefixOfShingles(shinglesOf(docs), threshold, maxDf,
-          verify, maxBroadcastBytes, verifyChunks, suffixBound,
-          diskBudgetBytes)
-        .orderBy(col("d1"), col("d2"))
-    else {
-      // string/UUID-keyed corpora ride the SAME scale path through the
-      // fingerprint dictionary ([[docIdFingerprints]]): pairs are
-      // generated in fingerprint currency, then joined back (pinned
-      // shuffled — the dictionary is corpus-sized at 100 TB) and
-      // re-ordered by the ORIGINAL ids, so the output is bit-identical
-      // to the classic stage's (d1 = the smaller original id)
-      val dict = docIdFingerprints(docs, "ngramJaccardPrefix")
-      val fp = docs.select(xxhash64(col("doc_id")).as("doc_id"),
-        col("text"))
-      ngramJaccardPrefixOfShingles(shinglesOf(fp), threshold, maxDf,
-          verify, maxBroadcastBytes, verifyChunks, suffixBound,
-          diskBudgetBytes)
-        .join(dict.select(col("doc_id").as("d1"),
-          col("orig_id").as("o1")).hint("shuffle_hash"), Seq("d1"))
-        .join(dict.select(col("doc_id").as("d2"),
-          col("orig_id").as("o2")).hint("shuffle_hash"), Seq("d2"))
-        .select(least(col("o1"), col("o2")).as("d1"),
-          greatest(col("o1"), col("o2")).as("d2"), col("jaccard"))
-        .orderBy(col("d1"), col("d2"))
-    }
+      diskBudgetBytes: Long = defaultDiskBudgetBytes): DataFrame = {
+    // string/UUID-keyed corpora ride the SAME scale path through the
+    // fingerprint dictionary, re-oriented by the ORIGINAL ids
+    // ([[docIdRoute]])
+    val route = docIdRoute(docs, "ngramJaccardPrefix")
+    route.unordered(ngramJaccardPrefixOfShingles(shinglesOf(route.frame),
+        threshold, maxDf, verify, maxBroadcastBytes, verifyChunks,
+        suffixBound, diskBudgetBytes))
+      .orderBy(col("d1"), col("d2"))
+  }
 
   /** The per-doc rarest-first PREFIX posting frame of
     * [[ngramJaccardPrefix]] — `(doc_id, s, rem, g)` rows restricted to
@@ -820,7 +756,8 @@ object Dedup {
     // the positional pair generator's currency is bigint doc ids; refuse
     // other id types loudly (plan-time AnalysisException would otherwise
     // surface from deep inside the generator) and name the id-agnostic
-    // path — the classic stage's HOF branch handles any key type
+    // path — the classic stage takes any key type through the fingerprint
+    // dictionary ([[docIdRoute]])
     require(sh.schema("doc_id").dataType ==
         org.apache.spark.sql.types.LongType,
       "ngramJaccardPrefix requires bigint doc ids (the positional pair " +
@@ -1120,24 +1057,21 @@ object Dedup {
         s"candChunks=$candChunks verifyChunks=$verifyChunks")
 
   // ---------------------------------------------------------------------
-  // Doc-id fingerprint dictionary (VERDICT r14 #4: the prefix paths'
-  // generators deal in bigint doc ids, but real corpora key by URL/UUID
-  // strings — and the id-agnostic classic stage is exactly the stage
-  // that cannot run the decades. A stable 64-bit fingerprint lets
-  // string-keyed corpora onto the scale path.)
+  // Doc-id fingerprint dictionary (VERDICT r14 #4: the pair generators
+  // deal in bigint doc ids, but real corpora key by URL/UUID strings. A
+  // stable 64-bit fingerprint puts every id type on the one currency.)
   // ---------------------------------------------------------------------
 
-  /** Maps an arbitrary-typed doc id onto the positional generators'
-    * bigint currency: `xxhash64(doc_id)` — STABLE (the same id maps to
-    * the same fingerprint on any cluster layout, any rerun, unlike
-    * zipWithIndex) — with a collision COUNT action up front: one agg
-    * comparing distinct ids to distinct fingerprints, refusing loudly on
-    * any collision (at 64 bits the birthday bound keeps corpora under
-    * ~10⁸ docs collision-free with probability ~1 − 3·10⁻⁴; a collision
-    * would silently MERGE two documents' shingle sets, so it must never
-    * pass). Returns the (orig_id, doc_id) dictionary for the join back;
-    * pair outputs re-derive their order/orientation from the ORIGINAL
-    * ids so the result is bit-identical to the classic stage's. */
+  /** Maps an arbitrary-typed doc id onto the pair generators' bigint
+    * currency: `xxhash64(doc_id)` — STABLE (the same id maps to the same
+    * fingerprint on any cluster layout, any rerun, unlike zipWithIndex)
+    * — with a collision COUNT action up front: one agg comparing
+    * distinct ids to distinct fingerprints, refusing loudly on any
+    * collision (at 64 bits the birthday bound keeps corpora under ~10⁸
+    * docs collision-free with probability ~1 − 3·10⁻⁴; a collision would
+    * silently MERGE two documents' shingle sets, so it must never pass).
+    * Returns the distinct (orig_id, doc_id) dictionary for the join back
+    * — `docs` may be a document frame or a `(doc_id, s)` shingle frame. */
   private[graft] def docIdFingerprints(docs: DataFrame,
       opName: String): DataFrame = {
     val m = docs.agg(countDistinct(col("doc_id")),
@@ -1145,11 +1079,51 @@ object Dedup {
     require(m.getLong(0) == m.getLong(1),
       s"$opName: the 64-bit doc-id fingerprint dictionary collided " +
         s"(${m.getLong(0)} distinct ids -> ${m.getLong(1)} distinct " +
-        "fingerprints). Two documents would silently merge; use the " +
-        "classic co-occurrence stage for this corpus.")
+        "fingerprints). Two documents would silently merge; re-key this " +
+        "corpus with unique bigint doc ids.")
     docs.select(col("doc_id").as("orig_id"),
-      xxhash64(col("doc_id")).as("doc_id"))
+      xxhash64(col("doc_id")).as("doc_id")).distinct()
   }
+
+  /** `frame` with its doc ids replaced by their fingerprints. */
+  private def fingerprinted(frame: DataFrame): DataFrame =
+    frame.withColumn("doc_id", xxhash64(col("doc_id")))
+
+  /** One operator run's doc-id currency, resolved by [[docIdRoute]]:
+    * `frame` is the input in bigint currency, `dict` the fingerprint
+    * dictionary when the ids had to be mapped (None: bigint input passes
+    * through, and so do the outputs). */
+  private final case class DocIdRoute(frame: DataFrame,
+      dict: Option[DataFrame]) {
+    /** An unordered `(d1 < d2)` output in original ids, re-oriented by
+      * them; each `sides` pair names two per-side columns that swap with
+      * their docs when the original order reverses the fingerprint one. */
+    def unordered(out: DataFrame, sides: (String, String)*): DataFrame =
+      dict.fold(out)(pairsToOriginal(out, _, sides = sides))
+
+    /** An oriented `(contained, container)` output in original ids —
+      * orientation is role-based, so the ids just map. */
+    def oriented(out: DataFrame): DataFrame =
+      dict.fold(out)(pairsToOriginal(out, _, ("contained", "container"),
+        reorient = false))
+  }
+
+  /** The doc-id currency boundary — the ONE place an operator decides its
+    * doc-id type. A bigint `doc_id` frame passes through untouched (the
+    * bigint plan is exactly the operator body's); any other type maps to
+    * fingerprints behind the collision guard, the operator runs its
+    * bigint body on [[DocIdRoute.frame]], and the route joins the output
+    * ids back to the original ones. `dictKey` caches the guard's
+    * corpus-sized validation action with the session's checkpointed
+    * frames ([[cachedFrames]], under `dict:<key>`); the dictionary frame
+    * itself stays lazy. */
+  private def docIdRoute(frame: DataFrame, opName: String,
+      dictKey: Option[String] = None): DocIdRoute =
+    if (frame.schema("doc_id").dataType ==
+        org.apache.spark.sql.types.LongType) DocIdRoute(frame, None)
+    else DocIdRoute(fingerprinted(frame),
+      Some(cachedFrames(frame.sparkSession, dictKey.map(k => s"dict:$k"))(
+        docIdFingerprints(frame, opName))))
 
   /** Resolves the verify SHAPE once per operator run: 'merge' passes
     * through; 'auto'/'broadcast' price the broadcast with ONE aggregate
@@ -1750,29 +1724,23 @@ object Dedup {
     // equally stale. Owned here because arbitrary callers rebuild through
     // this entry point (ensureFixtureIndex's own cleanup is now redundant
     // but harmless).
-    locally {
-      val (pfs, _) = protocolFs(path)
-      for (sub <- Seq("inc", "compact", "forest"))
-        pfs.delete(new org.apache.hadoop.fs.Path(s"$path/$sub"), true)
-    }
-    val d =
-      if (docs.schema("doc_id").dataType ==
-          org.apache.spark.sql.types.LongType) {
-        // a rebuild over a formerly string-keyed index path must also
-        // remove the old dictionary: a surviving dict/ dir makes
-        // indexHasDict misread the bigint rebuild as fingerprint-keyed —
-        // bigint increments get refused with a misleading message, string
-        // increments get fingerprinted and probed against raw-bigint
-        // postings where every dictionary join-back silently drops the
-        // pair (ADVICE r16).
-        val (pfs, _) = protocolFs(path)
+    val (pfs, _) = protocolFs(path)
+    for (sub <- Seq("inc", "compact", "forest"))
+      pfs.delete(new org.apache.hadoop.fs.Path(s"$path/$sub"), true)
+    val route = docIdRoute(docs, "writeDedupIndex")
+    route.dict match {
+      case Some(dict) => dict.write.mode("overwrite").parquet(s"$path/dict")
+      // a bigint rebuild over a formerly string-keyed index path must also
+      // remove the old dictionary: a surviving dict/ dir makes
+      // indexHasDict misread the bigint rebuild as fingerprint-keyed —
+      // bigint increments get refused with a misleading message, string
+      // increments get fingerprinted and probed against raw-bigint
+      // postings where every dictionary join-back silently drops the
+      // pair (ADVICE r16).
+      case None =>
         pfs.delete(new org.apache.hadoop.fs.Path(s"$path/dict"), true)
-        docs
-      } else {
-        docIdFingerprints(docs, "writeDedupIndex")
-          .write.mode("overwrite").parquet(s"$path/dict")
-        docs.select(xxhash64(col("doc_id")).as("doc_id"), col("text"))
-      }
+    }
+    val d = route.frame
     shinglesOf(d).write.mode("overwrite").parquet(s"$path/shingles")
     d.select(col("doc_id"), md5(col("text")).as("h"))
       .write.mode("overwrite").parquet(s"$path/hashes")
@@ -1783,7 +1751,6 @@ object Dedup {
     // fmax = committed + 1) and was silently served as v0, mis-clustering
     // its appended docs — the stamp makes the distinction persistent
     // instead of leaving it to scaladoc (ADVICE r13).
-    val (pfs, _) = protocolFs(path)
     val stamp = pfs.create(
       new org.apache.hadoop.fs.Path(path, "_graft_protocol"), true)
     try stamp.write(protocolStamp.getBytes(
@@ -2123,17 +2090,19 @@ object Dedup {
           s"${m.getLong(1)} distinct fingerprints) — two documents " +
           "would silently merge; this increment cannot be committed " +
           "to this index")
-      (incoming.select(xxhash64(col("doc_id")).as("doc_id"),
-        col("text")), Some((dictU, incDict)))
+      (fingerprinted(incoming), Some((dictU, incDict)))
     }
   }
 
-  /** Translate a fingerprint-currency unordered pair frame back to
-    * original ids, RE-CANONICALIZED so d1 = the smaller ORIGINAL id:
-    * fingerprint order is arbitrary in original-id order, and every
-    * min-id verdict rule downstream compares original ids. Dictionary
-    * joins pinned shuffled — the dictionary is corpus-sized at 100 TB.
-    * Columns beyond (d1, d2) pass through.
+  /** Translate a fingerprint-currency pair frame's id columns `ids` back
+    * to original ids. With `reorient` (an unordered pair frame) the pair
+    * is RE-CANONICALIZED so d1 = the smaller ORIGINAL id: fingerprint
+    * order is arbitrary in original-id order, and every min-id verdict
+    * rule downstream compares original ids; each `sides` pair names two
+    * per-side columns that swap with their docs when the order flips.
+    * Without it (an oriented frame) the ids just map. Dictionary joins
+    * pinned shuffled — the dictionary is corpus-sized at 100 TB. Other
+    * columns pass through, in the frame's column order.
     *
     * The joins are LEFT + loud-on-null, not inner: a fingerprint absent
     * from the dictionary (state skew — a partially copied index, a
@@ -2142,9 +2111,10 @@ object Dedup {
     * into silent recall loss (ADVICE r16). `raise_error` keeps the
     * check zero-extra-actions: it rides the translate projection
     * itself. */
-  private[graft] def pairsToOriginal(pairs: DataFrame,
-      dict: DataFrame): DataFrame = {
-    val rest = pairs.columns.filterNot(Set("d1", "d2")).map(col).toSeq
+  private[graft] def pairsToOriginal(pairs: DataFrame, dict: DataFrame,
+      ids: (String, String) = ("d1", "d2"), reorient: Boolean = true,
+      sides: Seq[(String, String)] = Nil): DataFrame = {
+    val (a, b) = ids
     def checked(o: Column, d: Column): Column =
       when(o.isNull, raise_error(concat(
         lit("dedup fingerprint dictionary has no entry for pair " +
@@ -2152,15 +2122,23 @@ object Dedup {
         lit(" — the index's dict/ state is incomplete (partial copy or " +
           "stale dictionary); rebuild the index with writeDedupIndex"))))
         .otherwise(o)
+    def orig(id: String, o: String): DataFrame =
+      dict.select(col("doc_id").as(id), col("orig_id").as(o))
+        .hint("shuffle_hash")
+    val swaps = (sides ++ sides.map(_.swap)).toMap
+    val o1 = col("o1")
+    val o2 = col("o2")
     pairs
-      .join(dict.select(col("doc_id").as("d1"), col("orig_id").as("o1"))
-        .hint("shuffle_hash"), Seq("d1"), "left")
-      .join(dict.select(col("doc_id").as("d2"), col("orig_id").as("o2"))
-        .hint("shuffle_hash"), Seq("d2"), "left")
-      .select(checked(col("o1"), col("d1")).as("o1") +:
-        checked(col("o2"), col("d2")).as("o2") +: rest: _*)
-      .select(least(col("o1"), col("o2")).as("d1") +:
-        greatest(col("o1"), col("o2")).as("d2") +: rest: _*)
+      .join(orig(a, "o1"), Seq(a), "left")
+      .join(orig(b, "o2"), Seq(b), "left")
+      .select(pairs.columns.map(col).toSeq ++ Seq(
+        checked(o1, col(a)).as("o1"), checked(o2, col(b)).as("o2")): _*)
+      .select(pairs.columns.toSeq.map {
+        case `a` => (if (reorient) least(o1, o2) else o1).as(a)
+        case `b` => (if (reorient) greatest(o1, o2) else o2).as(b)
+        case c => swaps.get(c).fold(col(c))(other =>
+          when(o1 < o2, col(c)).otherwise(col(other)).as(c))
+      }: _*)
   }
 
   /** Dedup an `incoming` increment against a [[writeDedupIndex]]-persisted
@@ -2353,17 +2331,9 @@ object Dedup {
     // fallback to the classic stage was the one seed shape that cannot
     // run decades, VERDICT r15 #2). The collision guard re-runs here:
     // the forest may be seeded later than the index.
-    val pairs =
-      if (docs.schema("doc_id").dataType ==
-          org.apache.spark.sql.types.LongType)
-        ngramJaccardPrefixOfShingles(shinglesOf(docs), threshold, maxDf,
-          verifyChunks = verifyChunks)
-      else {
-        val _ = docIdFingerprints(docs, "writeClusterForest")
-        ngramJaccardPrefixOfShingles(shinglesOf(docs.select(
-            xxhash64(col("doc_id")).as("doc_id"), col("text"))),
-          threshold, maxDf, verifyChunks = verifyChunks)
-      }
+    val pairs = ngramJaccardPrefixOfShingles(
+      shinglesOf(docIdRoute(docs, "writeClusterForest").frame), threshold,
+      maxDf, verifyChunks = verifyChunks)
     val labels = Curation.connectedComponentsStar(
       pairs.select(col("d1"), col("d2")))
     labels.filter(col("id") =!= col("label"))
@@ -2697,12 +2667,8 @@ object Dedup {
   private def sigCol(i: Int): Column =
     min(md5(concat(lit(s"$i:"), col("sx")))).as(s"s$i")
 
-  /** Per-document MinHash signatures: k independent md5-keyed minima over the
-    * shingle set. Constant per-doc state — scales to any corpus. */
-  def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
-    signatures(spark, dir).orderBy(col("doc_id"))
-
-  /** MinHash signatures of an arbitrary `(doc_id, s)` shingle frame —
+  /** Per-document MinHash signatures — k independent md5-keyed minima
+    * over the shingle set — of an arbitrary `(doc_id, s)` shingle frame:
     * per-doc state only (no corpus-relative gate), which is what lets the
     * streaming index dedup ([[graft.streaming.Continuous]], q99) sign each
     * micro-batch independently of everything already ingested.
@@ -2954,11 +2920,10 @@ object Dedup {
       .groupBy(col("fp"))
       .agg(sort_array(collect_set(col("source"))).as("ss"))
       .filter(size(col("ss")) > 1)
-      .select(explode(expr(
-        """flatten(transform(ss, (a, i) ->
-          |  transform(slice(ss, i + 2, size(ss)), b ->
-          |    struct(a AS s1, b AS s2))))""".stripMargin)).as("p"))
-      .select(col("p.s1"), col("p.s2"))
+      // ss is sorted and distinct, so s1 < s2 picks each unordered pair once
+      .select(col("ss"), explode(col("ss")).as("s1"))
+      .select(col("s1"), explode(col("ss")).as("s2"))
+      .filter(col("s1") < col("s2"))
       .groupBy(col("s1"), col("s2"))
       .agg(count(lit(1)).as("shared_passages"))
       .orderBy(col("s1"), col("s2"))
@@ -3366,50 +3331,30 @@ object Dedup {
   /** [[containmentSketch]] over an arbitrary `(doc_id, text)` frame —
     * knobs as in [[containmentSketchOfShingles]]. String/UUID-keyed
     * corpora ride the SAME scale path through the fingerprint
-    * dictionary ([[docIdFingerprints]], the [[containmentPrefixOf]]
-    * route): the bottom-k sample is a hash rank over the SHINGLE
-    * values — doc-id-independent — so fingerprinting the ids changes
-    * neither the sample nor any candidate, and the oriented pairs just
-    * join back (pinned shuffled — the dictionary is corpus-sized at
-    * 100 TB) to the original ids; orientation is role-based, so no
-    * re-ordering step. The r15 form refused string ids and pointed
-    * callers at the classic stage that cannot run decades — yet
-    * URL-keyed web corpora at low thresholds are exactly the sketch's
-    * home regime (VERDICT r15 #1). */
+    * dictionary ([[docIdRoute]]): the bottom-k sample is a hash rank
+    * over the SHINGLE values — doc-id-independent — so fingerprinting
+    * the ids changes neither the sample nor any candidate, and the
+    * oriented pairs just join back (pinned shuffled — the dictionary is
+    * corpus-sized at 100 TB) to the original ids; orientation is
+    * role-based, so no re-ordering step. The r15 form refused string
+    * ids and pointed callers at the classic stage that cannot run
+    * decades — yet URL-keyed web corpora at low thresholds are exactly
+    * the sketch's home regime (VERDICT r15 #1). */
   def containmentSketchOf(docs: DataFrame, thresholdPpm: Long = 500000L,
       maxDf: Int = 100, k: Int = AutoK, verify: String = "auto",
       maxBroadcastBytes: Long = 256L << 20, verifyChunks: Int = 0,
       diskBudgetBytes: Long = defaultDiskBudgetBytes,
       recallTargetPpm: Long = 995000L,
       measureFraction: Double = 0.1,
-      framesKey: Option[String] = None): DataFrame =
-    if (docs.schema("doc_id").dataType ==
-        org.apache.spark.sql.types.LongType)
-      containmentSketchOfShingles(shinglesOf(docs), thresholdPpm, maxDf,
-          k, verify, maxBroadcastBytes, verifyChunks, diskBudgetBytes,
-          recallTargetPpm, measureFraction, framesKey)
-        .orderBy(col("contained"), col("container"))
-    else {
-      // the collision-guard aggregation inside docIdFingerprints is one
-      // corpus-sized action — cached with the frames when the caller
-      // supplies a session key (the validated dictionary frame itself
-      // stays lazy; only the validation action is worth a cache)
-      val dict = cachedFrames(docs.sparkSession,
-        framesKey.map(k0 => s"dict:$k0"))(
-        docIdFingerprints(docs, "containmentSketch"))
-      val fp = docs.select(xxhash64(col("doc_id")).as("doc_id"),
-        col("text"))
-      containmentSketchOfShingles(shinglesOf(fp), thresholdPpm, maxDf,
-          k, verify, maxBroadcastBytes, verifyChunks, diskBudgetBytes,
-          recallTargetPpm, measureFraction, framesKey)
-        .join(dict.select(col("doc_id").as("contained"),
-          col("orig_id").as("oc")).hint("shuffle_hash"), Seq("contained"))
-        .join(dict.select(col("doc_id").as("container"),
-          col("orig_id").as("ot")).hint("shuffle_hash"), Seq("container"))
-        .select(col("oc").as("contained"), col("ot").as("container"),
-          col("n_shared"), col("n_shingles"), col("cont_ppm"))
-        .orderBy(col("contained"), col("container"))
-    }
+      framesKey: Option[String] = None): DataFrame = {
+    // the dictionary's collision-guard action is corpus-sized — cached
+    // with the frames when the caller supplies a session key
+    val route = docIdRoute(docs, "containmentSketch", framesKey)
+    route.oriented(containmentSketchOfShingles(shinglesOf(route.frame),
+        thresholdPpm, maxDf, k, verify, maxBroadcastBytes, verifyChunks,
+        diskBudgetBytes, recallTargetPpm, measureFraction, framesKey))
+      .orderBy(col("contained"), col("container"))
+  }
 
   /** The sketch family's shared frames over a `(doc_id, s)` shingle
     * frame: the checkpointed per-doc length frame, the hash-RANKED gated
@@ -3685,32 +3630,16 @@ object Dedup {
       maxDf: Int = 100, verify: String = "auto",
       maxBroadcastBytes: Long = 256L << 20,
       verifyChunks: Int = 0, candChunks: Int = 0,
-      diskBudgetBytes: Long = defaultDiskBudgetBytes): DataFrame =
-    if (docs.schema("doc_id").dataType ==
-        org.apache.spark.sql.types.LongType)
-      containmentPrefixOfShingles(shinglesOf(docs), thresholdPpm, maxDf,
-          verify, maxBroadcastBytes, verifyChunks, candChunks,
-          diskBudgetBytes)
-        .orderBy(col("contained"), col("container"))
-    else {
-      // the fingerprint-dictionary route for string/UUID-keyed corpora
-      // (scaladoc at [[docIdFingerprints]] and the Jaccard twin):
-      // containment pairs are ORIENTED, so the join back just restores
-      // the original ids — no re-ordering step
-      val dict = docIdFingerprints(docs, "containmentPrefix")
-      val fp = docs.select(xxhash64(col("doc_id")).as("doc_id"),
-        col("text"))
-      containmentPrefixOfShingles(shinglesOf(fp), thresholdPpm, maxDf,
-          verify, maxBroadcastBytes, verifyChunks, candChunks,
-          diskBudgetBytes)
-        .join(dict.select(col("doc_id").as("contained"),
-          col("orig_id").as("oc")).hint("shuffle_hash"), Seq("contained"))
-        .join(dict.select(col("doc_id").as("container"),
-          col("orig_id").as("ot")).hint("shuffle_hash"), Seq("container"))
-        .select(col("oc").as("contained"), col("ot").as("container"),
-          col("n_shared"), col("n_shingles"), col("cont_ppm"))
-        .orderBy(col("contained"), col("container"))
-    }
+      diskBudgetBytes: Long = defaultDiskBudgetBytes): DataFrame = {
+    // string/UUID-keyed corpora ride the fingerprint dictionary
+    // ([[docIdRoute]]); containment pairs are ORIENTED, so the ids map
+    // back with no re-ordering step
+    val route = docIdRoute(docs, "containmentPrefix")
+    route.oriented(containmentPrefixOfShingles(shinglesOf(route.frame),
+        thresholdPpm, maxDf, verify, maxBroadcastBytes, verifyChunks,
+        candChunks, diskBudgetBytes))
+      .orderBy(col("contained"), col("container"))
+  }
 
   private[graft] def containmentPrefixOfShingles(sh: DataFrame,
       thresholdPpm: Long, maxDf: Int, verify: String = "auto",

@@ -161,10 +161,10 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(sigs(longSh) === sigs(hexFrame))
   }
 
-  test("interCounts: the length-carrying generator path equals the HOF " +
-      "library twin row for row") {
+  test("interCounts: the length-carrying generator path equals the " +
+      "fingerprint-dictionary route row for row") {
     import spark.implicits._
-    // doc ids kept single-digit so the string twin's lexicographic
+    // doc ids kept single-digit so the string route's lexicographic
     // (d1, d2) orientation matches the numeric one
     val shL = Seq((1L, 10L), (1L, 11L), (1L, 12L), (2L, 10L), (2L, 11L),
       (3L, 10L), (3L, 13L), (4L, 13L), (4L, 10L), (4L, 11L), (5L, 99L))
@@ -172,11 +172,11 @@ class DedupSimilaritySpec extends SparkSpec {
     val viaGen = Dedup.interCountsOfShingles(shL, maxDf = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4))).toSet
-    val viaHof = Dedup.interCountsOfShingles(
+    val viaDict = Dedup.interCountsOfShingles(
       shL.select($"doc_id".cast("string").as("doc_id"), $"s"), maxDf = 10)
       .collect().map(r => (r.getString(0).toLong, r.getString(1).toLong,
         r.getLong(2), r.getLong(3), r.getLong(4))).toSet
-    assert(viaGen === viaHof)
+    assert(viaGen === viaDict)
     assert(viaGen.nonEmpty)
     // spot-pin the carried lengths: doc 1 has 3 shingles total, doc 2
     // has 2, sharing {10, 11} -> (1, 2, i=2, c1=3, c2=2)
@@ -186,10 +186,10 @@ class DedupSimilaritySpec extends SparkSpec {
   test("pair generator golden fence: streams sorted pairs, " +
       "multiset-identical to the inline HOF formulation") {
     import spark.implicits._
-    // the conf-selected HOF emitter twin was retired in r13 (the HOF form
-    // survives only as emitPostingPairs' non-long-doc-id library branch);
-    // this fence pins the generator's semantics against the HOF
-    // FORMULATION inline: pairs are emitted d1 < d2 whatever the
+    // the HOF pair emission is retired from the engine (every doc-id type
+    // reaches the generator, non-bigint ids through the fingerprint
+    // dictionary); this fence pins the generator's semantics against the
+    // HOF FORMULATION inline: pairs are emitted d1 < d2 whatever the
     // posting-list order, duplicates pair like positional pairs, and
     // short lists yield nothing
     val lists = Seq(
@@ -212,9 +212,9 @@ class DedupSimilaritySpec extends SparkSpec {
     assert(emitted === hofTwin)
     assert(emitted((1L, 9L)) == 1 && emitted((7L, 7L)) == 1)
     assert(emitted.keys.forall { case (a, b) => a <= b })
-    // the library branch: a STRING-keyed doc-id frame still pairs through
-    // the portable HOF form with identical semantics (shingle 3 has df 1
-    // and dies at the gate; docLen still counts it)
+    // the dictionary route: a STRING-keyed doc-id frame pairs through the
+    // same generator with identical semantics (shingle 3 has df 1 and
+    // dies at the gate; docLen still counts it)
     val viaLib = Dedup.interCountsOfShingles(
       Seq(("x", 1L), ("x", 2L), ("x", 3L), ("y", 1L), ("y", 2L))
         .toDF("doc_id", "s"), maxDf = 10)
@@ -458,6 +458,21 @@ class DedupSimilaritySpec extends SparkSpec {
     val prefC = Dedup.containmentPrefixOf(docs)
       .collect().map(_.toSeq).toSeq
     assert(prefC === classicC && classicC.nonEmpty)
+    // the classic stage shares the dictionary route, so pin it against
+    // an independent reference: the BIGINT corpus's rows with ids mapped,
+    // unordered pairs re-oriented by the mapped (string) ids
+    def url(id: Any) = s"https://example.com/doc/$id"
+    val longDocs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
+    val classicJLongMapped = Dedup.ngramJaccardOf(longDocs).collect()
+      .map { r =>
+        val (a, b) = (url(r.get(0)), url(r.get(1)))
+        Seq[Any](Seq(a, b).min, Seq(a, b).max, r.get(2))
+      }.toSet
+    assert(classicJ.toSet === classicJLongMapped)
+    val classicCLongMapped = Dedup.containmentOf(Dedup.shinglesOf(longDocs))
+      .collect().map(r => Seq[Any](url(r.get(0)), url(r.get(1)),
+        r.get(2), r.get(3), r.get(4))).toSet
+    assert(classicC.toSet === classicCLongMapped)
     // the SKETCH path rides the same dictionary route (r16 — the r15
     // form refused string ids and routed callers to the classic stage
     // that cannot run decades): degenerate k equals the classic stage

@@ -228,12 +228,21 @@ class PlanSpec extends SparkSpec {
   }
 
   test("ngram pair emission runs the streaming generator, not the HOF chain") {
+    import org.apache.spark.sql.functions.{col, concat, lit}
     StageMemo.clear() // cached AQE plans render Initial+Final sections
-    val p = plan(Dedup.ngramJaccardOf(Tables.documents(spark, sfDir)))
-    assert(p.contains("graft_doc_id_len_pairs"),
-      s"the DocIdLenPairs generator must carry the pair explode:\n$p")
-    assert(!p.contains("slice("),
-      "the interpreted HOF pair chain must be gone from the default plan")
+    val docs = Tables.documents(spark, sfDir)
+    // a string-keyed corpus takes the same generator, through the
+    // fingerprint dictionary
+    val stringKeyed = plan(Dedup.ngramJaccardOf(docs.select(
+      concat(lit("doc-"), col("doc_id").cast("string")).as("doc_id"),
+      col("text"))))
+    val p = plan(Dedup.ngramJaccardOf(docs))
+    for (q <- Seq(p, stringKeyed)) {
+      assert(q.contains("graft_doc_id_len_pairs"),
+        s"the DocIdLenPairs generator must carry the pair explode:\n$q")
+      assert(!q.contains("slice("),
+        s"the interpreted HOF pair chain must be gone from the plan:\n$q")
+    }
     // the r19 shape: doc lengths ride the emission, so the pair frame is
     // joined back to docLen ZERO times (the r18 plan exchanged the pair
     // frame by d1 and again by d2 against a tiny pinned-shuffled side)

@@ -304,14 +304,23 @@ class PropertySpec extends SparkSpec {
     val docGen = Gen.listOfN(8, Gen.choose(0, 4).map(i => s"w$i"))
     val gen = Gen.listOfN(5, docGen)
     holds(Prop.forAll(gen) { texts =>
-      val docs = texts.zipWithIndex
-        .map { case (ts, i) => (i.toLong, ts.mkString(" ")) }
-        .toDF("doc_id", "text")
-      val got = operators.Dedup
+      def containment(docs: org.apache.spark.sql.DataFrame) = operators.Dedup
         .containmentOf(operators.Dedup.shinglesOf(docs),
           thresholdPpm = 1L, maxDf = 100)
         .collect()
+      val got = containment(texts.zipWithIndex
+          .map { case (ts, i) => (i.toLong, ts.mkString(" ")) }
+          .toDF("doc_id", "text"))
         .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(4)))
+        .toMap
+      // string ids whose lexicographic order disagrees with the numeric
+      // one ("d10" < "d8"): the fingerprint-dictionary route must carry
+      // each doc's length with its doc through the re-orientation
+      val gotS = containment(texts.zipWithIndex
+          .map { case (ts, i) => (s"d${8 + i}", ts.mkString(" ")) }
+          .toDF("doc_id", "text"))
+        .map(r => (r.getString(0).drop(1).toLong - 8,
+          r.getString(1).drop(1).toLong - 8) -> (r.getLong(2), r.getLong(4)))
         .toMap
       val sets = texts.map(_.sliding(3).filter(_.length == 3)
         .map(_.mkString(" ")).toSet)
@@ -322,7 +331,7 @@ class PropertySpec extends SparkSpec {
         if i > 0
       } yield (a.toLong, b.toLong) ->
         (i.toLong, i.toLong * 1000000L / sets(a).size)).toMap
-      got == want
+      got == want && gotS == want
     }, runs = 12)
   }
 

@@ -26,6 +26,23 @@ class SideDataSpec extends SparkSpec {
     // NOT deleted eagerly: the session re-validates registered files on
     // later tasks; JVM exit cleans the temp file
     f.deleteOnExit()
+    // a DIRECTORY of side files (addCacheDir): localized recursively,
+    // its files readable under the returned name inside tasks
+    val d = java.nio.file.Files.createTempDirectory("sidedir")
+    java.nio.file.Files.writeString(d.resolve("a.txt"), "spark")
+    java.nio.file.Files.writeString(d.resolve("b.txt"), "engine")
+    val dirName = SideData.addCacheDir(spark, d.toString)
+    val read = Seq("a.txt", "b.txt").toDF("f")
+      .mapPartitions(_.map { r =>
+        val src = scala.io.Source.fromFile(
+          new java.io.File(SideData.localPath(dirName), r.getString(0)))
+        try src.mkString.trim finally src.close()
+      })(org.apache.spark.sql.Encoders.STRING)
+      .collect().toSet
+    assert(read === Set("spark", "engine"))
+    // deleteOnExit runs in reverse registration order: files, then dir
+    d.toFile.deleteOnExit()
+    d.toFile.listFiles().foreach(_.deleteOnExit())
   }
 
   test("broadcastLookup distributes a small table for per-row access") {
