@@ -156,7 +156,11 @@ private[graft] object StageMemo {
     * unbounded and never unpersists — the ADVICE-r18 storage-budget
     * leak). A released tuple CANNOT be recomputed (checkpoints have no
     * lineage); callers must re-invoke the builder, which is what a
-    * stash miss does. */
+    * stash miss does. Frames DERIVED from a tuple (the consumers' plans,
+    * and any [[apply]] entry built over them) are not released with it:
+    * recomputed after the eviction they fail on the missing blocks. No
+    * dependency edge records that yet — see the call sites' note at
+    * `Dedup.cachedFrames`. */
   def frames[T](spark: SparkSession, key: String)(build: => T)(
       release: T => Unit): T =
     memo.synchronized {

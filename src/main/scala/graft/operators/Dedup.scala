@@ -50,7 +50,18 @@ object Dedup {
     * arbitrary frames pass None and keep per-call builds — a caller's
     * ad-hoc frame has no stable identity to cache under. Before this,
     * each half of the paired fixture entries (q119/q120, q121/q122,
-    * q126/q128) re-built identical checkpointed frames per invocation. */
+    * q126/q128) re-built identical checkpointed frames per invocation.
+    *
+    * CROSS-CACHE DEPENDENCY, unrecorded: everything a call site derives
+    * from a stashed tuple — its candidate and verify plans, the frame it
+    * returns, and any frame a caller persists or memoizes over that
+    * ([[graft.StageMemo.apply]] included) — reads the tuple's checkpoint
+    * blocks, which have no lineage. Evicting the tuple (least-recently-
+    * used past `StageMemo.maxFrameTuples`, or `StageMemo.clear()`)
+    * releases those blocks, so a derived plan recomputed after the
+    * eviction fails with a missing-block error instead of rebuilding.
+    * No dependency edge evicts the derived entries alongside; the tuple
+    * budget (StageMemoSpec) only keeps eviction away from a live lap. */
   private def cachedFrames[T](spark: SparkSession, key: Option[String])(
       build: => T): T = key match {
     case Some(k) =>
@@ -789,6 +800,8 @@ object Dedup {
     // q119/q120 +19-24% warm for an OOM that only exists at decades).
     // The whole checkpointed set is session-cached for the paired
     // fixture entries (q119/q120 share it — [[cachedFrames]]).
+    // every frame derived below reads the stashed checkpoint blocks: an
+    // eviction of the tuple breaks it ([[cachedFrames]], cross-cache note)
     val (docLen, ranked, arrays, estBytes) =
       cachedFrames(sh.sparkSession, framesKey) {
         val docLen0 = Bridge.dropOriginConstraints(
@@ -3303,7 +3316,9 @@ object Dedup {
       verify: String = "auto",
       maxBroadcastBytes: Long = 256L << 20): DataFrame = {
     // same frames cache key as containmentSketch (q126): the ladder reads
-    // exactly the sketch's hash-ranked frames, so one build serves both
+    // exactly the sketch's hash-ranked frames, so one build serves both.
+    // Every frame derived below reads the stashed checkpoint blocks: an
+    // eviction of the tuple breaks it ([[cachedFrames]], cross-cache note)
     val (docLen, ranked, arrays, _, _, _) =
       cachedFrames(spark, Some(s"sketch:$dir:$thresholdPpm:$maxDf"))(
         sketchFrames(shingles(spark, dir), thresholdPpm, maxDf))
@@ -3446,6 +3461,8 @@ object Dedup {
           .simpleString} — use containmentSketchOf (the fingerprint-" +
         "dictionary route) for other doc-id types")
     import org.apache.spark.sql.graft.Bridge
+    // every frame derived below reads the stashed checkpoint blocks: an
+    // eviction of the tuple breaks it ([[cachedFrames]], cross-cache note)
     val (docLen, ranked, arrays, totalShingleRows, nDocs, estBytes) =
       cachedFrames(sh.sparkSession, framesKey)(
         sketchFrames(sh, thresholdPpm, maxDf))
@@ -3671,6 +3688,8 @@ object Dedup {
     // path (the measured 100× unroll OOM vs the fixture-scale disk tax —
     // scaladoc at scaleCheckpoint); session-cached for the paired
     // fixture entries (q121/q122 share it — [[cachedFrames]])
+    // every frame derived below reads the stashed checkpoint blocks: an
+    // eviction of the tuple breaks it ([[cachedFrames]], cross-cache note)
     val (docLen, ranked, arrays, estBytes) =
       cachedFrames(sh.sparkSession, framesKey) {
         val docLen0 = Bridge.dropOriginConstraints(

@@ -134,25 +134,51 @@ object Continuous {
 
   private val runSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** Run `f` with `spark.sql.shuffle.partitions` temporarily lowered to
-    * `n`: q53's stateful stage 2 pins its STATE STORE partition count to
-    * the setting at first batch (every micro-batch commits every state
-    * partition), and the foreachBatch appenders (q88/q99/q117) chain
-    * small per-commit shuffles that 32-way tasks only slow. Safe per
-    * query because each invocation starts a fresh checkpoint. ASSUMES
+  /** The one scope every bounded stream run here goes through
+    * ([[foldReplay]], q53, q88, q99, q117), for the stream's whole life:
+    * the file source builds its `sources/0` log on the stream thread
+    * after `start()` returns, so a conf restored right after `start()`
+    * would miss it.
+    *
+    *  - Checkpoint and state logs are written by
+    *    [[ForkFreeCheckpointFileManager]] unless the session already
+    *    names a manager: every commit writes three logs, and without the
+    *    native hadoop library Spark's default manager launches about ten
+    *    `chmod`/`stat` processes per log write.
+    *  - With `shuffleCap`, `spark.sql.shuffle.partitions` is lowered (never
+    *    raised: a session already running narrower keeps its width) to
+    *    the cap: q53's stateful stage 2 pins its STATE STORE partition
+    *    count to the setting at first batch (every micro-batch commits
+    *    every state partition), and the foreachBatch appenders
+    *    (q88/q99/q117) chain small per-commit shuffles that 32-way tasks
+    *    only slow. Safe per query because each invocation starts a fresh
+    *    checkpoint.
+    *
+    * Both settings are restored on success and on failure. ASSUMES
     * single-threaded use of the session: the set/restore is
-    * session-global, so a concurrent query could plan with the lowered
-    * value; a multi-tenant session should run bounded streams on
-    * `spark.newSession()` instead. */
-  private def withStreamShuffle[T](spark: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    // only ever LOWER: a session already running narrower than `n` (tests
-    // and bisection runs use 4) must not have its state fan-out raised
-    val eff = math.min(scala.util.Try(old.toInt).getOrElse(n), n)
-    spark.conf.set(key, eff.toString)
-    try f finally spark.conf.set(key, old)
+    * session-global, so a concurrent query could plan with the scoped
+    * values; a multi-tenant session should run bounded streams on
+    * `spark.newSession()` instead. [[perWindowAggregate]] and
+    * [[chainedQueries]] take no scope of their own: their caller owns the
+    * query's lifetime and the session's conf. */
+  private def boundedStream[T](spark: SparkSession,
+      shuffleCap: Option[Int] = None)(f: => T): T = {
+    val conf = spark.conf
+    val scoped = Seq(
+      shuffleCap.map(n => shuffleKey -> math.min(
+        scala.util.Try(conf.get(shuffleKey).toInt).getOrElse(n), n).toString),
+      Option.when(conf.getOption(checkpointManagerKey).isEmpty)(
+        checkpointManagerKey -> classOf[ForkFreeCheckpointFileManager].getName)
+    ).flatten
+    val prior = scoped.map { case (k, _) => k -> conf.getOption(k) }
+    scoped.foreach { case (k, v) => conf.set(k, v) }
+    try f
+    finally prior.foreach { case (k, v) => v.fold(conf.unset(k))(conf.set(k, _)) }
   }
+
+  private val shuffleKey = "spark.sql.shuffle.partitions"
+  private[graft] val checkpointManagerKey =
+    "spark.sql.streaming.checkpointFileManagerClass"
 
   /** Hadoop FileSystem + Path for a state/staging location. Every
     * existence/mtime probe and recursive delete in this file goes through
@@ -492,7 +518,7 @@ object Continuous {
       .count(_.getPath.getName.endsWith(".parquet")) / filesPerTrigger.toDouble)
     val ckpt = s"target/streamstage/ckpt/$name"
     deleteRecursively(ckpt) // a stale checkpoint would skip every file
-    try {
+    try boundedStream(spark) {
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", filesPerTrigger.toString)
         .parquet(inputDir)
@@ -686,7 +712,7 @@ object Continuous {
     val mid = s"target/streamstage/mid/run$run"
     val ckpt = s"target/streamstage/ckpt/pipeline$run"
     val name = s"q53_pipeline_$run"
-    try withStreamShuffle(spark, 8) {
+    try boundedStream(spark, shuffleCap = Some(8)) {
       val out = chainedQueries(spark, staged, schema, mid, ckpt,
         df => df.filter(col("event_type") =!= "view")
           .select(col("event_type"), col("value")),
@@ -886,7 +912,7 @@ object Continuous {
     // ~10 small shuffles per commit (measured at sf0.1: 36 s at 32
     // partitions vs 27 s at 8); the helper only ever LOWERS, so a
     // corpus-scale deployment keeps its own wider setting
-    try withStreamShuffle(spark, 8) {
+    try boundedStream(spark, shuffleCap = Some(8)) {
       val lastBatchId = new java.util.concurrent.atomic.AtomicLong(-1L)
       val commitsSinceCompact = new java.util.concurrent.atomic.AtomicInteger(0)
       // per-run auto-gate accounting: accumulated index posting rows,
@@ -1111,7 +1137,7 @@ object Continuous {
     val verdictDir = s"$stateDir/kind=verdicts"
     val ckpt = s"target/streamstage/ckpt/lsh$run"
     val D = graft.operators.Dedup
-    try withStreamShuffle(spark, 8) {
+    try boundedStream(spark, shuffleCap = Some(8)) {
       // durable index seeded from the shipped corpus (inc=0 rows win
       // against any increment id)
       // derivation stamp: BUMP when shinglesOf/signaturesOf/bandBuckets
@@ -1294,7 +1320,7 @@ object Continuous {
     def textState(b: DataFrame) =
       (D.bandBuckets(D.signaturesOf(D.shinglesOf(b))),
         b.select(col("doc_id"), md5(col("text")).as("h")))
-    try withStreamShuffle(spark, 8) {
+    try boundedStream(spark, shuffleCap = Some(8)) {
       // durable state starts EMPTY (unlike q99 there is no pre-shipped
       // corpus — everything arrives streamed): state dirs materialize on
       // first append, reads substitute schema-only empty frames until

@@ -30,11 +30,11 @@ class StreamingSpec extends SparkSpec {
     // The scale contract of the streaming tier: trigger/commit overhead is
     // FIXED per micro-batch (~0.55 s measured isolated at sf0.1), so the
     // four streaming queries' bench cost is lifecycle, not data. Pin the
-    // FASTEST stateful commit's triggerExecution under 6 s (~10x the
-    // measured steady state) — a state-store or trigger regression (e.g.
-    // state re-scan per batch) slows every commit and blows through the
-    // bound, while co-tenant noise inflating individual commits in a
-    // shared test run does not. Listener-based so `sbt test` catches the
+    // FASTEST post-first commit's triggerExecution under 6 s (~10x the
+    // measured steady state) — a fold or trigger regression (e.g. a
+    // per-batch re-scan of the folded snapshot) slows every commit and
+    // blows through the bound, while co-tenant noise inflating individual
+    // commits in a shared test run does not. Listener-based so `sbt test` catches the
     // regression rather than a bench-drift investigation.
     import org.apache.spark.sql.streaming.StreamingQueryListener
     import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
@@ -64,21 +64,21 @@ class StreamingSpec extends SparkSpec {
       import scala.jdk.CollectionConverters._
       val commits = progress.asScala.filter(_.numInputRows > 0).toSeq
       assert(commits.size >= 2,
-        s"expected >=2 stateful data commits, saw ${progress.size} progress events")
-      // bound the minimum over commits AFTER THE FIRST: a state-growth
-      // regression (e.g. a per-batch state re-scan) leaves the first data
-      // commit fast (near-empty state) and slows every later one, so this
-      // statistic must move — while a single co-tenant burst inflating one
-      // commit in a shared test run still cannot flake it
+        s"expected >=2 data commits, saw ${progress.size} progress events")
+      // bound the minimum over commits AFTER THE FIRST: a snapshot-growth
+      // regression (e.g. a per-batch re-scan of the folded snapshot) leaves
+      // the first data commit fast (near-empty snapshot) and slows every
+      // later one, so this statistic must move — while a single co-tenant
+      // burst inflating one commit in a shared test run still cannot flake it
       val durations = commits.sortBy(_.batchId).map { p =>
         val ms = p.durationMs.get("triggerExecution")
         assert(ms != null, s"commit ${p.batchId} missing triggerExecution")
         ms.longValue
       }
       assert(durations.drop(1).min < 6000L,
-        s"every post-first stateful commit breached the 6s bound " +
+        s"every post-first commit breached the 6s bound " +
           s"(${durations.mkString(",")}ms) " +
-          "— state-store or trigger regression (steady state is ~550ms)")
+          "— fold or trigger regression (steady state is ~550ms)")
     } finally spark.streams.removeListener(listener)
   }
 
@@ -376,30 +376,45 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming recovers from its checkpoint without re-reading input (C14)") {
-    import spark.implicits._
-    val in = "target/tmp/chk/in"
-    val chk = "target/tmp/chk/state"
-    rmrf(new java.io.File("target/tmp/chk"))
-    new java.io.File(in).mkdirs()
-    def writeBatch(name: String, rows: Seq[String]): Unit =
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(s"$in/$name"), rows.mkString("\n"))
-    val received = scala.collection.mutable.ArrayBuffer.empty[String]
-    def start() = spark.readStream.text(in)
-      .writeStream.option("checkpointLocation", chk)
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        received.synchronized { received ++= df.collect().map(_.getString(0)) }
-        ()
-      }.start()
-    writeBatch("a.txt", (0 until 50).map(i => s"row$i"))
-    val q1 = start(); q1.processAllAvailable(); q1.stop()
-    assert(received.size === 50)
-    // second incarnation resumes from the checkpoint: it must see ONLY the
-    // new file — exactly-once over the union of both runs
-    writeBatch("b.txt", (50 until 80).map(i => s"row$i"))
-    val q2 = start(); q2.processAllAvailable(); q2.stop()
-    assert(received.sorted === (0 until 80).map(i => s"row$i").sorted,
-      s"got ${received.size} rows (duplicates or loss across restart)")
+    // three restarts: both incarnations under Spark's default checkpoint
+    // manager, then a checkpoint written by one manager resumed by the
+    // other in each direction — the engine's bounded streams write theirs
+    // through ForkFreeCheckpointFileManager
+    val key = Continuous.checkpointManagerKey
+    val ours = Some(classOf[graft.streaming.ForkFreeCheckpointFileManager].getName)
+    Seq((None, None), (None, ours), (ours, None)).zipWithIndex.foreach {
+      case ((first, second), run) =>
+        val in = s"target/tmp/chk/run$run/in"
+        val chk = s"target/tmp/chk/run$run/state"
+        rmrf(new java.io.File(s"target/tmp/chk/run$run"))
+        new java.io.File(in).mkdirs()
+        def writeBatch(name: String, rows: Seq[String]): Unit =
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(s"$in/$name"), rows.mkString("\n"))
+        val received = scala.collection.mutable.ArrayBuffer.empty[String]
+        def incarnation(manager: Option[String]): Unit = {
+          manager.foreach(spark.conf.set(key, _))
+          try {
+            val q = spark.readStream.text(in)
+              .writeStream.option("checkpointLocation", chk)
+              .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+                received.synchronized { received ++= df.collect().map(_.getString(0)) }
+                ()
+              }.start()
+            try q.processAllAvailable() finally q.stop()
+          } finally spark.conf.unset(key)
+        }
+        writeBatch("a.txt", (0 until 50).map(i => s"row$i"))
+        incarnation(first)
+        assert(received.size === 50)
+        // second incarnation resumes from the checkpoint: it must see ONLY
+        // the new file — exactly-once over the union of both runs
+        writeBatch("b.txt", (50 until 80).map(i => s"row$i"))
+        incarnation(second)
+        assert(received.sorted === (0 until 80).map(i => s"row$i").sorted,
+          s"$first -> $second: got ${received.size} rows " +
+            "(duplicates or loss across restart)")
+    }
   }
 
   test("pii scan composes unchanged with a stream (per-row map, no state)") {
