@@ -411,7 +411,7 @@ object Dedup {
     * staged clique corpus): merge verify 17.6 s / auto 15.0 s / forced
     * broadcast 11.8 s vs the classic stage's 276.8 s — 15.8× with no
     * broadcast anywhere — identical 2,387,400-row output, growth
-    * exponents 0.47–0.61 vs 1.38. Candidate anatomy (prefixcand probe):
+    * exponents 0.47–0.61 vs 1.38. Candidate anatomy (SCALE_r13):
     * 137.5M raw prefix emissions → 21.9M past the emission-level prune →
     * 11.25M verified candidates → 2.39M true pairs. At the 100× decade
     * (500k docs) the merge path completes in 156 s (27.1M true pairs,
@@ -466,24 +466,6 @@ object Dedup {
       .orderBy(col("d1"), col("d2"))
   }
 
-  /** The per-doc rarest-first PREFIX posting frame of
-    * [[ngramJaccardPrefix]] — `(doc_id, s, rem, g)` rows restricted to
-    * each doc's first `g − α + 1` gated shingles under the global (df, s)
-    * order, with `rem = g − r` (the gated shingles ranked after this one)
-    * and `g` the doc's gated count — PPJoin's positional payload.
-    * Exposed for the candidate-volume probe ([[graft.StageProbe]]). */
-  private[graft] def prefixPostings(sh: DataFrame, threshold: Double,
-      maxDf: Int): DataFrame = {
-    val tn = math.round(threshold * 1e6)
-    require(tn >= 1 && tn <= 1000000,
-      s"threshold must be in (0, 1], got $threshold")
-    val docLen = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
-    val keep = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxDf))
-      .hint("shuffle_hash")
-    prefixOfGated(sh.join(keep, Seq("s")), docLen, tn)
-  }
-
   /** Jaccard's pair-independent overlap lower bound α (the prefix
     * length's complement): `max(1, (tn−1)·c div 1e6)` in exact integer
     * arithmetic — a floor of a valid bound, so it can only lengthen the
@@ -515,19 +497,11 @@ object Dedup {
   }
 
   /** A doc's prefix rows of a [[rankedOfGated]] frame: rank ≤ g − α + 1,
-    * i.e. `rem ≥ α − 1`. */
+    * i.e. `rem ≥ α − 1` — `(doc_id, s, rem, g)`, PPJoin's positional
+    * payload. */
   private def prefixOfRanked(ranked: DataFrame): DataFrame =
     ranked.filter(col("rem") >= col("alpha") - lit(1))
       .select(col("doc_id"), col("s"), col("rem"), col("g"))
-
-  /** The window core of [[prefixPostings]] over an already-built gated
-    * `(doc_id, s, df)` index and full-count `docLen` — split out so the
-    * operator can hand in CHECKPOINTED frames (its budget-gate count and
-    * its candidate job are separate Spark actions, and without the
-    * checkpoint each would re-pay the shingle scan + df aggregation). */
-  private def prefixOfGated(gated: DataFrame, docLen: DataFrame,
-      tn: Long): DataFrame =
-    prefixOfRanked(rankedOfGated(gated, docLen, jaccardAlpha(tn)))
 
   /** The verify's per-doc array table off a [[rankedOfGated]] frame: the
     * full sorted gated-shingle array, the doc's PREFIX as its own sorted
@@ -542,28 +516,13 @@ object Dedup {
         (count(lit(1)) - count(when(isPfx, lit(1)))).as("sfx"))
   }
 
-  /** [[arraysOfRanked]] for a raw shingle frame at a Jaccard threshold —
-    * the operator's internal array-table build exposed for the
-    * candidate-anatomy probe ([[graft.StageProbe]]). */
-  private[graft] def prefixVerifyArrays(sh: DataFrame, threshold: Double,
-      maxDf: Int): DataFrame = {
-    val tn = math.round(threshold * 1e6)
-    val docLen = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
-    val keep = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxDf))
-      .hint("shuffle_hash")
-    arraysOfRanked(rankedOfGated(sh.join(keep, Seq("s")), docLen,
-      jaccardAlpha(tn)))
-  }
-
   /** The overlap every qualifying Jaccard pair MUST reach, per candidate
     * row carrying full counts (c1, c2) — the exact integer ceiling of
     * the positional filter's bound: qualifying ⇒ (1e6+tn−1)·i ≥
     * (tn−1)·(c1+c2) ⇒ i ≥ this. Floored at 1 (any qualifying pair at
     * t > 0 intersects at least once) so the verify kernel's early exit
-    * stays live at low thresholds. Shared by the operator's verify and
-    * the probe so the two can never disagree on the inequality. */
-  private[graft] def jaccardNeededExpr(tn: Long): Column =
+    * stays live at low thresholds. */
+  private def jaccardNeededExpr(tn: Long): Column =
     expr(s"greatest(1L, (${tn - 1}L * (c1 + c2) + " +
       s"${1000000L + tn - 2}L) div ${1000000L + tn - 1}L)")
 
@@ -1037,8 +996,8 @@ object Dedup {
     * count (the array table's cell count, for the verify-shipment
     * estimate). `oriented`: containment emits |prefix|×(df−1) per posting
     * list (prefix members start pairs against every other member);
-    * Jaccard emits C(|prefix|, 2) (pairs within the prefix slice). These
-    * are exactly the containcand/prefixcand probes' counting rules —
+    * Jaccard emits C(|prefix|, 2) (pairs within the prefix slice). The
+    * containment rule is exactly the containcand probe's counting rule —
     * kept in the operator so the price and the probe can never drift. */
   private def postingStats(ranked: DataFrame,
       oriented: Boolean): (Long, Long) = {
@@ -1593,26 +1552,14 @@ object Dedup {
     * bit-identical to what the all-pairs batch pipeline (q21) emits for
     * that pair. Emits (d1 = min id, d2 = max id, jaccard ≥ threshold). */
   private[graft] def incrementalPairsOf(index: DataFrame, newSh: DataFrame,
-      threshold: Double, maxDf: Int,
-      docLenOpt: Option[DataFrame] = None,
-      dfOpt: Option[DataFrame] = None): DataFrame = {
+      threshold: Double, maxDf: Int): DataFrame = {
     // full-set sizes: Jaccard's denominator counts every shingle, gated or
-    // not, exactly like interCountsOfShingles' docLen. A caller that
-    // MAINTAINS these frames as state (df counts and per-doc lengths are
-    // additive under the append-only commit protocol — the q88 funnel
-    // appends per-increment deltas instead of re-aggregating the full
-    // posting index every commit, measured at 52% of the commit body in
-    // the r15 anatomy) passes them in; the defaults recompute from the
-    // index, and the two are spec-pinned identical (the convergence
-    // contract). `dfOpt` is the UNGATED (s, df) frame — the gate cap
-    // still applies here so maintained and recomputed calls share it.
-    val docLen = docLenOpt.getOrElse(
-      index.groupBy(col("doc_id")).agg(count(lit(1)).as("c")))
+    // not, exactly like interCountsOfShingles' docLen
+    val docLen = index.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
     // df over the FULL index — the same gate the batch pipeline applies, so
     // candidate generation and intersection counts agree with it exactly.
     // O(distinct shingles) — pinned shuffled like interCountsOfShingles
-    val gate = dfOpt.getOrElse(
-        index.groupBy(col("s")).agg(count(lit(1)).as("df")))
+    val gate = index.groupBy(col("s")).agg(count(lit(1)).as("df"))
       .filter(col("df").between(2, maxDf))
       .select(col("s"))
       .hint("shuffle_hash")

@@ -741,8 +741,8 @@ object Continuous {
       schema: StructType, stateRoot: String)
 
   /** An append-only ADDITIVE state store with threshold-triggered,
-    * crash-safe compaction (VERDICT r16 #1) — the funnel's df/docLen
-    * delta dirs and loser set. Layout: generation directories
+    * crash-safe compaction (VERDICT r16 #1) — the funnel's loser set.
+    * Layout: generation directories
     * `root/gN`; appends land in the highest COMMITTED generation (g0 is
     * implicitly committed — the store's seed); [[compact]] rewrites the
     * current generation through `fold` (sum the deltas / distinct the
@@ -758,10 +758,9 @@ object Continuous {
     * Single-writer by contract (the funnel's foreachBatch commits are
     * sequential), like the persisted-index protocol it mirrors.
     *
-    * Without compaction the gate's read cost creeps back in
-    * file-listing/union form: one increment-sized parquet append per
-    * commit, summed in full at EVERY gate read, forever — thousands of
-    * files within a year of daily commits. With it, the current
+    * Without compaction every read pays the file listing and union of
+    * one increment-sized parquet append per commit, forever — thousands
+    * of files within a year of daily commits. With it, the current
     * generation holds one folded base plus at most `compactEvery`
     * deltas. */
   private[graft] final class DeltaState(spark: SparkSession, root: String,
@@ -854,28 +853,23 @@ object Continuous {
       dir: String, qualityMin: Double = 0.5, lang: String = "en",
       threshold: Double = 0.8, maxDf: Int = 100,
       maxFunnelRows: Int = 100000, filesPerTrigger: Int = 2,
-      compactEvery: Int = 8, keepState: Boolean = false,
-      gate: String = "auto",
-      gateStateBudgetBytes: Long = 32L << 20): FunnelRun = {
-    // THE GATE IS SIZE-ADAPTIVE: the maintained delta-state gate trades a
-    // full-index re-aggregation per commit for two delta appends and two
-    // delta-sum reads — a win when the gate input is data-bound (−12% at
-    // the 30× binding cap), a loss when it is job-bound (+17% whole-op at
-    // sf0.1, ~12 extra small jobs per run). "auto" re-aggregates while
-    // the accumulated index is under `gateStateBudgetBytes` (~16 B per
-    // posting row; the measured crossover lies between ~4 and ~125 MB),
-    // then BOOTSTRAPS the delta stores by folding the whole index once and
-    // appends increment-sized deltas after. "maintained"/"recomputed" pin
-    // either shape; all three are spec-pinned snapshot-identical.
-    require(gate == "auto" || gate == "maintained" || gate == "recomputed",
-      s"gate must be 'auto', 'maintained' or 'recomputed', got '$gate'")
-    require(gateStateBudgetBytes > 0,
-      s"gateStateBudgetBytes must be positive: $gateStateBudgetBytes")
-    // `filesPerTrigger` sizes the micro-batches AND the loser/df/len
-    // state-append widths below, which must track the increment, not the
-    // shuffle setting. compactEvery ≥ 1 folds the delta stores every N
-    // commits ([[DeltaState]]); the 4-commit fixture replay stays below
-    // the default threshold.
+      compactEvery: Int = 8, keepState: Boolean = false): FunnelRun = {
+    // ONE df gate: every commit re-aggregates df and docLen from the
+    // accumulated index inside incrementalPairsOf. A maintained twin
+    // (per-commit (s, dc)/(doc_id, c) delta stores, summed at read) was
+    // A/B'd whole-op and retired: it pays two delta appends and two sum
+    // reads per commit, and the candidate join reads the full index in
+    // both shapes, so it could only ever buy a constant factor — and at
+    // the scales this job runs it lost (whole-op A/B, 3 interleaved
+    // laps per shape, frames pinned identical, 4 cores: median 6.2 s
+    // recomputed vs 8.5 s maintained at sf0.01, 10.2 s vs 14.2 s at
+    // sf0.1; only a 30× staged cap ever measured it ahead, −12%,
+    // SCALE_r17 session A).
+    // `filesPerTrigger` sizes the micro-batches AND the state-append
+    // widths below, which must track the increment, not the shuffle
+    // setting. compactEvery ≥ 1 folds the loser store every N commits
+    // ([[DeltaState]]); the 4-commit fixture replay stays below the
+    // default threshold.
     require(filesPerTrigger >= 1,
       s"filesPerTrigger must be >= 1: $filesPerTrigger")
     require(compactEvery >= 0,
@@ -887,23 +881,13 @@ object Continuous {
     val ckpt = s"target/streamstage/ckpt/funnel$run"
     // ONE kind-partitioned state dir for the two plain append families
     // (the q117/q99 idiom: one union write per commit, readers pruned to
-    // their kind= dir); the DeltaState stores own their generation dirs.
+    // their kind= dir); the loser store owns its generation dirs, compacted
+    // every `compactEvery` commits so its file fan-in stays bounded.
     val stateDir = s"$stateRoot/state"
     val flagsDir = s"$stateDir/kind=flags"
     val indexDir = s"$stateDir/kind=index"
-    // MAINTAINED df/docLen state: df counts and per-doc shingle lengths
-    // are ADDITIVE under the append-only protocol, so each commit appends
-    // the increment's per-shingle (s, dc) and per-doc (doc_id, c) deltas
-    // and the gate reads their sums instead of re-shuffling the full
-    // posting index (spec-pinned equal to the recomputed gate). The stores
-    // are [[DeltaState]] generations, compacted every `compactEvery`
-    // commits so the gate's file fan-in stays bounded.
     val losersState = new DeltaState(spark, s"$stateRoot/losers",
       _.distinct())
-    val dfState = new DeltaState(spark, s"$stateRoot/df",
-      _.groupBy(col("s")).agg(sum(col("dc")).as("dc")))
-    val lenState = new DeltaState(spark, s"$stateRoot/len",
-      _.groupBy(col("doc_id")).agg(sum(col("c")).as("c")))
     val files = hfs(staged) match { case (fs, p) =>
       fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")) }
     val totalChunks = math.ceil(files.toDouble / filesPerTrigger)
@@ -915,11 +899,6 @@ object Continuous {
     try boundedStream(spark, shuffleCap = Some(8)) {
       val lastBatchId = new java.util.concurrent.atomic.AtomicLong(-1L)
       val commitsSinceCompact = new java.util.concurrent.atomic.AtomicInteger(0)
-      // per-run auto-gate accounting: accumulated index posting rows,
-      // and whether the delta stores were bootstrapped yet
-      val idxRowsSeen = new java.util.concurrent.atomic.AtomicLong(0L)
-      val bootstrapped = new java.util.concurrent.atomic.AtomicBoolean(
-        gate == "maintained")
       val q = spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", filesPerTrigger.toString)
         .parquet(staged)
@@ -943,8 +922,8 @@ object Continuous {
                 when(col("quality") >= qualityMin, 1).otherwise(0).as("f_q"),
                 when(col("lang") === lang, 1).otherwise(0).as("f_lang"))
             // candidate index += the increment's shingles; the SAME
-            // materialized frame feeds the df/docLen delta appends below
-            // (persist pins one evaluation across the three writes)
+            // materialized frame is the pair stage's new side (persist
+            // pins one evaluation across the append and the pairs)
             val incSh = graft.operators.Dedup
               .shinglesOf(docs.select(col("doc_id"), col("text")))
               .persist()
@@ -952,12 +931,11 @@ object Continuous {
               // state appends are INCREMENT-wide (the trigger's input
               // file count), not shuffle-wide: shuffle-width appends left
               // mostly-empty files every later emit re-lists (~6% of q88)
-              val losersCoalesce = filesPerTrigger
               labeled(spark, "q88: flags + index append") {
                 flagFrame.withColumn("kind", lit("flags"))
                   .unionByName(incSh.withColumn("kind", lit("index")),
                     allowMissingColumns = true)
-                  .coalesce(losersCoalesce) // increment width, as ever
+                  .coalesce(filesPerTrigger)
                   .write.mode("append").partitionBy("kind")
                   .parquet(stateDir)
               }
@@ -966,63 +944,20 @@ object Continuous {
               // dir no commit has written yet reads as an empty frame
               // instead of failing path-not-found
               val index = stateOrEmpty(spark, indexDir, incSh.schema)
-              // the auto gate's pick (scaladoc above): one cheap count
-              // over the persisted increment keeps the accumulated-rows
-              // estimate; maintained wins once the index is data-bound
-              // once over budget the gate never flips back (the index
-              // only grows), so the count is paid only in the cheap
-              // under-budget regime — a decade run prices its increments
-              // exactly once, at the crossing
-              val useMaintained = gate == "maintained" ||
-                (gate == "auto" && (bootstrapped.get() ||
-                  idxRowsSeen.addAndGet(labeled(spark, "q88: gate count") {
-                    incSh.count() }) * 16L >
-                    gateStateBudgetBytes))
-              if (useMaintained) {
-                if (!bootstrapped.getAndSet(true)) {
-                  // first over-budget commit: fold the WHOLE accumulated
-                  // index into the delta stores once — the same
-                  // aggregation the recomputed gate pays per commit —
-                  // so later commits append increment-sized deltas onto
-                  // complete history
-                  dfState.append(index.groupBy(col("s"))
-                    .agg(count(lit(1)).as("dc")).coalesce(losersCoalesce))
-                  lenState.append(index.groupBy(col("doc_id"))
-                    .agg(count(lit(1)).as("c")).coalesce(losersCoalesce))
-                } else {
-                  dfState.append(incSh.groupBy(col("s"))
-                    .agg(count(lit(1)).as("dc")).coalesce(losersCoalesce))
-                  lenState.append(incSh.groupBy(col("doc_id"))
-                    .agg(count(lit(1)).as("c")).coalesce(losersCoalesce))
-                }
-              }
               // near-dup losers involving the increment vs the whole
-              // index: the posting join still reads the full index (the
-              // intersection evidence lives there), but the df gate and
-              // docLen come from the MAINTAINED sums — per-commit
-              // aggregation input shrinks from every (doc, shingle) row
-              // ever shipped to the delta state
-              val pairs =
-                if (useMaintained)
-                  graft.operators.Dedup.incrementalPairsOf(index, incSh,
-                    threshold, maxDf, docLenOpt = Some(lenState.read()),
-                    dfOpt = Some(dfState.read().groupBy(col("s"))
-                      .agg(sum(col("dc")).as("df"))))
-                else // the r15 twin: full-index re-aggregation per commit
-                  graft.operators.Dedup.incrementalPairsOf(index, incSh,
-                    threshold, maxDf)
+              // index: the df gate, docLen and the posting join all read
+              // the accumulated index (the one gate; see the def's top)
+              val pairs = graft.operators.Dedup.incrementalPairsOf(index,
+                incSh, threshold, maxDf)
               labeled(spark, "q88: pairs + losers append") {
                 losersState.append(pairs
                   .select(col("d2").as("doc_id"))
-                  .coalesce(losersCoalesce))
+                  .coalesce(filesPerTrigger))
               }
               if (compactEvery > 0 &&
                   commitsSinceCompact.incrementAndGet() >= compactEvery) {
                 commitsSinceCompact.set(0)
                 labeled(spark, "q88: state compact") {
-                  if (bootstrapped.get) {
-                    dfState.compact(); lenState.compact()
-                  }
                   losersState.compact()
                 }
               }
@@ -1251,7 +1186,9 @@ object Continuous {
         }
         .start()
       q.awaitTermination()
-      val out = spark.read.schema(eVerd).parquet(verdictDir)
+      // an increment with no incoming doc writes no kind=verdicts dir:
+      // that is an empty verdict frame, not a missing path
+      val out = stateOrEmpty(spark, verdictDir, eVerd)
       val rows = out.limit(maxVerdictRows + 1).collect()
       require(rows.length <= maxVerdictRows,
         s"verdict frame exceeds $maxVerdictRows rows")

@@ -1004,39 +1004,6 @@ class DedupSimilaritySpec extends SparkSpec {
     } finally rmrf(path)
   }
 
-  test("maintained df/docLen state gates incremental pairs exactly like " +
-      "the recomputed gate (the q88 funnel's convergence contract)") {
-    import spark.implicits._
-    // df counts and per-doc lengths are ADDITIVE under append-only
-    // commits: accumulate them from per-increment deltas (the funnel's
-    // maintained state) and the gated pair frame must be bit-identical
-    // to the recomputed-gate call — across increments of different
-    // sizes, including increments that push a shingle's df past the cap
-    val docs = Tables.documents(spark, sfDir).select($"doc_id", $"text")
-    val sh = Dedup.shinglesOf(docs).localCheckpoint()
-    val parts = (0 until 3).map(i =>
-      sh.filter(pmod(xxhash64($"doc_id"), lit(3)) === i))
-    // the maintained frames after all three "commits": sum of deltas
-    val dfM = parts.map(_.groupBy($"s").agg(count(lit(1)).as("dc")))
-      .reduce(_ unionByName _)
-      .groupBy($"s").agg(sum($"dc").as("df"))
-    val lenM = parts.map(_.groupBy($"doc_id").agg(count(lit(1)).as("c")))
-      .reduce(_ unionByName _)
-    val newSh = parts.last
-    def rows(f: org.apache.spark.sql.DataFrame) =
-      f.orderBy($"d1", $"d2").collect().map(_.toSeq).toSeq
-    val recomputed = rows(Dedup.incrementalPairsOf(sh, newSh, 0.8, 100))
-    val maintained = rows(Dedup.incrementalPairsOf(sh, newSh, 0.8, 100,
-      docLenOpt = Some(lenM), dfOpt = Some(dfM)))
-    assert(maintained === recomputed && recomputed.nonEmpty)
-    // a tiny cap makes the gate bind mid-range — the cap must apply to
-    // the maintained frame identically
-    val r2 = rows(Dedup.incrementalPairsOf(sh, newSh, 0.5, 3))
-    val m2 = rows(Dedup.incrementalPairsOf(sh, newSh, 0.5, 3,
-      docLenOpt = Some(lenM), dfOpt = Some(dfM)))
-    assert(m2 === r2)
-  }
-
   test("string-keyed corpora ride the persisted index/forest family in " +
       "fingerprint currency, long-twin-identical under the id bijection") {
     import spark.implicits._

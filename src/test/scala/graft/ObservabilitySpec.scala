@@ -50,4 +50,15 @@ class ObservabilitySpec extends SparkSpec {
       assert(observed.get._1 === Tables.orders(spark, sfDir).count())
     } finally spark.listenerManager.unregister(listener)
   }
+
+  test("StageProbe refuses modes it does not implement") {
+    // the mode table is the accepted set: a retired mode name fails
+    // before any session is built
+    for (mode <- Seq("prefixcand", "sweepcompare", "commitgrowth",
+        "deltastate", "sketchcal", "funnelgate", "funnelop")) {
+      val e = intercept[IllegalArgumentException](
+        StageProbe.main(Array(mode)))
+      assert(e.getMessage.contains(s"unknown stage: $mode"))
+    }
+  }
 }

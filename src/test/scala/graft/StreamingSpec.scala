@@ -639,6 +639,25 @@ class StreamingSpec extends SparkSpec {
       "fixture must exercise both verdicts")
   }
 
+  test("q99: an increment with no incoming docs returns an empty " +
+      "verdict frame") {
+    // a corpus with no doc_id % 10 == 0 row: every replay chunk is
+    // empty, no commit writes kind=verdicts, and the final read must
+    // degrade to the empty 4-column frame instead of path-not-found
+    val fixture = "target/tmp/q99_no_increment"
+    Tables.documents(spark, sfDir)
+      .filter(pmod(col("doc_id"), lit(10)) =!= 0)
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"$fixture/documents.parquet")
+    try {
+      val out = Continuous.streamedIndexDedup(spark, fixture)
+      assert(out.schema.map(f => f.name -> f.dataType.simpleString) ===
+        Seq("doc_id" -> "bigint", "exact_dup" -> "int",
+          "band_dup" -> "int", "keep" -> "int"))
+      assert(out.collect().isEmpty)
+    } finally rmrf(fixture)
+  }
+
   test("q117: streamed cross-modal dedup converges to the batch twin " +
       "on any chunking") {
     def decisions(chunks: Int) =
@@ -699,35 +718,6 @@ class StreamingSpec extends SparkSpec {
         s"commit ${p.batchId} ingested ${p.numInputRows} rows " +
           s"(> 2x chunk ${2 * perChunk + 2})"))
     } finally spark.streams.removeListener(listener)
-  }
-
-  test("q88 funnel: all three gate shapes emit identical per-commit " +
-      "frames, including an auto gate that crosses mid-stream") {
-    // the funnelop probe's convergence contract, pinned at fixture
-    // scale: every gate shape reads the same df/docLen VALUES (sums of
-    // additive deltas == full re-aggregation), so every cumulative
-    // snapshot — not just the final one — must agree
-    def snaps(run: Continuous.FunnelRun) =
-      run.snapshots.map(_.rows.map(_.toSeq))
-    val auto = snaps(Continuous.runStreamedCurationFunnel(spark, sfDir))
-    assert(auto.nonEmpty)
-    assert(snaps(Continuous.runStreamedCurationFunnel(spark, sfDir,
-      gate = "maintained")) === auto)
-    assert(snaps(Continuous.runStreamedCurationFunnel(spark, sfDir,
-      gate = "recomputed")) === auto)
-    // force the auto gate to CROSS mid-stream (the fixture's 4 commits
-    // accumulate ~26k posting rows; a ~3-commit budget lands the
-    // bootstrap on a commit with real history) and to bootstrap on the
-    // FIRST commit (1-byte budget — the maintained-from-start twin):
-    // the fold-the-whole-index bootstrap must reproduce the same
-    // history the per-commit deltas would have
-    val docs = Tables.documents(spark, sfDir)
-    val rows = graft.operators.Dedup.shinglesOf(
-      docs.select(col("doc_id"), col("text"))).count()
-    assert(snaps(Continuous.runStreamedCurationFunnel(spark, sfDir,
-      gateStateBudgetBytes = rows * 16L / 2)) === auto)
-    assert(snaps(Continuous.runStreamedCurationFunnel(spark, sfDir,
-      gateStateBudgetBytes = 1L)) === auto)
   }
 
   test("DeltaState: folded generations read bit-identically, torn " +
@@ -817,48 +807,46 @@ class StreamingSpec extends SparkSpec {
       val fs = new java.io.File(p).listFiles()
       if (fs == null) 0 else fs.count(_.getName.endsWith(".parquet"))
     }
+    // one df gate, re-aggregated from the index: no run keeps df/len
+    // delta stores
+    def noDeltaStores(run: Continuous.FunnelRun) =
+      for (store <- Seq("df", "len"))
+        assert(!new java.io.File(s"${run.stateRoot}/$store").exists(),
+          s"$store delta store under ${run.stateRoot}")
     // width 1 over the 8 staged chunks: 8 commits, each appending ONE
-    // increment-width file per delta store — the append width tracks
-    // the trigger knob, not the shuffle setting (gate pinned maintained:
-    // the default auto gate keeps the delta stores empty under the
-    // fixture's tiny index, which is its own test below)
+    // increment-width file to the loser store — the append width tracks
+    // the trigger knob, not the shuffle setting
     val runA = Continuous.runStreamedCurationFunnel(spark, sfDir,
-      filesPerTrigger = 1, compactEvery = 0, keepState = true,
-      gate = "maintained")
+      filesPerTrigger = 1, compactEvery = 0, keepState = true)
     try {
       assert(runA.snapshots.size === 8)
-      assert(parquets(s"${runA.stateRoot}/df/g0") === 8)
-      assert(parquets(s"${runA.stateRoot}/len/g0") === 8)
+      assert(parquets(s"${runA.stateRoot}/losers/g0") === 8)
+      noDeltaStores(runA)
       assert(runA.snapshots.last.rows.map(_.toSeq).toSeq
         .sortBy(_.head.toString) === batch)
     } finally rmrf(runA.stateRoot)
-    // width 3 + fold-every-commit: ceil(8/3) = 3 commits, the delta
-    // stores end as ONE committed generation holding ONE folded file,
-    // and the funnel's emitted frames are unchanged (the gate reads
-    // sums either way)
+    // width 3 + fold-every-commit: ceil(8/3) = 3 commits, the loser
+    // store ends as ONE committed generation holding ONE folded file,
+    // and the funnel's emitted frames are unchanged (the emit reads the
+    // distinct loser set either way)
     val runB = Continuous.runStreamedCurationFunnel(spark, sfDir,
-      filesPerTrigger = 3, compactEvery = 1, keepState = true,
-      gate = "maintained")
+      filesPerTrigger = 3, compactEvery = 1, keepState = true)
     try {
       assert(runB.snapshots.size === 3)
-      for (store <- Seq("df", "len")) {
-        val gens = new java.io.File(s"${runB.stateRoot}/$store").listFiles()
-          .filter(_.isDirectory).map(_.getName).toSeq
-        assert(gens === Seq("g3"),
-          s"$store should hold exactly the last folded generation, got $gens")
-        assert(parquets(s"${runB.stateRoot}/$store/g3") === 1)
-      }
+      val gens = new java.io.File(s"${runB.stateRoot}/losers").listFiles()
+        .filter(_.isDirectory).map(_.getName).toSeq
+      assert(gens === Seq("g3"),
+        s"losers should hold exactly the last folded generation, got $gens")
+      assert(parquets(s"${runB.stateRoot}/losers/g3") === 1)
+      noDeltaStores(runB)
       assert(runB.snapshots.last.rows.map(_.toSeq).toSeq
         .sortBy(_.head.toString) === batch)
     } finally rmrf(runB.stateRoot)
-    // the DEFAULT auto gate under the fixture's tiny index: recompute
-    // mode, delta stores never created — the +17% fixture-scale premium
-    // session E measured is not paid below the budget
+    // the default run
     val runC = Continuous.runStreamedCurationFunnel(spark, sfDir,
       keepState = true)
     try {
-      assert(!new java.io.File(s"${runC.stateRoot}/df").exists())
-      assert(!new java.io.File(s"${runC.stateRoot}/len").exists())
+      noDeltaStores(runC)
       assert(runC.snapshots.last.rows.map(_.toSeq).toSeq
         .sortBy(_.head.toString) === batch)
     } finally rmrf(runC.stateRoot)
