@@ -195,14 +195,6 @@ object ScaleSmoke {
       "ngram_prefix_merge" -> ((d, m) => operators.Dedup.ngramJaccardPrefixOf(
         Tables.documents(spark, d), maxDf = 100 * m, verify = "merge",
         verifyChunks = if (m >= 50) 8 else 1)),
-      // the suffix bound OFF, same shape otherwise: the same-session A/B
-      // that attributes a merge-verify delta to the r14 pre-verify bound
-      // itself rather than the box regime (cross-session 100× readings
-      // swing ±60% here)
-      "ngram_prefix_merge_nosfx" -> ((d, m) => operators.Dedup
-        .ngramJaccardPrefixOf(
-          Tables.documents(spark, d), maxDf = 100 * m, verify = "merge",
-          verifyChunks = if (m >= 50) 8 else 1, suffixBound = false)),
       // the FORCED broadcast verify with the budget opened: decomposes an
       // auto-row delta into verify shape vs candidate stage within one
       // session (auto silently picks a mode off the measured bytes)

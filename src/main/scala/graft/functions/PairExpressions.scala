@@ -8,22 +8,36 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
-/** Streams the C(n,2) unordered doc-id pairs of one posting list as
-  * `(d1, d2)` rows with `d1 < d2`, WITHOUT materializing the pair array.
+/** Streams the C(n,2) unordered doc pairs of one posting list as
+  * `(d1, d2, c1, c2)` rows with `d1 < d2`, WITHOUT materializing the pair
+  * array, where each input element is a `struct<doc_id: bigint, c:
+  * bigint>` and `c1`/`c2` (each doc's FULL, ungated shingle count) ride
+  * with their (sorted) ids.
   *
-  * This is the generator form of the pair-emission step inside the
-  * df-gated shingle-intersection stage (`Dedup.interCountsOfShingles`) —
-  * the engine's measured dominant top-decade cost. The SQL form it
-  * replaced (an exploded, flattened nested `transform` over `slice`s of
-  * the list, one `struct(least, greatest)` per pair) runs on Catalyst's
-  * higher-order functions, which are CodegenFallback: for a posting list
-  * of df docs it interprets ~df² lambda calls and materializes df sliced
-  * arrays, df nested arrays, one flattened array and df²/2 boxed structs
-  * PER ROW before the explode even starts — at the 30× smoke's maxDf 3000
-  * gate that is a ~4.5M-element array built eagerly for one hot shingle.
-  * The generator sorts the list once (so `d1 < d2` needs no per-pair
-  * least/greatest) and hands each pair to `GenerateExec` lazily; peak
-  * memory per row drops from O(df²) to O(df).
+  * This is the pair-emission step inside the df-gated
+  * shingle-intersection stage (`Dedup.interCountsOfShingles`) — the
+  * engine's measured dominant top-decade cost. The SQL form it replaced
+  * (an exploded, flattened nested `transform` over `slice`s of the list,
+  * one struct per pair) runs on Catalyst's higher-order functions, which
+  * are CodegenFallback: for a posting list of df docs it interprets ~df²
+  * lambda calls and materializes df sliced arrays, df nested arrays, one
+  * flattened array and df²/2 boxed structs PER ROW before the explode
+  * even starts — at the 30× smoke's maxDf 3000 gate that is a
+  * ~4.5M-element array built eagerly for one hot shingle. The generator
+  * sorts the list once (so `d1 < d2` needs no per-pair least/greatest)
+  * and hands each pair to `GenerateExec` lazily; peak memory per row
+  * drops from O(df²) to O(df).
+  *
+  * Carrying the counts is what lets the intersection stage compute
+  * Jaccard's denominator WITHOUT joining the pair frame back to the
+  * doc-length table twice: the r18 shape exchanged the corpus-pair frame
+  * by d1 and again by d2 (the two largest exchanges of the stage — 34.5 +
+  * 43.1 MiB at sf0.1 against a 117 KiB join side that scale-safety pins
+  * to a shuffled join) purely to attach two longs; attaching them on the
+  * posting entry costs one idx-sized exchange (6 MiB) plus two longs on
+  * the count aggregation's partial rows instead (guide §2.3/§2.4 — and
+  * the imbalance grows with scale: pair volume is ~maxDf/2 × the posting
+  * volume at the cap).
   *
   * Emission-order note: the pair MULTISET over value pairs {a_i, a_j},
   * i < j is invariant under permuting the input array, so sorting first
@@ -31,19 +45,24 @@ import org.apache.spark.sql.types._
   * count) — spec-pinned against the HOF twin. Null elements cannot occur
   * in posting lists built by `collect_list` (it drops nulls); a null slot
   * in a hand-built array is rejected loudly rather than miscounted. */
-case class DocIdPairs(child: Expression)
+case class DocIdLenPairs(child: Expression)
     extends UnaryExpression with Generator with CodegenFallback {
 
   override def elementSchema: StructType = StructType(Seq(
     StructField("d1", LongType, nullable = false),
-    StructField("d2", LongType, nullable = false)))
+    StructField("d2", LongType, nullable = false),
+    StructField("c1", LongType, nullable = false),
+    StructField("c2", LongType, nullable = false)))
 
-  override def prettyName: String = "graft_doc_id_pairs"
+  override def prettyName: String = "graft_doc_id_len_pairs"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case ArrayType(StructType(Array(
+        StructField(_, LongType, _, _), StructField(_, LongType, _, _))), _) =>
+      TypeCheckResult.TypeCheckSuccess
     case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_doc_id_pairs requires array<bigint>, got ${other.simpleString}")
+      "graft_doc_id_len_pairs requires array<struct<bigint, bigint>>, " +
+        s"got ${other.simpleString}")
   }
 
   override def eval(input: InternalRow): IterableOnce[InternalRow] = {
@@ -52,23 +71,33 @@ case class DocIdPairs(child: Expression)
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
     if (n < 2) return Iterator.empty
-    val a = new Array[Long](n)
+    val ids = new Array[Long](n)
+    val cs = new Array[Long](n)
+    val order = new Array[Integer](n)
     var i = 0
     while (i < n) {
       require(!arr.isNullAt(i),
-        "graft_doc_id_pairs: null doc id in posting list")
-      a(i) = arr.getLong(i)
+        "graft_doc_id_len_pairs: null element in posting list")
+      val s = arr.getStruct(i, 2)
+      require(!s.isNullAt(0) && !s.isNullAt(1),
+        "graft_doc_id_len_pairs: null doc id or count in posting list")
+      ids(i) = s.getLong(0)
+      cs(i) = s.getLong(1)
+      order(i) = i
       i += 1
     }
-    java.util.Arrays.sort(a)
+    java.util.Arrays.sort(order,
+      (a: Integer, b: Integer) => java.lang.Long.compare(ids(a), ids(b)))
     new scala.collection.AbstractIterator[InternalRow] {
       private var x = 0
       private var y = 1
-      override def hasNext: Boolean = y < a.length
+      override def hasNext: Boolean = y < n
       override def next(): InternalRow = {
-        val r = new GenericInternalRow(Array[Any](a(x), a(y)))
+        val (ox, oy) = (order(x), order(y))
+        val r = new GenericInternalRow(Array[Any](ids(ox), ids(oy),
+          cs(ox), cs(oy)))
         y += 1
-        if (y == a.length) { x += 1; y = x + 1 }
+        if (y == n) { x += 1; y = x + 1 }
         r
       }
     }
@@ -78,7 +107,7 @@ case class DocIdPairs(child: Expression)
     copy(child = c)
 }
 
-/** [[DocIdPairs]] with a PPJoin positional payload: streams the C(n,2)
+/** [[DocIdLenPairs]] with a PPJoin positional payload: streams the C(n,2)
   * unordered doc pairs of one PREFIX posting list as
   * `(d1, d2, minrem, gsum)` rows, where each input element is a
   * `struct<doc_id: bigint, rem: bigint, g: bigint>` — `rem` is the doc's
@@ -104,7 +133,7 @@ case class DocIdPairs(child: Expression)
   * difference between the candidate frame fitting on local disk and
   * ENOSPC (the exact c-based filters still apply after the join).
   *
-  * Same contracts as [[DocIdPairs]]: sorts by doc id once (d1 < d2 with
+  * Same contracts as [[DocIdLenPairs]]: sorts by doc id once (d1 < d2 with
   * the payload carried alongside), O(df) peak per posting list, null
   * elements rejected loudly. */
 case class DocIdRemPairs(child: Expression)
@@ -172,86 +201,6 @@ case class DocIdRemPairs(child: Expression)
     copy(child = c)
 }
 
-/** [[DocIdPairs]] with each doc's FULL (ungated) shingle count carried as
-  * payload: streams the C(n,2) unordered doc pairs of one posting list as
-  * `(d1, d2, c1, c2)` rows, where each input element is a
-  * `struct<doc_id: bigint, c: bigint>` and `c1`/`c2` ride with their
-  * (sorted) ids. This is what lets the intersection stage
-  * (`Dedup.interCountsOfShingles`) compute Jaccard's denominator WITHOUT
-  * joining the pair frame back to the doc-length table twice: the r18
-  * shape exchanged the corpus-pair frame by d1 and again by d2 (the two
-  * largest exchanges of the stage — 34.5 + 43.1 MiB at sf0.1 against a
-  * 117 KiB join side that scale-safety pins to a shuffled join) purely to
-  * attach two longs; attaching them on the posting entry costs one
-  * idx-sized exchange (6 MiB) plus two longs on the count aggregation's
-  * partial rows instead (guide §2.3/§2.4 — and the imbalance grows with
-  * scale: pair volume is ~maxDf/2 × the posting volume at the cap).
-  *
-  * Same contracts as [[DocIdPairs]]: sorts by doc id once (payload
-  * carried through the sort), O(df) peak per posting list, pair multiset
-  * invariant under input permutation, nulls rejected loudly. */
-case class DocIdLenPairs(child: Expression)
-    extends UnaryExpression with Generator with CodegenFallback {
-
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("d1", LongType, nullable = false),
-    StructField("d2", LongType, nullable = false),
-    StructField("c1", LongType, nullable = false),
-    StructField("c2", LongType, nullable = false)))
-
-  override def prettyName: String = "graft_doc_id_len_pairs"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StructType(Array(
-        StructField(_, LongType, _, _), StructField(_, LongType, _, _))), _) =>
-      TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      "graft_doc_id_len_pairs requires array<struct<bigint, bigint>>, " +
-        s"got ${other.simpleString}")
-  }
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = child.eval(input)
-    if (v == null) return Iterator.empty
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    if (n < 2) return Iterator.empty
-    val ids = new Array[Long](n)
-    val cs = new Array[Long](n)
-    val order = new Array[Integer](n)
-    var i = 0
-    while (i < n) {
-      require(!arr.isNullAt(i),
-        "graft_doc_id_len_pairs: null element in posting list")
-      val s = arr.getStruct(i, 2)
-      require(!s.isNullAt(0) && !s.isNullAt(1),
-        "graft_doc_id_len_pairs: null doc id or count in posting list")
-      ids(i) = s.getLong(0)
-      cs(i) = s.getLong(1)
-      order(i) = i
-      i += 1
-    }
-    java.util.Arrays.sort(order,
-      (a: Integer, b: Integer) => java.lang.Long.compare(ids(a), ids(b)))
-    new scala.collection.AbstractIterator[InternalRow] {
-      private var x = 0
-      private var y = 1
-      override def hasNext: Boolean = y < n
-      override def next(): InternalRow = {
-        val (ox, oy) = (order(x), order(y))
-        val r = new GenericInternalRow(Array[Any](ids(ox), ids(oy),
-          cs(ox), cs(oy)))
-        y += 1
-        if (y == n) { x += 1; y = x + 1 }
-        r
-      }
-    }
-  }
-
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
 /** [[DocIdRemPairs]]' ORIENTED twin for asymmetric containment
   * (`Dedup.containmentPrefixOfShingles`): streams the ordered
   * (contained → container) doc pairs of one posting list as
@@ -280,7 +229,7 @@ case class DocIdLenPairs(child: Expression)
   * Iteration cost per posting list is |prefix members| × df, not df²:
   * non-prefix members never start a pair, so a high threshold shortens
   * prefixes and cuts the emission fan-out at the source. Same contracts
-  * as [[DocIdPairs]]: O(df) peak memory, nulls rejected loudly. */
+  * as [[DocIdLenPairs]]: O(df) peak memory, nulls rejected loudly. */
 case class DocIdRemContainPairs(child: Expression)
     extends UnaryExpression with Generator with CodegenFallback {
 

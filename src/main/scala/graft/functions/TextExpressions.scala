@@ -411,11 +411,6 @@ object TextFunctions {
   def spanGramLongs(tokens: Column, n: Int): Column =
     Bridge.column(SpanGramLongs(Bridge.expression(tokens), n))
 
-  /** Streaming C(n,2) pair generator over a bigint posting-list column —
-    * yields `(d1, d2)` rows, `d1 < d2`; alias with `.as(Seq("d1", "d2"))`. */
-  def docIdPairs(postings: Column): Column =
-    Bridge.column(DocIdPairs(Bridge.expression(postings)))
-
   /** Streaming C(n,2) pair generator over an array<struct<doc_id, c>>
     * posting list — yields `(d1, d2, c1, c2)` rows, `d1 < d2`, each
     * doc's count carried alongside its id; alias with

@@ -384,23 +384,11 @@ object Dedup {
     *    the array table per side (shuffled hash joins). Shuffle volume =
     *    surviving candidates × array width — the positional filter is
     *    what makes this affordable (it kills the ENOSPC row-fan-out
-    *    class the r12 first cut hit). A PREFIX-ARRAY SUFFIX BOUND
-    *    (PPJoin+'s suffix filter re-priced for a shuffle engine) is
-    *    available behind `suffixBound`: candidates first pick up only
-    *    d2's SHORT prefix array + suffix size, and
-    *    `i ≤ |a1 ∩ pfx2| + sfx2` kills every candidate that cannot
-    *    reach the qualifying overlap BEFORE d2's full array crosses an
-    *    exchange. The cut is nearly exact — 11.25M positional survivors
-    *    → 2,387,955 vs 2,387,400 true pairs at the 30× anatomy (slack
-    *    4.7× → 1.0002×) — but it costs one EXTRA exchange of the whole
-    *    candidate frame (the d2 prefix join precedes the d1 array join),
-    *    and on this corpus's NARROW arrays (~46 gated shingles/doc,
-    *    ~370 B) the saved full-array shipment is smaller than that
-    *    exchange: same-session 100× A/B read 331.7 s (bound on) vs
-    *    276.9 s (off), identical 27.11M rows — so the bound defaults
-    *    OFF and is a knob for wide-array corpora (long documents),
-    *    where per-candidate array bytes ≫ candidate-row bytes flip the
-    *    trade.
+    *    class the r12 first cut hit). PPJoin+'s suffix filter, re-priced
+    *    as a prefix-array bound ahead of the d2 array join, was retired:
+    *    it costs one extra exchange of the whole candidate frame, and on
+    *    this corpus's narrow arrays (~370 B/doc) the same-session 100×
+    *    A/B read 331.7 s with it vs 276.9 s without, identical 27.11M rows.
     *  - `auto` (default) — measure the array table once (one aggregate
     *    action), broadcast under `maxBroadcastBytes`, merge past it.
     * The r12 `maxBroadcastDocs` refusal is RETIRED: past the budget the
@@ -454,7 +442,7 @@ object Dedup {
   def ngramJaccardPrefixOf(docs: DataFrame, threshold: Double = 0.8,
       maxDf: Int = 100, verify: String = "auto",
       maxBroadcastBytes: Long = 256L << 20,
-      verifyChunks: Int = 0, suffixBound: Boolean = false,
+      verifyChunks: Int = 0,
       diskBudgetBytes: Long = defaultDiskBudgetBytes): DataFrame = {
     // string/UUID-keyed corpora ride the SAME scale path through the
     // fingerprint dictionary, re-oriented by the ORIGINAL ids
@@ -462,7 +450,7 @@ object Dedup {
     val route = docIdRoute(docs, "ngramJaccardPrefix")
     route.unordered(ngramJaccardPrefixOfShingles(shinglesOf(route.frame),
         threshold, maxDf, verify, maxBroadcastBytes, verifyChunks,
-        suffixBound, diskBudgetBytes))
+        diskBudgetBytes))
       .orderBy(col("d1"), col("d2"))
   }
 
@@ -496,25 +484,21 @@ object Dedup {
         col("g"), col("alpha"))
   }
 
-  /** A doc's prefix rows of a [[rankedOfGated]] frame: rank ≤ g − α + 1,
-    * i.e. `rem ≥ α − 1` — `(doc_id, s, rem, g)`, PPJoin's positional
-    * payload. */
+  /** A [[rankedOfGated]] row's prefix flag: rank ≤ g − α + 1, i.e.
+    * `rem ≥ α − 1`. */
+  private val prefixFlag: Column = col("rem") >= col("alpha") - lit(1)
+
+  /** A doc's prefix rows of a [[rankedOfGated]] frame —
+    * `(doc_id, s, rem, g)`, PPJoin's positional payload. */
   private def prefixOfRanked(ranked: DataFrame): DataFrame =
-    ranked.filter(col("rem") >= col("alpha") - lit(1))
+    ranked.filter(prefixFlag)
       .select(col("doc_id"), col("s"), col("rem"), col("g"))
 
-  /** The verify's per-doc array table off a [[rankedOfGated]] frame: the
-    * full sorted gated-shingle array, the doc's PREFIX as its own sorted
-    * array, and the suffix size — the pre-verify bound's inputs.
-    * collect_list drops the nulls `when` leaves on non-prefix rows, and
-    * sfx counts them exactly (= α − 1 whenever α ≤ g). */
-  private def arraysOfRanked(ranked: DataFrame): DataFrame = {
-    val isPfx = col("rem") >= col("alpha") - lit(1)
+  /** The verify's per-doc array table off a ranked frame: `(doc_id, arr)`,
+    * the doc's full sorted gated-shingle array. */
+  private def arraysOfRanked(ranked: DataFrame): DataFrame =
     ranked.groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(col("s"))).as("arr"),
-        sort_array(collect_list(when(isPfx, col("s")))).as("pfx"),
-        (count(lit(1)) - count(when(isPfx, lit(1)))).as("sfx"))
-  }
+      .agg(sort_array(collect_list(col("s"))).as("arr"))
 
   /** The overlap every qualifying Jaccard pair MUST reach, per candidate
     * row carrying full counts (c1, c2) — the exact integer ceiling of
@@ -526,33 +510,18 @@ object Dedup {
     expr(s"greatest(1L, (${tn - 1}L * (c1 + c2) + " +
       s"${1000000L + tn - 2}L) div ${1000000L + tn - 1}L)")
 
-  /** Candidate pairs of a prefix posting frame, POSITION- and
-    * LENGTH-filtered, with both docs' full counts attached — the shared
-    * candidate stage of both verify shapes. One groupBy over the
-    * streamed positional pairs computes pair-distinctness AND the
-    * first-match overlap bound in the same shuffle the old `.distinct()`
-    * paid; the g-based PRE-JOIN prune then disqualifies most candidates
-    * before the doc-length joins ever shuffle them (at the 100× staged
-    * smoke the un-pruned candidate frame's two join exchanges alone
-    * exceed local disk). */
-  private def prefixCandidates(prefix: DataFrame, docLen: DataFrame,
-      tn: Long): DataFrame =
-    candidatesOfKeptEmissions(
-      jaccardKeptEmissionsOfPostings(jaccardPostingsOf(prefix), tn),
-      docLen, tn)
-
-  /** The per-shingle posting frame of the Jaccard pair generator — split
-    * out so the exchange-pricing path can build this groupBy ONCE
-    * (disk-checkpointed), count the kept emissions off it, and then run
-    * the candidate stage over the same frame. */
+  /** The per-shingle posting frame of the Jaccard pair generator, built
+    * apart from the candidate stage so the exchange pricing can build
+    * this groupBy ONCE (disk-checkpointed), count the kept emissions off
+    * it, and then run the candidate stage over the same frame. */
   private[graft] def jaccardPostingsOf(prefix: DataFrame): DataFrame =
     prefix.groupBy(col("s"))
       .agg(collect_list(struct(col("doc_id"), col("rem"), col("g")))
         .as("ds"))
 
   /** Generator + emission-level prune over a posting frame — the rows
-    * that actually enter the pair exchange ([[prefixCandidates]]' first
-    * stage, and exactly what the exchange price counts).
+    * that actually enter the pair exchange ([[candidatesOfKeptEmissions]]'
+    * input, and exactly what the exchange price counts).
     *
     * gsum's job ends at the emission filter below — the post-join
     * filters use true counts — so it is dropped before the pair
@@ -580,9 +549,14 @@ object Dedup {
     .filter(expr(
       s"${1000000L + tn - 1}L * (minrem + 1L) >= ${tn - 1}L * gsum"))
 
-  /** The post-exchange tail of [[prefixCandidates]]: pair-distinct
-    * groupBy (which also computes the first-match overlap bound),
-    * doc-length joins, and the integer-exact PPJoin filters. */
+  /** Jaccard candidate pairs off the kept emissions, POSITION- and
+    * LENGTH-filtered, with both docs' full counts attached — the shared
+    * candidate stage of both verify shapes. One groupBy over the
+    * streamed positional pairs computes pair-distinctness AND the
+    * first-match overlap bound in one shuffle; the emission-level prune
+    * has already disqualified most candidates before the doc-length
+    * joins shuffle them (at the 100× staged smoke the un-pruned
+    * candidate frame's two join exchanges alone exceed local disk). */
   private def candidatesOfKeptEmissions(emissions: DataFrame,
       docLen: DataFrame, tn: Long): DataFrame = {
     emissions
@@ -618,8 +592,61 @@ object Dedup {
   private def containNeededExpr(tppm: Long): Column =
     expr(s"((${tppm}L * c1) + 999999L) div 1000000L")
 
+  /** The generator + emission-prune stage of [[containPrefixCandidates]]
+    * — split out (private[graft]) so the candidate-anatomy probe
+    * ([[graft.StageProbe]] `containcand`) counts EXACTLY the frame the
+    * operator shuffles, never a reimplementation that could drift. */
+  private[graft] def containKeptEmissions(ranked: DataFrame,
+      tppm: Long): DataFrame =
+    containKeptEmissionsOfPostings(containPostings(ranked), tppm)
+
+  /** The per-shingle posting frame of the oriented generator: the WHOLE
+    * gated list per shingle, each member carrying its prefix flag. */
+  private[graft] def containPostings(ranked: DataFrame): DataFrame = ranked
+    .select(col("s"), struct(col("doc_id"), col("rem"), col("g"),
+      prefixFlag.as("pfx")).as("p"))
+    .groupBy(col("s"))
+    .agg(collect_list(col("p")).as("ds"))
+
+  /** Generator + emission prune over an already-built posting frame —
+    * split from [[containPostings]] so the candidate-stage chunk loop
+    * builds the posting shuffle ONCE (disk-checkpointed) and re-slices
+    * it per chunk with a cheap per-row array transform, instead of
+    * paying the groupBy(s) exchange once per slice. */
+  private[graft] def containKeptEmissionsOfPostings(postings: DataFrame,
+      tppm: Long): DataFrame = postings
+    .select(graft.functions.TextFunctions.docIdRemContainPairs(col("ds"))
+      .as(Seq("dc", "dt", "minrem", "gc")))
+    .filter(expr(s"1000000L * (minrem + 1L) >= ${tppm}L * gc"))
+
+  /** `postings` with each member's prefix flag masked to a contained-doc
+    * hash slice — the generator then starts pairs only from slice
+    * members, partitioning the emission (and hence candidate) volume
+    * disjointly while every slice still probes the full container side:
+    * the candidate-stage chunking the 100× t′=0.8 decade forced (the pair
+    * exchange alone exceeded one box's disk in BOTH verify shapes,
+    * SCALE_r14 session F). A per-row array map, no exchange. */
+  private def slicePostings(postings: DataFrame, sl: Slice): DataFrame =
+    postings.select(col("s"), expr(
+      s"""transform(ds, p -> struct(p.doc_id AS doc_id, p.rem AS rem,
+         |  p.g AS g,
+         |  (p.pfx AND pmod(xxhash64(p.doc_id), ${sl.k}) = ${sl.i}) AS pfx))"""
+        .stripMargin).as("ds"))
+
+  /** Containment's [[rankedOfGated]] frame plus the docs-sized length
+    * frame, for the probe ([[graft.StageProbe]] `containcand`). */
+  private[graft] def containRanked(sh: DataFrame, thresholdPpm: Long,
+      maxDf: Int): (DataFrame, DataFrame) = {
+    val docLen = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
+    val keep = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
+      .filter(col("df").between(2, maxDf))
+      .hint("shuffle_hash")
+    (rankedOfGated(sh.join(keep, Seq("s")), docLen,
+      containAlpha(thresholdPpm)), docLen)
+  }
+
   /** ORDERED (contained, container) candidate pairs of a containment
-    * [[rankedOfGated]] frame — [[prefixCandidates]]' one-sided twin.
+    * [[rankedOfGated]] frame — [[candidatesOfKeptEmissions]]' one-sided twin.
     * Postings carry the WHOLE gated list per shingle with a prefix flag
     * (the one-sided bound needs prefix(contained) × full-gated
     * (container) — see [[graft.functions.DocIdRemContainPairs]]); the
@@ -635,68 +662,6 @@ object Dedup {
     * the first-match bound for qualifying pairs by [[DocIdRemPairs]]'
     * orientation-blind argument. Output renames to the verify engine's
     * (d1=contained, d2=container, c1, c2) currency. */
-  /** The generator + emission-prune stage of [[containPrefixCandidates]]
-    * — split out (private[graft]) so the candidate-anatomy probe
-    * ([[graft.StageProbe]] `containcand`) counts EXACTLY the frame the
-    * operator shuffles, never a reimplementation that could drift.
-    *
-    * `slice` restricts which CONTAINED docs may start pairs (the `pfx`
-    * flag is ANDed with it before the generator runs): a disjoint
-    * doc-hash partition of the contained side therefore partitions the
-    * EMISSION (and hence candidate) volume disjointly, without touching
-    * the container side each slice still probes in full — the
-    * candidate-stage chunking the 100× t′=0.8 decade forced (the pair
-    * exchange alone exceeded one box's disk in BOTH verify shapes,
-    * SCALE_r14 session F). */
-  private[graft] def containKeptEmissions(ranked: DataFrame,
-      tppm: Long, slice: Column = lit(true)): DataFrame =
-    containKeptEmissionsOfPostings(containPostings(ranked, slice), tppm)
-
-  /** The per-shingle posting frame of the oriented generator: the WHOLE
-    * gated list per shingle, each member carrying its prefix flag
-    * (optionally ANDed with `slice` — see [[containKeptEmissions]]). */
-  private[graft] def containPostings(ranked: DataFrame,
-      slice: Column = lit(true)): DataFrame = ranked
-    .select(col("s"), struct(col("doc_id"), col("rem"), col("g"),
-      (col("rem") >= col("alpha") - lit(1) && slice).as("pfx")).as("p"))
-    .groupBy(col("s"))
-    .agg(collect_list(col("p")).as("ds"))
-
-  /** Generator + emission prune over an already-built posting frame —
-    * split from [[containPostings]] so the candidate-stage chunk loop
-    * builds the posting shuffle ONCE (disk-checkpointed) and re-slices
-    * it per chunk with a cheap per-row array transform, instead of
-    * paying the groupBy(s) exchange once per slice. */
-  private[graft] def containKeptEmissionsOfPostings(postings: DataFrame,
-      tppm: Long): DataFrame = postings
-    .select(graft.functions.TextFunctions.docIdRemContainPairs(col("ds"))
-      .as(Seq("dc", "dt", "minrem", "gc")))
-    .filter(expr(s"1000000L * (minrem + 1L) >= ${tppm}L * gc"))
-
-  /** `postings` with each member's prefix flag masked to contained-doc
-    * hash slice `i` of `k` — the generator then starts pairs only from
-    * slice members, partitioning the emission volume disjointly while
-    * every slice still probes the full container side. A per-row array
-    * map, no exchange. */
-  private def slicePostings(postings: DataFrame, i: Int, k: Int): DataFrame =
-    postings.select(col("s"), expr(
-      s"""transform(ds, p -> struct(p.doc_id AS doc_id, p.rem AS rem,
-         |  p.g AS g,
-         |  (p.pfx AND pmod(xxhash64(p.doc_id), $k) = $i) AS pfx))"""
-        .stripMargin).as("ds"))
-
-  /** Containment's [[rankedOfGated]] frame plus the docs-sized length
-    * frame, for the probe ([[graft.StageProbe]] `containcand`). */
-  private[graft] def containRanked(sh: DataFrame, thresholdPpm: Long,
-      maxDf: Int): (DataFrame, DataFrame) = {
-    val docLen = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
-    val keep = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxDf))
-      .hint("shuffle_hash")
-    (rankedOfGated(sh.join(keep, Seq("s")), docLen,
-      containAlpha(thresholdPpm)), docLen)
-  }
-
   private def containPrefixCandidates(postings: DataFrame,
       docLen: DataFrame, tppm: Long): DataFrame = {
     containKeptEmissionsOfPostings(postings, tppm)
@@ -714,174 +679,42 @@ object Dedup {
   private[graft] def ngramJaccardPrefixOfShingles(sh: DataFrame,
       threshold: Double, maxDf: Int, verify: String = "auto",
       maxBroadcastBytes: Long = 256L << 20,
-      verifyChunks: Int = 0, suffixBound: Boolean = false,
+      verifyChunks: Int = 0,
       diskBudgetBytes: Long = defaultDiskBudgetBytes,
       framesKey: Option[String] = None): DataFrame = {
-    require(verify == "auto" || verify == "broadcast" || verify == "merge",
-      s"verify must be 'auto', 'broadcast' or 'merge', got '$verify'")
-    require(verifyChunks >= 0,
-      s"verifyChunks must be >= 1, or 0 for auto-priced: $verifyChunks")
-    require(diskBudgetBytes > 0,
-      s"diskBudgetBytes must be positive: $diskBudgetBytes")
-    // the positional pair generator's currency is bigint doc ids; refuse
-    // other id types loudly (plan-time AnalysisException would otherwise
-    // surface from deep inside the generator) and name the id-agnostic
-    // path — the classic stage takes any key type through the fingerprint
-    // dictionary ([[docIdRoute]])
-    require(sh.schema("doc_id").dataType ==
-        org.apache.spark.sql.types.LongType,
-      "ngramJaccardPrefix requires bigint doc ids (the positional pair " +
-        s"generator's currency); got ${sh.schema("doc_id").dataType
-          .simpleString} — use ngramJaccardOf (the shared co-occurrence " +
-        "stage) for other doc-id types")
     val tn = math.round(threshold * 1e6)
     require(tn >= 1 && tn <= 1000000,
       s"threshold must be in (0, 1], got $threshold")
-    // several Spark actions consume everything below (the array-table
-    // measurement in auto/broadcast mode, then the candidate job the
-    // caller runs) — checkpoint the shared frames ONCE so the shingle
-    // scan/hash and the df aggregation don't re-execute per action (and,
-    // in merge mode, per join side). docLen is docs-sized; gated is the
-    // shingle frame + an 8-byte df. dropOriginConstraints: checkpointed
-    // frames keep their stats but shed the stale origin constraints
-    // Spark 4.1 chokes on (the q50 contraction lesson).
-    import org.apache.spark.sql.graft.Bridge
-    // ONE window exchange ranks the gated frame for both consumers (the
-    // prefix posting frame and the verify's array table) — checkpointed
-    // so the budget-gate action and the candidate job share it. Storage
-    // level is SIZE-ADAPTIVE (scaleCheckpoint): this frame is
-    // corpus-×-shingles sized, and the default MEMORY_AND_DISK checkpoint
-    // UNROLLS each partition in memory first — at the 100× staged decade,
-    // 32 concurrent ~230 MiB unrolls plus the verify's execution memory
-    // OOM'd the heap (SCALE_r14 session E), so past a quarter-heap
-    // estimate the blocks stream straight to disk; at fixture scale the
-    // frame stays in memory (r14's unconditional DISK_ONLY taxed
-    // q119/q120 +19-24% warm for an OOM that only exists at decades).
-    // The whole checkpointed set is session-cached for the paired
-    // fixture entries (q119/q120 share it — [[cachedFrames]]).
-    // every frame derived below reads the stashed checkpoint blocks: an
-    // eviction of the tuple breaks it ([[cachedFrames]], cross-cache note)
-    val (docLen, ranked, arrays, estBytes) =
-      cachedFrames(sh.sparkSession, framesKey) {
-        val docLen0 = Bridge.dropOriginConstraints(
-          sh.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
-            .localCheckpoint())
-        val keep = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-          .filter(col("df").between(2, maxDf))
-          .hint("shuffle_hash")
-        val est = estUnrollBytes(docLen0)
-        val ranked0 = Bridge.dropOriginConstraints(
-          scaleCheckpoint(
-            rankedOfGated(sh.join(keep, Seq("s")), docLen0,
-              jaccardAlpha(tn)),
-            est))
-        // exact verification against per-doc sorted gated-shingle arrays
-        // with the native merge-count kernel. Two shapes (scaladoc
-        // above): the broadcast map-side form under a MEASURED byte
-        // budget, and the co-partitioned merge form with no broadcast
-        // anywhere. The r12 ENOSPC death was the ROW fan-out verify
-        // (candidates × d1's shingle rows); the merge form ships one
-        // packed array per candidate-side instead, and only for
-        // candidates the positional filter kept. Alongside each full
-        // array: the doc's PREFIX as its own sorted array plus the
-        // suffix size — the r14 pre-verify bound's inputs (see
-        // mergeVerify below).
-        val arrays0 = scaleCheckpoint(arraysOfRanked(ranked0), est)
-        (docLen0, ranked0, arrays0, est)
-      }
-    val mode = resolveVerifyMode(arrays, verify, maxBroadcastBytes,
-      "ngramJaccardPrefix")
-    // the overlap every qualifying pair MUST reach, per candidate
-    // ([[jaccardNeededExpr]]). The verify kernel early-exits a merge the
-    // moment this bound is unreachable (PPJoin+'s suffix-filter role
-    // folded into the verify: a non-qualifying candidate costs O(abort
-    // point), and the partial count it returns is < needed, so the
-    // threshold filter drops it exactly as the true count would).
-    def outOf(cand: DataFrame, vChunks: Int): DataFrame =
-      verifyPrefixCandidates(cand, arrays, jaccardNeededExpr(tn),
-          mode, vChunks, "ngramJaccardPrefix",
-          suffixBound = suffixBound)(
-        jaccardOfInter(_, threshold))
-    // verifyChunks = 0 → PRICE both big exchanges before launching them
-    // (scaladoc at the pricing constants), in EVERY verify shape — the
-    // kept-emission pair exchange (the groupBy(d1,d2) distinct) launches
-    // before any array ships, broadcast mode included. The cheap rail
-    // rows×maxDf/2 bounds the raw emission volume without any extra job
-    // at fixture scale; past it, the posting groupBy is built once
-    // (disk-checkpointed), the kept emissions are counted (a
-    // Generate→Filter→count pass — CPU, no exchange), candChunks follows
-    // kept × emission bytes against a QUARTER of the budget (the r15
-    // form priced only the verify shipment, leaving the pair exchange
-    // itself unsliced — tens of GB inside the 256-job rail on a short-
-    // doc corpus, ADVICE r15), and verifyChunks follows the PER-SLICE
-    // candidates × the two-array shipment against 2× the budget, with a
-    // loud refusal past the slice/job rails.
-    val (kc, vc, postingsOpt) =
-      if (verifyChunks >= 1) (1, math.max(1, verifyChunks), None)
-      else if (estBytes / unrollRowBytes * maxDf * emissionRowBytes / 2
-          <= diskBudgetBytes) (1, 1, None)
-      else {
-        val (raw, gatedRows) = postingStats(ranked, oriented = false)
-        if (raw * emissionRowBytes <= diskBudgetBytes) (1, 1, None)
-        else {
-          val postings = Bridge.dropOriginConstraints(
-            diskCheckpoint(jaccardPostingsOf(prefixOfRanked(ranked))))
-          val kept = jaccardKeptEmissionsOfPostings(postings, tn).count()
-          val kc = ceilDiv(kept * emissionRowBytes,
-            math.max(1L, diskBudgetBytes / 4)).max(1L)
-          require(kc <= maxAutoCandChunks,
-            s"ngramJaccardPrefix: the candidate pair stage prices at ~" +
-              s"${kept * emissionRowBytes} exchange bytes ($kept kept " +
-              s"emissions) — $kc slices of the per-slice budget " +
-              s"(diskBudgetBytes=$diskBudgetBytes / 4), past the " +
-              s"$maxAutoCandChunks-slice rail. Raise the threshold, " +
-              "lower maxDf, raise diskBudgetBytes (cluster aggregate " +
-              "disk), or pass explicit verifyChunks to bypass pricing.")
-          val nDocs = math.max(1L, docLen.count())
-          val perCand = 2L * (gatedRows * 8L / nDocs) + candRowBytes
-          val vc =
-            if (mode == "broadcast") 1L
-            else math.max(1L,
-              ceilDiv(ceilDiv(kept, kc) * perCand, 2L * diskBudgetBytes))
-          require(kc * vc <= maxAutoJobs,
-            s"ngramJaccardPrefix: auto-pricing resolves $kc candidate " +
-              s"slices × $vc verify chunks = ${kc * vc} jobs ($kept kept " +
-              s"emissions, ~$perCand B/candidate verify shipment) — past " +
-              s"the $maxAutoJobs-job rail. Raise diskBudgetBytes " +
-              "(cluster aggregate disk), raise the threshold, or lower " +
-              "maxDf.")
-          logResolvedChunks("ngramJaccardPrefix", kept, kc, vc)
-          (kc.toInt, vc.toInt, Some(postings))
-        }
-      }
-    if (kc <= 1)
-      outOf(postingsOpt
-        .map(p => candidatesOfKeptEmissions(
-          jaccardKeptEmissionsOfPostings(p, tn), docLen, tn))
-        .getOrElse(prefixCandidates(prefixOfRanked(ranked), docLen, tn)),
-        vc)
-    else {
-      // candidate-stage chunking, the containment path's discipline
-      // applied at the EMISSION level: every emission of a pair carries
-      // the same (d1, d2), so a pair-hash filter BEFORE the groupBy
-      // partitions the pair exchange disjointly (ub is still the max
-      // over ALL of the pair's emissions — they share a slice), the
-      // union of slice outputs is exactly the unsliced output, and the
-      // generator re-runs per slice over the checkpointed postings (CPU
-      // only — the filter sits in the Generate stage, so non-slice
-      // emissions never reach an exchange). Each slice's ≥-threshold
-      // survivors alone outlive its jobs.
-      val postings = postingsOpt.get
-      (0 until kc).map { i =>
-        val slice = candidatesOfKeptEmissions(
-          jaccardKeptEmissionsOfPostings(postings, tn)
-            .filter(pmod(xxhash64(col("d1"), col("d2")), lit(kc)) === i),
-          docLen, tn)
-        val kept = Bridge.dropOriginConstraints(
-          outOf(slice, vc).localCheckpoint())
-        System.gc()
-        kept
-      }.reduce(_ unionByName _)
+    // no candChunks knob: an explicit verifyChunks pins the candidate
+    // stage unsliced (both knobs explicit — pricing bypassed)
+    pricedPairs(sh, "ngramJaccardPrefix",
+        "ngramJaccardOf (the shared co-occurrence stage)", framesKey,
+        prefixFrames(sh, maxDf, jaccardAlpha(tn)), verify,
+        maxBroadcastBytes, verifyChunks, if (verifyChunks >= 1) 1 else 0,
+        diskBudgetBytes) { (fr, _) =>
+      PairFamily(jaccardPostingsOf(prefixOfRanked(fr.ranked)),
+        kept = Some(jaccardKeptEmissionsOfPostings(_, tn)),
+        // slices cut at the EMISSION level: every emission of a pair
+        // carries the same (d1, d2), so a pair-hash filter before the
+        // groupBy partitions the pair exchange disjointly (ub is still
+        // the max over ALL of the pair's emissions — they share a slice),
+        // and it sits in the Generate stage, so non-slice emissions never
+        // reach an exchange
+        candidates = { (p, slice) =>
+          val e = jaccardKeptEmissionsOfPostings(p, tn)
+          candidatesOfKeptEmissions(
+            slice.fold(e)(sl => e.filter(sl.of(col("d1"), col("d2")))),
+            fr.docLen, tn)
+        },
+        starts = prefixFlag, oriented = false,
+        zeroJobBytes = fr.rows * maxDf * emissionRowBytes / 2,
+        // the verify kernel early-exits a merge the moment this bound is
+        // unreachable; the partial count it returns is < needed, so the
+        // threshold filter drops it exactly as the true count would
+        needed = jaccardNeededExpr(tn), score = jaccardOfInter(_, threshold),
+        remedy = "Raise the threshold, lower maxDf, raise diskBudgetBytes " +
+          "(cluster aggregate disk), or pass explicit verifyChunks to " +
+          "bypass pricing.")
     }
   }
 
@@ -928,14 +761,50 @@ object Dedup {
     df.localCheckpoint(true, level)
   }
 
-  /** The unroll estimate feeding [[scaleCheckpoint]]: total shingle rows
-    * (an upper bound on the gated/ranked frame and on the array table's
-    * cells) from the docs-sized length frame — one cheap agg on an
-    * already-materialized checkpoint, never a new pass over the corpus. */
-  private def estUnrollBytes(docLen: DataFrame): Long = {
-    val m = docLen.agg(sum(col("c"))).head()
-    (if (m.isNullAt(0)) 0L else m.getLong(0)) * unrollRowBytes
+  /** The checkpointed frame set one at-scale pair family runs on: the
+    * docs-sized length frame `(doc_id, c)`, the ranked gated frame, the
+    * verify's array table `(doc_id, arr)`, the total shingle rows and the
+    * doc count (≥ 1). */
+  private final case class PairFrames(docLen: DataFrame, ranked: DataFrame,
+      arrays: DataFrame, rows: Long, nDocs: Long)
+
+  /** Builds [[PairFrames]] over a `(doc_id, s)` shingle frame; `rank`
+    * maps the df-gated rows and the length frame to the ranked frame.
+    * Several Spark actions consume these frames (the broadcast pricing,
+    * the exchange pricing, the candidate and verify jobs), so each is
+    * checkpointed ONCE and the shingle scan and df aggregation never
+    * re-execute per action or per join side. The ranked frame and the
+    * array table are corpus-×-shingles sized and size-adaptive
+    * ([[scaleCheckpoint]]): the unroll estimate is the total shingle
+    * rows (an upper bound on both) from one agg over the checkpointed
+    * length frame, which also yields the doc count the pricing reads.
+    * dropOriginConstraints: checkpointed frames keep their stats but
+    * shed the stale origin constraints Spark 4.1 chokes on (the q50
+    * contraction lesson). */
+  private def pairFrames(sh: DataFrame, maxDf: Int)(
+      rank: (DataFrame, DataFrame) => DataFrame): PairFrames = {
+    import org.apache.spark.sql.graft.Bridge
+    val docLen = Bridge.dropOriginConstraints(
+      sh.groupBy(col("doc_id")).agg(count(lit(1)).as("c")).localCheckpoint())
+    val keep = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
+      .filter(col("df").between(2, maxDf))
+      .hint("shuffle_hash")
+    val m = docLen.agg(sum(col("c")), count(lit(1))).head()
+    val rows = if (m.isNullAt(0)) 0L else m.getLong(0)
+    val est = rows * unrollRowBytes
+    val ranked = Bridge.dropOriginConstraints(
+      scaleCheckpoint(rank(sh.join(keep, Seq("s")), docLen), est))
+    PairFrames(docLen, ranked, scaleCheckpoint(arraysOfRanked(ranked), est),
+      rows, math.max(1L, m.getLong(1)))
   }
+
+  /** The prefix paths' frames: ONE window exchange ranks the gated frame
+    * ([[rankedOfGated]]) for both the prefix postings and the array
+    * table; Jaccard and containment differ only by the overlap bound
+    * `alpha`. */
+  private def prefixFrames(sh: DataFrame, maxDf: Int,
+      alpha: Column): PairFrames =
+    pairFrames(sh, maxDf)(rankedOfGated(_, _, alpha))
 
   // ---------------------------------------------------------------------
   // Up-front exchange pricing (VERDICT r14 #2: five mid-job ENOSPC/OOM
@@ -994,17 +863,19 @@ object Dedup {
     * generator's RAW emission volume (before the emission-level prune —
     * an upper bound on what enters the pair exchange) plus the gated row
     * count (the array table's cell count, for the verify-shipment
-    * estimate). `oriented`: containment emits |prefix|×(df−1) per posting
-    * list (prefix members start pairs against every other member);
-    * Jaccard emits C(|prefix|, 2) (pairs within the prefix slice). The
-    * containment rule is exactly the containcand probe's counting rule —
-    * kept in the operator so the price and the probe can never drift. */
-  private def postingStats(ranked: DataFrame,
+    * estimate). `starts` flags the rows that start pairs (the prefix, or
+    * the sketch's bottom-k). `oriented`: each start pairs with every
+    * other posting member, |starts|×(df−1) per posting list (containment,
+    * the sketch); otherwise starts pair among themselves, C(|starts|, 2)
+    * (Jaccard). The containment rule is exactly the containcand probe's
+    * counting rule — kept in the operator so the price and the probe can
+    * never drift. */
+  private def postingStats(ranked: DataFrame, starts: Column,
       oriented: Boolean): (Long, Long) = {
     val volExpr =
       if (oriented) expr("np * (n - 1)") else expr("np * (np - 1) div 2")
     val m = ranked
-      .select(col("s"), (col("rem") >= col("alpha") - lit(1)).as("pfx"))
+      .select(col("s"), starts.as("pfx"))
       .groupBy(col("s"))
       .agg(count(lit(1)).as("n"), count(when(col("pfx"), lit(1))).as("np"))
       .agg(sum(volExpr), sum(col("n"))).head()
@@ -1027,6 +898,167 @@ object Dedup {
       priceLog.warn(s"$opName: priced $kept kept emissions " +
         s"(~${kept * emissionRowBytes} exchange bytes) -> " +
         s"candChunks=$candChunks verifyChunks=$verifyChunks")
+
+  /** Hash slice `i` of `k`: one of a slice loop's disjoint partitions. */
+  private final case class Slice(i: Int, k: Int) {
+    def of(keys: Column*): Column = pmod(xxhash64(keys: _*), lit(k)) === i
+  }
+
+  /** What one at-scale pair family hands [[pricedPairs]] — everything
+    * the Jaccard prefix, containment prefix and containment sketch
+    * families do NOT share.
+    *  - `postings`: the candidate stage's input frame, unsliced.
+    *  - `kept`: the emissions a posting frame sends into the pair
+    *    exchange. Given, the pricing builds `postings` once on disk and
+    *    counts them; None prices on the raw volume and slices `postings`
+    *    as is.
+    *  - `candidates`: the `(d1, d2, c1, c2)` candidate frame off a
+    *    posting frame, restricted to a slice when one is given.
+    *  - `starts`, `oriented`: the raw-volume rule ([[postingStats]]).
+    *  - `zeroJobBytes`: a bound on the raw emission bytes that needs no
+    *    Spark job.
+    *  - `needed`, `score`: the verify's bound and output
+    *    ([[verifyPrefixCandidates]]).
+    *  - `remedy`: what a refusal tells the caller to change. */
+  private final case class PairFamily(postings: DataFrame,
+      kept: Option[DataFrame => DataFrame],
+      candidates: (DataFrame, Option[Slice]) => DataFrame,
+      starts: Column, oriented: Boolean, zeroJobBytes: Long,
+      needed: Column, score: DataFrame => DataFrame, remedy: String)
+
+  /** The one priced pair pipeline of the at-scale pair families (q119–
+    * q122, q126/q127): knob checks, the checkpointed frame set (session-
+    * cached under `framesKey` — [[cachedFrames]]), the verify shape,
+    * the exchange pricing, and the slice loop; `family` supplies what
+    * differs, given the frames and the resolved verify mode.
+    *
+    * EXCHANGE PRICING (scaladoc at the pricing constants): a 0 chunk knob
+    * is resolved from measured volume BEFORE the exchange launches —
+    * never discovered by ENOSPC (the r14 sessions A/B/F4/F5/F6 failure
+    * mode) — in EVERY verify shape, since the candidate exchange runs
+    * before any array ships. Both knobs explicit bypasses it (a cluster
+    * with aggregate disk passes 1 and pays zero pricing actions). The
+    * ladder, cheapest first:
+    *  (1) the family's zero-job bound on the raw emission bytes —
+    *      fixture-scale runs resolve here for free;
+    *  (2) one posting-stats agg prices the exact raw volume — still
+    *      nothing materializes;
+    *  (3) past that, the emissions are counted (kept after the emission
+    *      prune off postings built once on disk — a Generate→Filter→count
+    *      pass, CPU only — or the raw volume), and the knobs follow:
+    *      candChunks from the emission bytes against a QUARTER of the
+    *      budget (the emission exchange re-expands inside every
+    *      downstream stage of its slice — groupBy spill, length joins,
+    *      verify exchanges — so its own share is kept small; the r15
+    *      form priced only the verify shipment, leaving the pair
+    *      exchange itself unsliced, ADVICE r15; the factors reproduce
+    *      SCALE_r14 session F's measured-good 32-slice/2-verify-chunk
+    *      decade), and verifyChunks from per-slice candidates × the
+    *      two-array shipment against 2× the budget (broadcast mode ships
+    *      nothing per candidate and stays at 1). Past the slice or job
+    *      rails it refuses, naming the bytes and the knobs. The job rail
+    *      fires whenever ANY knob was auto-resolved: explicit candChunks
+    *      = 1 with an auto verifyChunks could otherwise silently resolve
+    *      thousands of verify jobs (ADVICE r15). */
+  private def pricedPairs(sh: DataFrame, opName: String,
+      alternative: String, framesKey: Option[String], frames: => PairFrames,
+      verify: String, maxBroadcastBytes: Long, verifyChunks: Int,
+      candChunks: Int, diskBudgetBytes: Long)(
+      family: (PairFrames, String) => PairFamily): DataFrame = {
+    import org.apache.spark.sql.graft.Bridge
+    require(verify == "auto" || verify == "broadcast" || verify == "merge",
+      s"verify must be 'auto', 'broadcast' or 'merge', got '$verify'")
+    require(verifyChunks >= 0,
+      s"verifyChunks must be >= 1, or 0 for auto-priced: $verifyChunks")
+    require(candChunks >= 0,
+      s"candChunks must be >= 1, or 0 for auto-priced: $candChunks")
+    require(diskBudgetBytes > 0,
+      s"diskBudgetBytes must be positive: $diskBudgetBytes")
+    // the pair generators' currency is bigint doc ids; refuse other id
+    // types loudly (a plan-time AnalysisException would otherwise surface
+    // from deep inside a generator) and name the id-agnostic path
+    require(sh.schema("doc_id").dataType ==
+        org.apache.spark.sql.types.LongType,
+      s"$opName requires bigint doc ids (the pair generators' currency); " +
+        s"got ${sh.schema("doc_id").dataType.simpleString} — use " +
+        s"$alternative for other doc-id types")
+    // every frame derived below reads the stashed checkpoint blocks: an
+    // eviction of the tuple breaks it ([[cachedFrames]], cross-cache note)
+    val fr = cachedFrames(sh.sparkSession, framesKey)(frames)
+    // resolved ONCE: the pricing aggregate is slice-invariant (ADVICE r14:
+    // 32 slices re-priced it 32×)
+    val mode = resolveVerifyMode(fr.arrays, verify, maxBroadcastBytes,
+      opName)
+    val f = family(fr, mode)
+    def onDisk(p: DataFrame) =
+      Bridge.dropOriginConstraints(diskCheckpoint(p))
+    val autoCand = candChunks == 0
+    val autoVerify = verifyChunks == 0
+    val unsliced: (Int, Int, Option[DataFrame]) =
+      (math.max(1, candChunks), math.max(1, verifyChunks), None)
+    val (kc, vc, pricedPostings) =
+      if (!autoCand && !autoVerify) (candChunks, verifyChunks, None)
+      else if (f.zeroJobBytes <= diskBudgetBytes) unsliced
+      else {
+        val (raw, gatedRows) = postingStats(fr.ranked, f.starts, f.oriented)
+        if (raw * emissionRowBytes <= diskBudgetBytes) unsliced
+        else {
+          val postings = f.kept.map(_ => onDisk(f.postings))
+          val n = f.kept.zip(postings)
+            .fold(raw) { case (kept, p) => kept(p).count() }
+          val bytes = n * emissionRowBytes
+          val emissions = if (f.kept.isDefined) "kept" else "raw"
+          val k =
+            if (!autoCand) candChunks.toLong
+            else ceilDiv(bytes, math.max(1L, diskBudgetBytes / 4)).max(1L)
+          require(!autoCand || k <= maxAutoCandChunks,
+            s"$opName: the candidate distinct exchange prices at ~$bytes " +
+              s"exchange bytes ($n $emissions emissions) — $k slices of " +
+              s"the per-slice budget (diskBudgetBytes=$diskBudgetBytes / " +
+              s"4), past the $maxAutoCandChunks-slice rail. ${f.remedy}")
+          val perCand = 2L * (gatedRows * 8L / fr.nDocs) + candRowBytes
+          val vc =
+            if (!autoVerify) verifyChunks.toLong
+            else if (mode == "broadcast") 1L
+            else ceilDiv(ceilDiv(n, k) * perCand, 2L * diskBudgetBytes)
+              .max(1L)
+          require(k * vc <= maxAutoJobs,
+            s"$opName: auto-pricing resolves $k candidate slices × $vc " +
+              s"verify chunks = ${k * vc} jobs ($n $emissions emissions, " +
+              s"~$perCand B/candidate verify shipment) — past the " +
+              s"$maxAutoJobs-job rail. ${f.remedy}")
+          logResolvedChunks(opName, n, k, vc)
+          (k.toInt, vc.toInt, postings)
+        }
+      }
+    def verified(cand: DataFrame): DataFrame =
+      verifyPrefixCandidates(cand, fr.arrays, f.needed, mode, vc)(f.score)
+    if (kc <= 1)
+      verified(f.candidates(pricedPostings.getOrElse(f.postings), None))
+    else {
+      // candidate-stage chunking: the slices share one posting frame
+      // (built on disk once when the family counts kept emissions), and
+      // each slice runs generator → filters → verify in its own jobs
+      val shared = pricedPostings.getOrElse(
+        if (f.kept.isDefined) onDisk(f.postings) else f.postings)
+      unionOfSlices(kc)(sl => verified(f.candidates(shared, Some(sl))))
+    }
+  }
+
+  /** Runs `slice` over the `k` hash slices, each in its OWN jobs whose
+    * ≥-threshold survivors (the only rows that outlive it) are
+    * checkpointed eagerly — a finished slice's shuffle files lose their
+    * last reference and the context cleaner reclaims them before the
+    * next slice peaks — and unions the outputs. Exactness is by
+    * partition: every candidate lands in exactly one slice, so the union
+    * IS the single-job output (spec-pinned). */
+  private def unionOfSlices(k: Int)(slice: Slice => DataFrame): DataFrame =
+    (0 until k).map { i =>
+      val kept = org.apache.spark.sql.graft.Bridge.dropOriginConstraints(
+        slice(Slice(i, k)).localCheckpoint())
+      System.gc() // let the cleaner reclaim the finished slice's shuffles
+      kept
+    }.reduce(_ unionByName _)
 
   // ---------------------------------------------------------------------
   // Doc-id fingerprint dictionary (VERDICT r14 #4: the pair generators
@@ -1133,88 +1165,36 @@ object Dedup {
     * verification of a `(d1, d2, c1, c2)` candidate frame against the
     * per-doc sorted-array table ([[arraysOfRanked]]), in the broadcast
     * or no-broadcast co-partitioned merge shape (scaladoc at
-    * [[ngramJaccardPrefix]]), with the prefix-array suffix bound ahead
-    * of the merge shape's full-array exchange and the early-exit merge
-    * kernel under `needed` — the exact overlap every qualifying
-    * candidate must reach, as an expression over (c1, c2) (Jaccard's
-    * and containment's bounds differ). `score` maps the verified
-    * `(d1, d2, i, c1, c2)` frame to the operator's output and MUST
-    * discard every row with `i < needed` — that filter is what makes
-    * the kernel's early-exit partial counts unobservable.
-    *
-    * `suffixBound` gates the pre-verify prefix-array stage, because its
-    * LEVERAGE is operator- and corpus-specific. The bound prunes only
-    * when `needed − sfx2 > 0`: for Jaccard that slack is
-    * ≈ c·t′(1−t′)/(1+t′) — strictly positive at every threshold — and
-    * the 30× anatomy measured the cut nearly exact (11.25M positional
-    * survivors → 2,387,955 vs 2,387,400 true). For containment it is
-    * `⌈t′c1⌉ − ⌈t′c2⌉ + 1 ≤ 0` whenever the container is at least as
-    * long as the contained — the operator's PRIMARY regime — so the
-    * stage would ship a half-width prefix array per candidate at the
-    * default t′ = 0.5 and prune almost nothing (measured: containment's
-    * merge verify WITH the bound fills all 78 GB of local disk and dies,
-    * SCALE_r14 session A). But pruning well is not the same as PAYING:
-    * the bound's stage is one extra exchange of the entire candidate
-    * frame (the d2 prefix join precedes the d1 array join), and on
-    * narrow-array corpora (~370 B/doc here) the same-session 100× A/B
-    * read the bound as a net LOSS for Jaccard too (331.7 s on vs
-    * 276.9 s off, identical output) — so every caller currently defaults
-    * it OFF, and the knob exists for wide-array corpora where
-    * per-candidate array bytes dominate candidate-row bytes. */
+    * [[ngramJaccardPrefix]]), with the early-exit merge kernel under
+    * `needed` — the exact overlap every qualifying candidate must reach,
+    * as an expression over (c1, c2) (Jaccard's and containment's bounds
+    * differ). `score` maps the verified `(d1, d2, i, c1, c2)` frame to
+    * the operator's output and MUST discard every row with
+    * `i < needed` — that filter is what makes the kernel's early-exit
+    * partial counts unobservable. */
   private def verifyPrefixCandidates(cand: DataFrame, arrays: DataFrame,
-      needed: Column, mode: String,
-      verifyChunks: Int, opName: String, suffixBound: Boolean)(
+      needed: Column, mode: String, verifyChunks: Int)(
       score: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     require(mode == "broadcast" || mode == "merge",
       s"resolved verify mode must be 'broadcast' or 'merge', got '$mode'")
-    // the merge shape's irreducible cost is shipping one full gated
-    // array per surviving candidate across an exchange — so before any
-    // full array moves, candidates pass a PREFIX-ARRAY SUFFIX BOUND
-    // (PPJoin+'s suffix-filter idea priced for a shuffle engine):
-    // i = |A∩B| ≤ |A ∩ pfx(B)| + |suffix(B)| for ANY split of B, and
-    // with B's own prefix split both terms are cheap — pfx(B) is the
-    // SHORT end of the array (~(1−t)·g cells) and sfx(B) = α_B − 1 is a
-    // counter. Join order is chosen so the wide arrays only ever cross
-    // an exchange once each per surviving candidate: (1) narrow
-    // candidate rows co-partition on d2 picking up (pfx2, sfx2);
-    // (2) co-partition on d1 picking up a1 (full) while carrying only
-    // the short pfx2; (3) the bound kills candidates that cannot reach
-    // `needed` — measured 125.1M → far fewer at the 100× smoke, where
-    // the d2 full-array shipment WAS the wall time; (4) survivors alone
-    // co-partition on d2 for a2 and the early-exit merge kernel.
-    def mergeVerify(c: DataFrame): DataFrame = {
-      val withA1 =
-        if (suffixBound) c
-          .join(arrays.select(col("doc_id").as("d2"), col("pfx").as("p2"),
-            col("sfx").as("sfx2")).hint("shuffle_hash"), Seq("d2"))
-          .join(arrays.select(col("doc_id").as("d1"), col("arr").as("a1"))
-            .hint("shuffle_hash"), Seq("d1"))
-          .withColumn("needed", needed)
-          // early-exit form of |a1 ∩ pfx2| ≥ needed − sfx2: the kernel
-          // aborts (returning < the bound) as soon as the bound is
-          // unreachable; a non-positive bound passes trivially
-          .filter(graft.functions.TextFunctions.sortedIntersectAtLeast(
-              col("a1"), col("p2"), col("needed") - col("sfx2")) >=
-            col("needed") - col("sfx2"))
-          .drop("p2", "sfx2")
-        else c
-          .join(arrays.select(col("doc_id").as("d1"), col("arr").as("a1"))
-            .hint("shuffle_hash"), Seq("d1"))
-          .withColumn("needed", needed)
-      withA1
-        .join(arrays.select(col("doc_id").as("d2"), col("arr").as("a2"))
-          .hint("shuffle_hash"), Seq("d2"))
-        .select(col("d1"), col("d2"),
-          graft.functions.TextFunctions
-            .sortedIntersectAtLeast(col("a1"), col("a2"), col("needed"))
-            .as("i"),
-          col("c1"), col("c2"))
-    }
+    // the merge shape ships one full gated array per surviving candidate
+    // and side; the wide arrays cross an exchange once each per candidate
+    def mergeVerify(c: DataFrame): DataFrame = c
+      .join(arrays.select(col("doc_id").as("d1"), col("arr").as("a1"))
+        .hint("shuffle_hash"), Seq("d1"))
+      .withColumn("needed", needed)
+      .join(arrays.select(col("doc_id").as("d2"), col("arr").as("a2"))
+        .hint("shuffle_hash"), Seq("d2"))
+      .select(col("d1"), col("d2"),
+        graft.functions.TextFunctions
+          .sortedIntersectAtLeast(col("a1"), col("a2"), col("needed"))
+          .as("i"),
+        col("c1"), col("c2"))
     if (mode == "broadcast") {
-      // broadcast verify: nothing ships per candidate, so the prefix
-      // bound buys nothing — but the early-exit kernel still cuts the
-      // merge work on the ~4.6× non-qualifying candidates
+      // broadcast verify: nothing ships per candidate, and the early-exit
+      // kernel still cuts the merge work on the ~4.6× non-qualifying
+      // candidates
       val verified = cand
         .join(broadcast(arrays.select(col("doc_id").as("d1"),
           col("arr").as("a1"))), Seq("d1"))
@@ -1234,26 +1214,15 @@ object Dedup {
       // of it live on disk at once in a single job. Where executor-local
       // disk bounds that (the 100× single-box smoke: ~124M candidates ×
       // ~370 B measured ENOSPC), the candidates hash-partition into
-      // `verifyChunks` disjoint slices, each verified in its OWN job
-      // whose ≥-threshold survivors (the only rows that outlive the
-      // chunk) are checkpointed eagerly — a finished chunk's shuffle
-      // files lose their last reference and the context cleaner reclaims
-      // them before the next chunk peaks. Exactness is by partition:
-      // every candidate lands in exactly one chunk; the union of chunk
-      // outputs IS the single-job output (spec-pinned). On a cluster
-      // with aggregate disk this knob stays at 1.
+      // `verifyChunks` disjoint slices, each verified in its own jobs
+      // ([[unionOfSlices]]). On a cluster with aggregate disk this knob
+      // stays at 1.
       // DISK_ONLY: at the decades where chunking is on at all, the
       // candidate frame is the ~100M-row one whose in-memory unroll
       // competes with the verify joins for heap (the session-E OOM)
       val candCk = Bridge.dropOriginConstraints(diskCheckpoint(cand))
-      (0 until verifyChunks).map { i =>
-        val chunk = candCk.filter(
-          pmod(xxhash64(col("d1"), col("d2")), lit(verifyChunks)) === i)
-        val kept = Bridge.dropOriginConstraints(
-          score(mergeVerify(chunk)).localCheckpoint())
-        System.gc() // let the cleaner reclaim the finished chunk's shuffles
-        kept
-      }.reduce(_ unionByName _)
+      unionOfSlices(verifyChunks)(sl =>
+        score(mergeVerify(candCk.filter(sl.of(col("d1"), col("d2"))))))
     }
   }
 
@@ -3202,18 +3171,17 @@ object Dedup {
     * Probe cost rides `sampleFraction` × the EXACT path's candidate
     * volume — size f so that cost fits (the measured saving repays it
     * on every later run of the sized sketch). */
-  private def sketchLadderOf(spark: SparkSession, ranked: DataFrame,
-      docLen: DataFrame, arrays: DataFrame, mode: String,
-      thresholdPpm: Long, sampleFraction: Double, kMax: Int,
+  private def sketchLadderOf(spark: SparkSession, fr: PairFrames,
+      mode: String, thresholdPpm: Long, sampleFraction: Double, kMax: Int,
       recallTargetPpm: Long): DataFrame = {
     require(sampleFraction > 0 && sampleFraction <= 1,
       s"sampleFraction must be in (0, 1], got $sampleFraction")
     val sppm = math.round(sampleFraction * 1e6)
+    val ranked = fr.ranked
     val truePairs = verifyPrefixCandidates(
-      sketchCandOf(ranked, docLen, thresholdPpm, Int.MaxValue,
+      sketchCandOf(ranked, fr.docLen, thresholdPpm, Int.MaxValue,
         docSamplePred(sppm)),
-      arrays, containNeededExpr(thresholdPpm), mode, 1,
-      "containmentSketchCalibration", suffixBound = false)(
+      fr.arrays, containNeededExpr(thresholdPpm), mode, 1)(
       containmentScoreOf(_, thresholdPpm))
     val rmin = truePairs.select(col("contained"), col("container"))
       .join(ranked.select(col("doc_id").as("contained"), col("s"),
@@ -3266,14 +3234,12 @@ object Dedup {
     // exactly the sketch's hash-ranked frames, so one build serves both.
     // Every frame derived below reads the stashed checkpoint blocks: an
     // eviction of the tuple breaks it ([[cachedFrames]], cross-cache note)
-    val (docLen, ranked, arrays, _, _, _) =
-      cachedFrames(spark, Some(s"sketch:$dir:$thresholdPpm:$maxDf"))(
-        sketchFrames(shingles(spark, dir), thresholdPpm, maxDf))
-    val mode = resolveVerifyMode(arrays, verify, maxBroadcastBytes,
+    val fr = cachedFrames(spark, Some(s"sketch:$dir:$thresholdPpm:$maxDf"))(
+      sketchFrames(shingles(spark, dir), maxDf))
+    val mode = resolveVerifyMode(fr.arrays, verify, maxBroadcastBytes,
       "containmentSketchCalibration")
-    sketchLadderOf(spark, ranked, docLen, arrays, mode, thresholdPpm,
-        sampleFraction, autoKFor(thresholdPpm, recallTargetPpm),
-        recallTargetPpm)
+    sketchLadderOf(spark, fr, mode, thresholdPpm, sampleFraction,
+        autoKFor(thresholdPpm, recallTargetPpm), recallTargetPpm)
       .orderBy(col("k"))
   }
 
@@ -3318,48 +3284,25 @@ object Dedup {
       .orderBy(col("contained"), col("container"))
   }
 
-  /** The sketch family's shared frames over a `(doc_id, s)` shingle
-    * frame: the checkpointed per-doc length frame, the hash-RANKED gated
-    * frame, the verify array table, plus the sizing stats (total gated
-    * input rows, doc count, unroll byte estimate) the pricing rails
-    * read. The per-doc rank is md5 of the 16-lowercase-hex shingle form
-    * — the exact string the oracle's shingle CTE carries, so DuckDB
-    * replays the same bottom-k sample; ties break on the shingle key, so
-    * the order is total in practice. */
-  private def sketchFrames(sh: DataFrame, thresholdPpm: Long, maxDf: Int)
-      : (DataFrame, DataFrame, DataFrame, Long, Long, Long) = {
-    import org.apache.spark.sql.graft.Bridge
-    import org.apache.spark.sql.expressions.Window
-    val docLen = Bridge.dropOriginConstraints(
-      sh.groupBy(col("doc_id")).agg(count(lit(1)).as("c")).localCheckpoint())
-    val keep = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxDf))
-      .hint("shuffle_hash")
-    val byDoc = Window.partitionBy(col("doc_id"))
-    // ONE head() over the checkpointed docs-sized length frame feeds both
-    // the unroll estimate (scaleCheckpoint's input) and the doc count the
-    // cheap emission rail reads
-    val lenStats = docLen.agg(sum(col("c")), count(lit(1))).head()
-    val totalShingleRows = if (lenStats.isNullAt(0)) 0L else lenStats.getLong(0)
-    val nDocs = math.max(1L, lenStats.getLong(1))
-    val estBytes = totalShingleRows * unrollRowBytes
-    val ranked = Bridge.dropOriginConstraints(scaleCheckpoint(
-      sh.join(keep, Seq("s"))
+  /** The sketch family's frames over a `(doc_id, s)` shingle frame: the
+    * gated rows RANKED per doc by hash. The rank is md5 of the
+    * 16-lowercase-hex shingle form — the exact string the oracle's
+    * shingle CTE carries, so DuckDB replays the same bottom-k sample;
+    * ties break on the shingle key, so the order is total in practice.
+    * The array table's `arr` is sort_array — rank-order-independent. */
+  private def sketchFrames(sh: DataFrame, maxDf: Int): PairFrames =
+    pairFrames(sh, maxDf) { (gated, docLen) =>
+      import org.apache.spark.sql.expressions.Window
+      val byDoc = Window.partitionBy(col("doc_id"))
+      gated
         .join(docLen.hint("shuffle_hash"), Seq("doc_id"))
         .withColumn("hx", md5(lower(lpad(hex(col("s")), 16, "0"))))
         .withColumn("r",
           row_number().over(byDoc.orderBy(col("hx"), col("s"))))
         .withColumn("g", count(lit(1)).over(byDoc))
-        .withColumn("alpha", containAlpha(thresholdPpm))
         .select(col("doc_id"), col("s"), (col("g") - col("r")).as("rem"),
-          col("g"), col("alpha")),
-      estBytes))
-    // the verify's array table rides the same ranked frame (arr is
-    // sort_array — rank-order-independent; pfx/sfx are unused here,
-    // suffixBound is hard-off on the sketch path)
-    val arrays = scaleCheckpoint(arraysOfRanked(ranked), estBytes)
-    (docLen, ranked, arrays, totalShingleRows, nDocs, estBytes)
-  }
+          col("g"))
+    }
 
   /** The sketch's candidate stage: the contained side's bottom-`kCap`
     * rows (rank ≤ k ⇔ rem ≥ g − k) probe the FULL gated index on the
@@ -3397,117 +3340,49 @@ object Dedup {
     require(k >= MeasuredK,
       s"sketch size k must be >= 1, AutoK (0) for recall-sized, or " +
         s"MeasuredK (-1) for sample-measured: $k")
-    require(verifyChunks >= 0,
-      s"verifyChunks must be >= 1, or 0 for auto-priced: $verifyChunks")
-    require(diskBudgetBytes > 0,
-      s"diskBudgetBytes must be positive: $diskBudgetBytes")
-    require(sh.schema("doc_id").dataType ==
-        org.apache.spark.sql.types.LongType,
-      "containmentSketch requires bigint doc ids (the shared verify " +
-        s"engine's currency); got ${sh.schema("doc_id").dataType
-          .simpleString} — use containmentSketchOf (the fingerprint-" +
-        "dictionary route) for other doc-id types")
-    import org.apache.spark.sql.graft.Bridge
-    // every frame derived below reads the stashed checkpoint blocks: an
-    // eviction of the tuple breaks it ([[cachedFrames]], cross-cache note)
-    val (docLen, ranked, arrays, totalShingleRows, nDocs, estBytes) =
-      cachedFrames(sh.sparkSession, framesKey)(
-        sketchFrames(sh, thresholdPpm, maxDf))
-    val mode = resolveVerifyMode(arrays, verify, maxBroadcastBytes,
-      "containmentSketch")
-    // the sketch width: explicit k verbatim; AutoK = the analytic
-    // per-pair floor; MeasuredK = the sampled recall ladder's minimal k
-    // whose Wilson lower bound clears the target (never above the
-    // analytic k — the measurement can only SAVE candidate volume, the
-    // analytic floor is the worst case it refines; VERDICT r16 #3)
-    val sk =
-      if (k >= 1) k
-      else if (k == AutoK) autoKFor(thresholdPpm, recallTargetPpm)
-      else {
-        val kA = autoKFor(thresholdPpm, recallTargetPpm)
-        val ladder = sketchLadderOf(sh.sparkSession, ranked, docLen,
-          arrays, mode, thresholdPpm, measureFraction, kA,
-          recallTargetPpm)
-        val chosen = ladder.filter(col("chosen"))
-          .agg(min(col("k"))).head()
-        if (chosen.isNullAt(0)) kA else math.min(chosen.getInt(0), kA)
-      }
-    def candOf(slice: Column): DataFrame =
-      sketchCandOf(ranked, docLen, thresholdPpm, sk, slice)
-    def outOf(slice: Column, vChunks: Int): DataFrame =
-      verifyPrefixCandidates(candOf(slice), arrays,
-        containNeededExpr(thresholdPpm), mode, vChunks,
-        "containmentSketch", suffixBound = false)(
-        containmentScoreOf(_, thresholdPpm))
-    // EXCHANGE PRICING, the prefix paths' ladder with the sketch's own
-    // raw-volume rule Σ|bottom-k ∩ s|·(|full_s|−1): the cheap
-    // min(rows, k·nDocs)·maxDf·bytes rail costs nothing at fixture
-    // scale; past it one posting-stats agg prices the raw emissions. Over
-    // budget, the CANDIDATE distinct exchange slices by contained-doc
-    // hash against a quarter of the budget (measured: at 100×/t′=0.5
-    // the unsliced distinct exchange alone filled the box — SCALE_r15
-    // session F — the same failure class the exact path's candChunks
-    // closed in r14), and the verify chunks follow per-slice candidates
-    // × the two-array shipment against 2× the budget. Both exchanges
-    // are priced in EVERY verify shape: the candidate distinct runs
-    // before any array ships.
-    val (kc, vc) =
-      if (verifyChunks >= 1) (1, verifyChunks)
-      // cheap zero-job rail: the candidate-starting set is the bottom-k
-      // rows — at most min(total gated rows, k·nDocs) of them — and EACH
-      // emits up to (df−1) < maxDf candidates regardless of k (the r15
-      // form multiplied rows by min(k, maxDf), which under-prices
-      // short-doc/high-df corpora where avg gated length < maxDf — the
-      // exact ENOSPC class the pricing exists to refuse, ADVICE r15)
-      else if (math.min(totalShingleRows, sk.toLong * nDocs) * maxDf.toLong
-          * emissionRowBytes <= diskBudgetBytes) (1, 1)
-      else {
-        val m = ranked
-          .select(col("s"), (col("rem") >= col("g") - lit(sk)).as("bk"))
-          .groupBy(col("s"))
-          .agg(count(lit(1)).as("n"), count(when(col("bk"), lit(1))).as("nb"))
-          .agg(sum(expr("nb * (n - 1)")), sum(col("n"))).head()
-        val raw = if (m.isNullAt(0)) 0L else m.getLong(0)
-        val gatedRows = if (m.isNullAt(1)) 0L else m.getLong(1)
-        if (raw * emissionRowBytes <= diskBudgetBytes) (1, 1)
+    // no candChunks knob, as on the Jaccard path
+    pricedPairs(sh, "containmentSketch",
+        "containmentSketchOf (the fingerprint-dictionary route)", framesKey,
+        sketchFrames(sh, maxDf), verify, maxBroadcastBytes, verifyChunks,
+        if (verifyChunks >= 1) 1 else 0, diskBudgetBytes) { (fr, mode) =>
+      // the sketch width: explicit k verbatim; AutoK = the analytic
+      // per-pair floor; MeasuredK = the sampled recall ladder's minimal k
+      // whose Wilson lower bound clears the target (never above the
+      // analytic k — the measurement can only SAVE candidate volume, the
+      // analytic floor is the worst case it refines; VERDICT r16 #3)
+      val sk =
+        if (k >= 1) k
+        else if (k == AutoK) autoKFor(thresholdPpm, recallTargetPpm)
         else {
-          val kc = math.max(1L, ceilDiv(raw * emissionRowBytes,
-            math.max(1L, diskBudgetBytes / 4)))
-          require(kc <= maxAutoCandChunks,
-            s"containmentSketch: the candidate distinct exchange prices " +
-              s"at ~${raw * emissionRowBytes} bytes ($raw raw sketch " +
-              s"emissions) — $kc slices of the per-slice budget " +
-              s"(diskBudgetBytes=$diskBudgetBytes / 4), past the " +
-              s"$maxAutoCandChunks-slice rail. Lower k, raise " +
-              "diskBudgetBytes (cluster aggregate disk), or pass " +
-              "explicit verifyChunks to bypass pricing.")
-          val perCand = 2L * (gatedRows * 8L / nDocs) + candRowBytes
-          val vc =
-            if (mode == "broadcast") 1L
-            else math.max(1L, ceilDiv(ceilDiv(raw, kc) * perCand,
-              2L * diskBudgetBytes))
-          require(kc * vc <= maxAutoJobs,
-            s"containmentSketch: auto-pricing resolves $kc candidate " +
-              s"slices × $vc verify chunks = ${kc * vc} jobs ($raw raw " +
-              s"sketch emissions, ~$perCand B/candidate) — past the " +
-              s"$maxAutoJobs-job rail. Lower k, raise diskBudgetBytes, " +
-              "or pass explicit verifyChunks to bypass pricing.")
-          logResolvedChunks("containmentSketch", raw, kc, vc)
-          (kc.toInt, vc.toInt)
+          val kA = autoKFor(thresholdPpm, recallTargetPpm)
+          val ladder = sketchLadderOf(sh.sparkSession, fr, mode,
+            thresholdPpm, measureFraction, kA, recallTargetPpm)
+          val chosen = ladder.filter(col("chosen"))
+            .agg(min(col("k"))).head()
+          if (chosen.isNullAt(0)) kA else math.min(chosen.getInt(0), kA)
         }
-      }
-    if (kc <= 1) outOf(lit(true), vc)
-    else (0 until kc).map { i =>
-      // the exact path's eager-release discipline: each slice's
-      // ≥-threshold survivors alone outlive its jobs
+      // the raw-volume rule is Σ|bottom-k ∩ s|·(|full_s|−1); no kept
+      // count, the candidate distinct exchange prices on it (measured:
+      // at 100×/t′=0.5 the unsliced distinct exchange alone filled the
+      // box — SCALE_r15 session F). Slices are contained-doc hash slices;
       // the predicate evaluates on the bottom-k frame BEFORE the d1
-      // rename, so it keys on doc_id (the contained side)
-      val kept = Bridge.dropOriginConstraints(
-        outOf(pmod(xxhash64(col("doc_id")), lit(kc)) === i, vc)
-          .localCheckpoint())
-      System.gc()
-      kept
-    }.reduce(_ unionByName _)
+      // rename, so it keys on doc_id.
+      PairFamily(fr.ranked, kept = None,
+        candidates = (p, slice) => sketchCandOf(p, fr.docLen, thresholdPpm,
+          sk, slice.fold(lit(true))(_.of(col("doc_id")))),
+        starts = col("rem") >= col("g") - lit(sk), oriented = true,
+        // the candidate-starting set is the bottom-k rows — at most
+        // min(total rows, k·nDocs) of them — and EACH emits up to
+        // (df−1) < maxDf candidates regardless of k (the r15 form
+        // multiplied rows by min(k, maxDf), which under-prices
+        // short-doc/high-df corpora, ADVICE r15)
+        zeroJobBytes = math.min(fr.rows, sk.toLong * fr.nDocs) *
+          maxDf.toLong * emissionRowBytes,
+        needed = containNeededExpr(thresholdPpm),
+        score = containmentScoreOf(_, thresholdPpm),
+        remedy = "Lower k, raise diskBudgetBytes (cluster aggregate " +
+          "disk), or pass explicit verifyChunks to bypass pricing.")
+    }
   }
 
   /** Fixture form (q78): containment over the memoized intersection stage
@@ -3543,12 +3418,11 @@ object Dedup {
     * [[containPrefixCandidates]]); verification runs through the shared
     * [[verifyPrefixCandidates]] engine — broadcast under a measured
     * byte budget or the no-broadcast co-partitioned merge, early-exit
-    * kernel under `needed = ⌈t′ppm·c1/1e6⌉`, and NO prefix-array suffix
-    * bound: at containment's bounds its slack `⌈t′c1⌉ − ⌈t′c2⌉ + 1` is
-    * non-positive for every short-into-long candidate (the operator's
-    * primary regime), and the 30× smoke measured the stage's half-width
-    * prefix shipment ENOSPC-ing the merge verify for zero pruning
-    * (SCALE_r14 session A; details at the engine's scaladoc). Honest
+    * kernel under `needed = ⌈t′ppm·c1/1e6⌉` (the retired prefix-array
+    * suffix bound never paid here: its slack `⌈t′c1⌉ − ⌈t′c2⌉ + 1` is
+    * non-positive for every short-into-long candidate, and the 30×
+    * smoke measured its half-width prefix shipment ENOSPC-ing the merge
+    * verify for zero pruning, SCALE_r14 session A). Honest
     * weakness vs Jaccard: at the default t′ = 0.5 the contained-side
     * prefix is half the doc (vs a fifth at J ≥ 0.8) — the ladder's work
     * here is done mostly by the emission prune and the positional
@@ -3613,155 +3487,27 @@ object Dedup {
       framesKey: Option[String] = None): DataFrame = {
     require(thresholdPpm > 0 && thresholdPpm <= 1000000L,
       s"thresholdPpm must be in (0, 1e6], got $thresholdPpm")
-    require(verify == "auto" || verify == "broadcast" || verify == "merge",
-      s"verify must be 'auto', 'broadcast' or 'merge', got '$verify'")
-    require(verifyChunks >= 0,
-      s"verifyChunks must be >= 1, or 0 for auto-priced: $verifyChunks")
-    require(candChunks >= 0,
-      s"candChunks must be >= 1, or 0 for auto-priced: $candChunks")
-    require(diskBudgetBytes > 0,
-      s"diskBudgetBytes must be positive: $diskBudgetBytes")
-    require(sh.schema("doc_id").dataType ==
-        org.apache.spark.sql.types.LongType,
-      "containmentPrefix requires bigint doc ids (the oriented pair " +
-        s"generator's currency); got ${sh.schema("doc_id").dataType
-          .simpleString} — use containmentOf (the shared co-occurrence " +
-        "stage) for other doc-id types")
-    // same checkpoint discipline as the Jaccard path (scaladoc there):
-    // the budget-gate action and the candidate job share one ranked
-    // window exchange and one docs-sized length frame
-    import org.apache.spark.sql.graft.Bridge
-    // size-adaptive level for the corpus-sized frames, as on the Jaccard
-    // path (the measured 100× unroll OOM vs the fixture-scale disk tax —
-    // scaladoc at scaleCheckpoint); session-cached for the paired
-    // fixture entries (q121/q122 share it — [[cachedFrames]])
-    // every frame derived below reads the stashed checkpoint blocks: an
-    // eviction of the tuple breaks it ([[cachedFrames]], cross-cache note)
-    val (docLen, ranked, arrays, estBytes) =
-      cachedFrames(sh.sparkSession, framesKey) {
-        val docLen0 = Bridge.dropOriginConstraints(
-          sh.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
-            .localCheckpoint())
-        val keep = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-          .filter(col("df").between(2, maxDf))
-          .hint("shuffle_hash")
-        val est = estUnrollBytes(docLen0)
-        val ranked0 = Bridge.dropOriginConstraints(
-          scaleCheckpoint(rankedOfGated(sh.join(keep, Seq("s")), docLen0,
-            containAlpha(thresholdPpm)), est))
-        val arrays0 = scaleCheckpoint(arraysOfRanked(ranked0), est)
-        (docLen0, ranked0, arrays0, est)
-      }
-    def score(v: DataFrame): DataFrame =
-      containmentScoreOf(v, thresholdPpm)
-    // broadcast/merge resolved ONCE — the candChunks loop below calls the
-    // verify engine once per slice, and the pricing aggregate (plus the
-    // broadcast decision it feeds) is slice-invariant: `arrays` is fixed
-    // across slices (ADVICE r14: 32 slices re-priced it 32×)
-    val mode = resolveVerifyMode(arrays, verify, maxBroadcastBytes,
-      "containmentPrefix")
-    def outOf(postings: DataFrame, vChunks: Int): DataFrame =
-      verifyPrefixCandidates(
-        containPrefixCandidates(postings, docLen, thresholdPpm),
-        arrays, containNeededExpr(thresholdPpm),
-        mode, vChunks, "containmentPrefix",
-        suffixBound = false)(score)
-    // EXCHANGE PRICING (scaladoc at the pricing constants): a 0 chunk
-    // knob is resolved from measured volume BEFORE the exchange launches
-    // — never discovered by ENOSPC (the r14 sessions A/B/F4/F5/F6
-    // failure mode). The ladder, cheapest first:
-    //  (1) rows × maxDf bounds the raw oriented emission volume with NO
-    //      extra job — fixture-scale runs resolve here for free;
-    //  (2) one posting-stats agg prices the exact raw volume
-    //      Σ |prefix_s|·(|full_s|−1) — still nothing materializes;
-    //  (3) past that, the posting groupBy is built once
-    //      (disk-checkpointed), the kept emissions are counted (a
-    //      Generate→Filter→count pass, CPU only), and the knobs follow:
-    //      candChunks from kept × emission bytes against a QUARTER of
-    //      the budget (the emission exchange re-expands inside every
-    //      downstream stage of its slice — groupBy spill, length joins,
-    //      verify exchanges — so its own share is kept small; the
-    //      factors reproduce SCALE_r14 session F's measured-good
-    //      32-slice/2-verify-chunk decade from its kept volume), and
-    //      verifyChunks from per-slice candidates × the two-array
-    //      shipment against 2× the budget (one short-lived
-    //      co-partitioned exchange, reclaimed per chunk; broadcast mode
-    //      ships nothing per candidate and stays at 1).
-    val autoCand = candChunks == 0
-    val autoVerify = verifyChunks == 0
-    val cheapRail = estBytes / unrollRowBytes * maxDf *
-      emissionRowBytes <= diskBudgetBytes
-    val (k, vc, postingsOpt) =
-      if (!autoCand && !autoVerify)
-        (candChunks, verifyChunks, None)
-      else if (cheapRail)
-        (math.max(1, candChunks), math.max(1, verifyChunks), None)
-      else {
-        val (raw, gatedRows) = postingStats(ranked, oriented = true)
-        if (raw * emissionRowBytes <= diskBudgetBytes)
-          (math.max(1, candChunks), math.max(1, verifyChunks), None)
-        else {
-          val postings = Bridge.dropOriginConstraints(
-            diskCheckpoint(containPostings(ranked)))
-          val kept =
-            containKeptEmissionsOfPostings(postings, thresholdPpm).count()
-          val k =
-            if (!autoCand) candChunks.toLong
-            else ceilDiv(kept * emissionRowBytes,
-              math.max(1L, diskBudgetBytes / 4)).max(1L)
-          require(!autoCand || k <= maxAutoCandChunks,
-            s"containmentPrefix: the candidate stage prices at ~" +
-              s"${kept * emissionRowBytes} exchange bytes ($kept kept " +
-              s"oriented emissions) — $k slices of the per-slice " +
-              s"budget (diskBudgetBytes=$diskBudgetBytes / 4), past the " +
-              s"$maxAutoCandChunks-slice rail. This is the pair-dense " +
-              "regime (low threshold × big corpus) no pair-enumerating " +
-              "one-box plan fits: raise thresholdPpm, lower maxDf, raise " +
-              "diskBudgetBytes (cluster aggregate disk), or pass " +
-              "explicit candChunks to override.")
-          val nDocs = math.max(1L, docLen.count())
-          val perCand = 2L * (gatedRows * 8L / nDocs) + candRowBytes
-          val vc =
-            if (!autoVerify) verifyChunks.toLong
-            else if (mode == "broadcast") 1L
-            else ceilDiv(ceilDiv(kept, k) * perCand,
-              2L * diskBudgetBytes).max(1L)
-          // the rail fires whenever ANY knob was auto-resolved: with one
-          // knob explicit and the other auto, the auto side is still
-          // unbounded (explicit candChunks=1 + auto verifyChunks could
-          // silently resolve thousands of verify jobs — the grind-for-
-          // days mode the rail exists to refuse, ADVICE r15). Only
-          // explicitly setting BOTH knobs bypasses it.
-          require((!autoCand && !autoVerify) || k * vc <= maxAutoJobs,
-            s"containmentPrefix: pricing resolves $k candidate " +
-              s"slices × $vc verify chunks = ${k * vc} jobs (kept " +
-              s"emissions $kept, ~$perCand B/candidate verify shipment), " +
-              s"past the $maxAutoJobs-job rail — the run would grind for " +
-              "days. Raise thresholdPpm, lower maxDf, raise " +
-              "diskBudgetBytes, or pass BOTH chunk knobs explicitly to " +
-              "override.")
-          logResolvedChunks("containmentPrefix", kept, k, vc)
-          (k.toInt, vc.toInt, Some(postings))
-        }
-      }
-    if (k <= 1) outOf(postingsOpt.getOrElse(containPostings(ranked)), vc)
-    else {
-      // candidate-stage chunking (scaladoc at [[containmentPrefixOf]]):
-      // the posting shuffle is built ONCE (disk-checkpointed), each
-      // contained-doc hash slice masks it with a per-row array map and
-      // runs generator → filters → verify in its OWN jobs; the slice's
-      // ≥-threshold survivors are checkpointed eagerly, and the finished
-      // slice's pair-exchange shuffle files lose their last reference
-      // before the next slice peaks — the same eager-release discipline
-      // as the verifyChunks loop
-      val postings = postingsOpt.getOrElse(Bridge.dropOriginConstraints(
-        diskCheckpoint(containPostings(ranked))))
-      (0 until k).map { i =>
-        val kept = Bridge.dropOriginConstraints(
-          outOf(slicePostings(postings, i, k), vc).localCheckpoint())
-        System.gc()
-        kept
-      }.reduce(_ unionByName _)
+    pricedPairs(sh, "containmentPrefix",
+        "containmentOf (the shared co-occurrence stage)", framesKey,
+        prefixFrames(sh, maxDf, containAlpha(thresholdPpm)), verify,
+        maxBroadcastBytes, verifyChunks, candChunks,
+        diskBudgetBytes) { (fr, _) =>
+      // candidate-stage slices (scaladoc at [[containmentPrefixOf]]) mask
+      // the shared posting frame per contained-doc hash slice with a
+      // per-row array map instead of re-paying the groupBy(s) exchange
+      PairFamily(containPostings(fr.ranked),
+        kept = Some(containKeptEmissionsOfPostings(_, thresholdPpm)),
+        candidates = (p, slice) => containPrefixCandidates(
+          slice.fold(p)(slicePostings(p, _)), fr.docLen, thresholdPpm),
+        starts = prefixFlag, oriented = true,
+        zeroJobBytes = fr.rows * maxDf * emissionRowBytes,
+        needed = containNeededExpr(thresholdPpm),
+        score = containmentScoreOf(_, thresholdPpm),
+        remedy = "This is the pair-dense regime (low threshold × big " +
+          "corpus) no pair-enumerating one-box plan fits: raise " +
+          "thresholdPpm, lower maxDf, raise diskBudgetBytes (cluster " +
+          "aggregate disk), or pass BOTH chunk knobs (candChunks, " +
+          "verifyChunks) explicitly to override.")
     }
   }
 }

@@ -190,28 +190,36 @@ class DedupSimilaritySpec extends SparkSpec {
     // reaches the generator, non-bigint ids through the fingerprint
     // dictionary); this fence pins the generator's semantics against the
     // HOF FORMULATION inline: pairs are emitted d1 < d2 whatever the
-    // posting-list order, duplicates pair like positional pairs, and
-    // short lists yield nothing
+    // posting-list order, duplicates pair like positional pairs, short
+    // lists yield nothing, and each doc's count rides with its id
     val lists = Seq(
-      (1L, Array(5L, 3L, 9L, 1L)),
-      (2L, Array(7L, 7L, 2L)), // duplicate id: C(3,2) pairs incl. (7,7)
-      (3L, Array(4L)), // singleton: no pairs
-      (4L, Array.empty[Long]))
-      .toDF("k", "ds")
-    val emitted = lists.select(graft.functions.TextFunctions
-        .docIdPairs($"ds").as(Seq("d1", "d2")))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+      (1L, Seq(5L -> 50L, 3L -> 30L, 9L -> 90L, 1L -> 10L)),
+      // duplicate id: C(3,2) pairs incl. (7,7)
+      (2L, Seq(7L -> 70L, 7L -> 70L, 2L -> 20L)),
+      (3L, Seq(4L -> 40L)), // singleton: no pairs
+      (4L, Seq.empty[(Long, Long)]))
+      .toDF("k", "ps")
+      .selectExpr("k",
+        "transform(ps, p -> named_struct('doc_id', p._1, 'c', p._2)) AS ds")
+    def multiset(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .groupBy(identity).view.mapValues(_.length).toMap
-    val hofTwin = lists.selectExpr(
+    val emitted = multiset(lists.select(graft.functions.TextFunctions
+      .docIdLenPairs($"ds").as(Seq("d1", "d2", "c1", "c2"))))
+    val hofTwin = multiset(lists.selectExpr(
         """inline(flatten(transform(ds, (x, i) ->
           |  transform(slice(ds, i + 2, size(ds)),
-          |    y -> struct(least(x, y) as d1, greatest(x, y) as d2)))))"""
-          .stripMargin)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(identity).view.mapValues(_.length).toMap
+          |    y -> IF(x.doc_id <= y.doc_id,
+          |      struct(x.doc_id AS d1, y.doc_id AS d2, x.c AS c1, y.c AS c2),
+          |      struct(y.doc_id AS d1, x.doc_id AS d2, y.c AS c1,
+          |        x.c AS c2))))))""".stripMargin))
     assert(emitted === hofTwin)
-    assert(emitted((1L, 9L)) == 1 && emitted((7L, 7L)) == 1)
-    assert(emitted.keys.forall { case (a, b) => a <= b })
+    assert(emitted((1L, 9L, 10L, 90L)) == 1 &&
+      emitted((7L, 7L, 70L, 70L)) == 1)
+    assert(emitted.keys.forall { case (a, b, _, _) => a <= b })
+    // c1/c2 are carried with their ids: every doc's count is 10 × its id
+    assert(emitted.keys.forall { case (a, b, c1, c2) =>
+      c1 == 10 * a && c2 == 10 * b })
     // the dictionary route: a STRING-keyed doc-id frame pairs through the
     // same generator with identical semantics (shingle 3 has df 1 and
     // dies at the gate; docLen still counts it)
@@ -243,13 +251,6 @@ class DedupSimilaritySpec extends SparkSpec {
     val viaChunked = rows(Dedup.ngramJaccardPrefixOf(
       Tables.documents(spark, sfDir), verify = "merge", verifyChunks = 3))
     assert(viaChunked === classic)
-    // and the wide-array-corpus knob: the prefix-array suffix bound ON
-    // (default OFF after the 100× narrow-array A/B) must stay lossless —
-    // i ≤ |a1 ∩ pfx2| + sfx2 holds for every qualifying pair, so the
-    // pre-verify kill changes nothing but the shipment volume
-    val viaSuffix = rows(Dedup.ngramJaccardPrefixOf(
-      Tables.documents(spark, sfDir), verify = "merge", suffixBound = true))
-    assert(viaSuffix === classic)
     // 2. the exact-boundary pair: 9 distinct shingles each, 8 shared
     //    (tokens 1..11 with the last differing) -> J = 8/(9+9-8) = 0.8
     //    EXACTLY; the α floor must not prune it. The third doc shares 7
@@ -718,11 +719,21 @@ class DedupSimilaritySpec extends SparkSpec {
       .collect().map(_.toSeq.mkString(",")).sorted.toSeq
     assert(skAuto === skOne && skAuto.nonEmpty)
     // 3. explicit chunk knobs bypass the pricing entirely (a cluster
-    //    with aggregate disk passes 1 and pays zero pricing actions)
+    //    with aggregate disk passes 1 and pays zero pricing actions) —
+    //    one code path for all three families: containment's two knobs,
+    //    and the one verifyChunks knob of Jaccard and the sketch
     val explicit = Dedup.containmentPrefixOf(docs, verify = "merge",
       verifyChunks = 1, candChunks = 1, diskBudgetBytes = 64L)
       .collect().map(_.toSeq).toSeq
     assert(explicit === exact)
+    val explicitJ = Dedup.ngramJaccardPrefixOf(docs, verify = "merge",
+      verifyChunks = 1, diskBudgetBytes = 64L).collect().map(_.toSeq).toSeq
+    assert(explicitJ === exactJ)
+    val explicitS = Dedup.containmentSketchOfShingles(Dedup.shinglesOf(docs),
+      500000L, 100, k = 8, verify = "merge", verifyChunks = 1,
+      diskBudgetBytes = 64L)
+      .collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    assert(explicitS === skOne)
     // 4. the total-jobs rail fires when ANY knob was auto-resolved: an
     //    explicit candChunks=1 with an AUTO verifyChunks at an impossible
     //    budget must refuse, not silently resolve thousands of verify

@@ -285,9 +285,7 @@ class PlanSpec extends SparkSpec {
       s"co-partitioned array joins must be shuffled hash joins:\n$p")
     assert(p.contains("graft_doc_id_rem_pairs"),
       s"positional generator expected:\n$p")
-    // the early-exit kernel runs the final merge verify (the optional
-    // prefix-array suffix bound — default OFF since the 100× A/B read
-    // it as a net loss on narrow arrays — would add a second site)
+    // the early-exit kernel runs the final merge verify
     assert(p.contains("graft_sorted_intersect_at_least"),
       s"native early-exit merge kernel expected in the verify:\n$p")
   }
