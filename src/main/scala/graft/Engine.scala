@@ -31,4 +31,17 @@ object Engine {
     GraftExtensions.register(spark)
     spark
   }
+
+  /** Run `body` under a UI/trace job description (guide §1.5): operators
+    * that chain several Spark actions (the foreachBatch commits, the
+    * priced pair pipeline) label each phase, so a job-grain trace
+    * (StageProbe `opjobs`, the perfbench tracer) can say which phase a
+    * job belongs to. Thread-local, so it holds only for actions `body`
+    * itself triggers; the description in force before is restored. */
+  def labeled[T](spark: SparkSession, desc: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prior)
+  }
 }

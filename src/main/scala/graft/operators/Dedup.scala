@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Engine.labeled
 import graft.Tables
 
 /** Document deduplication operators for large-scale training-data pipelines.
@@ -982,16 +983,21 @@ object Dedup {
       s"$opName requires bigint doc ids (the pair generators' currency); " +
         s"got ${sh.schema("doc_id").dataType.simpleString} — use " +
         s"$alternative for other doc-id types")
+    // each phase's jobs carry a `<opName>: <phase>` description; the
+    // unsliced pair frame's own jobs run in the caller's action
+    def phase[T](name: String)(body: => T): T =
+      labeled(sh.sparkSession, s"$opName: $name")(body)
     // every frame derived below reads the stashed checkpoint blocks: an
     // eviction of the tuple breaks it ([[cachedFrames]], cross-cache note)
-    val fr = cachedFrames(sh.sparkSession, framesKey)(frames)
+    val fr = phase("frame build") {
+      cachedFrames(sh.sparkSession, framesKey)(frames) }
     // resolved ONCE: the pricing aggregate is slice-invariant (ADVICE r14:
     // 32 slices re-priced it 32×)
-    val mode = resolveVerifyMode(fr.arrays, verify, maxBroadcastBytes,
-      opName)
-    val f = family(fr, mode)
-    def onDisk(p: DataFrame) =
-      Bridge.dropOriginConstraints(diskCheckpoint(p))
+    val mode = phase("verify pricing") {
+      resolveVerifyMode(fr.arrays, verify, maxBroadcastBytes, opName) }
+    val f = phase("family setup")(family(fr, mode))
+    def onDisk(p: DataFrame) = phase("posting build") {
+      Bridge.dropOriginConstraints(diskCheckpoint(p)) }
     val autoCand = candChunks == 0
     val autoVerify = verifyChunks == 0
     val unsliced: (Int, Int, Option[DataFrame]) =
@@ -1000,12 +1006,13 @@ object Dedup {
       if (!autoCand && !autoVerify) (candChunks, verifyChunks, None)
       else if (f.zeroJobBytes <= diskBudgetBytes) unsliced
       else {
-        val (raw, gatedRows) = postingStats(fr.ranked, f.starts, f.oriented)
+        val (raw, gatedRows) = phase("posting stats") {
+          postingStats(fr.ranked, f.starts, f.oriented) }
         if (raw * emissionRowBytes <= diskBudgetBytes) unsliced
         else {
           val postings = f.kept.map(_ => onDisk(f.postings))
-          val n = f.kept.zip(postings)
-            .fold(raw) { case (kept, p) => kept(p).count() }
+          val n = f.kept.zip(postings).fold(raw) { case (kept, p) =>
+            phase("emission count")(kept(p).count()) }
           val bytes = n * emissionRowBytes
           val emissions = if (f.kept.isDefined) "kept" else "raw"
           val k =
@@ -1031,31 +1038,38 @@ object Dedup {
           (k.toInt, vc.toInt, postings)
         }
       }
-    def verified(cand: DataFrame): DataFrame =
-      verifyPrefixCandidates(cand, fr.arrays, f.needed, mode, vc)(f.score)
+    def verified(cand: DataFrame, label: String): DataFrame =
+      verifyPrefixCandidates(cand, fr.arrays, f.needed, mode, vc, label)(
+        f.score)
     if (kc <= 1)
-      verified(f.candidates(pricedPostings.getOrElse(f.postings), None))
+      verified(f.candidates(pricedPostings.getOrElse(f.postings), None),
+        opName)
     else {
       // candidate-stage chunking: the slices share one posting frame
       // (built on disk once when the family counts kept emissions), and
       // each slice runs generator → filters → verify in its own jobs
       val shared = pricedPostings.getOrElse(
         if (f.kept.isDefined) onDisk(f.postings) else f.postings)
-      unionOfSlices(kc)(sl => verified(f.candidates(shared, Some(sl))))
+      unionOfSlices(sh.sparkSession, s"$opName: candidate slice", kc) { sl =>
+        verified(f.candidates(shared, Some(sl)),
+          s"$opName: candidate slice ${sl.i + 1}/$kc") }
     }
   }
 
-  /** Runs `slice` over the `k` hash slices, each in its OWN jobs whose
-    * ≥-threshold survivors (the only rows that outlive it) are
-    * checkpointed eagerly — a finished slice's shuffle files lose their
-    * last reference and the context cleaner reclaims them before the
-    * next slice peaks — and unions the outputs. Exactness is by
-    * partition: every candidate lands in exactly one slice, so the union
-    * IS the single-job output (spec-pinned). */
-  private def unionOfSlices(k: Int)(slice: Slice => DataFrame): DataFrame =
+  /** Runs `slice` over the `k` hash slices, each in its OWN jobs
+    * (labelled `<label> i/k`) whose ≥-threshold survivors (the only rows
+    * that outlive it) are checkpointed eagerly — a finished slice's
+    * shuffle files lose their last reference and the context cleaner
+    * reclaims them before the next slice peaks — and unions the outputs.
+    * Exactness is by partition: every candidate lands in exactly one
+    * slice, so the union IS the single-job output (spec-pinned). */
+  private def unionOfSlices(spark: SparkSession, label: String, k: Int)(
+      slice: Slice => DataFrame): DataFrame =
     (0 until k).map { i =>
-      val kept = org.apache.spark.sql.graft.Bridge.dropOriginConstraints(
-        slice(Slice(i, k)).localCheckpoint())
+      val kept = labeled(spark, s"$label ${i + 1}/$k") {
+        org.apache.spark.sql.graft.Bridge.dropOriginConstraints(
+          slice(Slice(i, k)).localCheckpoint())
+      }
       System.gc() // let the cleaner reclaim the finished slice's shuffles
       kept
     }.reduce(_ unionByName _)
@@ -1171,9 +1185,10 @@ object Dedup {
     * differ). `score` maps the verified `(d1, d2, i, c1, c2)` frame to
     * the operator's output and MUST discard every row with
     * `i < needed` — that filter is what makes the kernel's early-exit
-    * partial counts unobservable. */
+    * partial counts unobservable. `label` prefixes the job descriptions
+    * of the chunked merge's eager jobs. */
   private def verifyPrefixCandidates(cand: DataFrame, arrays: DataFrame,
-      needed: Column, mode: String, verifyChunks: Int)(
+      needed: Column, mode: String, verifyChunks: Int, label: String)(
       score: DataFrame => DataFrame): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     require(mode == "broadcast" || mode == "merge",
@@ -1220,8 +1235,10 @@ object Dedup {
       // DISK_ONLY: at the decades where chunking is on at all, the
       // candidate frame is the ~100M-row one whose in-memory unroll
       // competes with the verify joins for heap (the session-E OOM)
-      val candCk = Bridge.dropOriginConstraints(diskCheckpoint(cand))
-      unionOfSlices(verifyChunks)(sl =>
+      val spark = cand.sparkSession
+      val candCk = labeled(spark, s"$label: candidate build") {
+        Bridge.dropOriginConstraints(diskCheckpoint(cand)) }
+      unionOfSlices(spark, s"$label: verify chunk", verifyChunks)(sl =>
         score(mergeVerify(candCk.filter(sl.of(col("d1"), col("d2"))))))
     }
   }
@@ -3181,7 +3198,8 @@ object Dedup {
     val truePairs = verifyPrefixCandidates(
       sketchCandOf(ranked, fr.docLen, thresholdPpm, Int.MaxValue,
         docSamplePred(sppm)),
-      fr.arrays, containNeededExpr(thresholdPpm), mode, 1)(
+      fr.arrays, containNeededExpr(thresholdPpm), mode, 1,
+      "containmentSketch: recall ladder")(
       containmentScoreOf(_, thresholdPpm))
     val rmin = truePairs.select(col("contained"), col("container"))
       .join(ranked.select(col("doc_id").as("contained"), col("s"),

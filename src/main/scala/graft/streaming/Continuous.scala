@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
 
+import graft.Engine.labeled
+
 /** Continuous tier — the HOP/Quatrain capabilities (SURVEY.md §2.9) on
   * Structured Streaming.
   *
@@ -21,8 +23,9 @@ import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
   *    of a bounded input at increasing progress fractions, final frame
   *    exact. Chunked file streaming (`maxFilesPerTrigger`) stands in for
   *    HOP's snapshot progress thresholds; a stateless `foreachBatch`
-  *    aggregates each chunk and the driver adds it into the running
-  *    snapshot ([[foldReplay]], the combiner contract — no state store)
+  *    combines each chunk's rows per task and the driver adds the task
+  *    partials into the running snapshot ([[foldReplay]], the combiner
+  *    contract — no state store)
   *    — the SNAPSHOT stream of OutputFile.Type (progress<1) with the same
   *    final answer as batch. */
 object Continuous {
@@ -240,14 +243,21 @@ object Continuous {
       f"_${scala.util.hashing.MurmurHash3.stringHash(abs) & 0x7fffffff}%08x"
   }
 
-  /** Newest mtime under `dir/<table>.parquet` — the staleness witness every
-    * fixture-staging cache compares its marker against. */
+  /** Newest file mtime under `dir/<table>.parquet` — the staleness
+    * witness every fixture-staging cache compares its marker against.
+    * Walks with `listStatus` and reads mtimes only: `listFiles` wraps each
+    * file in a `LocatedFileStatus`, which copies the permission, and the
+    * local filesystem forks an `ls -ld` per file to load it — a process
+    * launch per fixture file on every staged query call. */
   private def sourceTableMtime(dir: String, table: String): Long = {
-    val (fs, p) = hfs(s"$dir/$table.parquet")
-    val it = fs.listFiles(p, /*recursive=*/ true)
-    var newest = Long.MinValue
-    while (it.hasNext) newest = math.max(newest, it.next().getModificationTime)
-    if (newest == Long.MinValue) Long.MaxValue else newest
+    val (fs, root) = hfs(s"$dir/$table.parquet")
+    def newest(p: org.apache.hadoop.fs.Path): Long =
+      fs.listStatus(p).foldLeft(Long.MinValue) { (m, st) =>
+        math.max(m,
+          if (st.isDirectory) newest(st.getPath) else st.getModificationTime)
+      }
+    val n = newest(root)
+    if (n == Long.MinValue) Long.MaxValue else n
   }
 
   /** THE fixture-staging registry — the ring fence around what may be
@@ -459,34 +469,55 @@ object Continuous {
     spark.createDataFrame(rows.asJava, schema).coalesce(1)
   }
 
-  /** Run `body` under a UI/trace job description (guide §1.5): the
-    * foreachBatch operators chain many small jobs per commit, and the
-    * label is what lets a job-grain trace (StageProbe `opjobs`) say which
-    * phase of the commit each job belongs to. Thread-local, so it holds
-    * only for actions `body` itself triggers. */
-  private def labeled[T](spark: SparkSession, desc: String)(body: => T): T = {
-    spark.sparkContext.setJobDescription(desc)
-    try body finally spark.sparkContext.setJobDescription(null)
-  }
-
   private[graft] def deleteRecursively(path: String): Unit = {
     val (fs, p) = hfs(path)
     if (fs.exists(p)) { fs.delete(p, /*recursive=*/ true); () }
   }
 
+  /** The fold rule both halves of a [[foldReplay]] commit share, over
+    * rows as value arrays in the partial's schema: rows with equal values
+    * at `keyIdx` fold into one, their `longs` measures by
+    * `Math.addExact` and their `decimals` by exact BigDecimal addition. A
+    * null measure adds nothing, and a measure that is still null takes
+    * the next value — SQL `sum`'s null rule. Serializable: each task
+    * folds its own rows with it, and the driver folds the task partials
+    * into the snapshot with it. */
+  private final case class Fold(keyIdx: Seq[Int], longs: Seq[Int],
+      decimals: Seq[Int]) {
+    def into(acc: scala.collection.mutable.HashMap[Seq[Any], Array[Any]],
+        r: Array[Any]): Unit = {
+      val a = acc.getOrElseUpdate(keyIdx.map(r(_)), r)
+      def add(i: Int)(f: (Any, Any) => Any): Unit =
+        if (a(i) == null) a(i) = r(i)
+        else if (r(i) != null) a(i) = f(a(i), r(i))
+      if (a ne r) {
+        longs.foreach(add(_)((x, y) =>
+          Math.addExact(x.asInstanceOf[Long], y.asInstanceOf[Long])))
+        decimals.foreach(add(_)((x, y) => x.asInstanceOf[java.math.BigDecimal]
+          .add(y.asInstanceOf[java.math.BigDecimal])))
+      }
+    }
+  }
+
   /** The bounded aggregates' one run shape (q51, q52, q54,
     * [[onlineAggregate]]): replay `inputDir` `filesPerTrigger` files per
-    * `AvailableNow` commit through a STATELESS `foreachBatch` running
-    * `partial` (a plain `groupBy(keys).agg(...)`) over the batch alone,
-    * and add its rows into a driver-side keyed snapshot — the combiner
-    * contract ([[DeltaState]]'s fold rule), HOP's snapshots over
-    * combiner-reduced partial returns. No state store, memory sink or
-    * temp view: a commit is the batch's own aggregate plus the offset and
-    * commit log writes. Measures must be LongType or DecimalType (widened
-    * to precision 38: the running sum outgrows the partial's); others
-    * are refused before the stream starts — a double sum would depend on
-    * chunk order. `maxRows` caps the partial and the snapshot. Returns
-    * the snapshot after every commit, in the returned (widened) schema. */
+    * `AvailableNow` commit through a STATELESS `foreachBatch` and add
+    * each commit's `partial` rows into a driver-side keyed snapshot —
+    * HOP's combiner (map output reduced before it moves) feeding
+    * Quatrain-style partial returns. The partial contract: rows keyed by
+    * `keys` whose other columns are measures that ADD — a count is
+    * `lit(1L)`, a sum is the value itself. A `groupBy(keys).agg(...)` of
+    * such measures is optional and costs a shuffle stage (two jobs under
+    * AQE); a row-level partial keeps the commit to ONE job of one stage
+    * and no shuffle: every task folds its own rows into one row per key
+    * ([[Fold]]) and the driver adds the task partials, by the same rule,
+    * into the snapshot. No state store, memory sink or temp view: a
+    * commit is that job plus the offset and commit log writes. Measures
+    * must be LongType or DecimalType (widened to precision 38: the
+    * running sum outgrows the partial's); others are refused before the
+    * stream starts — a double sum would depend on chunk order.
+    * `maxRows` caps every task's partial and the snapshot. Returns the
+    * snapshot after every commit, in the returned (widened) schema. */
   private def foldReplay(spark: SparkSession, inputDir: String,
       schema: StructType, name: String, partial: DataFrame => DataFrame,
       keys: Seq[String], filesPerTrigger: Int,
@@ -494,17 +525,15 @@ object Continuous {
     val out = partial(spark.createDataFrame(
       java.util.Collections.emptyList[Row](), schema)).schema
     val keyIdx = keys.map(out.fieldIndex)
-    val add = out.fields.indices.filterNot(keyIdx.contains).map(i =>
-      i -> (out(i).dataType match {
-        case LongType => (a: Any, b: Any) =>
-          Math.addExact(a.asInstanceOf[Long], b.asInstanceOf[Long]): Any
-        case _: DecimalType => (a: Any, b: Any) =>
-          a.asInstanceOf[java.math.BigDecimal]
-            .add(b.asInstanceOf[java.math.BigDecimal]): Any
-        case dt => throw new IllegalArgumentException(s"$name: measure " +
-          s"'${out(i).name}' is ${dt.simpleString}; the fold adds only " +
-          "LongType counts/sums and DecimalType sums exactly")
-      }))
+    val measures = out.fields.indices.filterNot(keyIdx.contains)
+    measures.map(out(_)).foreach(f => f.dataType match {
+      case LongType | _: DecimalType => ()
+      case dt => throw new IllegalArgumentException(s"$name: measure " +
+        s"'${f.name}' is ${dt.simpleString}; the fold adds only " +
+        "LongType counts/sums and DecimalType sums exactly")
+    })
+    val (longs, decimals) = measures.partition(out(_).dataType == LongType)
+    val fold = Fold(keyIdx, longs, decimals)
     val foldSchema = StructType(out.zipWithIndex.map {
       case (f, i) => f.dataType match {
         case d: DecimalType if !keyIdx.contains(i) =>
@@ -526,20 +555,20 @@ object Continuous {
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, id: Long) =>
-          val rows = labeled(spark, s"$name: partial aggregate") {
-            partial(batch).limit(maxRows + 1).collect() }
-          require(rows.length <= maxRows,
-            s"$name commit $id partial exceeds maxRows=$maxRows")
-          snapshots.synchronized {
-            rows.foreach { r =>
-              val k = keyIdx.map(r.get)
-              acc.get(k) match {
-                case None => acc(k) = r.toSeq.toArray
-                case Some(a) => add.foreach { case (i, f) =>
-                  if (a(i) == null) a(i) = r.get(i)
-                  else if (!r.isNullAt(i)) a(i) = f(a(i), r.get(i)) }
+          val parts = labeled(spark, s"$name: partial aggregate") {
+            partial(batch).rdd.mapPartitions { rows =>
+              val taskAcc =
+                scala.collection.mutable.HashMap.empty[Seq[Any], Array[Any]]
+              rows.foreach { r =>
+                fold.into(taskAcc, Array.tabulate(r.length)(r.get))
+                require(taskAcc.size <= maxRows,
+                  s"$name commit $id partial exceeds maxRows=$maxRows")
               }
-            }
+              taskAcc.valuesIterator
+            }.collect()
+          }
+          snapshots.synchronized {
+            parts.foreach(fold.into(acc, _))
             require(acc.size <= maxRows,
               s"$name snapshot $id exceeds maxRows=$maxRows")
             snapshots += Snapshot(math.min((id + 1) / totalChunks, 1.0),
@@ -579,8 +608,10 @@ object Continuous {
     * replayed through [[foldedFrame]] (`maxFilesPerTrigger=2` over 8
     * staged files = 4 genuine micro-batches; trigger overhead is fixed per
     * commit, so halving commits halves the scale-independent cost). Each
-    * commit's partial is the event-time tumbling-window count + DECIMAL
-    * sum of its own files; the driver adds partials per (window, type), so
+    * commit's partial is one row per event keyed by (tumbling-window
+    * start, type) with a count of 1 and the DECIMAL value, combined
+    * map-side per task (one job, one stage, no shuffle); the driver adds
+    * the task partials per (window, type), so
     * the final frame is chunking-independent and the same tumbling-window
     * SQL oracle-checks the streaming tier end-to-end (q51). The snapshot
     * is bounded by window-count × event-type cardinality, NOT by stream
@@ -590,11 +621,9 @@ object Continuous {
     val staged = stageChunks(spark, dir, "events")
     foldedFrame(spark, staged, stagedSchema(spark, staged),
       s"q51_stream_${runSeq.incrementAndGet()}",
-      _.groupBy(window(col("ts"), "5 minutes"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(col("value").cast("decimal(18,2)")).as("sum_v"))
-        .select(col("window.start").as("w_start"), col("event_type"),
-          col("n"), col("sum_v")),
+      _.select(window(col("ts"), "5 minutes").getField("start").as("w_start"),
+        col("event_type"), lit(1L).as("n"),
+        col("value").cast("decimal(18,2)").as("sum_v")),
       keys = Seq("w_start", "event_type"),
       finish = _.withColumn("sum_v", col("sum_v").cast("double")))
       .orderBy(col("w_start"), col("event_type"))
@@ -603,7 +632,8 @@ object Continuous {
   /** Online aggregation surfaced to the driver harness (C4,
     * ReduceTask.java:631-669 / OutputFile.Type SNAPSHOT): the lineitem table
     * replayed 2 files per commit through the q01 pricing-summary partial
-    * (decimal sums + count) via [[foldedFrame]] — cumulative snapshots,
+    * (row-level decimal measures + a count of 1, combined map-side) via
+    * [[foldedFrame]] — cumulative snapshots,
     * final frame exact, doubles cast once at the end. Returns the final
     * (progress = 1.0) snapshot, so the q01 SQL oracle-checks that online
     * aggregation converges to the batch answer (q52). */
@@ -614,13 +644,13 @@ object Continuous {
     foldedFrame(spark, staged, stagedSchema(spark, staged),
       s"q52_online_${runSeq.incrementAndGet()}",
       _.filter(col("l_shipdate") <= to_timestamp(lit("1998-09-02 00:00:00")))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(sum(dec("l_quantity")).as("sum_qty"),
-          sum(dec("l_extendedprice")).as("sum_base_price"),
-          sum(dec("l_extendedprice") *
+        .select(col("l_returnflag"), col("l_linestatus"),
+          dec("l_quantity").as("sum_qty"),
+          dec("l_extendedprice").as("sum_base_price"),
+          (dec("l_extendedprice") *
             (lit(1).cast("decimal(18,2)") - dec("l_discount")))
             .as("sum_disc_price"),
-          count(lit(1)).as("count_order")),
+          lit(1L).as("count_order")),
       keys = Seq("l_returnflag", "l_linestatus"),
       finish = _.withColumns(sums.map(c => c -> col(c).cast("double")).toMap))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
@@ -646,29 +676,36 @@ object Continuous {
 
   /** [[cqMonitor]] run as a REAL streaming query (q54): the events table
     * replayed through [[foldedFrame]] (4 micro-batches, like
-    * [[streamedWindowedCounts]]) — each commit's partial is the per-(window,
-    * key) decimal sum + count of its own files, the driver adds them, and
+    * [[streamedWindowedCounts]]) — each commit's partial is
+    * [[windowRows]], combined map-side into per-(window, key) decimal sums
+    * and counts of its own files, the driver adds them, and
     * the average (ONE double division) is taken once over the folded
     * frame — then the cross-key mean+2σ flagging applied to the emitted
     * window frame, exactly where the reference computes it (the CQ
     * reducer flags over the window's emitted aggregates, CQ.java:482-499).
-    * Same partial and finish as the batch twin, so the final streamed
-    * frame equals the batch frame and the same SQL oracle gates both. */
+    * The batch twin sums the same rows ([[windowSums]]) and takes the
+    * same finish, so the final streamed frame equals the batch frame and
+    * the same SQL oracle gates both. */
   def streamedCqMonitor(spark: SparkSession, dir: String): DataFrame = {
     val staged = stageChunks(spark, dir, "events")
     cqStats(foldedFrame(spark, staged, stagedSchema(spark, staged),
-      s"q54_cq_${runSeq.incrementAndGet()}", windowSums,
+      s"q54_cq_${runSeq.incrementAndGet()}", windowRows,
       keys = Seq("w_start", "key"), finish = windowAverages))
   }
 
-  /** Per-(5-minute window, event type) DECIMAL value sums and counts — the
-    * windowed reducer's combinable partial. */
+  /** One row per event keyed by (5-minute window start, event type),
+    * carrying its additive measures: the DECIMAL value and a count of 1 —
+    * the windowed reducer's combinable partial, row level, so q54's
+    * commits fold map-side ([[foldReplay]]). */
+  private val windowRows: DataFrame => DataFrame =
+    _.select(window(col("ts"), "5 minutes").getField("start").as("w_start"),
+      col("event_type").as("key"),
+      col("value").cast("decimal(18,2)").as("sum_v"), lit(1L).as("n"))
+
+  /** [[windowRows]] summed per (window, key) — the batch twin's form. */
   private val windowSums: DataFrame => DataFrame =
-    _.groupBy(window(col("ts"), "5 minutes"), col("event_type").as("key"))
-      .agg(sum(col("value").cast("decimal(18,2)")).as("sum_v"),
-        count(lit(1)).as("n"))
-      .select(col("window.start").as("w_start"), col("key"), col("sum_v"),
-        col("n"))
+    windowRows.andThen(_.groupBy(col("w_start"), col("key"))
+      .agg(sum(col("sum_v")).as("sum_v"), sum(col("n")).as("n")))
 
   /** The per-key window average the CQ statistics run over: ONE double
     * division of the folded sums, so batch and streamed frames are
@@ -1486,10 +1523,14 @@ object Continuous {
   case class Snapshot(progress: Double, rows: Seq[Row])
 
   /** Online aggregation over a bounded multi-file input: stream the files
-    * `filesPerTrigger` at a time, fold each chunk's `partial` (grouped by
-    * `keys`) into the running aggregate ([[foldReplay]]'s contract) and
-    * emit it through `finish` after each chunk. Returns all snapshots; the
-    * last has progress 1.0 and is bit-equal to the batch answer. */
+    * `filesPerTrigger` at a time, fold each chunk's `partial` into the
+    * running aggregate and emit it through `finish` after each chunk.
+    * The partial contract is [[foldReplay]]'s: rows keyed by `keys` whose
+    * measures add (LongType counts and sums, DecimalType sums); a
+    * `groupBy(keys).agg(...)` is optional and costs a shuffle stage, a
+    * row-level partial folds map-side in one stage. Returns all
+    * snapshots; the last has progress 1.0 and is bit-equal to the batch
+    * answer. */
   def onlineAggregate(
       spark: SparkSession,
       inputDir: String,

@@ -61,4 +61,37 @@ class ObservabilitySpec extends SparkSpec {
       assert(e.getMessage.contains(s"unknown stage: $mode"))
     }
   }
+
+  test("the priced pair pipeline labels its phases' jobs and restores " +
+      "the caller's job description") {
+    import scala.jdk.CollectionConverters._
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        descs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    StageMemo.clear() // the frame build runs only on a memo miss
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller")
+    try {
+      assert(graft.operators.Dedup.ngramJaccardPrefix(spark, sfDir)
+        .count() >= 0)
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+      val seen = descs.asScala.toSet
+      Seq("frame build", "verify pricing").foreach(phase =>
+        assert(seen.contains(s"ngramJaccardPrefix: $phase"), seen))
+      assert(seen.contains("caller"),
+        s"the returned frame's jobs run under the caller's label: $seen")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }

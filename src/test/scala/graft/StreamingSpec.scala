@@ -964,4 +964,155 @@ class StreamingSpec extends SparkSpec {
       "sum_qty" -> "double", "sum_disc_price" -> "double",
       "count_order" -> "bigint"))
   }
+
+  test("q51/q52/q54: every data commit is one labelled partial-aggregate " +
+      "job of one stage that writes no shuffle bytes") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+    import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+    import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
+    import scala.jdk.CollectionConverters._
+    val prefixes = Seq("q51_stream_", "q52_online_", "q54_cq_")
+    val progress =
+      new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
+    val queries = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.name != null &&
+            prefixes.exists(e.progress.name.startsWith)) progress.add(e.progress)
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    // a commit's jobs run on the stream thread under the query's own job
+    // group (its runId), so the group ties every job to its stream
+    final case class Job(group: String, desc: String, stages: Seq[Int])
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+    val shuffleWrite = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+    val scheduler = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) = Option(e.properties)
+          .flatMap(p => Option(p.getProperty(k))).getOrElse("")
+        jobs.add(Job(prop("spark.jobGroup.id"),
+          prop("spark.job.description"), e.stageIds))
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        shuffleWrite.put(e.stageInfo.stageId,
+          e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        ()
+      }
+    }
+    spark.streams.addListener(queries)
+    spark.sparkContext.addSparkListener(scheduler)
+    try {
+      assert(Continuous.streamedWindowedCounts(spark, sfDir).count() > 0)
+      assert(Continuous.streamedOnlineSummary(spark, sfDir).count() > 0)
+      assert(Continuous.streamedCqMonitor(spark, sfDir).count() > 0)
+      def data(prefix: String) = progress.asScala.toSeq
+        .filter(p => p.name.startsWith(prefix) && p.numInputRows > 0)
+      val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+      while (prefixes.exists(data(_).size < 4) && System.nanoTime() < deadline)
+        Thread.sleep(100)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+      prefixes.foreach { prefix =>
+        val commits = data(prefix)
+        assert(commits.size === 4, s"$prefix: expected 4 data commits")
+        val name = commits.head.name
+        val runIds = commits.map(_.runId.toString).distinct
+        assert(runIds.size === 1, s"$name: one run")
+        val streamJobs = jobs.asScala.toSeq.filter(_.group == runIds.head)
+        assert(streamJobs.map(_.desc).distinct === Seq(
+          s"$name: partial aggregate"), s"$name ran other jobs")
+        assert(streamJobs.size === commits.size,
+          s"$name: one job per data commit, got ${streamJobs.size}")
+        streamJobs.foreach { j =>
+          assert(j.stages.size === 1, s"$name: a commit job of ${j.stages}")
+          assert(Option(shuffleWrite.get(j.stages.head)) === Some(0L),
+            s"$name: stage ${j.stages.head} wrote shuffle bytes")
+        }
+      }
+    } finally {
+      spark.streams.removeListener(queries)
+      spark.sparkContext.removeSparkListener(scheduler)
+    }
+  }
+
+  test("a row-level partial and its groupBy form fold to identical " +
+      "snapshots at every progress point (null and decimal(38,4) measures)") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val dir = "target/tmp/fold_rows_in"
+    rmrf(dir)
+    new java.io.File(dir).mkdirs()
+    def bd(s: String) = new java.math.BigDecimal(s)
+    val schema = StructType(Seq(StructField("k", StringType),
+      StructField("price", DecimalType(18, 2)),
+      StructField("disc", DecimalType(18, 2))))
+    // four chunks, replayed oldest-first: "c" never has a price, "b" gets
+    // its first price in chunk 2, "d" has a null discount (null product)
+    val chunks = Seq(
+      Seq(Row("a", bd("10.25"), bd("0.05")), Row("b", null, bd("0.10")),
+        Row("c", null, null), Row("a", bd("1.00"), bd("0.50"))),
+      Seq(Row("b", null, bd("0.02")), Row("c", null, bd("0.01")),
+        Row("a", bd("9999999999999999.99"), bd("0.07"))),
+      Seq(Row("b", bd("3.33"), bd("0.03")), Row("d", bd("0.01"), null)),
+      Seq(Row("a", bd("0.01"), bd("0.99")), Row("b", bd("7.77"), bd("0.00")),
+        Row("c", null, null)))
+    val base = System.currentTimeMillis() - 600000
+    chunks.zipWithIndex.foreach { case (rows, i) =>
+      val tmp = s"target/tmp/fold_rows_tmp$i"
+      spark.createDataFrame(rows.asJava, schema).coalesce(1)
+        .write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles()
+        .find(_.getName.endsWith(".parquet")).get
+      val dst = java.nio.file.Paths.get(s"$dir/chunk$i.parquet")
+      java.nio.file.Files.copy(part.toPath, dst,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      java.nio.file.Files.setLastModifiedTime(dst,
+        java.nio.file.attribute.FileTime.fromMillis(base + i * 2000L))
+      rmrf(tmp)
+    }
+    val rowLevel = (df: DataFrame) => df.select(col("k"), lit(1L).as("n"),
+      col("price").as("s"),
+      (col("price") * (lit(1).cast("decimal(18,2)") - col("disc"))).as("p"))
+    val grouped = rowLevel.andThen(_.groupBy(col("k"))
+      .agg(sum(col("n")).as("n"), sum(col("s")).as("s"),
+        sum(col("p")).as("p")))
+    val empty = spark.createDataFrame(java.util.Collections.emptyList[Row](),
+      schema)
+    assert(rowLevel(empty).schema("p").dataType === DecimalType(38, 4))
+    val byRow = Continuous.onlineAggregate(spark, dir, schema, rowLevel,
+      Seq("k"))
+    val byGroup = Continuous.onlineAggregate(spark, dir, schema, grouped,
+      Seq("k"))
+    def asSet(rows: Seq[Row]) = rows.map(_.toSeq).toSet
+    assert(byRow.size === 4 && byGroup.size === 4)
+    byRow.zip(byGroup).foreach { case (r, g) =>
+      assert(r.progress === g.progress)
+      assert(asSet(r.rows) === asSet(g.rows), s"progress ${r.progress}")
+    }
+    val fin = byRow.last.rows.map(r => r.getString(0) -> r).toMap
+    assert(fin("c").getLong(1) === 3L && fin("c").isNullAt(2) &&
+      fin("c").isNullAt(3), "an all-null measure stays null")
+    assert(fin("b").getDecimal(2) === bd("11.10"))
+    assert(fin("d").isNullAt(3), "a null product adds nothing")
+  }
+
+  test("a task partial wider than maxRows fails the stream, naming the " +
+      "query and the commit") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dir = "target/tmp/fold_cap_in"
+    val schema = StructType(Seq(StructField("k", StringType)))
+    // one file, so one task holds both keys
+    spark.createDataFrame(java.util.Arrays.asList(Row("a"), Row("b")), schema)
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Continuous.onlineAggregate(spark, dir, schema,
+        _.select(col("k"), lit(1L).as("n")), Seq("k"), maxSnapshotRows = 1)
+    }
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+      .mkString("\n")
+    assert("""online_\d+ commit 0 partial exceeds maxRows=1""".r
+      .findFirstIn(msgs).isDefined, msgs)
+  }
 }
