@@ -8,6 +8,9 @@ import org.apache.spark.sql.SparkSession
   * re-planning, skew-join splitting, partition coalescing), shuffle
   * parallelism sized for the local harness (32) but meant to be overridden by
   * `spark.sql.shuffle.partitions` on a real cluster, UTC session time.
+  * Every entry point (the specs, Bench, Verify, ScaleSmoke, StageProbe,
+  * PlanDump) builds its session here with its own master and partition
+  * count (`SessionFactorySpec` pins it).
   */
 object Engine {
   def session(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 import java.nio.charset.StandardCharsets
@@ -23,24 +22,14 @@ object PlanDump {
     val only = args.lift(2).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft.PlanDump", s"local[$cpus]", cpus.toInt)
     Files.createDirectories(Paths.get(outDir))
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
     ordered.foreach { case (name, fn) =>
       try {
-        val df = fn(spark, sfDir)
-        val txt = df.queryExecution.explainString(ExplainMode.fromString("formatted"))
         Files.write(Paths.get(outDir, s"${name}_$tag.txt"),
-          txt.getBytes(StandardCharsets.UTF_8))
+          dump(fn(spark, sfDir)).getBytes(StandardCharsets.UTF_8))
         println(s"[plandump] wrote $name")
       } catch {
         case NonFatal(e) =>
@@ -48,5 +37,44 @@ object PlanDump {
       }
     }
     spark.stop()
+  }
+
+  /** `df`'s `explain("formatted")` text, [[normalized]]. */
+  def dump(df: org.apache.spark.sql.DataFrame): String =
+    normalized(df.queryExecution.explainString(
+      ExplainMode.fromString("formatted")))
+
+  private val runIds = Seq("""#(\d+)""", """plan_id=(\d+)""",
+    """codegen id : (\d+)""", """\*\((\d+)\)""", """RDD\[(\d+)\]""",
+    """\.scala:(\d+)""", """lambda x_(\d+)""").mkString("|").r
+
+  /** A plan text with every id that varies run to run renumbered in
+    * first-seen order, per kind: expression ids (`#N`), exchange plan
+    * ids, whole-stage codegen ids, RDD ids and the source lines of the
+    * checkpointed RDDs, lambda variable names, and each AQE query
+    * stage's id (the `Arguments: N` line under a `QueryStage` node). One
+    * tree then dumps identical text on every run, and a diff of two
+    * trees' dumps shows only plan changes. */
+  private[graft] def normalized(plan: String): String = {
+    val seen = scala.collection.mutable.HashMap
+      .empty[Int, scala.collection.mutable.HashMap[String, Int]]
+    def renumber(kind: Int, id: String): String = {
+      val ids =
+        seen.getOrElseUpdate(kind, scala.collection.mutable.HashMap.empty)
+      ids.getOrElseUpdate(id, ids.size + 1).toString
+    }
+    var inStage = false
+    plan.linesIterator.map { line =>
+      if (line.matches("""\(\d+\) .*"""))
+        inStage = line.matches("""\(\d+\) \w*QueryStage\b.*""")
+      if (inStage && line.matches("""Arguments: \d+""")) {
+        inStage = false
+        s"Arguments: ${renumber(0, line.drop("Arguments: ".length))}"
+      } else runIds.replaceAllIn(line, m => {
+        val kind = (1 to m.groupCount).find(m.group(_) != null).get
+        scala.util.matching.Regex.quoteReplacement(m.matched.replace(
+          m.group(kind), renumber(kind, m.group(kind))))
+      })
+    }.mkString("", "\n", "\n")
   }
 }

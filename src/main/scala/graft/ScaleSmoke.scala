@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-linearity smoke: stages N× copies of the sf dir (key-shifted
@@ -52,15 +52,8 @@ object ScaleSmoke {
     // cluster this is just "size your shuffle partitions" (the guide
     // rule); the env knob exists so one box can run the decade.
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft.ScaleSmoke", s"local[$cpus]",
+      parts.toInt)
     import spark.implicits._
     // attribution mode (Bench's protocol): memo misses materialize eagerly
     // so build_s is the stage's real cost, not plan construction

@@ -58,15 +58,8 @@ object StageProbe {
     // threshold-sweep lap died UNABLE_TO_ACQUIRE_MEMORY at 32 parts where
     // an identical sweep ran at 128)
     val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session("graft.StageProbe", s"local[$cpus]",
+      parts.toInt)
     try mode(spark, dir, maxDf, laps, args.drop(4).toSeq)
     finally { StageMemo.clear(); spark.stop() }
   }
@@ -161,10 +154,7 @@ object StageProbe {
       laps: Int, rest: Seq[String]): Unit = {
     val tppm = rest.headOption.map(_.toLong).getOrElse(500000L)
     val sh = operators.Dedup.shinglesOf(Tables.documents(spark, dir))
-    val (rankedRaw, docLenRaw) =
-      operators.Dedup.containRanked(sh, tppm, maxDf)
-    val ranked = rankedRaw.localCheckpoint()
-    val docLen = docLenRaw.localCheckpoint()
+    val (ranked, docLen) = operators.Dedup.containRanked(sh, tppm, maxDf)
     val prefixRows =
       ranked.filter(col("rem") >= col("alpha") - lit(1)).count()
     // sum over zero rows is SQL NULL — an empty prefix frame (nothing

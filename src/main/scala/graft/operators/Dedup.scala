@@ -634,16 +634,14 @@ object Dedup {
          |  (p.pfx AND pmod(xxhash64(p.doc_id), ${sl.k}) = ${sl.i}) AS pfx))"""
         .stripMargin).as("ds"))
 
-  /** Containment's [[rankedOfGated]] frame plus the docs-sized length
-    * frame, for the probe ([[graft.StageProbe]] `containcand`). */
+  /** Containment's checkpointed ranked frame plus the docs-sized length
+    * frame, for the probe ([[graft.StageProbe]] `containcand`) — built by
+    * the same [[prefixFrames]] call q121/q122 rank and price, so the
+    * probe cannot drift from the operator. */
   private[graft] def containRanked(sh: DataFrame, thresholdPpm: Long,
       maxDf: Int): (DataFrame, DataFrame) = {
-    val docLen = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
-    val keep = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
-      .filter(col("df").between(2, maxDf))
-      .hint("shuffle_hash")
-    (rankedOfGated(sh.join(keep, Seq("s")), docLen,
-      containAlpha(thresholdPpm)), docLen)
+    val fr = prefixFrames(sh, maxDf, containAlpha(thresholdPpm))
+    (fr.ranked, fr.docLen)
   }
 
   /** ORDERED (contained, container) candidate pairs of a containment

@@ -955,4 +955,17 @@ class PlanSpec extends SparkSpec {
       l.contains("LeftOuter")),
       s"the top-k marker join stays shuffled like q109's:\n$p")
   }
+
+  test("PlanDump: two dumps of q118 from one tree are byte-identical") {
+    // each dump plans q118 afresh, as a PlanDump run does: fresh memo
+    // entries, fresh expression, exchange, codegen, RDD and query-stage ids
+    val q118 = SparkEntry.queries("q118_index_clusters")
+    def dump() = { StageMemo.clear(); PlanDump.dump(q118(spark, sfDir)) }
+    val (a, b) = (dump(), dump())
+    assert(a.contains("QueryStage") && a.contains("#1"),
+      s"q118's dump should carry ids to normalize:\n$a")
+    val diff = a.linesIterator.zip(b.linesIterator).zipWithIndex
+      .find { case ((x, y), _) => x != y }
+    assert(a === b, s"first differing line: $diff")
+  }
 }

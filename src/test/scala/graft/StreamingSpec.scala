@@ -525,7 +525,8 @@ class StreamingSpec extends SparkSpec {
       s"sf0.1 fixture not staged at $sf01")
     spark.streams.addListener(listener)
     try {
-      val run = Continuous.runStreamedCurationFunnel(spark, sf01)
+      val run = Continuous.freshRun("funnel")(
+        Continuous.runStreamedCurationFunnel(spark, sf01, _, _))
       assert(run.snapshots.size >= 2)
       val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
       while (progress.size < 4 && System.nanoTime() < deadline)
@@ -547,7 +548,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("q88: streamed curation funnel converges to the batch funnel") {
-    val run = Continuous.runStreamedCurationFunnel(spark, sfDir)
+    val run = Continuous.freshRun("funnel")(
+      Continuous.runStreamedCurationFunnel(spark, sfDir, _, _))
     assert(run.snapshots.size >= 2,
       s"expected multiple funnel commits, got ${run.snapshots.size}")
     assert(run.snapshots.last.progress >= 1.0)
@@ -599,18 +601,11 @@ class StreamingSpec extends SparkSpec {
     assert(fin === batch)
   }
 
-  test("q99: streamed index dedup is batch-boundary-free and matches its batch twin") {
+  /** q99's batch twin, directly from the band/digest definitions: one
+    * (doc_id, exact_dup, band_dup, keep) row per incoming doc (doc_id % 10
+    * == 0), ordered by doc_id. */
+  private def q99Twin: Seq[(Long, Int, Int, Int)] = {
     import spark.implicits._
-    def verdicts(chunks: Int) =
-      Continuous.streamedIndexDedup(spark, sfDir, chunks = chunks)
-        .collect().map(r =>
-          (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSeq
-    val streamed = verdicts(5)
-    // chunk-boundary independence: the SAME verdict frame whatever the
-    // replay's batch size — the per-doc-state design contract
-    assert(verdicts(2) === streamed,
-      "verdicts must not depend on micro-batch boundaries")
-    // batch twin, directly from the band/digest definitions
     val docs = Tables.documents(spark, sfDir)
     val bands = graft.operators.Dedup.bandBuckets(
       graft.operators.Dedup.signaturesOf(
@@ -627,14 +622,27 @@ class StreamingSpec extends SparkSpec {
         $"n.bh" === $"o.bh" && $"n.doc_id" =!= $"o.doc_id" && precedent,
         "left_semi")
       .select($"doc_id").distinct().collect().map(_.getLong(0)).toSet
-    val incoming = docs.filter($"doc_id" % 10 === 0)
-      .select($"doc_id").collect().map(_.getLong(0)).toSet
-    assert(streamed.map(_._1).toSet === incoming, "one row per incoming doc")
-    streamed.foreach { case (id, e, b, keep) =>
-      assert(e === (if (ex(id)) 1 else 0), s"exact_dup at doc $id")
-      assert(b === (if (bd(id)) 1 else 0), s"band_dup at doc $id")
-      assert(keep === (if (e + b > 0) 0 else 1), s"keep rule at doc $id")
-    }
+    docs.filter($"doc_id" % 10 === 0).select($"doc_id").collect()
+      .map(_.getLong(0)).toSeq.sorted.map { id =>
+        val (e, b) = (if (ex(id)) 1 else 0, if (bd(id)) 1 else 0)
+        (id, e, b, if (e + b > 0) 0 else 1)
+      }
+  }
+
+  test("q99: streamed index dedup is batch-boundary-free and matches its batch twin") {
+    def verdicts(chunks: Int) =
+      Continuous.streamedIndexDedup(spark, sfDir, chunks = chunks)
+        .collect().map(r =>
+          (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSeq
+    val streamed = verdicts(5)
+    // chunk-boundary independence: the SAME verdict frame whatever the
+    // replay's batch size — the per-doc-state design contract
+    assert(verdicts(2) === streamed,
+      "verdicts must not depend on micro-batch boundaries")
+    val twin = q99Twin
+    assert(streamed.map(_._1) === twin.map(_._1), "one row per incoming doc")
+    streamed.zip(twin).foreach { case (got, want) =>
+      assert(got === want, s"verdict (doc_id, exact_dup, band_dup, keep)") }
     assert(streamed.exists(_._4 == 0) && streamed.exists(_._4 == 1),
       "fixture must exercise both verdicts")
   }
@@ -720,136 +728,130 @@ class StreamingSpec extends SparkSpec {
     } finally spark.streams.removeListener(listener)
   }
 
-  test("DeltaState: folded generations read bit-identically, torn " +
-      "generations invisible, fan-in bounded") {
-    import spark.implicits._
-    val root = s"target/tmp/deltastate${System.nanoTime()}"
-    try {
-      val st = new Continuous.DeltaState(spark, root,
-        _.groupBy($"s").agg(sum($"dc").as("dc")))
-      def gate() = st.read().groupBy($"s").agg(sum($"dc").as("df"))
-        .orderBy($"s").collect().map(_.toSeq).toSeq
-      st.append(Seq(("a", 1L), ("b", 2L)).toDF("s", "dc").coalesce(1))
-      st.append(Seq(("a", 3L), ("c", 1L)).toDF("s", "dc").coalesce(1))
-      val before = gate()
-      st.compact()
-      assert(st.currentGen === 1)
-      assert(gate() === before,
-        "a folded generation must read bit-identically to its deltas")
-      // the folded generation is ONE file; the old one is dropped
-      assert(new java.io.File(s"$root/g1").listFiles()
-        .count(_.getName.endsWith(".parquet")) === 1)
-      assert(!new java.io.File(s"$root/g0").exists())
-      // appends land in the committed generation; a TORN next
-      // generation (files staged, no marker — the crash-before-marker
-      // window) is invisible to reads and appends
-      st.append(Seq(("b", 1L)).toDF("s", "dc").coalesce(1))
-      val after = gate()
-      Seq(("z", 99L)).toDF("s", "dc")
-        .write.mode("overwrite").parquet(s"$root/g2")
-      assert(st.currentGen === 1)
-      assert(gate() === after, "a torn generation must serve prior state")
-      // the next compact overwrites the torn stage and commits it; a
-      // further compact is idempotent over its own output
-      st.compact()
-      assert(st.currentGen === 2 && gate() === after)
-      st.compact()
-      assert(gate() === after)
-    } finally rmrf(root)
-  }
-
-  test("DeltaState: the fold width follows the generation's bytes — " +
-      "multi-file generations read identically") {
-    import spark.implicits._
-    val root = s"target/tmp/deltawide${System.nanoTime()}"
-    try {
-      // a 1-byte target forces width = ceil(bytes / 1) > 1, the corpus-
-      // scale shape the default 128 MiB target produces on a real df
-      // store; the r17 hard coalesce(1) could never produce it
-      val st = new Continuous.DeltaState(spark, root,
-        _.groupBy($"s").agg(sum($"dc").as("dc")), targetFoldBytes = 1L)
-      def gate() = st.read().groupBy($"s").agg(sum($"dc").as("df"))
-        .orderBy($"s").collect().map(_.toSeq).toSeq
-      st.append((1 to 64).map(i => (s"s$i", i.toLong)).toDF("s", "dc")
-        .repartition(4))
-      st.append((1 to 64).map(i => (s"s$i", 1L)).toDF("s", "dc")
-        .repartition(4))
-      val before = gate()
-      // the width is a BOUND (coalesce), not a forcer: at test scale AQE
-      // coalesces the fold's aggregate to one partition, so hold AQE's
-      // partition coalescing off for the compact to expose the fan-out
-      // the byte target permits — the corpus-scale shape, where the
-      // fold's natural width is real and only the r17 coalesce(1)
-      // collapsed it
-      val key = "spark.sql.adaptive.coalescePartitions.enabled"
-      val old = spark.conf.get(key)
-      try { spark.conf.set(key, "false"); st.compact() }
-      finally spark.conf.set(key, old)
-      assert(st.currentGen === 1)
-      assert(new java.io.File(s"$root/g1").listFiles()
-        .count(_.getName.endsWith(".parquet")) > 1,
-        "a byte-sized target must let the fold fan out over several files")
-      assert(gate() === before,
-        "a multi-file folded generation must read bit-identically")
-      // folding again over the multi-file generation stays idempotent
-      st.compact()
-      assert(gate() === before)
-    } finally rmrf(root)
-  }
-
   test("q88 funnel: trigger width is a knob (commit count and state-" +
-      "append widths track it) and delta-store compaction changes " +
-      "nothing observable") {
+      "write widths track it), losers under the batch keys") {
     // batch twin for the final frames (q88's oracle contract)
     val batch = graft.operators.Curation.curationFunnel(spark, sfDir)
       .collect().map(_.toSeq).toSeq.sortBy(_.head.toString)
-    def parquets(p: String) = {
-      val fs = new java.io.File(p).listFiles()
+    def parquets(p: java.io.File) = {
+      val fs = p.listFiles()
       if (fs == null) 0 else fs.count(_.getName.endsWith(".parquet"))
     }
-    // one df gate, re-aggregated from the index: no run keeps df/len
-    // delta stores
-    def noDeltaStores(run: Continuous.FunnelRun) =
-      for (store <- Seq("df", "len"))
-        assert(!new java.io.File(s"${run.stateRoot}/$store").exists(),
-          s"$store delta store under ${run.stateRoot}")
-    // width 1 over the 8 staged chunks: 8 commits, each appending ONE
-    // increment-width file to the loser store — the append width tracks
-    // the trigger knob, not the shuffle setting
-    val runA = Continuous.runStreamedCurationFunnel(spark, sfDir,
-      filesPerTrigger = 1, compactEvery = 0, keepState = true)
-    try {
-      assert(runA.snapshots.size === 8)
-      assert(parquets(s"${runA.stateRoot}/losers/g0") === 8)
-      noDeltaStores(runA)
-      assert(runA.snapshots.last.rows.map(_.toSeq).toSeq
-        .sortBy(_.head.toString) === batch)
-    } finally rmrf(runA.stateRoot)
-    // width 3 + fold-every-commit: ceil(8/3) = 3 commits, the loser
-    // store ends as ONE committed generation holding ONE folded file,
-    // and the funnel's emitted frames are unchanged (the emit reads the
-    // distinct loser set either way)
-    val runB = Continuous.runStreamedCurationFunnel(spark, sfDir,
-      filesPerTrigger = 3, compactEvery = 1, keepState = true)
-    try {
-      assert(runB.snapshots.size === 3)
-      val gens = new java.io.File(s"${runB.stateRoot}/losers").listFiles()
-        .filter(_.isDirectory).map(_.getName).toSeq
-      assert(gens === Seq("g3"),
-        s"losers should hold exactly the last folded generation, got $gens")
-      assert(parquets(s"${runB.stateRoot}/losers/g3") === 1)
-      noDeltaStores(runB)
-      assert(runB.snapshots.last.rows.map(_.toSeq).toSeq
-        .sortBy(_.head.toString) === batch)
-    } finally rmrf(runB.stateRoot)
+    // the batch keys b<id> of a run and the loser files under each
+    def loserFiles(root: String) =
+      new java.io.File(root).listFiles().filter(_.getName.matches("b\\d+"))
+        .map(k => k.getName ->
+          parquets(new java.io.File(k, "state/kind=losers")))
+        .toSeq.sortBy(_._1.drop(1).toInt)
+    def funnel(filesPerTrigger: Int)(check: (Continuous.FunnelRun,
+        Seq[(String, Int)]) => Unit): Unit =
+      Continuous.freshRun("funnel") { (root, ckpt) =>
+        val run = Continuous.runStreamedCurationFunnel(spark, sfDir, root,
+          ckpt, filesPerTrigger = filesPerTrigger)
+        check(run, loserFiles(root))
+        // one df gate, re-aggregated from the index: no run keeps df/len
+        // delta stores
+        for (store <- Seq("df", "len"))
+          assert(!new java.io.File(s"$root/$store").exists(),
+            s"$store delta store under $root")
+        assert(run.snapshots.last.rows.map(_.toSeq).toSeq
+          .sortBy(_.head.toString) === batch)
+      }
+    // width 1 over the 8 staged chunks: 8 commits, each writing at most
+    // ONE increment-width loser file under its own key — the write width
+    // tracks the trigger knob, not the shuffle setting
+    funnel(1) { (run, losers) =>
+      assert(run.snapshots.size === 8)
+      assert(losers.map(_._1) === (0 until 8).map(i => s"b$i"))
+      assert(losers.forall(_._2 <= 1) && losers.exists(_._2 == 1),
+        s"loser files per key: $losers")
+    }
+    // width 3: ceil(8/3) = 3 commits, at most 3 loser files per key
+    funnel(3) { (run, losers) =>
+      assert(run.snapshots.size === 3)
+      assert(losers.map(_._1) === Seq("b0", "b1", "b2"))
+      assert(losers.forall(_._2 <= 3), s"loser files per key: $losers")
+    }
     // the default run
-    val runC = Continuous.runStreamedCurationFunnel(spark, sfDir,
-      keepState = true)
+    funnel(2)((_, _) => ())
+  }
+
+  /** Runs `run` on fresh dirs, deletes the last commit-log entry — a crash
+    * after the batch's body wrote its state, before Spark committed it —
+    * lets `tamper` touch the state (root, uncommitted batch id), and runs
+    * again on the same dirs, so Spark re-runs that batch. Returns both
+    * runs' results. */
+  private def rerunLastBatch[T](run: (String, String) => T,
+      tamper: (String, Long) => Unit = (_, _) => ()): (T, T) = {
+    val root = s"target/tmp/rerun${System.nanoTime()}"
+    val ckpt = s"$root-ckpt"
     try {
-      noDeltaStores(runC)
-      assert(runC.snapshots.last.rows.map(_.toSeq).toSeq
-        .sortBy(_.head.toString) === batch)
-    } finally rmrf(runC.stateRoot)
+      val first = run(root, ckpt)
+      val commits = new java.io.File(ckpt, "commits")
+      val last = commits.list().filter(_.matches("\\d+")).map(_.toLong).max
+      assert(last >= 1, s"expected several commits, got ${last + 1}")
+      new java.io.File(commits, last.toString).delete()
+      new java.io.File(commits, s".$last.crc").delete()
+      tamper(root, last)
+      (first, run(root, ckpt))
+    } finally { rmrf(root); rmrf(ckpt) }
+  }
+
+  test("streamed commits: a re-run batch overwrites its own key, a torn " +
+      "write's stray file included") {
+    import spark.implicits._
+    val staged = s"target/tmp/commits_in${System.nanoTime()}"
+    try {
+      for (i <- 0 until 4)
+        (i * 10L until i * 10L + 10).toDF("v").coalesce(1)
+          .write.mode("append").parquet(staged)
+      val schema = spark.read.parquet(staged).schema
+      def total(root: String, ckpt: String) =
+        Continuous.streamedCommits(spark, "commits_spec", staged, 1, root,
+            ckpt) { c => c.write(1, "rows" -> c.batch) }
+          .read("rows", schema).agg(count(lit(1)), sum($"v")).head()
+          .toSeq
+      val (first, rerun) = rerunLastBatch(total, (root, id) => {
+        // a torn earlier attempt: an extra data file in the batch's key
+        val dir = new java.io.File(s"$root/b$id/state/kind=rows")
+        val part = dir.listFiles().find(_.getName.endsWith(".parquet")).get
+        java.nio.file.Files.copy(part.toPath,
+          new java.io.File(dir, "part-stray.parquet").toPath)
+      })
+      assert(first === Seq(40L, 780L))
+      assert(rerun === first, "the re-run batch must replace its key")
+    } finally rmrf(staged)
+  }
+
+  test("q88: a re-run last batch leaves the final funnel unchanged") {
+    val batch = graft.operators.Curation.curationFunnel(spark, sfDir)
+      .collect().map(_.toSeq).toSeq.sortBy(_.head.toString)
+    val (first, rerun) = rerunLastBatch((root, ckpt) =>
+      Continuous.runStreamedCurationFunnel(spark, sfDir, root, ckpt)
+        .snapshots.last.rows.map(_.toSeq).sortBy(_.head.toString))
+    assert(first === batch)
+    assert(rerun === batch)
+  }
+
+  test("q99: a re-run last batch leaves the verdict frame unchanged") {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3))).toSeq
+    val (first, rerun) = rerunLastBatch((root, ckpt) =>
+      rows(Continuous.runStreamedIndexDedup(spark, sfDir, root, ckpt)))
+    assert(first === rows(Continuous.streamedIndexDedup(spark, sfDir)))
+    assert(first === q99Twin)
+    assert(rerun === q99Twin)
+  }
+
+  test("q117: a re-run last batch leaves the decision frame unchanged") {
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).toSeq
+    val twin = rows(
+      graft.operators.Curation.crossModalStreamTwin(spark, sfDir))
+    val (first, rerun) = rerunLastBatch((root, ckpt) =>
+      rows(Continuous.runStreamedCrossModalDedup(spark, sfDir, root, ckpt)))
+    assert(first === twin)
+    assert(rerun === twin)
   }
 
   test("q51/q52/q54 fold their commits on the driver: 4 data commits, " +
