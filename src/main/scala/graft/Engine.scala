@@ -47,4 +47,17 @@ object Engine {
     sc.setJobDescription(desc)
     try body finally sc.setJobDescription(prior)
   }
+
+  /** Hadoop FileSystem + Path for `path`, resolved through the Hadoop
+    * conf of `spark` (the active session by default) — the one resolver
+    * every existence/listing probe, marker and recursive delete outside
+    * Spark's own readers and writers goes through (fixture staging, the
+    * streaming state roots, the dedup index commit protocol), so
+    * `spark.hadoop.*` settings (credentials, endpoints) reach them and a
+    * location on HDFS/S3 behaves like the local `target/` default. */
+  def hfs(path: String, spark: SparkSession = SparkSession.active)
+      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+  }
 }

@@ -24,10 +24,9 @@ import org.apache.spark.sql.functions._
 object ScaleSmoke {
 
   /** Fingerprint of the STAGING LOGIC (key-shift scheme, text perturbation,
-    * embedding sign-flip pattern). Bump whenever `stage`/`stageAll` change:
-    * `isFresh` requires the staged copy to carry this exact value, so a
-    * code change can never silently reuse stale staged data and skew the
-    * fitted exponents (round-8 advice). */
+    * embedding sign-flip pattern): the staged copies' derivation stamp.
+    * Bump whenever `scaled`/`stageAll` change, so a code change can never
+    * silently reuse stale staged data and skew the fitted exponents. */
   private val stagingFingerprint =
     "v3:keyshift-max+1,text-uniq-suffix,emb-xxhash64-signflip"
 
@@ -59,13 +58,25 @@ object ScaleSmoke {
     // so build_s is the stage's real cost, not plan construction
     StageMemo.eagerBuild = true
 
+    // a fixture table of `sfDir` staged as `staged/<table>.parquet` by
+    // Staging's rule: staged copies persist across invocations (a 30x
+    // staging is minutes of write) and re-stage when the source table or
+    // the staging logic (the fingerprint) changes
+    def stage(staged: String, table: String)(
+        derive: DataFrame => DataFrame): Unit = {
+      Staging.stageAt(spark, s"$staged/$table.parquet", stagingFingerprint,
+        Seq(Staging.identity(sfDir, table))) { out =>
+        derive(Tables.load(spark, sfDir, table))
+          .write.mode("overwrite").parquet(out)
+      }
+      ()
+    }
     // key-shift mult copies; `perturb` runs with the copy index `_i` still
     // in scope so per-copy transforms (near-dup text, decorrelated vectors)
     // stay next to the staging they modify
-    def stage(staged: String, mult: Int, table: String, keyCols: Seq[String],
-        perturb: DataFrame => DataFrame = identity): Unit = {
-      if (isFresh(staged, table)) return
-      val src = spark.read.parquet(s"$sfDir/$table.parquet")
+    def scaled(staged: String, mult: Int, table: String,
+        keyCols: Seq[String], perturb: DataFrame => DataFrame = identity)
+        : Unit = stage(staged, table) { src =>
       val maxKeys = keyCols.map(k =>
         k -> (src.agg(max(col(k))).head().getLong(0) + 1L)).toMap
       val copies = src.withColumn("_i",
@@ -74,59 +85,27 @@ object ScaleSmoke {
         df.withColumn(k, col(k) + col("_i") * maxKeys(k))
       }
       perturb(shifted).drop("_i")
-        .write.mode("overwrite").parquet(s"$staged/$table.parquet")
-      writeFingerprint(staged, table)
-    }
-    def fingerprintPath(staged: String, table: String) =
-      java.nio.file.Paths.get(s"$staged/$table.parquet/_graft_staging")
-    def writeFingerprint(staged: String, table: String): Unit =
-      java.nio.file.Files.write(fingerprintPath(staged, table),
-        stagingFingerprint.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // skip-if-fresh like Continuous.stageChunks: staged copies persist
-    // across invocations (a 30x staging is minutes of write), re-staged
-    // only when missing, older than the source fixture, or staged by a
-    // DIFFERENT version of the staging logic (fingerprint mismatch)
-    def isFresh(staged: String, table: String): Boolean = {
-      val success = java.nio.file.Paths.get(s"$staged/$table.parquet/_SUCCESS")
-      if (!java.nio.file.Files.exists(success)) return false
-      val fp = fingerprintPath(staged, table)
-      if (!java.nio.file.Files.exists(fp) ||
-          new String(java.nio.file.Files.readAllBytes(fp),
-            java.nio.charset.StandardCharsets.UTF_8) != stagingFingerprint)
-        return false
-      val walk = java.nio.file.Files.walk(
-        java.nio.file.Paths.get(s"$sfDir/$table.parquet"))
-      val srcMtime =
-        try walk
-          .mapToLong(p => java.nio.file.Files.getLastModifiedTime(p).toMillis)
-          .max.orElse(Long.MaxValue)
-        finally walk.close()
-      java.nio.file.Files.getLastModifiedTime(success).toMillis >= srcMtime
     }
     def stageAll(staged: String, mult: Int): Unit = {
-      stage(staged, mult, "lineitem", Seq("l_orderkey"))
-      stage(staged, mult, "orders", Seq("o_orderkey"))
+      scaled(staged, mult, "lineitem", Seq("l_orderkey"))
+      scaled(staged, mult, "orders", Seq("o_orderkey"))
       // perturb text so N× docs are near-dups of their source, not exact
       // clones (exact clones would just re-test the 1× structure)
-      stage(staged, mult, "documents", Seq("doc_id"), _.withColumn("text",
+      scaled(staged, mult, "documents", Seq("doc_id"), _.withColumn("text",
         concat($"text", lit(" uniq"), $"_i")))
-      stage(staged, mult, "events", Seq("event_id", "user_id"))
+      scaled(staged, mult, "events", Seq("event_id", "user_id"))
       // embeddings: flip a per-(copy, dim) pseudo-random sign pattern so
       // copies are near-orthogonal to their source — near-dup pair structure
       // then grows linearly with mult (exact clones would grow the pair
       // output quadratically, which is the exact-dedup regime, and would
       // re-test bucket skew rather than corpus growth)
-      stage(staged, mult, "embeddings", Seq("vec_id"), _.withColumn(
+      scaled(staged, mult, "embeddings", Seq("vec_id"), _.withColumn(
         "embedding", expr(
           """transform(embedding, (x, d) ->
             |  CASE WHEN _i = 0 OR pmod(xxhash64(_i * 64 + d), 2) = 0
             |       THEN x ELSE -x END)""".stripMargin)))
       for (t <- Seq("customer", "supplier", "part", "nation", "region"))
-        if (!isFresh(staged, t)) {
-          spark.read.parquet(s"$sfDir/$t.parquet")
-            .write.mode("overwrite").parquet(s"$staged/$t.parquet")
-          writeFingerprint(staged, t)
-        }
+        stage(staged, t)(identity)
     }
 
     // production LSH bit sizing (the operator scaladoc's rule): bits ≈
@@ -144,6 +123,16 @@ object ScaleSmoke {
         s""""bits":${sizedBits(mult)},"""
       case "neardup_lsh" | "neardup_lsh_mp" => """"bits":10,"""
       case _ => ""
+    }
+
+    // incr_clusters_forest's shipped side (ids >= 2500): its index and
+    // cluster star forest v0, staged per fixture dir
+    def lt2500Index(d: String, m: Int): String = {
+      val idx = operators.Dedup.ShippedIndex(
+        Tables.documents(spark, d).filter(col("doc_id") >= 2500),
+        Some((0.8, 100 * m)), forestVerifyChunks = if (m >= 50) 8 else 1)
+      Staging.staged(spark, d, "lt2500", idx.derivation,
+        variant = idx.variant)(idx.build).path
     }
 
     // (name, per-dir frame): `mult` parameterizes corpus-relative knobs —
@@ -431,14 +420,10 @@ object ScaleSmoke {
       // accumulated pair list the forest replaces (dedup_clusters is the
       // pair-state re-derivation this row is read against)
       "incr_clusters_forest" -> { (d, m) =>
-        val docs = Tables.documents(spark, d)
-        val path = operators.Dedup.ensureFixtureIndex(spark, d,
-          docs.filter(col("doc_id") >= 2500), "lt2500",
-          withForest = true, maxDf = 100 * m,
-          forestVerifyChunks = if (m >= 50) 8 else 1)
-        operators.Dedup.incrementalClustersAgainstIndex(spark, path,
-          docs.filter(col("doc_id") < 2500), maxDf = 100 * m,
-          commit = false)
+        operators.Dedup.incrementalClustersAgainstIndex(spark,
+          lt2500Index(d, m),
+          Tables.documents(spark, d).filter(col("doc_id") < 2500),
+          maxDf = 100 * m, commit = false)
       },
       // scene cuts (q90): same per-char explode volume contract as
       // media_phash, plus the frame-bounded lag window
@@ -548,16 +533,10 @@ object ScaleSmoke {
     // pre-stage incr_clusters_forest's persisted state (index + forest v0
     // over the shipped side) OUTSIDE the timed laps: the one-time shipped-
     // corpus build is amortized production cost, not per-increment cost —
-    // the freshness check inside the op lambda then reduces to file mtimes
+    // the staging check inside the op lambda then reduces to one listing
+    // and one marker read
     if (selected.exists(_._1 == "incr_clusters_forest"))
-      for ((_, dir, m) <- laps) {
-        val docs = Tables.documents(spark, dir)
-        operators.Dedup.ensureFixtureIndex(spark, dir,
-          docs.filter(col("doc_id") >= 2500), "lt2500",
-          withForest = true, maxDf = 100 * m,
-          forestVerifyChunks = if (m >= 50) 8 else 1)
-        ()
-      }
+      for ((_, dir, m) <- laps) lt2500Index(dir, m)
     // warm-up lap at the smallest sf (JIT + codegen + catalog caches, same
     // protocol as Bench) — otherwise the first timed op absorbs ~5 s of JVM
     // warm-up and the 1x point biases every exponent low

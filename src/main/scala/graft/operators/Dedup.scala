@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Engine.labeled
-import graft.Tables
+import graft.Engine.{hfs, labeled}
+import graft.{Staging, Tables}
 
 /** Document deduplication operators for large-scale training-data pipelines.
   *
@@ -1666,9 +1666,8 @@ object Dedup {
     // serves the PRE-REBUILD compacted corpus while the fresh base is never
     // read (ADVICE r17). The forest is derived from the old corpus's pairs,
     // equally stale. Owned here because arbitrary callers rebuild through
-    // this entry point (ensureFixtureIndex's own cleanup is now redundant
-    // but harmless).
-    val (pfs, _) = protocolFs(path)
+    // this entry point.
+    val (pfs, _) = hfs(path)
     for (sub <- Seq("inc", "compact", "forest"))
       pfs.delete(new org.apache.hadoop.fs.Path(s"$path/$sub"), true)
     val route = docIdRoute(docs, "writeDedupIndex")
@@ -1706,21 +1705,6 @@ object Dedup {
     * written under (staged version-keyed overwrites + marker-last). */
   private val protocolStamp = "graft-dedup-index-protocol:1\n"
 
-  /** Hadoop FileSystem of an index path, resolved from the ACTIVE
-    * session's Hadoop configuration — the protocol's marker/listing I/O
-    * goes through the same filesystem abstraction Spark's parquet
-    * writers use. The pre-r14 java.io.File form silently read
-    * `committedVersion = 0` for an index on hdfs:// or s3a:// (every
-    * increment invisible, the forest refused or served stale) instead of
-    * failing or working; resolving through `Path.getFileSystem` makes
-    * the protocol correct on any filesystem the data itself reaches
-    * (ADVICE r13). */
-  private def protocolFs(path: String)
-      : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), p)
-  }
-
   /** The digest a committed increment's marker carries, or None when the
     * marker is missing, EMPTY or unreadable. An empty marker is the
     * torn-write state of a crash between marker creation and content
@@ -1737,7 +1721,7 @@ object Dedup {
     * missing, EMPTY or unreadable (the torn-write rule of
     * [[markerDigest]], shared with compaction generations). */
   private def dirMarkerContent(dir: String): Option[String] = {
-    val (fs, _) = protocolFs(dir)
+    val (fs, _) = hfs(dir)
     val m = new org.apache.hadoop.fs.Path(dir, "_graft_commit")
     try {
       val len = fs.getFileStatus(m).getLen
@@ -1773,7 +1757,7 @@ object Dedup {
     * no marker or the complete content, never a torn one. */
   private[graft] def writeDirMarkerAtomic(dir: String,
       content: String): Unit = {
-    val (fs, _) = protocolFs(dir)
+    val (fs, _) = hfs(dir)
     val tmp = new org.apache.hadoop.fs.Path(dir, "._graft_commit.tmp")
     val out = fs.create(tmp, true)
     try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -1791,7 +1775,7 @@ object Dedup {
     * own filesystem. */
   private def versionDirs(path: String, sub: String,
       prefix: String = "v"): Seq[Int] = {
-    val (fs, _) = protocolFs(path)
+    val (fs, _) = hfs(path)
     val dir = new org.apache.hadoop.fs.Path(s"$path/$sub")
     if (!fs.exists(dir)) Seq.empty
     else fs.listStatus(dir).toSeq
@@ -1901,7 +1885,7 @@ object Dedup {
     * — i.e. was written from a string/UUID-keyed corpus and stores its
     * shingles/hashes/forest in fingerprint currency. */
   private def indexHasDict(path: String): Boolean = {
-    val (fs, _) = protocolFs(path)
+    val (fs, _) = hfs(path)
     // resolve through the read plan, NOT the writeDedupIndex base: once a
     // compaction commits, the GC drops the superseded base components, so
     // the dict's existence witness lives wherever the current base does
@@ -1971,7 +1955,7 @@ object Dedup {
     * set), and forest versions strictly between the v0 seed witness and
     * the committed tail (only the tail is ever read). */
   private def gcCompacted(path: String): Unit = {
-    val (fs, _) = protocolFs(path)
+    val (fs, _) = hfs(path)
     def rm(p: String): Unit = {
       fs.delete(new org.apache.hadoop.fs.Path(p), true); ()
     }
@@ -2173,69 +2157,39 @@ object Dedup {
       .orderBy(col("doc_id"))
   }
 
-  /** Freshness-checked fixture persist of the shared incremental-index
-    * state under `target/dedupindex`: the shipped side's shingle postings +
-    * digests ([[writeDedupIndex]]) and — when `withForest` — its cluster
-    * star forest v0 ([[writeClusterForest]]). Idempotent per (dir,
-    * currency, split tag, gate): re-persists only when the source parquet
-    * is newer than the persisted `_SUCCESS` markers, like the streaming
-    * tier's staged chunks. Returns the index path. */
-  private[graft] def ensureFixtureIndex(spark: SparkSession, dir: String,
-      shipped: DataFrame, tag: String, withForest: Boolean,
-      threshold: Double = 0.8, maxDf: Int = 100,
-      forestVerifyChunks: Int = 1): String = {
-    val abs = java.nio.file.Paths.get(dir).toAbsolutePath.toString
-    // the "_long" segment names the shingle-key currency the index was
-    // written under — kept as a literal after the hex twin's r13
-    // retirement so indexes persisted by earlier rounds stay valid. The
-    // split tag and gate parameters key the forest, which is a function
-    // of both.
-    val key = dir.replaceAll("[^A-Za-z0-9.]+", "_") +
-      f"_${scala.util.hashing.MurmurHash3.stringHash(abs) & 0x7fffffff}%08x" +
-      s"_long_$tag" +
-      (if (withForest) s"_t${threshold}_df$maxDf" else "")
-    val path = s"target/dedupindex/$key"
-    val walk = java.nio.file.Files.walk(
-      java.nio.file.Paths.get(s"$dir/documents.parquet"))
-    val srcMtime =
-      try walk
-        .mapToLong(p => java.nio.file.Files.getLastModifiedTime(p).toMillis)
-        .max.orElse(Long.MaxValue)
-      finally walk.close()
-    def freshAt(marker: String): Boolean = {
-      val p = java.nio.file.Paths.get(marker)
-      java.nio.file.Files.exists(p) &&
-        java.nio.file.Files.getLastModifiedTime(p).toMillis >= srcMtime
-    }
-    if (!freshAt(s"$path/hashes/_SUCCESS")) {
-      // a stale index invalidates every forest version and committed
-      // increment on top of it — drop both dirs so latestForestVersion /
-      // committedVersion can't pick a survivor from the previous corpus
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(new java.io.File(s"$path/forest"))
-      rm(new java.io.File(s"$path/inc"))
-      rm(new java.io.File(s"$path/compact"))
+  /** A shipped fixture index as a [[graft.Staging.staged]] artifact: the
+    * [[writeDedupIndex]] state of `shipped` and, with `forest = Some((t,
+    * maxDf))`, its [[writeClusterForest]] star forest v0 (the shipped
+    * side of q94/q118 and ScaleSmoke's forest lap). A forest index keeps
+    * its own dir per gate ([[variant]]), so an index with and one without
+    * a forest never rebuild each other's. */
+  private[graft] final case class ShippedIndex(shipped: DataFrame,
+      forest: Option[(Double, Int)] = None, forestVerifyChunks: Int = 1) {
+    /** Bump when shinglesOf / writeDedupIndex (or, for a forest,
+      * writeClusterForest's pair stage and contraction) change. */
+    def derivation: String =
+      "shingle-index-v1" + forest.fold("")(_ => "+prefix-star-forest-v1")
+    def variant: String =
+      forest.fold("") { case (t, maxDf) => s"_t${t}_df$maxDf" }
+    def build(path: String): Unit = {
       writeDedupIndex(shipped, path)
+      forest.foreach { case (t, maxDf) => writeClusterForest(shipped, path,
+        t, maxDf, verifyChunks = forestVerifyChunks) }
     }
-    if (withForest && !freshAt(s"$path/forest/v0/_SUCCESS"))
-      writeClusterForest(shipped, path, threshold, maxDf,
-        verifyChunks = forestVerifyChunks)
-    path
   }
 
   /** Fixture form (q94): [[incrementalDedupAgainstIndex]] with the q87
-    * split — the shipped 90% persisted once per fixture dir (idempotent
-    * behind a freshness check, like the streaming tier's staged chunks),
+    * split — the shipped 90% persisted once per fixture identity
+    * ([[ShippedIndex]], staged like the streaming tier's replay chunks),
     * the mod-10 increment deduped against the files. Same oracle as q87:
     * the two operating modes must produce identical verdicts. */
   def indexDedup(spark: SparkSession, dir: String,
       threshold: Double = 0.8, maxDf: Int = 100): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val isInc = pmod(col("doc_id"), lit(10)) === 0
-    val path = ensureFixtureIndex(spark, dir, docs.filter(!isInc), "mod10",
-      withForest = false)
+    val idx = ShippedIndex(docs.filter(!isInc))
+    val path = Staging.staged(spark, dir, "mod10", idx.derivation,
+      variant = idx.variant)(idx.build).path
     // pairsKey: q94 and q118 fold the SAME increment against the SAME
     // shipped content (their fixture indexes differ only in whether a
     // forest sits beside them), so the pair stage is one shared memo
@@ -2293,7 +2247,7 @@ object Dedup {
     * marker lands, so readers never serve a forest whose edges the index
     * can't re-derive. */
   private[graft] def latestForestVersion(path: String): Int = {
-    val (fs, _) = protocolFs(path)
+    val (fs, _) = hfs(path)
     val v0IsDir =
       try fs.getFileStatus(
         new org.apache.hadoop.fs.Path(s"$path/forest/v0")).isDirectory
@@ -2584,8 +2538,9 @@ object Dedup {
       threshold: Double = 0.8, maxDf: Int = 100): DataFrame = {
     val docs = Tables.documents(spark, dir)
     val isInc = pmod(col("doc_id"), lit(10)) === 0
-    val path = ensureFixtureIndex(spark, dir, docs.filter(!isInc), "mod10",
-      withForest = true, threshold = threshold, maxDf = maxDf)
+    val idx = ShippedIndex(docs.filter(!isInc), Some((threshold, maxDf)))
+    val path = Staging.staged(spark, dir, "mod10", idx.derivation,
+      variant = idx.variant)(idx.build).path
     incrementalClustersAgainstIndex(spark, path, docs.filter(isInc),
       threshold, maxDf, commit = false,
       pairsKey = Some(s"$dir:mod10:$threshold:$maxDf"))

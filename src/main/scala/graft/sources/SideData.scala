@@ -37,13 +37,13 @@ object SideData {
     * (Spark ignores re-adds of the same file). */
   def addCacheFile(spark: SparkSession, path: String): String = {
     spark.sparkContext.addFile(path)
-    new java.io.File(path).getName
+    new org.apache.hadoop.fs.Path(path).getName
   }
 
   /** Recursive variant for a directory of side files. */
   def addCacheDir(spark: SparkSession, path: String): String = {
     spark.sparkContext.addFile(path, recursive = true)
-    new java.io.File(path).getName
+    new org.apache.hadoop.fs.Path(path).getName
   }
 
   /** Task-local path of a distributed file — `getLocalCache`/the workdir

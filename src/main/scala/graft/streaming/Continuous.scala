@@ -5,7 +5,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DecimalType, LongType, StructType}
 
-import graft.Engine.labeled
+import org.apache.spark.sql.graft.Bridge
+
+import graft.Engine.{hfs, labeled}
+import graft.Staging
 
 /** Continuous tier — the HOP/Quatrain capabilities (SURVEY.md §2.9) on
   * Structured Streaming.
@@ -109,17 +112,18 @@ object Continuous {
       stage1: DataFrame => DataFrame,
       stage2: DataFrame => DataFrame,
       queryName: String = "pipeline_out"): DataFrame = {
-    val q1 = stage1(
+    val mid = stage1(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(inputDir))
-      .writeStream
+    val q1 = mid.writeStream
       .option("checkpointLocation", s"$checkpointDir/stage1")
       .trigger(Trigger.AvailableNow())
       .format("parquet").option("path", midDir)
       .start()
     q1.awaitTermination()
-    val q2 = stage2(spark.readStream.schema(
-        spark.read.parquet(midDir).schema)
+    // stage 1's output schema as the parquet round trip returns it: the
+    // engine holds it, so stage 2 needs no inference over the mid dir
+    val q2 = stage2(spark.readStream.schema(Bridge.asNullable(mid.schema))
         .option("maxFilesPerTrigger", "4").parquet(midDir))
       .writeStream
       .option("checkpointLocation", s"$checkpointDir/stage2")
@@ -183,200 +187,34 @@ object Continuous {
   private[graft] val checkpointManagerKey =
     "spark.sql.streaming.checkpointFileManagerClass"
 
-  /** Hadoop FileSystem + Path for a state/staging location. Every
-    * existence/mtime probe and recursive delete in this file goes through
-    * the Hadoop FS API so a state root on HDFS/S3 behaves exactly like
-    * the local `target/` harness default — java.io.File probes silently
-    * answered "missing" for any non-local URI. Resolves through the active session's Hadoop conf,
-    * so `spark.hadoop.*` settings (credentials, endpoints) reach every
-    * probe and delete, as they reach Spark's own reads and writes. */
-  private def hfs(path: String): (org.apache.hadoop.fs.FileSystem,
-      org.apache.hadoop.fs.Path) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(SparkSession.active.sessionState.newHadoopConf()), p)
-  }
-
-  /** mtime of `path`, or -1 when it does not exist — the freshness
-    * probe's one-RPC form (exists + getFileStatus would be two). */
-  private def mtimeOrMissing(path: String): Long = {
-    val (fs, p) = hfs(path)
-    try fs.getFileStatus(p).getModificationTime
-    catch { case _: java.io.FileNotFoundException => -1L }
-  }
-
-  /** Stage `table` from `dir` as a `files`-file parquet copy under
-    * `target/streamstage/` so the file stream source yields real multi-batch
-    * incremental execution — the fixture tables are single-file, which would
-    * collapse `maxFilesPerTrigger` streaming to one micro-batch. Idempotent
-    * per (dir, table): bench laps re-use the staged copy.
-    *
-    * The relative `target/streamstage/` root is the single-JVM harness
-    * convention; on a real cluster the staged dir (and every checkpoint dir
-    * below) must live on a shared filesystem (HDFS/S3) visible to all
-    * executors — pass-through of the usual Structured Streaming deployment
-    * rule, not a new constraint. */
-  private[graft] def stageChunks(spark: SparkSession, dir: String, table: String,
-      files: Int = 8): String = {
-    val key = fixtureKey(dir)
-    val out = s"target/streamstage/$key/$table"
-    // re-stage when missing OR older than the source table — a regenerated
-    // fixture must never stream from a stale copy
-    val srcMtime = sourceTableMtime(dir, table)
-    val fresh = mtimeOrMissing(s"$out/_SUCCESS") >= srcMtime
-    if (!fresh) {
+  /** The replay copy of fixture table `table`: an 8-file parquet copy, so
+    * the file stream source yields real multi-batch incremental execution
+    * (the fixture tables are single-file, which would collapse
+    * `maxFilesPerTrigger` streaming to one micro-batch). Staged by
+    * [[graft.Staging]]'s rule, so bench laps re-use it and a fresh stage
+    * reads no fixture. */
+  private[graft] def replayOf(spark: SparkSession, dir: String,
+      table: String): Staging.Staged =
+    Staging.staged(spark, dir, "replay", "repartition8-v1",
+        sources = Seq(table), variant = s"_$table") { out =>
       graft.Tables.tableOf(spark, dir, table)
-        .repartition(files).write.mode("overwrite").parquet(out)
-      // a rewritten staged copy may carry a changed schema (regenerated
-      // fixture) — drop the cached one so the next read re-infers
-      schemaCache.remove(out)
+        .repartition(8).write.mode("overwrite").parquet(out)
     }
-    out
-  }
 
-  /** Readable fixture-dir slug + path hash: distinct fixture dirs that
-    * slug to the same string (/data/sf0.1 vs /data_sf0.1) must not share
-    * a staged copy. */
-  private def fixtureKey(dir: String): String = {
-    val abs = java.nio.file.Paths.get(dir).toAbsolutePath.toString
-    dir.replaceAll("[^A-Za-z0-9.]+", "_") +
-      f"_${scala.util.hashing.MurmurHash3.stringHash(abs) & 0x7fffffff}%08x"
-  }
+  /** [[stageOrderedChunks]]'s derivation stamp: bump it when the
+    * chunking device changes. */
+  private val orderedChunksStamp = "orderedchunks-ntile-2s-v1"
 
-  /** Newest file mtime under `dir/<table>.parquet` — the staleness
-    * witness every fixture-staging cache compares its marker against.
-    * Walks with `listStatus` and reads mtimes only: `listFiles` wraps each
-    * file in a `LocatedFileStatus`, which copies the permission, and the
-    * local filesystem forks an `ls -ld` per file to load it — a process
-    * launch per fixture file on every staged query call. */
-  private def sourceTableMtime(dir: String, table: String): Long = {
-    val (fs, root) = hfs(s"$dir/$table.parquet")
-    def newest(p: org.apache.hadoop.fs.Path): Long =
-      fs.listStatus(p).foldLeft(Long.MinValue) { (m, st) =>
-        math.max(m,
-          if (st.isDirectory) newest(st.getPath) else st.getModificationTime)
-      }
-    val n = newest(root)
-    if (n == Long.MinValue) Long.MaxValue else n
-  }
-
-  /** THE fixture-staging registry — the ring fence around what may be
-    * cached across runs (VERDICT r18 "what's wrong" #3). A staged family
-    * must be a PURE FUNCTION OF THE FIXTURE that models scenario INPUT
-    * state (replay chunks standing in for an arrival stream, a shipped
-    * index the scenario declares pre-existing) — never computation the
-    * operator is being measured on. Everything else (every mutable state
-    * dir, every checkpoint) stays per-run. This set is the single
-    * allowed-families list: `StagingRegistrySpec` scans the main sources
-    * for [[stagedFixtureDir]]/[[stageOrderedChunksCached]] labels and
-    * [[stageChunks]] tables and FAILS on any label not registered here,
-    * so the staged class cannot quietly grow.
-    *
-    *  - `events`, `lineitem`, `documents` — [[stageChunks]] multi-file
-    *    replay copies of fixture tables (q51-q54, q88 arrival streams);
-    *  - `lshinc`, `xmodal` — [[stageOrderedChunksCached]] ascending-id
-    *    replay chunks (q99/q117 arrival order = id order);
-    *  - `lshseed` — the q99 shipped-corpus seed index (the scenario is a
-    *    stream against a DURABLE pre-shipped index);
-    *  - `mod10` — [[graft.operators.Dedup.ensureFixtureIndex]]'s shipped
-    *    index tag (q94/q118's pre-existing index, the precedent family),
-    *    scanned from its call sites by the same spec. */
-  private[graft] val stagedFamilies: Set[String] =
-    Set("events", "lineitem", "documents", "lshinc", "xmodal", "lshseed",
-      "mod10")
-
-  /** Stage fixture-derived REPLAY INPUT once per (fixture dir, label),
-    * refreshed when the source table is regenerated OR the caller's
-    * derivation changes — the [[stageChunks]] idempotence contract
-    * generalized to arbitrary staged artifacts (the q99 seed index, the
-    * q99/q117 ordered replay chunks). `build` writes into the returned
-    * root; a `_GRAFT_STAGED` marker written LAST makes a torn staging
-    * re-run instead of being served. The marker's CONTENT carries
-    * `derivation` — the caller's version stamp for the code path that
-    * derives the artifact (bumped whenever that pipeline changes), so an
-    * operator-code change after staging restages instead of silently
-    * probing new-code state against an old-code artifact (ADVICE r18:
-    * the mtime-only check could not see code changes). `sourceTable`
-    * names the fixture table the artifact derives from. This is harness
-    * staging plumbing, not operator work: every per-run mutable STATE
-    * dir stays per-run, only the pure function of the fixture is cached
-    * — the same line [[stageChunks]] (q51-q54/q88 replay input) and
-    * [[graft.operators.Dedup.ensureFixtureIndex]] (the q94 shipped
-    * index) already draw. */
-  private def stagedFixtureDir(spark: SparkSession, dir: String,
-      label: String, derivation: String, sourceTable: String = "documents")(
-      build: String => Unit): String = {
-    val out = s"target/streamstage/${fixtureKey(dir)}/$label"
-    val marker = s"$out/_GRAFT_STAGED"
-    val srcMtime = sourceTableMtime(dir, sourceTable)
-    val want = s"staged:$derivation"
-    def markerContent: Option[String] = {
-      val (fs, p) = hfs(marker)
-      try {
-        val in = fs.open(p)
-        try {
-          val buf = new java.io.ByteArrayOutputStream()
-          val tmp = new Array[Byte](256)
-          var n = in.read(tmp)
-          while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-          Some(new String(buf.toByteArray,
-            java.nio.charset.StandardCharsets.UTF_8).trim)
-        } finally in.close()
-      } catch { case _: java.io.FileNotFoundException => None }
-    }
-    val fresh = mtimeOrMissing(marker) >= srcMtime &&
-      markerContent.contains(want)
-    if (!fresh) {
-      deleteRecursively(out)
-      val (fs, outP) = hfs(out)
-      fs.mkdirs(outP)
-      build(out)
-      val mOut = fs.create(new org.apache.hadoop.fs.Path(marker), true)
-      try mOut.write(
-        (want + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally mOut.close()
-      // drop cached schemas for the root AND any staged subdir under it —
-      // a regenerated fixture may carry a changed schema
-      schemaCache.keySet.removeIf(_.startsWith(out))
-    }
-    out
-  }
-
-  /** [[stageOrderedChunks]] behind the [[stagedFixtureDir]] cache: the
-    * ordered replay chunks are a pure function of (fixture, chunk count),
-    * so re-deriving them per run paid the single-partition ntile window
-    * plus `chunks` sequential coalesce(1) writes on every invocation —
-    * measurement overhead, not operator work. */
-  private def stageOrderedChunksCached(spark: SparkSession, dir: String,
-      label: String, df: => DataFrame, chunks: Int): String =
-    stagedFixtureDir(spark, dir, s"${label}_c$chunks",
-      // the chunking device itself: id-ordered ntile split, 2s mtime lag
-      derivation = "orderedchunks-v1") { out =>
-      stageOrderedChunks(df, chunks, s"$out/chunks", s"$out/_tmp")
-    } + "/chunks"
-
-  /** Staged-dir schemas, cached for the JVM's lifetime (plain map, NOT
-    * [[graft.StageMemo]] — the bench's cold lap clears the memo to make
-    * each operator pay its own shared stages, but schema inference is
-    * harness STAGING plumbing, not operator work: a production stream
-    * declares its schema once, it doesn't re-infer parquet footers per
-    * run). Staged dirs are written once per (dir, table); when stageChunks
-    * detects a regenerated source fixture and rewrites a staged copy, it
-    * drops the cached entry so a changed schema re-infers. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
-  private def stagedSchema(spark: SparkSession, staged: String): StructType =
-    schemaCache.computeIfAbsent(staged,
-      _ => spark.read.parquet(staged).schema)
-
-  /** Stage `df` as `chunks` single-file ascending-`doc_id` parquet chunks
-    * with strictly increasing mtimes, so the file stream source replays
-    * them oldest-first: batch order = id order — the determinism device
-    * that lets ids stand in for arrival time (production ingestion ids are
-    * arrival-ordered). Shared by the streamed index dedup (q99) and the
-    * streamed cross-modal dedup (q117). */
-  private def stageOrderedChunks(df: DataFrame, chunks: Int,
-      stagedDir: String, tmpRoot: String): Unit = {
+  /** Stage `df` into `out` as `chunks` single-file ascending-`doc_id`
+    * parquet chunks with strictly increasing mtimes, so the file stream
+    * source replays them oldest-first: batch order = id order — the
+    * determinism device that lets ids stand in for arrival time
+    * (production ingestion ids are arrival-ordered). The mtimes set
+    * replay order only; freshness is [[graft.Staging]]'s. The staging
+    * build of the streamed index dedup (q99) and the streamed cross-modal
+    * dedup (q117). */
+  private def stageOrderedChunks(df: DataFrame, chunks: Int)(
+      out: String): Unit = {
     import org.apache.spark.sql.expressions.Window
     // FIXTURE PLUMBING ONLY: the unpartitioned ntile window funnels the
     // corpus through ONE partition by construction — acceptable here
@@ -385,18 +223,17 @@ object Continuous {
     // window is the scale-safe shape.
     val chunked = df.withColumn("chunk",
       ntile(chunks).over(Window.orderBy(col("doc_id"))) - 1)
-    val (fs, stagedP) = hfs(stagedDir)
-    fs.mkdirs(stagedP)
+    val (fs, _) = hfs(out)
     val base = System.currentTimeMillis()
     for (i <- 0 until chunks) {
-      val tmp = s"$tmpRoot/tmp$i"
+      val tmp = s"$out/_tmp$i"
       chunked.filter(col("chunk") === i).drop("chunk")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val part = fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
         .filter(_.getPath.getName.endsWith(".parquet"))
       require(part.length == 1, s"expected one staged file, got " +
         part.map(_.getPath.getName).mkString("[", ", ", "]"))
-      val dst = new org.apache.hadoop.fs.Path(s"$stagedDir/chunk$i.parquet")
+      val dst = new org.apache.hadoop.fs.Path(s"$out/chunk$i.parquet")
       require(fs.rename(part.head.getPath, dst),
         s"staging rename failed: ${part.head.getPath} -> $dst")
       fs.setTimes(dst, base + i * 2000, -1)
@@ -586,8 +423,8 @@ object Continuous {
     * volume; at 100 TB an append-mode parquet sink behind
     * [[windowedCounts]]' watermark is the production shape. */
   def streamedWindowedCounts(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stageChunks(spark, dir, "events")
-    foldedFrame(spark, staged, stagedSchema(spark, staged),
+    val staged = replayOf(spark, dir, "events")
+    foldedFrame(spark, staged.path, staged.schema(spark),
       s"q51_stream_${runSeq.incrementAndGet()}",
       _.select(window(col("ts"), "5 minutes").getField("start").as("w_start"),
         col("event_type"), lit(1L).as("n"),
@@ -606,10 +443,10 @@ object Continuous {
     * (progress = 1.0) snapshot, so the q01 SQL oracle-checks that online
     * aggregation converges to the batch answer (q52). */
   def streamedOnlineSummary(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stageChunks(spark, dir, "lineitem")
+    val staged = replayOf(spark, dir, "lineitem")
     def dec(c: String) = col(c).cast("decimal(18,2)")
     val sums = Seq("sum_qty", "sum_base_price", "sum_disc_price")
-    foldedFrame(spark, staged, stagedSchema(spark, staged),
+    foldedFrame(spark, staged.path, staged.schema(spark),
       s"q52_online_${runSeq.incrementAndGet()}",
       _.filter(col("l_shipdate") <= to_timestamp(lit("1998-09-02 00:00:00")))
         .select(col("l_returnflag"), col("l_linestatus"),
@@ -655,8 +492,8 @@ object Continuous {
     * same finish, so the final streamed frame equals the batch frame and
     * the same SQL oracle gates both. */
   def streamedCqMonitor(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stageChunks(spark, dir, "events")
-    cqStats(foldedFrame(spark, staged, stagedSchema(spark, staged),
+    val staged = replayOf(spark, dir, "events")
+    cqStats(foldedFrame(spark, staged.path, staged.schema(spark),
       s"q54_cq_${runSeq.incrementAndGet()}", windowRows,
       keys = Seq("w_start", "key"), finish = windowAverages))
   }
@@ -711,14 +548,14 @@ object Continuous {
     * pipelined path end-to-end (q53). Per-run mid/checkpoint dirs are
     * deleted after the snapshot so repeated invocations stay independent. */
   def streamedPipeline(spark: SparkSession, dir: String): DataFrame = {
-    val staged = stageChunks(spark, dir, "events")
-    val schema = stagedSchema(spark, staged)
+    val staged = replayOf(spark, dir, "events")
     val run = runSeq.incrementAndGet()
     val mid = s"target/streamstage/mid/run$run"
     val ckpt = s"target/streamstage/ckpt/pipeline$run"
     val name = s"q53_pipeline_$run"
     try boundedStream(spark, shuffleCap = Some(8)) {
-      val out = chainedQueries(spark, staged, schema, mid, ckpt,
+      val out = chainedQueries(spark, staged.path, staged.schema(spark),
+        mid, ckpt,
         df => df.filter(col("event_type") =!= "view")
           .select(col("event_type"), col("value")),
         df => df.groupBy(col("event_type"))
@@ -805,9 +642,10 @@ object Continuous {
   }
 
   /** The streamed dedup tier's one commit driver (q88, q99, q117):
-    * replays `stagedDir` `filesPerTrigger` files per `AvailableNow`
-    * commit through a `foreachBatch`, skips empty batches, clears each
-    * commit's key under `root` and hands the commit to `body`. The
+    * replays `stagedDir` (parquet of `schema`) `filesPerTrigger` files
+    * per `AvailableNow` commit through a `foreachBatch`, skips empty
+    * batches, clears each commit's key under `root` and hands the commit
+    * to `body`. The
     * checkpoint and state survive the call, so a run restarted on the
     * same `root`/`ckpt` resumes where its commit log stops and re-runs
     * the uncommitted batch idempotently ([[KeyedState]]). The shuffle
@@ -815,10 +653,10 @@ object Continuous {
     * took 36 s at 32 partitions vs 27 s at 8), and [[boundedStream]]
     * only ever lowers it. Returns the run's state, every key visible. */
   private[graft] def streamedCommits(spark: SparkSession, name: String,
-      stagedDir: String, filesPerTrigger: Int, root: String, ckpt: String)(
-      body: Commit => Unit): KeyedState = {
+      stagedDir: String, schema: StructType, filesPerTrigger: Int,
+      root: String, ckpt: String)(body: Commit => Unit): KeyedState = {
     boundedStream(spark, shuffleCap = Some(8)) {
-      spark.readStream.schema(stagedSchema(spark, stagedDir))
+      spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", filesPerTrigger.toString)
         .parquet(stagedDir)
         .writeStream
@@ -886,14 +724,14 @@ object Continuous {
     // width, which must track the increment, not the shuffle setting.
     require(filesPerTrigger >= 1,
       s"filesPerTrigger must be >= 1: $filesPerTrigger")
-    val staged = stageChunks(spark, dir, "documents")
-    val files = hfs(staged) match { case (fs, p) =>
+    val staged = replayOf(spark, dir, "documents")
+    val files = hfs(staged.path) match { case (fs, p) =>
       fs.listStatus(p).count(_.getPath.getName.endsWith(".parquet")) }
     val totalChunks = math.ceil(files.toDouble / filesPerTrigger)
     val snapshots = scala.collection.mutable.ArrayBuffer.empty[Snapshot]
     @volatile var outSchema: StructType = null
-    streamedCommits(spark, "q88_funnel", staged, filesPerTrigger, root,
-        ckpt) { c =>
+    streamedCommits(spark, "q88_funnel", staged.path, staged.schema(spark),
+        filesPerTrigger, root, ckpt) { c =>
       val docs = c.batch.select(col("doc_id"), col("source"),
         col("lang"), col("n_chars"), col("text"))
       // per-row flags for the increment — quality as an ADDED column
@@ -960,11 +798,17 @@ object Continuous {
       maxDf: Int = 100): DataFrame = {
     val run = freshRun("funnel")(runStreamedCurationFunnel(spark, dir, _, _,
       qualityMin, lang, maxDf = maxDf))
-    require(run.snapshots.nonEmpty && run.snapshots.last.progress >= 1.0,
-      s"funnel stream did not complete " +
-        s"(progress ${run.snapshots.map(_.progress)})")
-    localFrame(spark, run.snapshots.last.rows, run.schema)
-      .orderBy(col("source"))
+    // an empty corpus makes no commit: the batch twin's empty frame
+    if (run.snapshots.isEmpty)
+      graft.operators.Curation.curationFunnel(spark, dir, qualityMin, lang,
+        maxDf)
+    else {
+      require(run.snapshots.last.progress >= 1.0,
+        s"funnel stream did not complete " +
+          s"(progress ${run.snapshots.map(_.progress)})")
+      localFrame(spark, run.snapshots.last.rows, run.schema)
+        .orderBy(col("source"))
+    }
   }
 
   /** Streaming exact dedup: drop records whose fingerprint was already seen
@@ -1014,18 +858,17 @@ object Continuous {
     val isInc = pmod(col("doc_id"), lit(10)) === 0
     // the run's state holds only the MUTABLE rows its commits write; the
     // shipped-corpus seed and the replay chunks are pure functions of the
-    // fixture, staged once behind a freshness check (the q94
-    // ensureFixtureIndex line) instead of re-derived per invocation —
-    // the seed signature build over 90% of the corpus was the largest
-    // scale-independent cost of every q99 lap
+    // fixture, staged once (graft.Staging) instead of re-derived per
+    // invocation — the seed signature build over 90% of the corpus was
+    // the largest scale-independent cost of every q99 lap
     val D = graft.operators.Dedup
     // durable index seeded from the shipped corpus (inc=0 rows win
     // against any increment id)
     // derivation stamp: BUMP when shinglesOf/signaturesOf/bandBuckets
     // (or this seed's 90%-split / schema) change — the staged seed must
-    // never outlive the pipeline that derived it (ADVICE r18)
-    val seedRoot = stagedFixtureDir(spark, dir, "lshseed",
-      derivation = "shingle3-minhashK8-band4-mod10seed-v1") { out =>
+    // never outlive the pipeline that derived it
+    val seedRoot = Staging.staged(spark, dir, "lshseed",
+        "shingle3-minhashK8-band4-mod10seed-v1") { out =>
       val prior = docs.filter(!isInc)
       D.bandBuckets(D.signaturesOf(D.shinglesOf(prior)))
         .withColumn("inc", lit(0))
@@ -1033,10 +876,11 @@ object Continuous {
       prior.select(col("doc_id"), md5(col("text")).as("h"))
         .withColumn("inc", lit(0))
         .write.mode("overwrite").parquet(s"$out/hashes")
-    }
+    }.path
     val inc = docs.filter(isInc)
-    val stagedDir = stageOrderedChunksCached(spark, dir, "lshinc", inc,
-      chunks)
+    val incChunks = Staging.staged(spark, dir, "lshinc",
+      orderedChunksStamp, variant = s"_c$chunks")(
+      stageOrderedChunks(inc, chunks))
     // schema-only empty twins of the two state families
     val e = docs.limit(0)
     val eBands = D.bandBuckets(D.signaturesOf(D.shinglesOf(e)))
@@ -1046,15 +890,15 @@ object Continuous {
     // verdict-family schema twin (nullable like the parquet it reads
     // back — the kind= data files carry the other families' columns as
     // nulls, so the final read MUST project by explicit schema)
-    val eVerd = StructType(e.select(col("doc_id"),
+    val eVerd = Bridge.asNullable(e.select(col("doc_id"),
         lit(0).as("exact_dup"), lit(0).as("band_dup"), lit(0).as("keep"))
-      .schema.map(_.copy(nullable = true)))
+      .schema)
     val seedBands = spark.read.schema(eBands.schema)
       .parquet(s"$seedRoot/bands")
     val seedHashes = spark.read.schema(eHashes.schema)
       .parquet(s"$seedRoot/hashes")
-    val state = streamedCommits(spark, "q99_lsh", stagedDir, 1, root,
-        ckpt) { c =>
+    val state = streamedCommits(spark, "q99_lsh", incChunks.path,
+        incChunks.schema(spark), 1, root, ckpt) { c =>
       val b = c.batch.select(col("doc_id"), col("text")).persist()
       try {
         val bBands = D.bandBuckets(D.signaturesOf(D.shinglesOf(b)))
@@ -1169,10 +1013,33 @@ object Continuous {
     val eFp = graft.operators.Multimodal.blockhashOf(e)
     val eParts = e.select(col("doc_id"), lit("text").as("modality"))
     val eForest = e.select(col("doc_id").as("d1"), col("doc_id").as("d2"))
-    val stagedDir = stageOrderedChunksCached(spark, dir, "xmodal",
-      docs.select(col("doc_id"), col("text")), chunks)
-    val state = streamedCommits(spark, "q117_xmodal", stagedDir, 1, root,
-        ckpt) { c =>
+    // the cumulative decision frame over the seen docs (the hashes
+    // family), the contracted forest and the modality participation rows
+    def verdicts(seen: DataFrame, forest: DataFrame,
+        parts: DataFrame): DataFrame = {
+      val modalities = parts.groupBy(col("doc_id"))
+        .agg(max(when(col("modality") === "text", 1).otherwise(0))
+            .as("in_text"),
+          max(when(col("modality") === "media", 1).otherwise(0))
+            .as("in_media"))
+      seen.select(col("doc_id"))
+        .join(forest.withColumnRenamed("d1", "doc_id")
+          .hint("shuffle_hash"), Seq("doc_id"), "left")
+        .join(modalities.hint("shuffle_hash"), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("d2"), col("doc_id")).as("cluster"),
+          when(coalesce(col("d2"), col("doc_id")) === col("doc_id"),
+            1).otherwise(0).as("keep"),
+          (coalesce(col("in_text"), lit(0))
+            + coalesce(col("in_media"), lit(0)))
+            .as("n_modalities"))
+    }
+    val eVerd = Bridge.asNullable(verdicts(eHashes, eForest, eParts).schema)
+    val corpusChunks = Staging.staged(spark, dir, "xmodal",
+      orderedChunksStamp, variant = s"_c$chunks")(
+      stageOrderedChunks(docs.select(col("doc_id"), col("text")), chunks))
+    val state = streamedCommits(spark, "q117_xmodal", corpusChunks.path,
+        corpusChunks.schema(spark), 1, root, ckpt) { c =>
       val b = c.batch.select(col("doc_id"), col("text")).persist()
       try {
         val (bBands0, bHashes0) = textState(b)
@@ -1282,11 +1149,9 @@ object Continuous {
                 // union's stale origin constraints — the same
                 // Spark 4.1 guard starContract's own checkpoints
                 // need (q86's union shape).
-                val contractIn =
-                  org.apache.spark.sql.graft.Bridge
-                    .dropOriginConstraints(prevForest
-                      .unionByName(textPairs.union(mE))
-                      .localCheckpoint())
+                val contractIn = Bridge.dropOriginConstraints(
+                  prevForest.unionByName(textPairs.union(mE))
+                    .localCheckpoint())
                 val labels =
                   graft.operators.Curation.connectedComponentsStar(
                     contractIn)
@@ -1299,26 +1164,9 @@ object Continuous {
           // current cluster/keep/n_modalities (earlier verdicts may
           // legitimately flip when clusters merge)
           labeled(spark, "q117: verdict snapshot") {
-            val forest = spark.read.schema(eForest.schema)
-              .parquet(s"${c.dir}/forest")
-            val parts = c.read("parts", eParts.schema)
-              .groupBy(col("doc_id"))
-              .agg(max(when(col("modality") === "text", 1).otherwise(0))
-                  .as("in_text"),
-                max(when(col("modality") === "media", 1).otherwise(0))
-                  .as("in_media"))
-            c.read("hashes", eHashes.schema)
-              .select(col("doc_id"))
-              .join(forest.withColumnRenamed("d1", "doc_id")
-                .hint("shuffle_hash"), Seq("doc_id"), "left")
-              .join(parts.hint("shuffle_hash"), Seq("doc_id"), "left")
-              .select(col("doc_id"),
-                coalesce(col("d2"), col("doc_id")).as("cluster"),
-                when(coalesce(col("d2"), col("doc_id")) === col("doc_id"),
-                  1).otherwise(0).as("keep"),
-                (coalesce(col("in_text"), lit(0))
-                  + coalesce(col("in_media"), lit(0)))
-                  .as("n_modalities"))
+            verdicts(c.read("hashes", eHashes.schema),
+              spark.read.schema(eForest.schema).parquet(s"${c.dir}/forest"),
+              c.read("parts", eParts.schema))
               .write.mode("overwrite").parquet(s"${c.dir}/verdicts")
           }
         } finally {
@@ -1326,16 +1174,17 @@ object Continuous {
         }
       } finally { b.unpersist(); () }
     }
-    val last = state.latest("verdicts")
-    require(last.nonEmpty, "cross-modal stream produced no commits")
-    val out = spark.read.parquet(last.get)
-    val rows = out.limit(maxVerdictRows + 1).collect()
-    require(rows.length <= maxVerdictRows,
-      s"decision frame exceeds $maxVerdictRows rows")
-    require(rows.length.toLong == docs.count(),
-      "one decision per ingested doc")
-    localFrame(spark, rows.toSeq, out.schema)
-      .orderBy(col("doc_id"))
+    // an empty corpus makes no commit: the batch twin's empty frame
+    val rows = state.latest("verdicts").fold(Array.empty[Row]) { last =>
+      val rows = spark.read.schema(eVerd).parquet(last)
+        .limit(maxVerdictRows + 1).collect()
+      require(rows.length <= maxVerdictRows,
+        s"decision frame exceeds $maxVerdictRows rows")
+      require(rows.length.toLong == docs.count(),
+        "one decision per ingested doc")
+      rows
+    }
+    localFrame(spark, rows.toSeq, eVerd).orderBy(col("doc_id"))
   }
 
   /** One progressive snapshot: progress fraction + the aggregate-so-far. */

@@ -69,4 +69,10 @@ object Bridge {
     * (`listenerBus` is private[spark], hence the bridge). */
   def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
+
+  /** `schema` as a parquet write and read back returns it: every field,
+    * array element and map value nullable (`asNullable` is
+    * private[spark]; the parquet reader applies it to every file schema). */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
 }

@@ -666,6 +666,35 @@ class StreamingSpec extends SparkSpec {
     } finally rmrf(fixture)
   }
 
+  test("q88 and q117: an empty documents fixture returns the batch " +
+      "twin's empty frame") {
+    // no rows: every replay batch is empty, so no commit ever runs and
+    // there is no snapshot or verdict key to read back
+    val fixture = "target/tmp/empty_documents"
+    Tables.documents(spark, sfDir).limit(0)
+      .coalesce(1).write.mode("overwrite")
+      .parquet(s"$fixture/documents.parquet")
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.map(f => f.name -> f.dataType.simpleString)
+    try {
+      val funnel = Continuous.streamedCurationFunnel(spark, fixture)
+      assert(shape(funnel) === shape(Continuous.streamedCurationFunnel(
+        spark, sfDir)))
+      assert(shape(funnel) === shape(
+        graft.operators.Curation.curationFunnel(spark, fixture)))
+      assert(funnel.collect().isEmpty)
+      val decisions = Continuous.streamedCrossModalDedup(spark, fixture)
+      assert(shape(decisions) === Seq("doc_id" -> "bigint",
+        "cluster" -> "bigint", "keep" -> "int", "n_modalities" -> "int"))
+      assert(shape(decisions) === shape(
+        graft.operators.Curation.crossModalStreamTwin(spark, fixture)))
+      assert(decisions.collect().isEmpty)
+    } finally {
+      rmrf(fixture)
+      rmrf(s"target/streamstage/${Staging.slug(fixture)}")
+    }
+  }
+
   test("q117: streamed cross-modal dedup converges to the batch twin " +
       "on any chunking") {
     def decisions(chunks: Int) =
@@ -807,8 +836,8 @@ class StreamingSpec extends SparkSpec {
           .write.mode("append").parquet(staged)
       val schema = spark.read.parquet(staged).schema
       def total(root: String, ckpt: String) =
-        Continuous.streamedCommits(spark, "commits_spec", staged, 1, root,
-            ckpt) { c => c.write(1, "rows" -> c.batch) }
+        Continuous.streamedCommits(spark, "commits_spec", staged, schema, 1,
+            root, ckpt) { c => c.write(1, "rows" -> c.batch) }
           .read("rows", schema).agg(count(lit(1)), sum($"v")).head()
           .toSeq
       val (first, rerun) = rerunLastBatch(total, (root, id) => {
