@@ -25,10 +25,11 @@ import graft.Staging
   *  - [[onlineAggregate]]: online aggregation (C4) — progressive snapshots
   *    of a bounded input at increasing progress fractions, final frame
   *    exact. Chunked file streaming (`maxFilesPerTrigger`) stands in for
-  *    HOP's snapshot progress thresholds; a stateless `foreachBatch`
-  *    combines each chunk's rows per task and the driver adds the task
-  *    partials into the running snapshot ([[foldReplay]], the combiner
-  *    contract — no state store)
+  *    HOP's snapshot progress thresholds; each chunk's row-level partial
+  *    is planned once, every task combines its rows and returns them
+  *    through a partial-return sink ([[FoldSink]]), and the driver adds
+  *    the task partials into the running snapshot ([[foldReplay]], the
+  *    combiner contract — no state store)
   *    — the SNAPSHOT stream of OutputFile.Type (progress<1) with the same
   *    final answer as batch. */
 object Continuous {
@@ -212,8 +213,9 @@ object Continuous {
     * (production ingestion ids are arrival-ordered). The mtimes set
     * replay order only; freshness is [[graft.Staging]]'s. The staging
     * build of the streamed index dedup (q99) and the streamed cross-modal
-    * dedup (q117). */
-  private def stageOrderedChunks(df: DataFrame, chunks: Int)(
+    * dedup (q117). The chunk column is materialized once, by an eager
+    * `localCheckpoint`, so the window runs once, not once per chunk. */
+  private[graft] def stageOrderedChunks(df: DataFrame, chunks: Int)(
       out: String): Unit = {
     import org.apache.spark.sql.expressions.Window
     // FIXTURE PLUMBING ONLY: the unpartitioned ntile window funnels the
@@ -222,10 +224,10 @@ object Continuous {
     // not copy this pattern into an operator; rank-then-limit or a keyed
     // window is the scale-safe shape.
     val chunked = df.withColumn("chunk",
-      ntile(chunks).over(Window.orderBy(col("doc_id"))) - 1)
+      ntile(chunks).over(Window.orderBy(col("doc_id"))) - 1).localCheckpoint()
     val (fs, _) = hfs(out)
     val base = System.currentTimeMillis()
-    for (i <- 0 until chunks) {
+    try for (i <- 0 until chunks) {
       val tmp = s"$out/_tmp$i"
       chunked.filter(col("chunk") === i).drop("chunk")
         .coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -238,7 +240,7 @@ object Continuous {
         s"staging rename failed: ${part.head.getPath} -> $dst")
       fs.setTimes(dst, base + i * 2000, -1)
       deleteRecursively(tmp)
-    }
+    } finally Bridge.releaseLocalCheckpoint(chunked)
   }
 
   /** Run independent driver-side actions CONCURRENTLY (guide §2.6) and
@@ -279,110 +281,89 @@ object Continuous {
     if (fs.exists(p)) { fs.delete(p, /*recursive=*/ true); () }
   }
 
-  /** The fold rule both halves of a [[foldReplay]] commit share, over
-    * rows as value arrays in the partial's schema: rows with equal values
-    * at `keyIdx` fold into one, their `longs` measures by
-    * `Math.addExact` and their `decimals` by exact BigDecimal addition. A
-    * null measure adds nothing, and a measure that is still null takes
-    * the next value — SQL `sum`'s null rule. Serializable: each task
-    * folds its own rows with it, and the driver folds the task partials
-    * into the snapshot with it. */
-  private final case class Fold(keyIdx: Seq[Int], longs: Seq[Int],
-      decimals: Seq[Int]) {
-    def into(acc: scala.collection.mutable.HashMap[Seq[Any], Array[Any]],
-        r: Array[Any]): Unit = {
-      val a = acc.getOrElseUpdate(keyIdx.map(r(_)), r)
-      def add(i: Int)(f: (Any, Any) => Any): Unit =
-        if (a(i) == null) a(i) = r(i)
-        else if (r(i) != null) a(i) = f(a(i), r(i))
-      if (a ne r) {
-        longs.foreach(add(_)((x, y) =>
-          Math.addExact(x.asInstanceOf[Long], y.asInstanceOf[Long])))
-        decimals.foreach(add(_)((x, y) => x.asInstanceOf[java.math.BigDecimal]
-          .add(y.asInstanceOf[java.math.BigDecimal])))
-      }
-    }
-  }
-
   /** The bounded aggregates' one run shape (q51, q52, q54,
     * [[onlineAggregate]]): replay `inputDir` `filesPerTrigger` files per
-    * `AvailableNow` commit through a STATELESS `foreachBatch` and add
-    * each commit's `partial` rows into a driver-side keyed snapshot —
-    * HOP's combiner (map output reduced before it moves) feeding
-    * Quatrain-style partial returns. The partial contract: rows keyed by
-    * `keys` whose other columns are measures that ADD — a count is
-    * `lit(1L)`, a sum is the value itself. A `groupBy(keys).agg(...)` of
-    * such measures is optional and costs a shuffle stage (two jobs under
-    * AQE); a row-level partial keeps the commit to ONE job of one stage
-    * and no shuffle: every task folds its own rows into one row per key
-    * ([[Fold]]) and the driver adds the task partials, by the same rule,
-    * into the snapshot. No state store, memory sink or temp view: a
-    * commit is that job plus the offset and commit log writes. Measures
-    * must be LongType or DecimalType (widened to precision 38: the
-    * running sum outgrows the partial's); others are refused before the
-    * stream starts — a double sum would depend on chunk order.
-    * `maxRows` caps every task's partial and the snapshot. Returns the
-    * snapshot after every commit, in the returned (widened) schema. */
+    * `AvailableNow` commit, with `partial` applied ONCE to the streaming
+    * frame, into a [[FoldSink]] — HOP's combiner (map output reduced
+    * before it moves) feeding Quatrain's partial returns. Spark plans scan
+    * + partial + write as one stage per commit: every task folds its own
+    * rows into one row per key ([[Fold]]) and returns them, and the driver
+    * adds the task partials, by the same rule, into a keyed accumulator on
+    * the stream thread. No state store, memory sink, temp view or
+    * per-commit re-plan: a commit is that job plus the offset and commit
+    * log writes.
+    *
+    * The partial contract: ROW-LEVEL rows keyed by `keys` whose other
+    * columns are measures that ADD — a count is `lit(1L)`, a sum is the
+    * value itself. Measures must be LongType or DecimalType (widened to
+    * precision 38: the running sum outgrows the partial's); others are
+    * refused before the stream starts — a double sum would depend on
+    * chunk order. A partial that aggregates or deduplicates (a
+    * `groupBy(keys).agg(...)`) would run as a stateful streaming operator
+    * and is refused next, naming the query. An input with no data files
+    * starts no stream and folds nothing. `maxRows` caps every task's
+    * partial and the accumulator. After every commit `onCommit(progress,
+    * rows)` sees the accumulator's rows — live arrays in the returned
+    * (widened) schema, to be copied if kept. Returns the last commit's
+    * snapshot (None when no commit ran) and that schema. */
   private def foldReplay(spark: SparkSession, inputDir: String,
       schema: StructType, name: String, partial: DataFrame => DataFrame,
-      keys: Seq[String], filesPerTrigger: Int,
-      maxRows: Int): (Seq[Snapshot], StructType) = {
-    val out = partial(spark.createDataFrame(
-      java.util.Collections.emptyList[Row](), schema)).schema
-    val keyIdx = keys.map(out.fieldIndex)
-    val measures = out.fields.indices.filterNot(keyIdx.contains)
-    measures.map(out(_)).foreach(f => f.dataType match {
-      case LongType | _: DecimalType => ()
-      case dt => throw new IllegalArgumentException(s"$name: measure " +
-        s"'${f.name}' is ${dt.simpleString}; the fold adds only " +
-        "LongType counts/sums and DecimalType sums exactly")
-    })
-    val (longs, decimals) = measures.partition(out(_).dataType == LongType)
-    val fold = Fold(keyIdx, longs, decimals)
-    val foldSchema = StructType(out.zipWithIndex.map {
-      case (f, i) => f.dataType match {
-        case d: DecimalType if !keyIdx.contains(i) =>
-          f.copy(dataType = DecimalType(DecimalType.MAX_PRECISION, d.scale))
-        case _ => f
-      } })
-    val acc = scala.collection.mutable.HashMap.empty[Seq[Any], Array[Any]]
-    val snapshots = scala.collection.mutable.ArrayBuffer.empty[Snapshot]
+      keys: Seq[String], filesPerTrigger: Int, maxRows: Int)(
+      onCommit: (Double, Iterable[Array[Any]]) => Unit)
+      : (Option[Snapshot], StructType) = {
     val (fs, dirP) = hfs(inputDir)
-    val totalChunks = math.ceil(fs.listStatus(dirP)
-      .count(_.getPath.getName.endsWith(".parquet")) / filesPerTrigger.toDouble)
+    val files = fs.listStatus(dirP).count(_.getPath.getName.endsWith(".parquet"))
+    val totalChunks = math.ceil(files / filesPerTrigger.toDouble)
     val ckpt = s"target/streamstage/ckpt/$name"
     deleteRecursively(ckpt) // a stale checkpoint would skip every file
     try boundedStream(spark) {
-      spark.readStream.schema(schema)
+      val rows = partial(spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", filesPerTrigger.toString)
-        .parquet(inputDir)
-        .writeStream.queryName(name)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          val parts = labeled(spark, s"$name: partial aggregate") {
-            partial(batch).rdd.mapPartitions { rows =>
-              val taskAcc =
-                scala.collection.mutable.HashMap.empty[Seq[Any], Array[Any]]
-              rows.foreach { r =>
-                fold.into(taskAcc, Array.tabulate(r.length)(r.get))
-                require(taskAcc.size <= maxRows,
-                  s"$name commit $id partial exceeds maxRows=$maxRows")
-              }
-              taskAcc.valuesIterator
-            }.collect()
-          }
-          snapshots.synchronized {
+        .parquet(inputDir))
+      val out = rows.schema
+      val keyIdx = keys.map(out.fieldIndex)
+      val measures = out.fields.indices.filterNot(keyIdx.contains)
+      measures.map(out(_)).foreach(f => f.dataType match {
+        case LongType | _: DecimalType => ()
+        case dt => throw new IllegalArgumentException(s"$name: measure " +
+          s"'${f.name}' is ${dt.simpleString}; the fold adds only " +
+          "LongType counts/sums and DecimalType sums exactly")
+      })
+      val (longs, decimals) = measures.partition(out(_).dataType == LongType)
+      val fold = Fold(keyIdx, longs, decimals)
+      val foldSchema = StructType(out.zipWithIndex.map {
+        case (f, i) => f.dataType match {
+          case d: DecimalType if !keyIdx.contains(i) =>
+            f.copy(dataType = DecimalType(DecimalType.MAX_PRECISION, d.scale))
+          case _ => f
+        } })
+      if (files == 0) (None, foldSchema)
+      else {
+        import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, DeduplicateWithinWatermark}
+        rows.queryExecution.analyzed.collectFirst {
+          case _: Aggregate => "aggregates"
+          case _: Deduplicate | _: DeduplicateWithinWatermark => "deduplicates"
+        }.foreach(what => throw new IllegalArgumentException(s"$name: the " +
+          s"partial $what, which a stream runs as a stateful operator; " +
+          s"give the fold one row per input row keyed by " +
+          s"${keys.mkString(", ")} (a count as lit(1L), a sum as the value)"))
+        val acc = scala.collection.mutable.HashMap.empty[Seq[Any], Array[Any]]
+        var last = Option.empty[Double]
+        val sink = new FoldSink(spark.sparkContext, name, out, fold, maxRows,
+          (id, parts) => acc.synchronized {
             parts.foreach(fold.into(acc, _))
             require(acc.size <= maxRows,
               s"$name snapshot $id exceeds maxRows=$maxRows")
-            snapshots += Snapshot(math.min((id + 1) / totalChunks, 1.0),
-              acc.valuesIterator.map(a => Row.fromSeq(a.toVector)).toVector)
-          }
-          ()
+            last = Some(math.min((id + 1) / totalChunks, 1.0))
+            onCommit(last.get, acc.values)
+          })
+        Bridge.startStream(rows, name, ckpt, sink, Trigger.AvailableNow())
+          .awaitTermination()
+        acc.synchronized {
+          (last.map(Snapshot(_, acc.valuesIterator
+            .map(a => Row.fromSeq(a.toVector)).toVector)), foldSchema)
         }
-        .start().awaitTermination()
-      (snapshots.toSeq, foldSchema)
+      }
     } finally deleteRecursively(ckpt) // each invocation is a fresh run
   }
 
@@ -395,15 +376,16 @@ object Continuous {
   }
 
   /** [[foldReplay]]'s final snapshot, finished, as a [[localFrame]] —
-    * empty, in the finished schema, when the input has no data files. */
+    * empty, in the finished schema, when the input has no data files.
+    * Only the last commit's fold is copied out. */
   private[graft] def foldedFrame(spark: SparkSession, inputDir: String,
       schema: StructType, name: String, partial: DataFrame => DataFrame,
       keys: Seq[String], finish: DataFrame => DataFrame): DataFrame = {
-    val (snaps, foldSchema) = foldReplay(spark, inputDir, schema, name,
-      partial, keys, filesPerTrigger = 2, maxRows = 1000000)
-    require(snaps.isEmpty || snaps.last.progress >= 1.0,
-      s"$name did not reach progress 1.0 (got ${snaps.map(_.progress)})")
-    val out = finished(spark, snaps.lastOption.fold(Seq.empty[Row])(_.rows),
+    val (last, foldSchema) = foldReplay(spark, inputDir, schema, name,
+      partial, keys, filesPerTrigger = 2, maxRows = 1000000)((_, _) => ())
+    require(last.forall(_.progress >= 1.0),
+      s"$name did not reach progress 1.0 (got ${last.map(_.progress)})")
+    val out = finished(spark, last.fold(Seq.empty[Row])(_.rows),
       foldSchema, finish)
     localFrame(spark, out.collect().toSeq, out.schema)
   }
@@ -899,13 +881,17 @@ object Continuous {
       .parquet(s"$seedRoot/hashes")
     val state = streamedCommits(spark, "q99_lsh", incChunks.path,
         incChunks.schema(spark), 1, root, ckpt) { c =>
-      val b = c.batch.select(col("doc_id"), col("text")).persist()
+      // the batch and its two state families, checkpointed EAGERLY: the
+      // probes and the state write below read each several times inside
+      // single jobs, and a lazy persist() let those reads race to build
+      // the same cache (BlockManager "already exists" warnings)
+      val b = c.batch.select(col("doc_id"), col("text")).localCheckpoint()
       try {
         val bBands = D.bandBuckets(D.signaturesOf(D.shinglesOf(b)))
-          .withColumn("inc", lit(1)).persist()
+          .withColumn("inc", lit(1)).localCheckpoint()
         val bHashes = b
           .select(col("doc_id"), md5(col("text")).as("h"))
-          .withColumn("inc", lit(1)).persist()
+          .withColumn("inc", lit(1)).localCheckpoint()
         try {
           // committed state ∪ the batch itself: the o.inc=0-or-smaller-
           // id predicate resolves both the cross-batch and the
@@ -943,8 +929,8 @@ object Continuous {
           // when a middle copy was dropped)
           c.write(1, "verdicts" -> verd, "bands" -> bBands,
             "hashes" -> bHashes)
-        } finally { bBands.unpersist(); bHashes.unpersist(); () }
-      } finally { b.unpersist(); () }
+        } finally Seq(bBands, bHashes).foreach(Bridge.releaseLocalCheckpoint)
+      } finally Bridge.releaseLocalCheckpoint(b)
     }
     // an increment with no incoming doc writes no verdicts family: that
     // is an empty verdict frame, not a missing path
@@ -1040,12 +1026,14 @@ object Continuous {
       stageOrderedChunks(docs.select(col("doc_id"), col("text")), chunks))
     val state = streamedCommits(spark, "q117_xmodal", corpusChunks.path,
         corpusChunks.schema(spark), 1, root, ckpt) { c =>
-      val b = c.batch.select(col("doc_id"), col("text")).persist()
+      // the batch and its three index families, checkpointed EAGERLY
+      // (as q99's): several stages of one job read each of them
+      val b = c.batch.select(col("doc_id"), col("text")).localCheckpoint()
       try {
         val (bBands0, bHashes0) = textState(b)
-        val bBands = bBands0.persist()
-        val bHashes = bHashes0.persist()
-        val bFp = graft.operators.Multimodal.blockhashOf(b).persist()
+        val bBands = bBands0.localCheckpoint()
+        val bHashes = bHashes0.localCheckpoint()
+        val bFp = graft.operators.Multimodal.blockhashOf(b).localCheckpoint()
         try {
           // committed state ∪ the batch itself: one probe resolves both
           // cross-batch and within-batch matches
@@ -1169,10 +1157,9 @@ object Continuous {
               c.read("parts", eParts.schema))
               .write.mode("overwrite").parquet(s"${c.dir}/verdicts")
           }
-        } finally {
-          bBands.unpersist(); bHashes.unpersist(); bFp.unpersist(); ()
-        }
-      } finally { b.unpersist(); () }
+        } finally
+          Seq(bBands, bHashes, bFp).foreach(Bridge.releaseLocalCheckpoint)
+      } finally Bridge.releaseLocalCheckpoint(b)
     }
     // an empty corpus makes no commit: the batch twin's empty frame
     val rows = state.latest("verdicts").fold(Array.empty[Row]) { last =>
@@ -1193,10 +1180,10 @@ object Continuous {
   /** Online aggregation over a bounded multi-file input: stream the files
     * `filesPerTrigger` at a time, fold each chunk's `partial` into the
     * running aggregate and emit it through `finish` after each chunk.
-    * The partial contract is [[foldReplay]]'s: rows keyed by `keys` whose
-    * measures add (LongType counts and sums, DecimalType sums); a
-    * `groupBy(keys).agg(...)` is optional and costs a shuffle stage, a
-    * row-level partial folds map-side in one stage. Returns all
+    * The partial contract is [[foldReplay]]'s: row-level rows keyed by
+    * `keys` whose measures add (LongType counts and sums, DecimalType
+    * sums), folded map-side in one stage per chunk; a partial that
+    * aggregates is refused before the stream starts. Returns all
     * snapshots; the last has progress 1.0 and is bit-equal to the batch
     * answer. */
   def onlineAggregate(
@@ -1208,10 +1195,13 @@ object Continuous {
       finish: DataFrame => DataFrame = identity,
       filesPerTrigger: Int = 1,
       maxSnapshotRows: Int = 100000): Seq[Snapshot] = {
-    val (snaps, foldSchema) = foldReplay(spark, inputDir, schema,
+    val snaps = scala.collection.mutable.ArrayBuffer.empty[Snapshot]
+    val (_, foldSchema) = foldReplay(spark, inputDir, schema,
       s"online_${runSeq.incrementAndGet()}", partial, keys, filesPerTrigger,
-      maxSnapshotRows)
-    snaps.map(s => s.copy(rows =
+      maxSnapshotRows) { (progress, rows) =>
+      snaps += Snapshot(progress, rows.map(a => Row.fromSeq(a.toVector)).toVector)
+    }
+    snaps.toSeq.map(s => s.copy(rows =
       finished(spark, s.rows, foldSchema, finish).collect().toSeq))
   }
 }

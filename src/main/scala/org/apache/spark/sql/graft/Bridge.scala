@@ -70,6 +70,23 @@ object Bridge {
   def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty()
 
+  /** Start streaming `df` into `sink`, a DSv2 table with
+    * `STREAMING_WRITE`, in append mode — what `DataStreamWriter.start()`
+    * does for a named format, without a provider class or a registry to
+    * look the table up by (`startQuery` is private[sql]). */
+  def startStream(df: org.apache.spark.sql.DataFrame, name: String,
+      checkpoint: String, sink: org.apache.spark.sql.connector.catalog.Table,
+      trigger: org.apache.spark.sql.streaming.Trigger)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    df.sparkSession.streams
+      .asInstanceOf[org.apache.spark.sql.classic.StreamingQueryManager]
+      .startQuery(userSpecifiedName = Some(name),
+        userSpecifiedCheckpointLocation = Some(checkpoint),
+        df = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]],
+        extraOptions = Map.empty, sink = sink,
+        outputMode = org.apache.spark.sql.streaming.OutputMode.Append(),
+        trigger = trigger)
+
   /** `schema` as a parquet write and read back returns it: every field,
     * array element and map value nullable (`asNullable` is
     * private[spark]; the parquet reader applies it to every file schema). */

@@ -176,11 +176,12 @@ class CheckpointSpec extends SparkSpec {
       val in = "target/tmp/ckptmgr/fold_in"
       val src = Tables.events(spark, sfDir)
       src.limit(10).write.mode("overwrite").parquet(in)
-      // inside a commit the engine's manager is the session's
+      // while the stream is planned and runs the engine's manager is the
+      // session's
       @volatile var inCommit: (Option[String], String) = null
       Continuous.onlineAggregate(spark, in, src.schema, { b =>
         inCommit = settings
-        b.groupBy($"event_type").agg(count(lit(1)).as("n"))
+        b.select($"event_type", lit(1L).as("n"))
       }, Seq("event_type"))
       assert(inCommit ===
         (Some(classOf[ForkFreeCheckpointFileManager].getName), "16"))
@@ -195,7 +196,7 @@ class CheckpointSpec extends SparkSpec {
       assert(settings === (None, "16"))
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         Continuous.onlineAggregate(spark, in, src.schema,
-          _.groupBy($"event_type").agg(count(lit(1)).as("n")),
+          _.select($"event_type", lit(1L).as("n")),
           Seq("event_type"), maxSnapshotRows = 0)
       }
       assert(settings === (None, "16"))

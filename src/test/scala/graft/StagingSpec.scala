@@ -137,6 +137,40 @@ class StagingSpec extends SparkSpec {
     } finally cleanUp()
   }
 
+  test("staging 5 ordered chunks runs the chunking window in one plan") {
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    import org.apache.spark.sql.execution.QueryExecution
+    val out = "target/tmp/ordered_chunks_once"
+    rmrf(out)
+    val windowed = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (qe.analyzed.exists(_.isInstanceOf[Window])) {
+          windowed.incrementAndGet(); ()
+        }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    val docs = Tables.documents(spark, sfDir)
+    org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+    spark.listenerManager.register(listener)
+    try {
+      Continuous.stageOrderedChunks(docs, 5)(out)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    try {
+      assert(windowed.get === 1, "plans with a Window node")
+      val ids = (0 until 5).map(i => spark.read
+        .parquet(s"$out/chunk$i.parquet").collect().map(_.getAs[Long]("doc_id"))
+        .toSeq)
+      assert(ids.flatten.sorted === docs.collect()
+        .map(_.getAs[Long]("doc_id")).toSeq.sorted, "every doc, once")
+      ids.sliding(2).foreach { case Seq(a, b) =>
+        assert(a.max < b.min, "chunks ascend by doc_id") }
+    } finally rmrf(out)
+  }
+
   test("a second Tables.load of an unchanged fixture runs no Spark job") {
     try {
       writeDocuments(extra = false)

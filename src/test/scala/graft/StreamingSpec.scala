@@ -170,7 +170,11 @@ class StreamingSpec extends SparkSpec {
     val finish = (df: org.apache.spark.sql.DataFrame) =>
       df.withColumn("sum_v", $"sum_v".cast("double"))
     val agg = partial.andThen(finish)
-    val snaps = Continuous.onlineAggregate(spark, dir, src.schema, partial,
+    // the streamed form: one row per event, the fold adds them up
+    val rowLevel = (df: org.apache.spark.sql.DataFrame) => df
+      .select($"event_type", lit(1L).as("n"),
+        $"value".cast("decimal(18,2)").as("sum_v"))
+    val snaps = Continuous.onlineAggregate(spark, dir, src.schema, rowLevel,
       Seq("event_type"), finish)
     assert(snaps.size === 4)
     def asSet(rows: Seq[org.apache.spark.sql.Row]) =
@@ -346,7 +350,11 @@ class StreamingSpec extends SparkSpec {
       df => df.select(explode(split($"text", "\\s+")).as("word"))
         .filter($"word" =!= "")
         .groupBy($"word").agg(count(lit(1)).as("cnt"))
-    val snaps = Continuous.onlineAggregate(spark, dir, docs.schema, topk,
+    // the streamed form: one row per word, the fold counts them
+    val words: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
+      df => df.select(explode(split($"text", "\\s+")).as("word"))
+        .filter($"word" =!= "").select($"word", lit(1L).as("cnt"))
+    val snaps = Continuous.onlineAggregate(spark, dir, docs.schema, words,
       Seq("word"))
     def top3(rows: Seq[org.apache.spark.sql.Row]) =
       rows.map(r => (r.getString(0), r.getLong(1)))
@@ -581,7 +589,7 @@ class StreamingSpec extends SparkSpec {
     src.repartition(4).write.mode("overwrite").parquet(dir)
     val snaps = Continuous.onlineAggregate(
       spark, dir, src.schema,
-      df => df.groupBy($"event_type").agg(count(lit(1)).as("n")),
+      df => df.select($"event_type", lit(1L).as("n")),
       Seq("event_type"))
     assert(snaps.nonEmpty)
     assert(snaps.last.progress === 1.0)
@@ -1065,8 +1073,8 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  test("a row-level partial and its groupBy form fold to identical " +
-      "snapshots at every progress point (null and decimal(38,4) measures)") {
+  test("a row-level partial folds to its batch groupBy form at every " +
+      "progress point (null and decimal(38,4) measures)") {
     import org.apache.spark.sql.{DataFrame, Row}
     import org.apache.spark.sql.types._
     import scala.jdk.CollectionConverters._
@@ -1112,19 +1120,70 @@ class StreamingSpec extends SparkSpec {
     assert(rowLevel(empty).schema("p").dataType === DecimalType(38, 4))
     val byRow = Continuous.onlineAggregate(spark, dir, schema, rowLevel,
       Seq("k"))
-    val byGroup = Continuous.onlineAggregate(spark, dir, schema, grouped,
-      Seq("k"))
     def asSet(rows: Seq[Row]) = rows.map(_.toSeq).toSet
-    assert(byRow.size === 4 && byGroup.size === 4)
-    byRow.zip(byGroup).foreach { case (r, g) =>
-      assert(r.progress === g.progress)
-      assert(asSet(r.rows) === asSet(g.rows), s"progress ${r.progress}")
+    assert(byRow.size === 4)
+    byRow.zipWithIndex.foreach { case (r, i) =>
+      assert(r.progress === (i + 1) / 4.0)
+      val prefix = spark.createDataFrame(chunks.take(i + 1).flatten.asJava,
+        schema)
+      assert(asSet(r.rows) === asSet(grouped(prefix).collect().toSeq),
+        s"progress ${r.progress}")
     }
     val fin = byRow.last.rows.map(r => r.getString(0) -> r).toMap
     assert(fin("c").getLong(1) === 3L && fin("c").isNullAt(2) &&
       fin("c").isNullAt(3), "an all-null measure stays null")
     assert(fin("b").getDecimal(2) === bd("11.10"))
     assert(fin("d").isNullAt(3), "a null product adds nothing")
+  }
+
+  test("a groupBy partial is refused before its stream starts, naming " +
+      "the query") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
+    val dir = "target/tmp/fold_refuse_group_in"
+    val src = Tables.events(spark, sfDir)
+    src.limit(10).write.mode("overwrite").parquet(dir)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = {
+        started.add(String.valueOf(e.name)); ()
+      }
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try {
+      val err = intercept[IllegalArgumentException] {
+        Continuous.onlineAggregate(spark, dir, src.schema,
+          _.groupBy(col("event_type")).agg(count(lit(1)).as("n")),
+          Seq("event_type"))
+      }
+      val name = """online_\d+""".r.findFirstIn(err.getMessage)
+      assert(name.isDefined && err.getMessage.contains("aggregates"),
+        err.getMessage)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
+      assert(!started.contains(name.get), s"${name.get} started a stream")
+    } finally spark.streams.removeListener(listener)
+  }
+
+  test("the partial is planned once per run: invoked as often at 1 " +
+      "commit as at 4") {
+    val dir = "target/tmp/fold_calls_in"
+    val src = Tables.events(spark, sfDir)
+    src.repartition(4).write.mode("overwrite").parquet(dir)
+    def run(filesPerTrigger: Int): (Int, Int) = {
+      val calls = new java.util.concurrent.atomic.AtomicInteger(0)
+      val snaps = Continuous.onlineAggregate(spark, dir, src.schema,
+        { df => calls.incrementAndGet()
+          df.select(col("event_type"), lit(1L).as("n")) },
+        Seq("event_type"), filesPerTrigger = filesPerTrigger)
+      (snaps.size, calls.get)
+    }
+    val (oneCommit, callsAtOne) = run(4)
+    val (fourCommits, callsAtFour) = run(1)
+    assert(oneCommit === 1 && fourCommits === 4)
+    assert(callsAtFour === callsAtOne,
+      s"partial invoked $callsAtOne times at 1 commit, $callsAtFour at 4")
   }
 
   test("a task partial wider than maxRows fails the stream, naming the " +
