@@ -366,8 +366,7 @@ object SparkEntry {
       // framesKey: this fixture view is deterministic per dir, so the
       // checkpointed sketch frames cache for the session like q126's.
       // The gate params ride the key, built from the values the call
-      // passes, matching the sketch/jprefix/cprefix key schema so a
-      // param change can never serve stale frames (ADVICE r18 low).
+      // passes, so a param change can never serve stale frames.
       val thresholdPpm = 500000L
       val maxDf = 100
       Dedup.containmentSketchOf(
@@ -375,7 +374,7 @@ object SparkEntry {
           concat(lit("doc-"), lpad(col("doc_id").cast("string"), 9, "0"))
             .as("doc_id"), col("text")),
         thresholdPpm = thresholdPpm, maxDf = maxDf,
-        framesKey = Some(s"sketchfp:$d:$thresholdPpm:$maxDf"))
+        framesKey = Some(StageMemo.Stages.sketchfp(d, thresholdPpm, maxDf)))
     }),
     // Sketch-width calibration (q128, r17): the MeasuredK sizing rule as
     // an oracle-checkable frame — the sampled recall ladder (true pairs

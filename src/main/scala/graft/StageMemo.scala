@@ -2,19 +2,29 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-scoped memo for shared pipeline stages (shingle frames, minhash
-  * signatures, normalized embedding vectors). Multi-operator rounds reuse
-  * the same expensive intermediate — memoizing the persisted frame means
-  * the shuffle/scan runs once per session instead of once per caller, and
-  * `persist` is called exactly once per plan (no "already cached" churn
-  * across bench laps). Inputs are assumed immutable for the session (the
-  * fixture contract); call [[clear]] after rewriting an input dir in place.
+/** Session-scoped memo for shared pipeline stages: persisted frames
+  * (shingle frames, minhash signatures, normalized embedding vectors),
+  * checkpointed frame tuples (the prefix/sketch families' docLen/ranked/
+  * arrays sets) and scalars (a gate's corpus count). Multi-operator rounds
+  * reuse the same expensive intermediate, so it is built once per session
+  * instead of once per caller, and `persist` is called exactly once per
+  * plan (no "already cached" churn across bench laps).
   *
-  * Retention is bounded: at most [[maxEntries]] stages stay pinned, evicted
-  * least-recently-used (the evicted frame is unpersisted — its plan still
-  * works, it just recomputes). A long-lived session cycling through many
-  * corpora therefore cannot accumulate unbounded pinned storage; [[clear]]
-  * remains the explicit full release.
+  * One table holds every entry with its release: `unpersist` for a
+  * persisted frame, [[releaseCheckpoints]] for a checkpointed tuple, a
+  * no-op for a scalar. Every entry is looked up by a typed [[Key]] of a
+  * stage registered in [[Stages]] with the fixture tables it derives from,
+  * and is served only while those tables' [[Staging.identity]] values are
+  * the ones it was built under: a fixture rewritten in place misses, and
+  * its stale entry is released, so nothing is invalidated by hand.
+  *
+  * Retention is bounded: at most [[maxEntries]] entries stay pinned,
+  * evicted least-recently-used. Each entry records the entries whose
+  * builds looked it up (its readers); evicting or releasing an entry
+  * evicts its readers with it. A checkpointed tuple has no lineage, so a
+  * reader left behind would fail on the released blocks instead of
+  * recomputing; evicted together, the reader's next lookup rebuilds both.
+  * [[clear]] remains the explicit full release.
   *
   * The memo also keeps attribution counters ([[Stats]]): hits, misses,
   * evictions, and per-key build wall-ms. Without them a shared stage's
@@ -26,16 +36,63 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 private[graft] object StageMemo {
 
-  /** Eviction budget: max stages kept pinned. The engine's distinct shared
-    * frame stages per corpus are counted by StageMemoSpec from the main
-    * sources (13 today: shingles, ngraminter, ngraminterS, incpairs,
-    * minhash, bands, simhash, dupspan_grams, blockhash, bm25_topdocs,
-    * vecs, lshpairs, kmeans — the ngram view was de-memoized in r19), and
-    * the spec asserts
-    * `2 × keys + 4 ≤ maxEntries` — a bench run pins a warm-up corpus
-    * plus a measured corpus, and 4 headroom keeps a new stage from
-    * silently evicting a live entry mid-lap. */
-  @volatile private[graft] var maxEntries: Int = 32
+  /** A memoized stage: its name and the fixture tables its entries derive
+    * from. `stage(dir, params…)` is the key of one entry. */
+  final case class Stage private[graft] (name: String, sources: Seq[String]) {
+    def apply(dir: String, params: Any*): Key =
+      Key(this, dir, params.map(_.toString))
+  }
+
+  /** One entry's key: the stage, the fixture dir and the builder's
+    * resolved parameters. [[name]] (`stage:dir:params`) is its
+    * attribution name in [[Stats]]. */
+  final case class Key(stage: Stage, dir: String, params: Seq[String]) {
+    def name: String = (stage.name +: dir +: params).mkString(":")
+    def :+(param: Any): Key = copy(params = params :+ param.toString)
+    /** The key of the doc-id fingerprint dictionary routed beside this
+      * key's entry. */
+    def dict: Key = Key(Stages.dict, dir, stage.name +: params)
+  }
+
+  /** THE stage registry: every stage the engine memoizes, once, with the
+    * fixture tables it derives from. `StageMemoSpec` checks that every
+    * registered stage is used and that no memo key is a string. */
+  object Stages {
+    private val registry = Seq.newBuilder[Stage]
+    private def stage(name: String, sources: String*): Stage = {
+      val s = Stage(name, sources); registry += s; s
+    }
+    // persisted frames
+    val shingles = stage("shingles", "documents")
+    val ngraminter = stage("ngraminter", "documents")
+    val ngraminterS = stage("ngraminterS", "documents")
+    val incpairs = stage("incpairs", "documents")
+    val minhash = stage("minhash", "documents")
+    val bands = stage("bands", "documents")
+    val simhash = stage("simhash", "documents")
+    val dupspan_grams = stage("dupspan_grams", "documents")
+    val blockhash = stage("blockhash", "documents")
+    val bm25_topdocs = stage("bm25_topdocs", "documents")
+    val vecs = stage("vecs", "embeddings")
+    val lshpairs = stage("lshpairs", "embeddings")
+    val kmeans = stage("kmeans", "embeddings")
+    // checkpointed tuples, and the fingerprint dictionary ([[Key.dict]])
+    val jprefix = stage("jprefix", "documents")
+    val cprefix = stage("cprefix", "documents")
+    val sketch = stage("sketch", "documents")
+    val sketchfp = stage("sketchfp", "documents")
+    val dict = stage("dict", "documents")
+    // scalars
+    val vecs_count = stage("vecs_count", "embeddings")
+
+    val all: Seq[Stage] = registry.result()
+  }
+
+  /** Eviction budget: max entries kept pinned. A bench run pins a warm-up
+    * corpus plus a measured corpus, one entry per registered stage each,
+    * and 4 headroom keeps a new stage from silently evicting a live entry
+    * mid-lap — so the default follows the registry. */
+  @volatile private[graft] var maxEntries: Int = 2 * Stages.all.size + 4
 
   /** When true, a memo miss materializes the persisted frame immediately
     * (`count()` populates every cache partition) so the recorded build-ms
@@ -61,138 +118,110 @@ private[graft] object StageMemo {
   private var evictCount = 0L
   private val buildLog =
     scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]
-  // exclusive-time bookkeeping for nested builds (single-threaded under the
-  // memo lock, so a plain var is enough)
+  // nested-build bookkeeping (single-threaded under the table lock, so
+  // plain vars are enough): the exclusive-time child sum, and the slots
+  // of the builds in progress, innermost first
   private var childMs = 0L
+  private var building: List[Slot] = Nil
 
-  private val memo =
-    new java.util.LinkedHashMap[(SparkSession, String), DataFrame](
-      16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), DataFrame]): Boolean =
-        if (this.size() > maxEntries) {
-          e.getValue.unpersist(); evictCount += 1; true
-        } else false
-    }
-
-  def apply(spark: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = memo.synchronized {
-    val k = (spark, key)
-    val cached = memo.get(k) // get() refreshes LRU order
-    if (cached != null) { hitCount += 1; cached }
-    else {
-      missCount += 1
-      val parentChild = childMs
-      childMs = 0L
-      val t0 = System.nanoTime()
-      var df: DataFrame = null
-      try {
-        df = build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (eagerBuild) df.count() // materialize: build-ms is the real cost
-        df
-      } catch {
-        case e: Throwable =>
-          if (df != null) df.unpersist()
-          throw e
-      } finally {
-        val totalMs = (System.nanoTime() - t0) / 1000000L
-        val exclusiveMs = totalMs - childMs
-        val (n, ms) = buildLog.getOrElse(key, (0L, 0L))
-        buildLog.update(key, (n + 1, ms + exclusiveMs))
-        // the parent's build "contains" this one: report our full time up
-        childMs = parentChild + totalMs
-      }
-      memo.put(k, df)
-      df
-    }
+  private type Slot = (SparkSession, Key)
+  private final class Entry(val value: Any, val identity: Seq[String],
+      val release: () => Unit) {
+    var readers = Set.empty[Slot]
   }
 
-  /** Small scalar companion memo (e.g. the corpus count a budget gate
-    * needs): same lifetime as the frames, cleared together. Keeps an eager
-    * `count()` job from re-running on every warm invocation of a gated
-    * operator. Unbounded by design — entries are a FEW BYTES (counts,
-    * byte estimates, validation flags; anything holding pinned storage
-    * belongs in [[frames]]) and keyed by the same per-corpus stage names
-    * as the frame memo. Not counted in [[Stats]]: the frames are where
-    * the build cost lives. */
-  private val scalars =
-    new java.util.HashMap[(SparkSession, String), Any]()
+  private val table =
+    new java.util.LinkedHashMap[Slot, Entry](16, 0.75f, /*accessOrder=*/ true)
 
-  def scalar[T](spark: SparkSession, key: String)(build: => T): T =
-    memo.synchronized {
-      val k = (spark, key)
-      val cached = scalars.get(k)
-      if (cached != null) cached.asInstanceOf[T]
-      else { val v = build; scalars.put(k, v); v }
-    }
+  /** The persisted frame under `key`, built and persisted on a miss. */
+  def apply(spark: SparkSession, key: Key)(build: => DataFrame): DataFrame =
+    lookup(spark, key) {
+      val df =
+        build.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try { if (eagerBuild) df.count() } // build-ms is the real cost
+      catch { case e: Throwable => df.unpersist(); throw e }
+      df
+    }(_.unpersist())
 
-  /** Eviction budget for [[frames]] tuples. The distinct framesKey
-    * families the fixture entries stash per corpus are counted by
-    * StageMemoSpec from the main sources (jprefix, cprefix, sketch,
-    * sketchfp + its dict companion — 5 today); the spec asserts
-    * `2 × families + 4 ≤ maxFrameTuples`, the same two-corpus-plus-
-    * headroom arithmetic as [[maxEntries]]. */
-  @volatile private[graft] var maxFrameTuples: Int = 16
+  /** The checkpointed frame tuple under `key`: localCheckpoints, already
+    * materialized, so no persist on top. A released tuple cannot be
+    * recomputed; a miss re-invokes the builder. */
+  def checkpointed[T](spark: SparkSession, key: Key)(build: => T): T =
+    lookup(spark, key)(build)(releaseCheckpoints)
 
-  private val frameStash =
-    new java.util.LinkedHashMap[(SparkSession, String), (Any, Any => Unit)](
-      16, 0.75f, /*accessOrder=*/ true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String), (Any, Any => Unit)])
-          : Boolean =
-        if (this.size() > maxFrameTuples) {
-          val (v, release) = e.getValue; release(v); true
-        } else false
-    }
+  /** The scalar under `key` (a gate's corpus count): keeps an eager job
+    * from re-running on every warm invocation. */
+  def scalar[T](spark: SparkSession, key: Key)(build: => T): T =
+    lookup(spark, key)(build)(_ => ())
 
-  /** Bounded session stash for CHECKPOINTED frame tuples (the prefix/
-    * sketch families' docLen/ranked/arrays sets). These are
-    * localCheckpoints — already materialized, so the frame memo's
-    * persist-on-top would be redundant — but they pin corpus-sized RDD
-    * blocks, so unlike [[scalar]] entries they MUST be bounded and
-    * released: eviction (least-recently-used past [[maxFrameTuples]])
-    * and [[clear]] invoke `release`, which unpersists the tuple's
-    * checkpointed RDDs (r18 stashed these on the scalar side, which is
-    * unbounded and never unpersists — the ADVICE-r18 storage-budget
-    * leak). A released tuple CANNOT be recomputed (checkpoints have no
-    * lineage); callers must re-invoke the builder, which is what a
-    * stash miss does. Frames DERIVED from a tuple (the consumers' plans,
-    * and any [[apply]] entry built over them) are not released with it:
-    * recomputed after the eviction they fail on the missing blocks. No
-    * dependency edge records that yet — see the call sites' note at
-    * `Dedup.cachedFrames`. */
-  def frames[T](spark: SparkSession, key: String)(build: => T)(
-      release: T => Unit): T =
-    memo.synchronized {
-      val k = (spark, key)
-      val cached = frameStash.get(k) // get() refreshes LRU order
-      if (cached != null) cached._1.asInstanceOf[T]
-      else {
-        val v = build
-        frameStash.put(k, (v, release.asInstanceOf[Any => Unit]))
-        v
+  /** Unpersist every checkpointed DataFrame reachable through a tuple
+    * (other values pass through untouched). */
+  private def releaseCheckpoints(v: Any): Unit = v match {
+    case ds: org.apache.spark.sql.Dataset[_] =>
+      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(ds.toDF())
+    case p: Product => p.productIterator.foreach(releaseCheckpoints)
+    case _ => ()
+  }
+
+  private def lookup[T](spark: SparkSession, key: Key)(build: => T)(
+      release: T => Unit): T = table.synchronized {
+    val slot = (spark, key)
+    val identity = key.stage.sources.map(Staging.identity(key.dir, _))
+    val cached = table.get(slot) // get() refreshes LRU order
+    val v =
+      if (cached != null && cached.identity == identity) {
+        hitCount += 1
+        cached.value.asInstanceOf[T]
+      } else {
+        drop(slot) // built over a rewritten fixture: stale
+        missCount += 1
+        val parentChild = childMs
+        childMs = 0L
+        building = slot :: building
+        val t0 = System.nanoTime()
+        val built = try build finally {
+          building = building.tail
+          val totalMs = (System.nanoTime() - t0) / 1000000L
+          val (n, ms) = buildLog.getOrElse(key.name, (0L, 0L))
+          buildLog.update(key.name, (n + 1, ms + totalMs - childMs))
+          // the parent's build "contains" this one: report our full time up
+          childMs = parentChild + totalMs
+        }
+        table.put(slot, new Entry(built, identity, () => release(built)))
+        while (table.size > maxEntries) {
+          val before = table.size
+          drop(table.keySet.iterator.next())
+          evictCount += before - table.size
+        }
+        built
       }
+    // the enclosing build reads this entry: it goes when this one does
+    building.headOption.foreach { r =>
+      val e = table.get(slot)
+      if (e != null) e.readers += r
     }
+    v
+  }
 
-  private[graft] def frameStashSize: Int =
-    memo.synchronized(frameStash.size())
+  /** Remove and release the entry at `slot`, and its readers with it. */
+  private def drop(slot: Slot): Unit = {
+    val e = table.remove(slot)
+    if (e != null) { e.release(); e.readers.foreach(drop) }
+  }
 
-  /** Drop and unpersist every memoized stage. Counters survive — they are
+  /** Drop and release every memoized entry. Counters survive — they are
     * windowed by [[statsSnapshot]], not by cache lifetime (the cold bench
     * lap clears the cache before every query and still wants one lap-wide
     * attribution record). */
-  def clear(): Unit = memo.synchronized {
-    memo.values().forEach(_.unpersist())
-    memo.clear()
-    scalars.clear()
-    frameStash.values().forEach { case (v, release) => release(v) }
-    frameStash.clear()
+  def clear(): Unit = table.synchronized {
+    table.values().forEach(_.release())
+    table.clear()
   }
 
   /** Read the counters accumulated since the last reset; `reset = true`
     * starts the next attribution window. */
   private[graft] def statsSnapshot(reset: Boolean = false): Stats =
-    memo.synchronized {
+    table.synchronized {
       val s = Stats(hitCount, missCount, evictCount, buildLog.toMap)
       if (reset) {
         hitCount = 0L; missCount = 0L; evictCount = 0L
@@ -201,5 +230,5 @@ private[graft] object StageMemo {
       s
     }
 
-  private[graft] def size: Int = memo.synchronized(memo.size())
+  private[graft] def size: Int = table.synchronized(table.size())
 }

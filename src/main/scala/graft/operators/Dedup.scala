@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Engine.{hfs, labeled}
-import graft.{Staging, Tables}
+import graft.{StageMemo, Staging, Tables}
+import graft.StageMemo.Stages
 
 /** Document deduplication operators for large-scale training-data pipelines.
   *
@@ -29,56 +30,6 @@ object Dedup {
     * (InvertedIndex's LOWERCASED variant is deliberately separate — Lucene
     * analyzer semantics, not this tokenizer.) */
   private def tokens(c: Column): Column = TextAnalysis.tokens(c)
-
-  /** Session-scoped memo for shared pipeline stages (shingle pairs, minhash
-    * signatures, simhash fingerprints) — see [[graft.StageMemo]]. The
-    * end-to-end operators (q35) are built FROM the pairwise operators (q21),
-    * and a verify/bench round runs both. */
-  private def memo(spark: SparkSession, key: String)(
-      build: => DataFrame): DataFrame =
-    graft.StageMemo(spark, key)(build)
-
-  /** Session-scoped stash for the prefix/sketch families' CHECKPOINTED
-    * frame tuples (docLen / ranked / arrays and their sizing stats).
-    * These frames are localCheckpoints — already materialized, so the
-    * frame memo's persist-on-top would be redundant; [[graft.StageMemo.frames]]
-    * keeps the tuple for the session (cleared with the frame memo, so
-    * the bench's cold laps still pay every build), BOUNDED and released
-    * on eviction/clear — the r18 scalar-side stash was unbounded and
-    * never unpersisted the pinned checkpoint blocks (ADVICE r18 medium).
-    * Keyed EXPLICITLY by the fixture entry points (dir + the gate
-    * parameters baked into the frames); library callers handing
-    * arbitrary frames pass None and keep per-call builds — a caller's
-    * ad-hoc frame has no stable identity to cache under. Before this,
-    * each half of the paired fixture entries (q119/q120, q121/q122,
-    * q126/q128) re-built identical checkpointed frames per invocation.
-    *
-    * CROSS-CACHE DEPENDENCY, unrecorded: everything a call site derives
-    * from a stashed tuple — its candidate and verify plans, the frame it
-    * returns, and any frame a caller persists or memoizes over that
-    * ([[graft.StageMemo.apply]] included) — reads the tuple's checkpoint
-    * blocks, which have no lineage. Evicting the tuple (least-recently-
-    * used past `StageMemo.maxFrameTuples`, or `StageMemo.clear()`)
-    * releases those blocks, so a derived plan recomputed after the
-    * eviction fails with a missing-block error instead of rebuilding.
-    * No dependency edge evicts the derived entries alongside; the tuple
-    * budget (StageMemoSpec) only keeps eviction away from a live lap. */
-  private def cachedFrames[T](spark: SparkSession, key: Option[String])(
-      build: => T): T = key match {
-    case Some(k) =>
-      graft.StageMemo.frames(spark, s"frames:$k")(build)(releaseFrames)
-    case None => build
-  }
-
-  /** Release walker for stashed frame tuples: unpersist every
-    * checkpointed DataFrame reachable through the tuple (non-checkpoint
-    * frames and scalars pass through untouched). */
-  private def releaseFrames(v: Any): Unit = v match {
-    case df: DataFrame =>
-      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(df)
-    case p: Product => p.productIterator.foreach(releaseFrames)
-    case _ => ()
-  }
 
   /** Distinct word 3-shingles of a `(doc_id, text)` frame: (doc_id, s)
     * with `s` the engine's shingle-key currency — the first 8 md5 digest
@@ -131,7 +82,7 @@ object Dedup {
     * one verify/bench round scans + shuffles the shingle frame once, not
     * once per consumer. */
   private[graft] def shingles(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"shingles:$dir:long")(
+    StageMemo(spark, Stages.shingles(dir))(
       shinglesOf(Tables.documents(spark, dir)))
 
   /** Exact dedup: group identical texts by digest, keep the smallest doc_id
@@ -260,7 +211,7 @@ object Dedup {
   /** Memoized intersection stage over the fixture corpus. */
   private[graft] def interCounts(spark: SparkSession, dir: String,
       maxDf: Int): DataFrame =
-    memo(spark, s"ngraminter:$dir:$maxDf") {
+    StageMemo(spark, Stages.ngraminter(dir, maxDf)) {
       interCountsOfShingles(shingles(spark, dir), maxDf)
     }
 
@@ -274,7 +225,7 @@ object Dedup {
     * full stage's. */
   private[graft] def interCountsSampled(spark: SparkSession, dir: String,
       sppm: Long, capS: Int): DataFrame =
-    memo(spark, s"ngraminterS:$dir:$sppm:$capS") {
+    StageMemo(spark, Stages.ngraminterS(dir, sppm, capS)) {
       interCountsOfShingles(
         shingles(spark, dir).filter(docSamplePred(sppm)), capS)
     }
@@ -412,9 +363,7 @@ object Dedup {
     * production dedup (which runs ONE threshold) would choose. */
   def ngramJaccardPrefix(spark: SparkSession, dir: String,
       threshold: Double = 0.8, maxDf: Int = 100): DataFrame =
-    ngramJaccardPrefixOfShingles(shingles(spark, dir), threshold, maxDf,
-        framesKey = Some(s"jprefix:$dir:$threshold:$maxDf"))
-      .orderBy(col("d1"), col("d2"))
+    jaccardPrefixFixture(spark, dir, threshold, maxDf, "auto")
 
   /** [[ngramJaccardPrefix]] with the verify stage FORCED to the
     * no-broadcast co-partitioned merge shape (q120) — the verify the
@@ -423,9 +372,13 @@ object Dedup {
     * not just plan-proven. */
   def ngramJaccardPrefixMerge(spark: SparkSession, dir: String,
       threshold: Double = 0.8, maxDf: Int = 100): DataFrame =
+    jaccardPrefixFixture(spark, dir, threshold, maxDf, "merge")
+
+  /** The fixture form of both verify shapes: one frames key per gate. */
+  private def jaccardPrefixFixture(spark: SparkSession, dir: String,
+      threshold: Double, maxDf: Int, verify: String): DataFrame =
     ngramJaccardPrefixOfShingles(shingles(spark, dir), threshold, maxDf,
-        verify = "merge",
-        framesKey = Some(s"jprefix:$dir:$threshold:$maxDf"))
+        verify, framesKey = Some(Stages.jprefix(dir, threshold, maxDf)))
       .orderBy(col("d1"), col("d2"))
 
   /** [[ngramJaccardPrefix]] over an arbitrary `(doc_id, text)` frame.
@@ -680,7 +633,7 @@ object Dedup {
       maxBroadcastBytes: Long = 256L << 20,
       verifyChunks: Int = 0,
       diskBudgetBytes: Long = defaultDiskBudgetBytes,
-      framesKey: Option[String] = None): DataFrame = {
+      framesKey: Option[StageMemo.Key] = None): DataFrame = {
     val tn = math.round(threshold * 1e6)
     require(tn >= 1 && tn <= 1000000,
       s"threshold must be in (0, 1], got $threshold")
@@ -927,9 +880,10 @@ object Dedup {
 
   /** The one priced pair pipeline of the at-scale pair families (q119–
     * q122, q126/q127): knob checks, the checkpointed frame set (session-
-    * cached under `framesKey` — [[cachedFrames]]), the verify shape,
-    * the exchange pricing, and the slice loop; `family` supplies what
-    * differs, given the frames and the resolved verify mode.
+    * cached under `framesKey` — [[graft.StageMemo.checkpointed]]), the
+    * verify shape, the exchange pricing, and the slice loop; `family`
+    * supplies what differs, given the frames and the resolved verify
+    * mode.
     *
     * EXCHANGE PRICING (scaladoc at the pricing constants): a 0 chunk knob
     * is resolved from measured volume BEFORE the exchange launches —
@@ -960,9 +914,9 @@ object Dedup {
     *      = 1 with an auto verifyChunks could otherwise silently resolve
     *      thousands of verify jobs (ADVICE r15). */
   private def pricedPairs(sh: DataFrame, opName: String,
-      alternative: String, framesKey: Option[String], frames: => PairFrames,
-      verify: String, maxBroadcastBytes: Long, verifyChunks: Int,
-      candChunks: Int, diskBudgetBytes: Long)(
+      alternative: String, framesKey: Option[StageMemo.Key],
+      frames: => PairFrames, verify: String, maxBroadcastBytes: Long,
+      verifyChunks: Int, candChunks: Int, diskBudgetBytes: Long)(
       family: (PairFrames, String) => PairFamily): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     require(verify == "auto" || verify == "broadcast" || verify == "merge",
@@ -985,10 +939,10 @@ object Dedup {
     // unsliced pair frame's own jobs run in the caller's action
     def phase[T](name: String)(body: => T): T =
       labeled(sh.sparkSession, s"$opName: $name")(body)
-    // every frame derived below reads the stashed checkpoint blocks: an
-    // eviction of the tuple breaks it ([[cachedFrames]], cross-cache note)
     val fr = phase("frame build") {
-      cachedFrames(sh.sparkSession, framesKey)(frames) }
+      framesKey.fold(frames)(
+        StageMemo.checkpointed(sh.sparkSession, _)(frames))
+    }
     // resolved ONCE: the pricing aggregate is slice-invariant (ADVICE r14:
     // 32 slices re-priced it 32×)
     val mode = phase("verify pricing") {
@@ -1131,15 +1085,16 @@ object Dedup {
     * bigint body on [[DocIdRoute.frame]], and the route joins the output
     * ids back to the original ones. `dictKey` caches the guard's
     * corpus-sized validation action with the session's checkpointed
-    * frames ([[cachedFrames]], under `dict:<key>`); the dictionary frame
-    * itself stays lazy. */
+    * frames (under `dictKey.dict`); the dictionary frame itself stays
+    * lazy. */
   private def docIdRoute(frame: DataFrame, opName: String,
-      dictKey: Option[String] = None): DocIdRoute =
+      dictKey: Option[StageMemo.Key] = None): DocIdRoute =
     if (frame.schema("doc_id").dataType ==
         org.apache.spark.sql.types.LongType) DocIdRoute(frame, None)
     else DocIdRoute(fingerprinted(frame),
-      Some(cachedFrames(frame.sparkSession, dictKey.map(k => s"dict:$k"))(
-        docIdFingerprints(frame, opName))))
+      Some(dictKey.fold(docIdFingerprints(frame, opName))(k =>
+        StageMemo.checkpointed(frame.sparkSession, k.dict)(
+          docIdFingerprints(frame, opName)))))
 
   /** Resolves the verify SHAPE once per operator run: 'merge' passes
     * through; 'auto'/'broadcast' price the broadcast with ONE aggregate
@@ -2084,15 +2039,15 @@ object Dedup {
     * commit path: an appending caller's index mutates under the plan. */
   private def incPairsVsIndex(spark: SparkSession, indexPath: String,
       idxSh: DataFrame, newSh: DataFrame, threshold: Double, maxDf: Int,
-      pairsKey: Option[String]): DataFrame = pairsKey match {
+      pairsKey: Option[StageMemo.Key]): DataFrame = pairsKey match {
     // the index's committed version stamps the memo key: correctness no
     // longer rests on the comment-level convention that every caller
     // sharing a pairsKey probes content-identical index files — a future
     // caller reusing a key against an index that has since taken a
     // commit misses instead of silently reading the stale pair frame
     // (ADVICE r18; one cheap marker listing per memoized call).
-    case Some(k) => memo(spark,
-      s"incpairs:$k:v${committedVersion(indexPath)}")(
+    case Some(k) => StageMemo(spark,
+      k :+ s"v${committedVersion(indexPath)}")(
       incrementalPairsOf(idxSh.unionByName(newSh), newSh, threshold,
         maxDf))
     case None =>
@@ -2102,7 +2057,7 @@ object Dedup {
 
   def incrementalDedupAgainstIndex(spark: SparkSession, indexPath: String,
       incoming: DataFrame, threshold: Double = 0.8,
-      maxDf: Int = 100, pairsKey: Option[String] = None): DataFrame = {
+      maxDf: Int = 100, pairsKey: Option[StageMemo.Key] = None): DataFrame = {
     // string/UUID-keyed corpora run the POSTING machinery in fingerprint
     // currency (the index's stored currency — resolveIncomingCurrency
     // fingerprints the increment and re-runs the collision guard), while
@@ -2195,7 +2150,7 @@ object Dedup {
     // forest sits beside them), so the pair stage is one shared memo
     incrementalDedupAgainstIndex(spark, path, docs.filter(isInc),
       threshold, maxDf,
-      pairsKey = Some(s"$dir:mod10:$threshold:$maxDf"))
+      pairsKey = Some(mod10PairsKey(dir, threshold, maxDf)))
   }
 
   // ---------------------------------------------------------------------
@@ -2387,7 +2342,7 @@ object Dedup {
   def incrementalClustersAgainstIndex(spark: SparkSession, indexPath: String,
       incoming: DataFrame, threshold: Double = 0.8, maxDf: Int = 100,
       commit: Boolean = true, compactEvery: Int = 0,
-      pairsKey: Option[String] = None): DataFrame = {
+      pairsKey: Option[StageMemo.Key] = None): DataFrame = {
     require(compactEvery >= 0,
       s"compactEvery must be >= 1 commits, or 0 to disable: $compactEvery")
     val v = latestForestVersion(indexPath)
@@ -2543,8 +2498,12 @@ object Dedup {
       variant = idx.variant)(idx.build).path
     incrementalClustersAgainstIndex(spark, path, docs.filter(isInc),
       threshold, maxDf, commit = false,
-      pairsKey = Some(s"$dir:mod10:$threshold:$maxDf"))
+      pairsKey = Some(mod10PairsKey(dir, threshold, maxDf)))
   }
+
+  /** q94's and q118's shared pair-stage key. */
+  private def mod10PairsKey(dir: String, threshold: Double, maxDf: Int) =
+    Stages.incpairs(dir, "mod10", threshold, maxDf)
 
   /** Fixture form (q87): the increment is every 10th document
     * (doc_id ≡ 0 mod 10, ~10% of the corpus — a daily batch against the
@@ -2596,7 +2555,7 @@ object Dedup {
   /** Memoized unordered signature stage (used 3× inside [[minhashLsh]],
     * and by [[Curation.bloomDedup]]'s incremental band-membership check). */
   private[graft] def signatures(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"minhash:$dir")(signaturesOf(shingles(spark, dir)))
+    StageMemo(spark, Stages.minhash(dir))(signaturesOf(shingles(spark, dir)))
 
   /** MinHash+LSH near-dup candidates: 4 bands × 2 rows; docs sharing any
     * band bucket become candidates; estimated Jaccard = matching signature
@@ -2617,7 +2576,7 @@ object Dedup {
     * [[minhashLsh]] (q22) and [[Curation.bloomDedup]] (q49), so one
     * verify/bench round runs the signature explode+md5 pass once. */
   private[graft] def bands(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"bands:$dir")(bandBuckets(signatures(spark, dir)))
+    StageMemo(spark, Stages.bands(dir))(bandBuckets(signatures(spark, dir)))
 
   def minhashLsh(spark: SparkSession, dir: String,
       minEstJaccard: Double = 0.5): DataFrame = {
@@ -2723,7 +2682,7 @@ object Dedup {
   /** Memoized unordered fingerprint stage (self-joined in
     * [[simhashPairs]]). */
   private def fingerprints(spark: SparkSession, dir: String): DataFrame =
-    memo(spark, s"simhash:$dir") {
+    StageMemo(spark, Stages.simhash(dir)) {
       Tables.documents(spark, dir)
         .select(col("doc_id"),
           graft.functions.TextFunctions.simhash(tokens(col("text")))
@@ -2969,7 +2928,7 @@ object Dedup {
   def duplicatedSpans(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
     duplicatedSpansFrom(
-      memo(spark, s"dupspan_grams:$dir:8")(spanGramsOf(docs, 8)),
+      StageMemo(spark, Stages.dupspan_grams(dir, 8))(spanGramsOf(docs, 8)),
       docs, n = 8, minDocs = 2)
   }
 
@@ -3201,12 +3160,10 @@ object Dedup {
       sampleFraction: Double = 0.5, recallTargetPpm: Long = 995000L,
       verify: String = "auto",
       maxBroadcastBytes: Long = 256L << 20): DataFrame = {
-    // same frames cache key as containmentSketch (q126): the ladder reads
-    // exactly the sketch's hash-ranked frames, so one build serves both.
-    // Every frame derived below reads the stashed checkpoint blocks: an
-    // eviction of the tuple breaks it ([[cachedFrames]], cross-cache note)
-    val fr = cachedFrames(spark, Some(s"sketch:$dir:$thresholdPpm:$maxDf"))(
-      sketchFrames(shingles(spark, dir), maxDf))
+    // same frames key as containmentSketch (q126): the ladder reads
+    // exactly the sketch's hash-ranked frames, so one build serves both
+    val fr = StageMemo.checkpointed(spark, sketchKey(dir, thresholdPpm,
+      maxDf))(sketchFrames(shingles(spark, dir), maxDf))
     val mode = resolveVerifyMode(fr.arrays, verify, maxBroadcastBytes,
       "containmentSketchCalibration")
     sketchLadderOf(spark, fr, mode, thresholdPpm, sampleFraction,
@@ -3224,8 +3181,11 @@ object Dedup {
     containmentSketchOfShingles(shingles(spark, dir), thresholdPpm, maxDf,
         k, verify, maxBroadcastBytes, verifyChunks, diskBudgetBytes,
         recallTargetPpm, measureFraction,
-        framesKey = Some(s"sketch:$dir:$thresholdPpm:$maxDf"))
+        framesKey = Some(sketchKey(dir, thresholdPpm, maxDf)))
       .orderBy(col("contained"), col("container"))
+
+  private def sketchKey(dir: String, thresholdPpm: Long, maxDf: Int) =
+    Stages.sketch(dir, thresholdPpm, maxDf)
 
   /** [[containmentSketch]] over an arbitrary `(doc_id, text)` frame —
     * knobs as in [[containmentSketchOfShingles]]. String/UUID-keyed
@@ -3245,7 +3205,7 @@ object Dedup {
       diskBudgetBytes: Long = defaultDiskBudgetBytes,
       recallTargetPpm: Long = 995000L,
       measureFraction: Double = 0.1,
-      framesKey: Option[String] = None): DataFrame = {
+      framesKey: Option[StageMemo.Key] = None): DataFrame = {
     // the dictionary's collision-guard action is corpus-sized — cached
     // with the frames when the caller supplies a session key
     val route = docIdRoute(docs, "containmentSketch", framesKey)
@@ -3305,7 +3265,7 @@ object Dedup {
       diskBudgetBytes: Long = defaultDiskBudgetBytes,
       recallTargetPpm: Long = 995000L,
       measureFraction: Double = 0.1,
-      framesKey: Option[String] = None): DataFrame = {
+      framesKey: Option[StageMemo.Key] = None): DataFrame = {
     require(thresholdPpm > 0 && thresholdPpm <= 1000000L,
       s"thresholdPpm must be in (0, 1e6], got $thresholdPpm")
     require(k >= MeasuredK,
@@ -3408,18 +3368,20 @@ object Dedup {
     * decade exceeds the disk budget instead of ENOSPCing into it. */
   def containmentPrefix(spark: SparkSession, dir: String,
       thresholdPpm: Long = 500000L, maxDf: Int = 100): DataFrame =
-    containmentPrefixOfShingles(shingles(spark, dir), thresholdPpm, maxDf,
-        framesKey = Some(s"cprefix:$dir:$thresholdPpm:$maxDf"))
-      .orderBy(col("contained"), col("container"))
+    containmentPrefixFixture(spark, dir, thresholdPpm, maxDf, "auto")
 
   /** [[containmentPrefix]] with the verify FORCED to the no-broadcast
     * co-partitioned merge shape (q122) — the at-scale verify
     * oracle-pinned against q78's SQL, mirroring q120's role for q119. */
   def containmentPrefixMerge(spark: SparkSession, dir: String,
       thresholdPpm: Long = 500000L, maxDf: Int = 100): DataFrame =
+    containmentPrefixFixture(spark, dir, thresholdPpm, maxDf, "merge")
+
+  /** The fixture form of both verify shapes: one frames key per gate. */
+  private def containmentPrefixFixture(spark: SparkSession, dir: String,
+      thresholdPpm: Long, maxDf: Int, verify: String): DataFrame =
     containmentPrefixOfShingles(shingles(spark, dir), thresholdPpm, maxDf,
-        verify = "merge",
-        framesKey = Some(s"cprefix:$dir:$thresholdPpm:$maxDf"))
+        verify, framesKey = Some(Stages.cprefix(dir, thresholdPpm, maxDf)))
       .orderBy(col("contained"), col("container"))
 
   /** [[containmentPrefix]] over an arbitrary `(doc_id, text)` frame —
@@ -3455,7 +3417,7 @@ object Dedup {
       maxBroadcastBytes: Long = 256L << 20,
       verifyChunks: Int = 0, candChunks: Int = 0,
       diskBudgetBytes: Long = defaultDiskBudgetBytes,
-      framesKey: Option[String] = None): DataFrame = {
+      framesKey: Option[StageMemo.Key] = None): DataFrame = {
     require(thresholdPpm > 0 && thresholdPpm <= 1000000L,
       s"thresholdPpm must be in (0, 1e6], got $thresholdPpm")
     pricedPairs(sh, "containmentPrefix",

@@ -212,7 +212,7 @@ object Multimodal {
     * q84's band join would pay a wasted range exchange + sort inside the
     * persisted frame otherwise). */
   private def blockhashFrame(spark: SparkSession, dir: String): DataFrame =
-    graft.StageMemo(spark, s"blockhash:$dir") {
+    graft.StageMemo(spark, graft.StageMemo.Stages.blockhash(dir)) {
       blockhashOf(Tables.documents(spark, dir))
     }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.StageMemo.Stages
 import graft.functions.VectorFunctions.dot
 
 /** Similarity search over the `embeddings` fixture (`Array[Float]`, dim 64).
@@ -33,13 +34,20 @@ object Similarity {
     * spreads ~500 GB over the cluster's storage tier). */
   private def vecs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    graft.StageMemo(spark, s"vecs:$dir") {
+    graft.StageMemo(spark, Stages.vecs(dir)) {
       Tables.embeddings(spark, dir)
         .select($"vec_id", $"label",
           expr("transform(embedding, x -> cast(x as double))").as("v"))
         .withColumn("norm", sqrt(dot($"v", $"v")))
     }
   }
+
+  /** Corpus size of [[vecs]], memoized with the vector frame: one job per
+    * session, not one per invocation (the count is over the persisted
+    * frame). */
+  private def vecCount(spark: SparkSession, dir: String): Long =
+    graft.StageMemo.scalar(spark, Stages.vecs_count(dir))(
+      vecs(spark, dir).count())
 
   /** All-pairs cosine near-duplicates above `threshold` (embedding-cosine
     * near-dup dedup). Quadratic candidate set — correct baseline at fixture
@@ -55,9 +63,7 @@ object Similarity {
       threshold: Double = 0.4, maxCorpus: Long = 2000000L): DataFrame = {
     import spark.implicits._
     val e = vecs(spark, dir)
-    // gate count memoized with the vector frame: one job per session, not
-    // one per invocation (the count is over the already-persisted frame)
-    val n = graft.StageMemo.scalar(spark, s"vecs_count:$dir")(e.count())
+    val n = vecCount(spark, dir)
     require(n <= maxCorpus,
       s"cosineNearDup is the all-pairs baseline: corpus size $n exceeds " +
         s"maxCorpus=$maxCorpus — use the LSH-bucketed near-dup path " +
@@ -352,7 +358,7 @@ object Similarity {
       threshold: Double = 0.4, probeDist: Int = 0): DataFrame =
     // memoized like Dedup.ngramPairs: the verified pair frame is shared by
     // the pair query (q56) and the cluster form (q68) in one session
-    graft.StageMemo(spark, s"lshpairs:$dir:$threshold:$probeDist") {
+    graft.StageMemo(spark, Stages.lshpairs(dir, threshold, probeDist)) {
       // bits PINNED at 10 for the static oracle SQL, like lshTopK
       cosineNearDupLshOf(vecs(spark, dir), threshold, bits = 10,
         probeDist = probeDist)
@@ -616,7 +622,7 @@ object Similarity {
     * engines; a cluster that empties keeps its previous center. */
   private def kmeansFrame(spark: SparkSession, dir: String,
       k: Int, iters: Int): DataFrame =
-    graft.StageMemo(spark, s"kmeans:$dir:$k:$iters") {
+    graft.StageMemo(spark, Stages.kmeans(dir, k, iters)) {
       kmeansOf(unitVecs(spark, dir), k, iters)
     }
 
@@ -702,8 +708,7 @@ object Similarity {
     * fixed-k (pair-quadratic) or k ∝ N (assignment-quadratic) shapes. */
   def semDedupAuto(spark: SparkSession, dir: String,
       iters: Int = 3, threshold: Double = 0.4): DataFrame = {
-    val n = graft.StageMemo.scalar(spark, s"vecs_count:$dir")(
-      vecs(spark, dir).count())
+    val n = vecCount(spark, dir)
     val k = math.max(1, math.sqrt(n.toDouble).round.toInt)
     semDedup(spark, dir, k, iters, threshold)
   }

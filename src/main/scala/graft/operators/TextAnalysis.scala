@@ -567,7 +567,7 @@ object TextAnalysis {
     * build — q80's fusion rides the same frame, so a warm session pays
     * the index once. */
   def bm25TopDocs(spark: SparkSession, dir: String): DataFrame =
-    graft.StageMemo(spark, s"bm25_topdocs:$dir") {
+    graft.StageMemo(spark, graft.StageMemo.Stages.bm25_topdocs(dir)) {
       bm25TopDocsOf(Tables.documents(spark, dir))
     }
 

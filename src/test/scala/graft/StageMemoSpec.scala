@@ -1,18 +1,38 @@
 package graft
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+
+import graft.StageMemo.{Key, Stage, Stages}
+import graft.operators.Dedup
+
 /** StageMemo lifecycle: memoization, LRU eviction under the entry budget
-  * (evicted stages are unpersisted, not leaked), and explicit clear(). */
+  * (evicted stages are released, not leaked), dependency edges, fixture
+  * identity, explicit clear(), and the stage registry. */
 class StageMemoSpec extends SparkSpec {
 
-  private def freshKeys(prefix: String, n: Int): Seq[String] =
-    (1 to n).map(i => s"$prefix:$i")
+  /** A test stage over no fixture table: its entries never go stale. */
+  private val st = Stage("st", Nil)
+
+  /** True once the checkpoint under `df` is no longer pinned. */
+  private def released(df: DataFrame): Boolean = {
+    val rdd = df.queryExecution.analyzed.collectFirst {
+      case lr: LogicalRDD => lr.rdd }.get
+    !spark.sparkContext.getPersistentRDDs.contains(rdd.id)
+  }
 
   test("memoizes: the build runs once per key and stays pinned") {
     StageMemo.clear()
     import spark.implicits._
     var builds = 0
-    val Seq(k) = freshKeys("memo-once", 1)
-    def get() = StageMemo(spark, k) { builds += 1; Seq(1, 2, 3).toDF("x") }
+    def get() = StageMemo(spark, st("memo-once")) {
+      builds += 1; Seq(1, 2, 3).toDF("x")
+    }
     val a = get()
     val b = get()
     assert(builds === 1)
@@ -30,11 +50,11 @@ class StageMemoSpec extends SparkSpec {
     def slowDf(k: String, ms: Long) = { Thread.sleep(ms); Seq(k).toDF("x") }
     // nested build: the outer stage builds the inner one inside its own
     // build expression (the intersection-builds-shingles shape)
-    StageMemo(spark, "st:outer") {
-      StageMemo(spark, "st:inner")(slowDf("i", 300))
+    StageMemo(spark, st("outer")) {
+      StageMemo(spark, st("inner"))(slowDf("i", 300))
       slowDf("o", 30)
     }
-    StageMemo(spark, "st:inner")(slowDf("i", 300)) // memo hit — no sleep
+    StageMemo(spark, st("inner"))(slowDf("i", 300)) // memo hit — no sleep
     val s = StageMemo.statsSnapshot()
     assert(s.hits === 1 && s.misses === 2 && s.evictions === 0)
     val (innerN, innerMs) = s.builds("st:inner")
@@ -48,7 +68,7 @@ class StageMemoSpec extends SparkSpec {
     val old = StageMemo.maxEntries
     StageMemo.maxEntries = 2
     try {
-      StageMemo(spark, "st:evictor")(Seq("e").toDF("x"))
+      StageMemo(spark, st("evictor"))(Seq("e").toDF("x"))
       val s2 = StageMemo.statsSnapshot(reset = true)
       assert(s2.evictions === 1, "the LRU eviction must count in the window")
     } finally {
@@ -65,7 +85,7 @@ class StageMemoSpec extends SparkSpec {
     val acc = spark.sparkContext.longAccumulator("eager-probe")
     StageMemo.eagerBuild = true
     try {
-      val df = StageMemo(spark, "st:eager") {
+      val df = StageMemo(spark, st("eager")) {
         Seq(1, 2, 3).toDF("x").filter { _ => acc.add(1); true }
       }
       // the build job already ran: every cache partition is populated
@@ -79,96 +99,133 @@ class StageMemoSpec extends SparkSpec {
     }
   }
 
-  test("the eviction budget is self-checking against the main-source stage keys") {
-    // the budget rationale (2 corpora x per-corpus stages + headroom) used
-    // to live in a hand-counted comment — "re-count this list when adding
-    // one" is exactly the step a new stage family forgets. Count the keys
-    // from the sources instead, so a 13th stage fails HERE until
-    // maxEntries grows with it.
-    val src = java.nio.file.Paths.get("src/main/scala/graft")
-    assume(java.nio.file.Files.isDirectory(src), s"run from the repo root: $src")
-    val keyRe = """(?:StageMemo|memo)\(spark, s"([A-Za-z0-9_]+):""".r
-    import scala.jdk.CollectionConverters._
-    val stream = java.nio.file.Files.walk(src)
-    val keys =
-      try stream.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .flatMap(p => keyRe.findAllMatchIn(new String(
-          java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)).map(_.group(1)))
-        .toSet
+  test("stage registry: typed keys, every stage used, derived budget") {
+    val src = Paths.get("src/main/scala/graft")
+    assume(Files.isDirectory(src), s"run from the repo root: $src")
+    val stream = Files.walk(src)
+    val sources =
+      try stream.iterator().asScala.filter(_.toString.endsWith(".scala"))
+        .map(p => p -> new String(Files.readAllBytes(p), UTF_8)).toMap
       finally stream.close()
-    assert(keys.size >= 12, s"stage-key scan looks broken, found only: $keys")
-    assert(2 * keys.size + 4 <= StageMemo.maxEntries,
-      s"${keys.size} per-corpus stage keys ($keys) x 2 bench corpora + 4 " +
-        s"headroom exceeds maxEntries=${StageMemo.maxEntries} — a bench lap " +
-        "would silently evict a live stage mid-lap; raise maxEntries")
+    // typed keys: every memo entry point takes a Key, and no call site
+    // passes a string, however the call is wrapped
+    val entryPoints = StageMemo.getClass.getMethods.filter(m =>
+      Set("apply", "checkpointed", "scalar").contains(m.getName))
+    assert(entryPoints.length === 3)
+    entryPoints.foreach(m =>
+      assert(m.getParameterTypes()(1) === classOf[Key], m.toString))
+    val stringKey = ("""(?:StageMemo(?:\.\w+)?\(\s*[\w.]+\s*,""" +
+      """|(?:frames|dict|pairs)Key\s*=\s*Some\()\s*s?"""").r
+    val offenders = sources.toSeq.flatMap { case (p, text) =>
+      stringKey.findAllMatchIn(text).map(m => s"$p: ${m.matched}") }
+    assert(offenders.isEmpty, s"string memo keys: $offenders")
+    // one registry: no stage is made outside it, each is named once, and
+    // each is used
+    val adHoc = sources.toSeq.collect { case (p, text)
+      if !p.endsWith("StageMemo.scala") && """\bStage\(""".r
+        .findFirstIn(text).isDefined => p }
+    assert(adHoc.isEmpty, s"stages made outside StageMemo.Stages: $adHoc")
+    val names = Stages.all.map(_.name)
+    assert(names.size >= 19 && names.distinct === names,
+      s"registry scan looks broken: $names")
+    val all = sources.values.mkString("\n")
+    val unused = names.filterNot(n => s"""\\bStages\\.$n\\b""".r
+      .findFirstIn(all).isDefined)
+    assert(unused.isEmpty, s"registered stages no call site uses: $unused")
+    // the budget: 2 bench corpora x every stage + 4 headroom
+    assert(StageMemo.maxEntries === 2 * names.size + 4)
   }
 
-  test("frames stash: memoizes, evicts LRU past its budget, and releases " +
-      "evicted/cleared tuples") {
+  test("checkpointed tuples: one table, LRU budget, released on evict") {
     StageMemo.clear()
     import spark.implicits._
-    val old = StageMemo.maxFrameTuples
-    StageMemo.maxFrameTuples = 2
+    val old = StageMemo.maxEntries
+    StageMemo.maxEntries = 2
     try {
       var builds = Map.empty[String, Int].withDefaultValue(0)
-      var released = Set.empty[String]
-      def get(k: String) = StageMemo.frames(spark, k) {
+      var frames = Map.empty[String, DataFrame] // each key's latest build
+      def get(k: String) = StageMemo.checkpointed(spark, st(k)) {
         builds += k -> (builds(k) + 1)
-        (Seq(k).toDF("x").localCheckpoint(), 42L)
-      } { case (df, _) =>
-        released += k
-        org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(df)
+        frames += k -> Seq(k).toDF("x").localCheckpoint()
+        (frames(k), 42L)
       }
+      def releasedSet =
+        frames.collect { case (k, df) if released(df) => k }.toSet
       val (aDf, _) = get("fa")
       get("fb"); get("fa") // refresh fa: fb is now LRU
       get("fc") // evicts + releases fb
-      assert(StageMemo.frameStashSize === 2)
-      assert(released === Set("fb"), "eviction must invoke the release thunk")
+      assert(StageMemo.size === 2)
+      assert(releasedSet === Set("fb"), "eviction must release the tuple")
       get("fb")
       assert(builds("fb") === 2, "an evicted tuple must rebuild")
-      // fa survived both evictions (fc evicted fb, fb's rebuild evicted fa?
-      // no: after fc, order is fa, fc; fb's insert evicts fa)
-      assert(released === Set("fb", "fa"))
+      // after fc the order is fa, fc: fb's insert evicts fa
+      assert(releasedSet === Set("fa"))
       // the released checkpoint's blocks are gone: an action on the dead
       // frame must fail (checkpoints have no recompute lineage)
       intercept[Exception] { aDf.count() }
       StageMemo.clear()
-      assert(StageMemo.frameStashSize === 0)
-      assert(released === Set("fa", "fb", "fc"),
-        "clear() must release every stashed tuple")
+      assert(StageMemo.size === 0)
+      assert(releasedSet === Set("fa", "fb", "fc"),
+        "clear() must release every memoized tuple")
     } finally {
-      StageMemo.maxFrameTuples = old
+      StageMemo.maxEntries = old
       StageMemo.clear()
     }
   }
 
-  test("the frames-stash budget is self-checking against the framesKey families") {
-    // same rationale as the maxEntries self-check: count the distinct
-    // framesKey families from the sources (plus their derived dict:
-    // companions) so a new stashed family fails HERE until
-    // maxFrameTuples grows with it.
-    val src = java.nio.file.Paths.get("src/main/scala/graft")
-    assume(java.nio.file.Files.isDirectory(src), s"run from the repo root: $src")
-    val keyRe = """[Ff]ramesKey = Some\(s"([A-Za-z0-9_]+):""".r
-    import scala.jdk.CollectionConverters._
-    val stream = java.nio.file.Files.walk(src)
-    val families =
-      try stream.iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .flatMap(p => keyRe.findAllMatchIn(new String(
-          java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)).map(_.group(1)))
-        .toSet
-      finally stream.close()
-    assert(families.size >= 4, s"framesKey scan looks broken, found: $families")
-    // +1: containmentSketchOf derives a "dict:<key>" companion entry
-    assert(2 * (families.size + 1) + 4 <= StageMemo.maxFrameTuples,
-      s"${families.size} framesKey families ($families) + the dict " +
-        s"companion x 2 bench corpora + 4 headroom exceeds " +
-        s"maxFrameTuples=${StageMemo.maxFrameTuples} — a bench lap would " +
-        "evict live frames mid-lap; raise maxFrameTuples")
+  test("evicting a checkpointed tuple evicts the entries built over it") {
+    StageMemo.clear()
+    import spark.implicits._
+    val old = StageMemo.maxEntries
+    StageMemo.maxEntries = 2
+    try {
+      var readerBuilds = 0
+      def tuple() = StageMemo.checkpointed(spark, st("tuple")) {
+        Tuple1((1 to 10).toDF("x").localCheckpoint())
+      }
+      // lazy (no eagerBuild): the persisted reader is not materialized,
+      // so its first action reads the tuple's checkpoint blocks
+      def reader() = StageMemo(spark, st("reader")) {
+        readerBuilds += 1
+        tuple()._1.filter($"x" % 2 === 0)
+      }
+      reader()
+      assert(StageMemo.size === 2)
+      StageMemo(spark, st("other"))(Seq(1).toDF("y")) // the tuple is LRU
+      assert(StageMemo.size === 1, "the reader must go with its tuple")
+      val rebuilt = reader()
+      assert(readerBuilds === 2, "the reader's next lookup must rebuild")
+      assert(rebuilt.count() === 5L)
+    } finally {
+      StageMemo.maxEntries = old
+      StageMemo.clear()
+    }
+  }
+
+  test("a fixture rewritten in place misses the memo") {
+    import spark.implicits._
+    val fixture = "target/tmp/stagememo_fixture"
+    // written beside the fixture and moved in, the way another process
+    // regenerates it: a write through this session would recache by path
+    def writeDocuments(docs: (Long, String)*): Unit = {
+      docs.toDF("doc_id", "text").coalesce(1).write.mode("overwrite")
+        .parquet(s"$fixture/next")
+      rmrf(s"$fixture/documents.parquet")
+      Files.move(Paths.get(s"$fixture/next"),
+        Paths.get(s"$fixture/documents.parquet"))
+      ()
+    }
+    def pairs() = Dedup.ngramPairs(spark, fixture, 0.8, 100)
+      .select("d1", "d2").as[(Long, Long)].collect().toSet
+    val dup = "the quick brown fox jumps over the lazy dog"
+    try {
+      writeDocuments(1L -> dup, 2L -> dup, 3L -> "one two three four five")
+      assert(pairs() === Set((1L, 2L)))
+      val pinned = StageMemo.size
+      writeDocuments(1L -> "one two three four five", 2L -> dup, 3L -> dup)
+      assert(pairs() === Set((2L, 3L)), "the memo served the old corpus")
+      assert(StageMemo.size === pinned, "the stale entries must be released")
+    } finally rmrf(fixture)
   }
 
   test("evicts least-recently-used beyond the budget and unpersists it") {
@@ -178,7 +235,7 @@ class StageMemoSpec extends SparkSpec {
     StageMemo.maxEntries = 2
     try {
       var builds = Map.empty[String, Int].withDefaultValue(0)
-      def get(k: String) = StageMemo(spark, k) {
+      def get(k: String) = StageMemo(spark, st(k)) {
         builds += k -> (builds(k) + 1); Seq(k).toDF("x")
       }
       val a = get("a"); get("b")
