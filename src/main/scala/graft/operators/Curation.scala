@@ -432,6 +432,10 @@ object Curation {
     def cleanCheckpoint(df: DataFrame): DataFrame =
       org.apache.spark.sql.graft.Bridge.dropOriginConstraints(
         df.localCheckpoint())
+    // the entry checkpoint is dead once the pre-contraction replaced it or
+    // the driver path collected it
+    def release(df: DataFrame): Unit =
+      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(df)
     // canonical big→small orientation, self-loops dropped
     var edges = cleanCheckpoint(pairs
       .select(greatest(col("d1"), col("d2")).as("u"),
@@ -467,7 +471,7 @@ object Curation {
     }
     var it = 0
     var edgeCount = edges.count()
-    // the driver fast path unions over boxed Longs, so it only admits
+    // the driver fast path unions over Long ids, so it only admits
     // integral id columns; any other id type (string keys, decimals) keeps
     // the type-agnostic distributed contraction regardless of graph size
     import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
@@ -494,6 +498,7 @@ object Curation {
       val sess = pairs.sparkSession
       import sess.implicits._
       import org.apache.spark.sql.types.LongType
+      val entry = edges
       edges = cleanCheckpoint(edges
         .select(col("u").cast(LongType).as("_1"),
           col("v").cast(LongType).as("_2"))
@@ -506,27 +511,14 @@ object Curation {
         // edges, so restore the distinct-set invariant here
         .distinct())
       edgeCount = edges.count()
+      release(entry)
     }
     if (edgeCount <= driverEdgeBudget && integralId) {
       val spark = pairs.sparkSession
       val es = edges.collect().map(r =>
         (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) {
-          val n = parent(c); parent(c) = r; c = n
-        }
-        r
-      }
-      // union-by-min keeps every root the minimum of its component, so
-      // find() reproduces the distributed path's min-id labels exactly
-      es.foreach { case (u, v) =>
-        val (ru, rv) = (find(u), find(v))
-        if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
-      }
+      // nothing reads the checkpointed edges after this collect
+      release(edges)
       // rebuild (id, lbl) in the INPUT id type, so the fast path's output
       // schema is indistinguishable from the distributed path's
       val narrow: Long => Any = idType match {
@@ -535,9 +527,14 @@ object Curation {
         case IntegerType => (x: Long) => x.toInt
         case _ => (x: Long) => x
       }
-      val labelRows = es.iterator.flatMap(e => Iterator(e._1, e._2))
-        .toSeq.distinct
-        .map(id => org.apache.spark.sql.Row(narrow(id), narrow(find(id))))
+      // the whole edge set as one partition: (member, root) for every
+      // non-root vertex, each root its component's minimum, so the
+      // distributed path's min-id labels are reproduced exactly; roots
+      // fall through to coalesce(lbl, id) below
+      val labelRows = partitionUnionFind(es.iterator)
+        .map { case (id, root) =>
+          org.apache.spark.sql.Row(narrow(id), narrow(root)) }
+        .toSeq
       import scala.jdk.CollectionConverters._
       // a driver-local list: LocalRelation (size known to Catalyst), not
       // an RDD-backed scan

@@ -98,12 +98,15 @@ object Continuous {
   }
 
   /** Inter-job pipelining (C7, PipelineMapTask.java:52): job N+1 consumes
-    * job N's output live. Where the reference wires two MR jobs through the
+    * job N's output. Where the reference wires two MR jobs through the
     * Quatrain buffer exchange, here stage 1 streams its output to a
-    * replayable directory and stage 2 streams from that directory — each
-    * micro-batch of stage 1 becomes visible to stage 2 without a batch
-    * barrier. Runs both to completion on bounded input (AvailableNow);
-    * returns stage 2's final result (memory table `queryName`). */
+    * replayable directory, one micro-batch per input file, and stage 2
+    * replays that directory through [[foldedFrame]] under the stream name
+    * `name`: `partial` takes [[foldReplay]]'s row-level contract (rows
+    * keyed by `keys` whose measures add; an aggregating partial is
+    * refused before stage 2 starts) and `finish` shapes the folded rows.
+    * Runs both to completion on bounded input (AvailableNow); returns
+    * stage 2's final frame. */
   def chainedQueries(
       spark: SparkSession,
       inputDir: String,
@@ -111,29 +114,22 @@ object Continuous {
       midDir: String,
       checkpointDir: String,
       stage1: DataFrame => DataFrame,
-      stage2: DataFrame => DataFrame,
-      queryName: String = "pipeline_out"): DataFrame = {
+      partial: DataFrame => DataFrame,
+      keys: Seq[String],
+      finish: DataFrame => DataFrame = identity,
+      name: String = "pipeline_out"): DataFrame = {
     val mid = stage1(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
         .parquet(inputDir))
-    val q1 = mid.writeStream
+    mid.writeStream
       .option("checkpointLocation", s"$checkpointDir/stage1")
       .trigger(Trigger.AvailableNow())
       .format("parquet").option("path", midDir)
-      .start()
-    q1.awaitTermination()
+      .start().awaitTermination()
     // stage 1's output schema as the parquet round trip returns it: the
     // engine holds it, so stage 2 needs no inference over the mid dir
-    val q2 = stage2(spark.readStream.schema(Bridge.asNullable(mid.schema))
-        .option("maxFilesPerTrigger", "4").parquet(midDir))
-      .writeStream
-      .option("checkpointLocation", s"$checkpointDir/stage2")
-      .trigger(Trigger.AvailableNow())
-      .outputMode("complete")
-      .format("memory").queryName(queryName)
-      .start()
-    q2.awaitTermination()
-    spark.table(queryName)
+    foldedFrame(spark, midDir, Bridge.asNullable(mid.schema), name,
+      partial, keys, finish)
   }
 
   // ---------------------------------------------------------------------
@@ -155,20 +151,17 @@ object Continuous {
     *    `chmod`/`stat` processes per log write.
     *  - With `shuffleCap`, `spark.sql.shuffle.partitions` is lowered (never
     *    raised: a session already running narrower keeps its width) to
-    *    the cap: q53's stateful stage 2 pins its STATE STORE partition
-    *    count to the setting at first batch (every micro-batch commits
-    *    every state partition), and the foreachBatch appenders
-    *    (q88/q99/q117) chain small per-commit shuffles that 32-way tasks
-    *    only slow. Safe per query because each invocation starts a fresh
-    *    checkpoint.
+    *    the cap: the [[streamedCommits]] bodies (q88/q99/q117) chain small
+    *    per-commit shuffles that 32-way tasks only slow. The folds run no
+    *    shuffle and take no cap.
     *
     * Both settings are restored on success and on failure. ASSUMES
     * single-threaded use of the session: the set/restore is
     * session-global, so a concurrent query could plan with the scoped
     * values; a multi-tenant session should run bounded streams on
     * `spark.newSession()` instead. [[perWindowAggregate]] and
-    * [[chainedQueries]] take no scope of their own: their caller owns the
-    * query's lifetime and the session's conf. */
+    * [[chainedQueries]]' stage 1 take no scope of their own: their caller
+    * owns the query's lifetime and the session's conf. */
   private def boundedStream[T](spark: SparkSession,
       shuffleCap: Option[Int] = None)(f: => T): T = {
     val conf = spark.conf
@@ -524,37 +517,28 @@ object Continuous {
   /** Inter-job pipelining surfaced to the driver harness (C7,
     * PipelineMapTask.java:52): the events table streamed through TWO
     * chained streaming jobs via [[chainedQueries]] — stage 1 filters and
-    * projects to a replayable parquet directory whose files stage 2
-    * consumes as they appear, aggregating per event type. The final frame
-    * is chunking-independent, so plain composed SQL oracle-checks the
-    * pipelined path end-to-end (q53). Per-run mid/checkpoint dirs are
-    * deleted after the snapshot so repeated invocations stay independent. */
+    * projects to a replayable parquet directory, and stage 2 folds its
+    * files per event type (a count of 1 and the DECIMAL value per row,
+    * combined map-side, the task partials added on the driver). The final
+    * frame is chunking-independent, so plain composed SQL oracle-checks
+    * the pipelined path end-to-end (q53). Per-run mid/checkpoint dirs are
+    * deleted after the run so repeated invocations stay independent. */
   def streamedPipeline(spark: SparkSession, dir: String): DataFrame = {
     val staged = replayOf(spark, dir, "events")
     val run = runSeq.incrementAndGet()
     val mid = s"target/streamstage/mid/run$run"
     val ckpt = s"target/streamstage/ckpt/pipeline$run"
-    val name = s"q53_pipeline_$run"
-    try boundedStream(spark, shuffleCap = Some(8)) {
-      val out = chainedQueries(spark, staged.path, staged.schema(spark),
-        mid, ckpt,
-        df => df.filter(col("event_type") =!= "view")
+    try boundedStream(spark) {
+      chainedQueries(spark, staged.path, staged.schema(spark), mid, ckpt,
+        _.filter(col("event_type") =!= "view")
           .select(col("event_type"), col("value")),
-        df => df.groupBy(col("event_type"))
-          .agg(count(lit(1)).as("n"),
-            sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_v")),
-        queryName = name)
-      val rows = out.collect() // grouped by event type: a handful of rows
-      val schemaOut = out.schema
-      localFrame(spark, rows.toSeq, schemaOut)
+        _.select(col("event_type"), lit(1L).as("n"),
+          col("value").cast("decimal(18,2)").as("sum_v")),
+        keys = Seq("event_type"),
+        finish = _.withColumn("sum_v", col("sum_v").cast("double")),
+        name = s"q53_pipeline_$run")
         .orderBy(col("event_type"))
-    } finally {
-      // the view may not exist if stage 1/2 failed before the sink started
-      try spark.catalog.dropTempView(name)
-      catch { case _: Exception => () }
-      deleteRecursively(ckpt)
-      deleteRecursively(mid)
-    }
+    } finally { deleteRecursively(ckpt); deleteRecursively(mid) }
   }
 
   /** A [[streamedCurationFunnel]] run: per-commit cumulative funnel
@@ -606,11 +590,28 @@ object Continuous {
   }
 
   /** One commit of a [[streamedCommits]] run: its non-empty micro-batch,
-    * its key `dir` (a per-commit subdir for snapshots), and [[write]]. */
+    * its key `dir` (a per-commit subdir for snapshots), [[write]] and
+    * [[pin]]. */
   private[graft] final class Commit(spark: SparkSession, root: String,
       val id: Long, val batch: DataFrame)
       extends KeyedState(spark, root, id) {
     val dir: String = s"$root/b$id"
+    private val pins =
+      new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+
+    /** `df` checkpointed EAGERLY for the rest of the commit: a leaf that
+      * several stages of one job read without racing to build a lazy
+      * cache, or re-running the plan below it. [[streamedCommits]]
+      * releases every pin when the body returns or throws, so nothing
+      * evaluated after the commit may read one. */
+    def pin(df: DataFrame): DataFrame = {
+      val pinned = df.localCheckpoint()
+      pins.add(pinned)
+      pinned
+    }
+
+    private[streaming] def release(): Unit =
+      pins.forEach(Bridge.releaseLocalCheckpoint(_))
 
     /** The commit's state families in ONE kind-partitioned union write
       * (one job and one commit protocol, not one per family), `width`
@@ -627,8 +628,8 @@ object Continuous {
     * replays `stagedDir` (parquet of `schema`) `filesPerTrigger` files
     * per `AvailableNow` commit through a `foreachBatch`, skips empty
     * batches, clears each commit's key under `root` and hands the commit
-    * to `body`. The
-    * checkpoint and state survive the call, so a run restarted on the
+    * to `body`, then releases the commit's pins, also when `body` throws.
+    * The checkpoint and state survive the call, so a run restarted on the
     * same `root`/`ckpt` resumes where its commit log stops and re-runs
     * the uncommitted batch idempotently ([[KeyedState]]). The shuffle
     * cap: each commit chains ~10 small shuffles (measured at sf0.1: q88
@@ -648,7 +649,8 @@ object Continuous {
         .foreachBatch { (batch: DataFrame, id: Long) =>
           if (!batch.isEmpty) {
             deleteRecursively(s"$root/b$id")
-            body(new Commit(spark, root, id, batch))
+            val c = new Commit(spark, root, id, batch)
+            try body(c) finally c.release()
           }
           ()
         }
@@ -725,15 +727,14 @@ object Continuous {
           when(col("quality") >= qualityMin, 1).otherwise(0).as("f_q"),
           when(col("lang") === lang, 1).otherwise(0).as("f_lang"))
       val loserSchema = labeled(spark, "q88: state write") {
-        // the increment's shingles, checkpointed EAGERLY: the write below
-        // reads them five times (index family, the pair stage's new side,
-        // and its index side's df gate, docLen and postings), and a lazy
+        // the increment's shingles, pinned: the write below reads them
+        // five times (index family, the pair stage's new side, and its
+        // index side's df gate, docLen and postings), and a lazy
         // persist() let each of those reads race to build the cache —
         // measured 82 write jobs per sf0.01 lap against 39 over the eager
         // leaf (StageProbe opjobs, 4 cores)
-        val incSh = graft.operators.Dedup
-          .shinglesOf(docs.select(col("doc_id"), col("text")))
-          .localCheckpoint()
+        val incSh = c.pin(graft.operators.Dedup
+          .shinglesOf(docs.select(col("doc_id"), col("text"))))
         // near-dup losers involving the increment vs committed index ∪
         // the increment (the one gate; see the def's top)
         val newLosers = graft.operators.Dedup.incrementalPairsOf(
@@ -881,56 +882,51 @@ object Continuous {
       .parquet(s"$seedRoot/hashes")
     val state = streamedCommits(spark, "q99_lsh", incChunks.path,
         incChunks.schema(spark), 1, root, ckpt) { c =>
-      // the batch and its two state families, checkpointed EAGERLY: the
-      // probes and the state write below read each several times inside
-      // single jobs, and a lazy persist() let those reads race to build
-      // the same cache (BlockManager "already exists" warnings)
-      val b = c.batch.select(col("doc_id"), col("text")).localCheckpoint()
-      try {
-        val bBands = D.bandBuckets(D.signaturesOf(D.shinglesOf(b)))
-          .withColumn("inc", lit(1)).localCheckpoint()
-        val bHashes = b
-          .select(col("doc_id"), md5(col("text")).as("h"))
-          .withColumn("inc", lit(1)).localCheckpoint()
-        try {
-          // committed state ∪ the batch itself: the o.inc=0-or-smaller-
-          // id predicate resolves both the cross-batch and the
-          // within-batch precedence. State = the staged seed ∪ the
-          // committed increments.
-          val allBands = seedBands
-            .unionByName(c.read("bands", eBands.schema))
-            .unionByName(bBands)
-          val allHashes = seedHashes
-            .unionByName(c.read("hashes", eHashes.schema))
-            .unionByName(bHashes)
-          val ex = bHashes.as("n")
-            .join(allHashes.as("o").hint("shuffle_hash"),
-              col("n.h") === col("o.h") && (col("o.inc") === 0 ||
-                col("o.doc_id") < col("n.doc_id")), "left_semi")
-            .select(col("doc_id"))
-          val bd = bBands.as("n")
-            .join(allBands.as("o").hint("shuffle_hash"),
-              col("n.band") === col("o.band") &&
-                col("n.bh") === col("o.bh") && (col("o.inc") === 0 ||
-                col("o.doc_id") < col("n.doc_id")), "left_semi")
-            .select(col("doc_id")).distinct()
-          val verd = b.select(col("doc_id"))
-            .join(ex.withColumn("ex", lit(1)).hint("shuffle_hash"),
-              Seq("doc_id"), "left")
-            .join(bd.withColumn("bd", lit(1)).hint("shuffle_hash"),
-              Seq("doc_id"), "left")
-            .select(col("doc_id"),
-              when(col("ex").isNotNull, 1).otherwise(0).as("exact_dup"),
-              when(col("bd").isNotNull, 1).otherwise(0).as("band_dup"))
-            .withColumn("keep",
-              when(col("exact_dup") + col("band_dup") > 0, 0).otherwise(1))
-          // the verdict rows, and the index += the WHOLE batch (dups
-          // included: later arrivals must match the first-seen copy even
-          // when a middle copy was dropped)
-          c.write(1, "verdicts" -> verd, "bands" -> bBands,
-            "hashes" -> bHashes)
-        } finally Seq(bBands, bHashes).foreach(Bridge.releaseLocalCheckpoint)
-      } finally Bridge.releaseLocalCheckpoint(b)
+      // the batch and its two state families, pinned: the probes and the
+      // state write below read each several times inside single jobs,
+      // and a lazy persist() let those reads race to build the same
+      // cache (BlockManager "already exists" warnings)
+      val b = c.pin(c.batch.select(col("doc_id"), col("text")))
+      val bBands = c.pin(D.bandBuckets(D.signaturesOf(D.shinglesOf(b)))
+        .withColumn("inc", lit(1)))
+      val bHashes = c.pin(b.select(col("doc_id"), md5(col("text")).as("h"))
+        .withColumn("inc", lit(1)))
+      // committed state ∪ the batch itself: the o.inc=0-or-smaller-
+      // id predicate resolves both the cross-batch and the
+      // within-batch precedence. State = the staged seed ∪ the
+      // committed increments.
+      val allBands = seedBands
+        .unionByName(c.read("bands", eBands.schema))
+        .unionByName(bBands)
+      val allHashes = seedHashes
+        .unionByName(c.read("hashes", eHashes.schema))
+        .unionByName(bHashes)
+      val ex = bHashes.as("n")
+        .join(allHashes.as("o").hint("shuffle_hash"),
+          col("n.h") === col("o.h") && (col("o.inc") === 0 ||
+            col("o.doc_id") < col("n.doc_id")), "left_semi")
+        .select(col("doc_id"))
+      val bd = bBands.as("n")
+        .join(allBands.as("o").hint("shuffle_hash"),
+          col("n.band") === col("o.band") &&
+            col("n.bh") === col("o.bh") && (col("o.inc") === 0 ||
+            col("o.doc_id") < col("n.doc_id")), "left_semi")
+        .select(col("doc_id")).distinct()
+      val verd = b.select(col("doc_id"))
+        .join(ex.withColumn("ex", lit(1)).hint("shuffle_hash"),
+          Seq("doc_id"), "left")
+        .join(bd.withColumn("bd", lit(1)).hint("shuffle_hash"),
+          Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          when(col("ex").isNotNull, 1).otherwise(0).as("exact_dup"),
+          when(col("bd").isNotNull, 1).otherwise(0).as("band_dup"))
+        .withColumn("keep",
+          when(col("exact_dup") + col("band_dup") > 0, 0).otherwise(1))
+      // the verdict rows, and the index += the WHOLE batch (dups
+      // included: later arrivals must match the first-seen copy even
+      // when a middle copy was dropped)
+      c.write(1, "verdicts" -> verd, "bands" -> bBands,
+        "hashes" -> bHashes)
     }
     // an increment with no incoming doc writes no verdicts family: that
     // is an empty verdict frame, not a missing path
@@ -1026,145 +1022,129 @@ object Continuous {
       stageOrderedChunks(docs.select(col("doc_id"), col("text")), chunks))
     val state = streamedCommits(spark, "q117_xmodal", corpusChunks.path,
         corpusChunks.schema(spark), 1, root, ckpt) { c =>
-      // the batch and its three index families, checkpointed EAGERLY
-      // (as q99's): several stages of one job read each of them
-      val b = c.batch.select(col("doc_id"), col("text")).localCheckpoint()
+      // the batch and its three index families, pinned (as q99's):
+      // several stages of one job read each of them
+      val b = c.pin(c.batch.select(col("doc_id"), col("text")))
+      val (bBands0, bHashes0) = textState(b)
+      val bBands = c.pin(bBands0)
+      val bHashes = c.pin(bHashes0)
+      val bFp = c.pin(graft.operators.Multimodal.blockhashOf(b))
+      // committed state ∪ the batch itself: one probe resolves both
+      // cross-batch and within-batch matches
+      val allBands = c.read("bands", eBands.schema).unionByName(bBands)
+      val allHashes = c.read("hashes", eHashes.schema).unionByName(bHashes)
+      val allFp = c.read("fp", eFp.schema).unionByName(bFp)
+      // no per-frame distinct here: every canon() consumer below already
+      // sits under a distinct, whose partial (map-side) aggregation dedups
+      // the per-shared-bucket pair multiplicity before its exchange — the
+      // old inner distincts were a whole extra exchange per edge frame
+      // feeding another distinct (guide §2.4)
+      def canon(df: DataFrame) = df.select(
+        least(col("n.doc_id"), col("o.doc_id")).as("d1"),
+        greatest(col("n.doc_id"), col("o.doc_id")).as("d2"))
+      val tEdges = canon(bBands.as("n")
+        .join(allBands.as("o").hint("shuffle_hash"),
+          col("n.band") === col("o.band") &&
+            col("n.bh") === col("o.bh") &&
+            col("n.doc_id") =!= col("o.doc_id")))
+      val dEdges = canon(bHashes.as("n")
+        .join(allHashes.as("o").hint("shuffle_hash"),
+          col("n.h") === col("o.h") &&
+            col("n.doc_id") =!= col("o.doc_id")))
+      // 4×15-band blocked Hamming probe (exact for dist ≤ 3 by pigeonhole
+      // — Dedup.bandedHammingPairs' blocking, probe form: batch side vs
+      // everything, never state × state)
+      def fpBands(f: DataFrame) = f.select(col("doc_id"),
+        col("phash"), explode(array((0 until 4).map(bb =>
+          struct(lit(bb).as("band"),
+            expr(s"(phash div cast(pow(2, ${15 * bb}) as bigint))" +
+              " % 32768").as("bh"))): _*)).as("e"))
+        .select(col("doc_id"), col("phash"),
+          col("e.band"), col("e.bh"))
+      val mEdges = canon(fpBands(bFp).as("n")
+        .join(fpBands(allFp).as("o").hint("shuffle_hash"),
+          col("n.band") === col("o.band") &&
+            col("n.bh") === col("o.bh") &&
+            col("n.doc_id") =!= col("o.doc_id"))
+        .filter(expr("bit_count(n.phash ^ o.phash) <= 3")))
+      // PERSIST the commit's edge frames: each is consumed three times in
+      // this body (parts family, the contraction's pinned edge set, the
+      // contraction's vertex frame) — unpersisted, the three state-probe
+      // joins above re-ran once per consumer, tripling the commit's
+      // dominant jobs. Lazy, not pinned: phase 0 below builds both
+      // concurrently.
+      val textPairs = tEdges.union(dEdges).distinct().persist()
+      val mE = mEdges.distinct().persist()
       try {
-        val (bBands0, bHashes0) = textState(b)
-        val bBands = bBands0.localCheckpoint()
-        val bHashes = bHashes0.localCheckpoint()
-        val bFp = graft.operators.Multimodal.blockhashOf(b).localCheckpoint()
-        try {
-          // committed state ∪ the batch itself: one probe resolves both
-          // cross-batch and within-batch matches
-          val allBands = c.read("bands", eBands.schema).unionByName(bBands)
-          val allHashes =
-            c.read("hashes", eHashes.schema).unionByName(bHashes)
-          val allFp = c.read("fp", eFp.schema).unionByName(bFp)
-          // no per-frame distinct here: every canon() consumer
-          // below already sits under a distinct, whose partial
-          // (map-side) aggregation dedups the per-shared-bucket
-          // pair multiplicity before its exchange — the old inner
-          // distincts were a whole extra exchange per edge frame
-          // feeding another distinct (guide §2.4)
-          def canon(df: DataFrame) = df.select(
-            least(col("n.doc_id"), col("o.doc_id")).as("d1"),
-            greatest(col("n.doc_id"), col("o.doc_id")).as("d2"))
-          val tEdges = canon(bBands.as("n")
-            .join(allBands.as("o").hint("shuffle_hash"),
-              col("n.band") === col("o.band") &&
-                col("n.bh") === col("o.bh") &&
-                col("n.doc_id") =!= col("o.doc_id")))
-          val dEdges = canon(bHashes.as("n")
-            .join(allHashes.as("o").hint("shuffle_hash"),
-              col("n.h") === col("o.h") &&
-                col("n.doc_id") =!= col("o.doc_id")))
-          // 4×15-band blocked Hamming probe (exact for dist ≤ 3 by
-          // pigeonhole — Dedup.bandedHammingPairs' blocking, probe
-          // form: batch side vs everything, never state × state)
-          def fpBands(f: DataFrame) = f.select(col("doc_id"),
-            col("phash"), explode(array((0 until 4).map(bb =>
-              struct(lit(bb).as("band"),
-                expr(s"(phash div cast(pow(2, ${15 * bb}) as bigint))" +
-                  " % 32768").as("bh"))): _*)).as("e"))
-            .select(col("doc_id"), col("phash"),
-              col("e.band"), col("e.bh"))
-          val mEdges = canon(fpBands(bFp).as("n")
-            .join(fpBands(allFp).as("o").hint("shuffle_hash"),
-              col("n.band") === col("o.band") &&
-                col("n.bh") === col("o.bh") &&
-                col("n.doc_id") =!= col("o.doc_id"))
-            .filter(expr("bit_count(n.phash ^ o.phash) <= 3")))
-          // PERSIST the commit's edge frames: each is consumed three
-          // times in this body (parts family, the contraction's
-          // checkpointed edge set, the contraction's vertex frame) —
-          // unpersisted, the three state-probe joins above re-ran
-          // once per consumer, tripling the commit's dominant jobs
-          val textPairs = tEdges.union(dEdges).distinct().persist()
-          val mE = mEdges.distinct().persist()
-          try {
-            // OVERLAP the commit's independent actions (guide §2.6)
-            // — measured sequential, 38% of the q117 wall had NO
-            // job running (driver planning/commit gaps between ~10
-            // chained actions per commit). Phase 0 materializes the
-            // two shared edge frames concurrently (the expensive
-            // state probes; disjoint inputs — text reads
-            // bands/hashes, media reads fp). Phase 1 then overlaps
-            // every consumer: all read cached blocks, the state
-            // relations above listed only committed keys (this
-            // commit's key was cleared and is written only below),
-            // and the two writes go to distinct dirs under the key.
-            // The verdict snapshot below stays behind the barrier: it
-            // reads the parts/hashes/forest state phase 1 writes.
-            concurrently(Seq(
-              () => labeled(spark, "q117: probe text edges") {
-                textPairs.count(); () },
-              () => labeled(spark, "q117: probe media edges") {
-                mE.count(); () }))
-            concurrently(Seq(
-              // the bands/hashes/fp index increments plus the modality
-              // participation rows (feeds n_modalities), written before
-              // the snapshot reads the parts family
-              () => labeled(spark, "q117: state append (unified)") {
-                val parts = textPairs
-                  .select(explode(array(col("d1"), col("d2")))
-                    .as("doc_id")).distinct()
-                  .withColumn("modality", lit("text"))
-                  .union(mE.select(explode(array(col("d1"), col("d2")))
-                      .as("doc_id")).distinct()
-                    .withColumn("modality", lit("media")))
-                c.write(1, "bands" -> bBands, "hashes" -> bHashes,
-                  "fp" -> bFp, "parts" -> parts)
-              },
-              // contract (previous forest ∪ new edges) — the previous
-              // commit's star edges stand in for all prior history.
-              // The contraction distincts its edge input, so the union
-              // needs no pre-distinct here.
-              () => labeled(spark, "q117: contract forest") {
-                val prevForest = c.latest("forest").fold(eForest)(
-                  spark.read.schema(eForest.schema).parquet(_))
-                // CHECKPOINT the contraction input: starContract
-                // reads it twice (the canonical edge set and the
-                // vertex frame), and handed the raw union its
-                // vertex pass re-ran the whole state-probe chain —
-                // measured 12 jobs/1.7-2.1 s per commit for the
-                // forest write, vs 3 jobs/0.2 s over a pinned
-                // input; a persist() did NOT close it (the cached
-                // union still re-planned into probe re-execution),
-                // a LogicalRDD leaf does. Near-forest-sized at any
-                // scale: prior history rides the star forest, new
-                // edges are increment-bounded. Bridge drops the
-                // union's stale origin constraints — the same
-                // Spark 4.1 guard starContract's own checkpoints
-                // need (q86's union shape).
-                val contractIn = Bridge.dropOriginConstraints(
-                  prevForest.unionByName(textPairs.union(mE))
-                    .localCheckpoint())
-                val labels =
-                  graft.operators.Curation.connectedComponentsStar(
-                    contractIn)
-                labels.filter(col("id") =!= col("label"))
-                  .select(col("id").as("d1"), col("label").as("d2"))
-                  .write.mode("overwrite").parquet(s"${c.dir}/forest")
-              }))
-          } finally { textPairs.unpersist(); mE.unpersist(); () }
-          // cumulative decision snapshot: every doc seen so far,
-          // current cluster/keep/n_modalities (earlier verdicts may
-          // legitimately flip when clusters merge)
-          labeled(spark, "q117: verdict snapshot") {
-            verdicts(c.read("hashes", eHashes.schema),
-              spark.read.schema(eForest.schema).parquet(s"${c.dir}/forest"),
-              c.read("parts", eParts.schema))
-              .write.mode("overwrite").parquet(s"${c.dir}/verdicts")
-          }
-        } finally
-          Seq(bBands, bHashes, bFp).foreach(Bridge.releaseLocalCheckpoint)
-      } finally Bridge.releaseLocalCheckpoint(b)
+        // OVERLAP the commit's independent actions (guide §2.6) —
+        // measured sequential, 38% of the q117 wall had NO job running
+        // (driver planning/commit gaps between ~10 chained actions per
+        // commit). Phase 0 materializes the two shared edge frames
+        // concurrently (the expensive state probes; disjoint inputs —
+        // text reads bands/hashes, media reads fp). Phase 1 then overlaps
+        // every consumer: all read cached blocks, the state relations
+        // above listed only committed keys (this commit's key was
+        // cleared and is written only below), and the two writes go to
+        // distinct dirs under the key.
+        concurrently(Seq(
+          () => labeled(spark, "q117: probe text edges") {
+            textPairs.count(); () },
+          () => labeled(spark, "q117: probe media edges") {
+            mE.count(); () }))
+        concurrently(Seq(
+          // the bands/hashes/fp index increments plus the modality
+          // participation rows (feeds n_modalities)
+          () => labeled(spark, "q117: state append (unified)") {
+            val parts = textPairs
+              .select(explode(array(col("d1"), col("d2")))
+                .as("doc_id")).distinct()
+              .withColumn("modality", lit("text"))
+              .union(mE.select(explode(array(col("d1"), col("d2")))
+                  .as("doc_id")).distinct()
+                .withColumn("modality", lit("media")))
+            c.write(1, "bands" -> bBands, "hashes" -> bHashes,
+              "fp" -> bFp, "parts" -> parts)
+          },
+          // contract (previous forest ∪ new edges) — the previous
+          // commit's star edges stand in for all prior history. The
+          // contraction distincts its edge input, so the union needs no
+          // pre-distinct here.
+          () => labeled(spark, "q117: contract forest") {
+            val prevForest = c.latest("forest").fold(eForest)(
+              spark.read.schema(eForest.schema).parquet(_))
+            // PIN the contraction input: starContract reads it twice (the
+            // canonical edge set and the vertex frame), and handed the
+            // raw union its vertex pass re-ran the whole state-probe
+            // chain — measured 12 jobs/1.7-2.1 s per commit for the
+            // forest write, vs 3 jobs/0.2 s over a pinned input; a
+            // persist() did NOT close it (the cached union still
+            // re-planned into probe re-execution), a LogicalRDD leaf
+            // does. Near-forest-sized at any scale: prior history rides
+            // the star forest, new edges are increment-bounded. Bridge
+            // drops the union's stale origin constraints — the same Spark
+            // 4.1 guard starContract's own checkpoints need (q86's union
+            // shape).
+            val contractIn = Bridge.dropOriginConstraints(
+              c.pin(prevForest.unionByName(textPairs.union(mE))))
+            val labels =
+              graft.operators.Curation.connectedComponentsStar(contractIn)
+            labels.filter(col("id") =!= col("label"))
+              .select(col("id").as("d1"), col("label").as("d2"))
+              .write.mode("overwrite").parquet(s"${c.dir}/forest")
+          }))
+      } finally { textPairs.unpersist(); mE.unpersist(); () }
     }
-    // an empty corpus makes no commit: the batch twin's empty frame
-    val rows = state.latest("verdicts").fold(Array.empty[Row]) { last =>
-      val rows = spark.read.schema(eVerd).parquet(last)
-        .limit(maxVerdictRows + 1).collect()
+    // the decision frame, once, from the final state: every ingested doc
+    // (the hashes family), its cluster/keep from the last forest and its
+    // n_modalities from the parts family. An empty corpus makes no
+    // commit: the batch twin's empty frame
+    val rows = state.latest("forest").fold(Array.empty[Row]) { forest =>
+      val rows = labeled(spark, "q117: decision frame") {
+        verdicts(state.read("hashes", eHashes.schema),
+          spark.read.schema(eForest.schema).parquet(forest),
+          state.read("parts", eParts.schema))
+          .limit(maxVerdictRows + 1).collect()
+      }
       require(rows.length <= maxVerdictRows,
         s"decision frame exceeds $maxVerdictRows rows")
       require(rows.length.toLong == docs.count(),

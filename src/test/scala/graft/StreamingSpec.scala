@@ -375,7 +375,7 @@ class StreamingSpec extends SparkSpec {
     val out = Continuous.chainedQueries(
       spark, in, src.schema, "target/tmp/chain_mid", "target/tmp/chain_ckpt",
       df => df.filter($"value" > 10).select($"event_type", $"value"),
-      df => df.groupBy($"event_type").agg(count(lit(1)).as("n")))
+      _.select($"event_type", lit(1L).as("n")), Seq("event_type"))
     val chained = out.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val batch = src.filter($"value" > 10).groupBy($"event_type")
       .agg(count(lit(1)).as("n"))
@@ -891,13 +891,34 @@ class StreamingSpec extends SparkSpec {
     assert(rerun === twin)
   }
 
+  test("q88, q99 and q117: a streamed-dedup run leaves no RDD persisted") {
+    // every checkpoint a commit pins is released by the commit driver and
+    // every cache a run builds is dropped before it returns; no GC is
+    // forced, so a block the run forgot shows here and not only after
+    // the ContextCleaner happens to collect it
+    val sc = spark.sparkContext
+    val left = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "q88" -> (() => Continuous.streamedCurationFunnel(spark, sfDir)),
+      "q99" -> (() => Continuous.streamedIndexDedup(spark, sfDir)),
+      "q117" -> (() => Continuous.streamedCrossModalDedup(spark, sfDir)))
+      .map { case (q, run) =>
+        val before = sc.getPersistentRDDs.keySet
+        assert(run().collect().nonEmpty, s"$q returned no rows")
+        q -> sc.getPersistentRDDs.keys.filterNot(before).toSeq.sorted
+      }
+    assert(left.forall(_._2.isEmpty), "RDDs a run left persisted: " +
+      left.map { case (q, ids) => s"$q ${ids.mkString("[", ", ", "]")}" }
+        .mkString("; "))
+  }
+
   test("q51/q52/q54 fold their commits on the driver: 4 data commits, " +
       "no state operator") {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
     val progress = new java.util.concurrent.ConcurrentLinkedQueue[
       org.apache.spark.sql.streaming.StreamingQueryProgress]()
-    val prefixes = Seq("q51_stream_", "q52_online_", "q54_cq_")
+    val prefixes = Seq("q51_stream_", "q52_online_", "q54_cq_",
+      "q53_pipeline_")
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: QueryStartedEvent): Unit = ()
       override def onQueryProgress(e: QueryProgressEvent): Unit =
@@ -920,6 +941,7 @@ class StreamingSpec extends SparkSpec {
     try {
       assert(Continuous.streamedWindowedCounts(spark, sfDir).count() > 0)
       assert(Continuous.streamedOnlineSummary(spark, sfDir).count() > 0)
+      assert(Continuous.streamedPipeline(spark, sfDir).count() > 0)
       spark.sparkContext.setJobGroup("fold-caller", "q54 fold")
       val q54 = try Continuous.streamedCqMonitor(spark, sfDir)
         finally spark.sparkContext.clearJobGroup()
@@ -1010,7 +1032,8 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
     import org.apache.spark.sql.streaming.StreamingQueryListener.{QueryProgressEvent, QueryStartedEvent, QueryTerminatedEvent}
     import scala.jdk.CollectionConverters._
-    val prefixes = Seq("q51_stream_", "q52_online_", "q54_cq_")
+    val prefixes = Seq("q51_stream_", "q52_online_", "q54_cq_",
+      "q53_pipeline_")
     val progress =
       new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]()
     val queries = new StreamingQueryListener {
@@ -1044,6 +1067,7 @@ class StreamingSpec extends SparkSpec {
       assert(Continuous.streamedWindowedCounts(spark, sfDir).count() > 0)
       assert(Continuous.streamedOnlineSummary(spark, sfDir).count() > 0)
       assert(Continuous.streamedCqMonitor(spark, sfDir).count() > 0)
+      assert(Continuous.streamedPipeline(spark, sfDir).count() > 0)
       def data(prefix: String) = progress.asScala.toSeq
         .filter(p => p.name.startsWith(prefix) && p.numInputRows > 0)
       val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
@@ -1161,8 +1185,22 @@ class StreamingSpec extends SparkSpec {
       val name = """online_\d+""".r.findFirstIn(err.getMessage)
       assert(name.isDefined && err.getMessage.contains("aggregates"),
         err.getMessage)
+      // a groupBy stage 2 handed to the chained pipeline (C7) is refused
+      // the same way: stage 1 runs, stage 2's fold never starts
+      val (mid, ckpt) = (s"${dir}_mid", s"${dir}_ckpt")
+      rmrf(mid); rmrf(ckpt)
+      val chained = intercept[IllegalArgumentException] {
+        Continuous.chainedQueries(spark, dir, src.schema, mid, ckpt,
+          _.select(col("event_type")),
+          _.groupBy(col("event_type")).agg(count(lit(1)).as("n")),
+          Seq("event_type"), name = "chain_refused")
+      }
+      assert(chained.getMessage.contains("chain_refused") &&
+        chained.getMessage.contains("aggregates"), chained.getMessage)
       org.apache.spark.sql.graft.Bridge.drainListenerBus(spark)
       assert(!started.contains(name.get), s"${name.get} started a stream")
+      assert(!started.contains("chain_refused"),
+        "the refused stage 2 started a stream")
     } finally spark.streams.removeListener(listener)
   }
 
