@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 import graft.Tables
 
@@ -430,12 +431,7 @@ object Curation {
     // evidence-based (real checkpointed sizes), never a fixture-scale
     // misestimate.
     def cleanCheckpoint(df: DataFrame): DataFrame =
-      org.apache.spark.sql.graft.Bridge.dropOriginConstraints(
-        df.localCheckpoint())
-    // the entry checkpoint is dead once the pre-contraction replaced it or
-    // the driver path collected it
-    def release(df: DataFrame): Unit =
-      org.apache.spark.sql.graft.Bridge.releaseLocalCheckpoint(df)
+      Bridge.dropOriginConstraints(df.localCheckpoint())
     // canonical big→small orientation, self-loops dropped
     var edges = cleanCheckpoint(pairs
       .select(greatest(col("d1"), col("d2")).as("u"),
@@ -511,14 +507,15 @@ object Curation {
         // edges, so restore the distinct-set invariant here
         .distinct())
       edgeCount = edges.count()
-      release(entry)
+      // the pre-contracted edges replace the entry checkpoint
+      Bridge.releaseLocalCheckpoint(entry)
     }
     if (edgeCount <= driverEdgeBudget && integralId) {
       val spark = pairs.sparkSession
       val es = edges.collect().map(r =>
         (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
       // nothing reads the checkpointed edges after this collect
-      release(edges)
+      Bridge.releaseLocalCheckpoint(edges)
       // rebuild (id, lbl) in the INPUT id type, so the fast path's output
       // schema is indistinguishable from the distributed path's
       val narrow: Long => Any = idType match {
@@ -554,6 +551,8 @@ object Curation {
       val nextCount = next.count()
       converged = nextCount == edgeCount &&
         next.except(edges).limit(1).count() == 0L
+      // `next` is materialized, so nothing reads the round it replaces
+      Bridge.releaseLocalCheckpoint(edges)
       edges = next
       edgeCount = nextCount
       it += 1
